@@ -154,8 +154,11 @@ object EventLog {
     * merges commit through [[graft.ops.StoreManifest]]: a raw
     * `spark.read.parquet(dir)` would see every batch directory ever
     * written, including superseded bucket states. One manifest read
-    * pins the snapshot; legacy (pre-manifest) snapshots are adopted on
-    * first access.
+    * pins the snapshot and the pin IS the file index: building the
+    * DataFrame costs O(pinned files) driver metadata calls plus one
+    * footer read, and no Spark job runs until the query does. Legacy
+    * (pre-manifest) snapshots are served in place, never adopted by a
+    * read.
     */
   def readSnapshot(spark: SparkSession, snapshotPath: String): DataFrame =
     graft.ops.StoreManifest.readPinned(spark, snapshotPath)
@@ -236,8 +239,7 @@ object EventLog {
     // no manifest references all read as "no snapshot yet".
     val pinnedOpt = StoreManifest.currentVersion(spark, snapshotPath)
       .orElse(StoreManifest.adoptLegacy(spark, snapshotPath))
-      .map(v => (StoreManifest.filesAt(spark, snapshotPath, v),
-        StoreManifest.metaAt(spark, snapshotPath, v)))
+      .map(StoreManifest.pinAt(spark, snapshotPath, _))
     pinnedOpt.foreach { case (files, meta) =>
       val dirNums = files.flatMap(StoreManifest.partValueOf(_, "bucket"))
         .map(_.toInt)

@@ -1,7 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
+  PartitionSpec, PartitioningAwareFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 
 /** Atomic snapshot commits for the persisted stores ([[PqStore]],
   * [[SignatureStore]], [[PostingStore]]) — the manifest discipline of
@@ -38,6 +45,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * files. A 100 TB store with millions of files shards the list (the
   * Iceberg manifest-list layer); the single-file form here keeps the
   * commit protocol — write-last, rename-atomic, read-first — identical.
+  * The pin IS the file index ([[readFiles]]): a read costs O(pinned
+  * files) driver-side metadata calls (one `getFileStatus` each) plus one
+  * footer read for the schema, and no Spark job runs until the query
+  * does — no listing job, no schema-inference job. Recording file sizes
+  * in the manifest would remove the per-file status calls too (the
+  * at-scale follow-up; not done here).
   * Single committing writer per store is assumed (the stores' existing
   * contract); concurrent readers are the point.
   */
@@ -100,7 +113,7 @@ object StoreManifest {
     * exact state regardless of later commits.
     */
   def filesAt(spark: SparkSession, root: String, version: Long): Seq[String] =
-    manifestLines(spark, root, version).filterNot(_.startsWith(MetaPrefix))
+    pinAt(spark, root, version)._1
 
   /** The `#key=value` metadata committed WITH `version`'s file list —
     * store geometry (LSH bands, bucket moduli, centroid-table pointers)
@@ -111,20 +124,24 @@ object StoreManifest {
     * silently mis-keys every subsequent probe. One rename commits both.
     */
   def metaAt(spark: SparkSession, root: String, version: Long): Map[String, String] =
-    manifestLines(spark, root, version).filter(_.startsWith(MetaPrefix)).map { l =>
+    pinAt(spark, root, version)._2
+
+  /** `version`'s (files, meta) from ONE read of its manifest file. */
+  private[graft] def pinAt(spark: SparkSession, root: String,
+      version: Long): (Seq[String], Map[String, String]) = {
+    val (fs, rootP) = fsOf(spark, root)
+    val mf = new Path(new Path(rootP, ManifestDir), f"v-$version%012d.list")
+    val in = fs.open(mf)
+    val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
+      .filter(_.nonEmpty).toList
+    finally in.close()
+    val (metaLines, files) = lines.partition(_.startsWith(MetaPrefix))
+    (files, metaLines.map { l =>
       val body = l.stripPrefix(MetaPrefix)
       val eq = body.indexOf('=')
       require(eq > 0, s"StoreManifest: malformed meta line '$l' in v$version at $root")
       body.substring(0, eq) -> body.substring(eq + 1)
-    }.toMap
-
-  private def manifestLines(spark: SparkSession, root: String, version: Long): Seq[String] = {
-    val (fs, rootP) = fsOf(spark, root)
-    val mf = new Path(new Path(rootP, ManifestDir), f"v-$version%012d.list")
-    val in = fs.open(mf)
-    try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-      .filter(_.nonEmpty).toList
-    finally in.close()
+    }.toMap)
   }
 
   /** Non-mutating legacy listing: the data files a pre-manifest store
@@ -155,15 +172,7 @@ object StoreManifest {
     * listing; the first [[publish]] (a write path, covered by the
     * single-writer contract) adopts it into [[LegacyBatchDir]].
     */
-  def files(spark: SparkSession, root: String): Seq[String] =
-    currentVersion(spark, root) match {
-      case Some(v) => filesAt(spark, root, v)
-      case None =>
-        val legacy = legacyFiles(spark, root)
-        if (legacy.nonEmpty) legacy
-        else throw new IllegalStateException(
-          s"StoreManifest: no committed version under $root/$ManifestDir")
-    }
+  def files(spark: SparkSession, root: String): Seq[String] = pin(spark, root)._1
 
   /** Current version's committed metadata (empty for legacy stores —
     * their geometry sidecars remain the fallback, read by the store
@@ -179,7 +188,7 @@ object StoreManifest {
     */
   def pin(spark: SparkSession, root: String): (Seq[String], Map[String, String]) =
     currentVersion(spark, root) match {
-      case Some(v) => (filesAt(spark, root, v), metaAt(spark, root, v))
+      case Some(v) => pinAt(spark, root, v)
       case None =>
         val legacy = legacyFiles(spark, root)
         if (legacy.nonEmpty) (legacy, Map.empty)
@@ -193,7 +202,7 @@ object StoreManifest {
     */
   def pinOrEmpty(spark: SparkSession, root: String): (Seq[String], Map[String, String]) =
     currentVersion(spark, root) match {
-      case Some(v) => (filesAt(spark, root, v), metaAt(spark, root, v))
+      case Some(v) => pinAt(spark, root, v)
       case None => (legacyFiles(spark, root), Map.empty)
     }
 
@@ -330,23 +339,65 @@ object StoreManifest {
     v
   }
 
-  /** Read an explicit pinned file list. `basePath = root` keeps the
-    * partition columns (`cell=`/`bucket=` path segments) and their
-    * pruning exactly as a whole-directory read would.
+  /** Read an explicit pinned file list. The pin IS the file index: the
+    * relation is built straight from the list — one driver-side
+    * `getFileStatus` per pinned file and one footer read for the schema
+    * — so building the DataFrame starts no Spark job (no listing job,
+    * no schema-inference job); the first job is the query's own.
+    * `basePath = root` partition inference keeps the partition columns
+    * (`cell=`/`bucket=` path segments) and their pruning exactly as a
+    * whole-directory read would. A pinned file that is gone fails the
+    * read with a `FileNotFoundException`, never a partial answer. The
+    * per-file status calls are the remaining O(files) cost; recording
+    * sizes in the manifest would remove them (the at-scale follow-up).
     */
   def readFiles(spark: SparkSession, root: String, files: Seq[String]): DataFrame = {
     require(files.nonEmpty,
       s"StoreManifest: empty snapshot under $root — nothing to read")
     val (fs, rootP) = fsOf(spark, root)
-    val base = fs.makeQualified(rootP).toString
-    spark.read.option("basePath", base)
-      .parquet(files.map(f => s"$base/$f"): _*)
+    val base = fs.makeQualified(rootP)
+    val statuses = files.map(f => fs.getFileStatus(new Path(base, f)))
+    val index = new PinnedFileIndex(spark, base, statuses)
+    // the schema of the first file in path order — the one file Spark's
+    // own (mergeSchema=false) inference reads — nullable, as
+    // DataSource.resolveRelation makes it
+    val first = statuses.minBy(_.getPath.toString)
+    val footer = ParquetFooterReader.readFooter(
+      HadoopInputFile.fromStatus(first, spark.sessionState.newHadoopConf()),
+      ParquetMetadataConverter.SKIP_ROW_GROUPS)
+    val dataSchema = GraftSqlBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new Footer(first.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, index.partitionSchema,
+      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
       .drop("batch")
   }
 
-  /** Read the CURRENT snapshot (pin + read in one call). */
+  /** Read the CURRENT snapshot (pin + read in one call) — the same
+    * job-free relation as [[readFiles]].
+    */
   def readPinned(spark: SparkSession, root: String): DataFrame =
     readFiles(spark, root, files(spark, root))
+
+  /** A pinned file list as a Spark file index (the shape of Spark's own
+    * file-sink reader, `MetadataLogFileIndex`): the leaf files are the
+    * pin, `refresh()` is a no-op because a pin never changes, and
+    * partitions are inferred from the pinned paths under `root`. The
+    * statuses carry no block locations, so scans get no locality hints
+    * (a cost only where executors sit on the HDFS datanodes).
+    */
+  private final class PinnedFileIndex(spark: SparkSession, root: Path,
+      statuses: Seq[FileStatus])
+      extends PartitioningAwareFileIndex(spark, Map.empty, None) {
+    override val rootPaths: Seq[Path] = Seq(root)
+    override protected val leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
+      scala.collection.mutable.LinkedHashMap.from(statuses.map(s => s.getPath -> s))
+    override protected val leafDirToChildrenFiles: Map[Path, Array[FileStatus]] =
+      leafFiles.values.toArray.groupBy(_.getPath.getParent)
+    private lazy val spec = inferPartitioning()
+    override def partitionSpec(): PartitionSpec = spec
+    override def refresh(): Unit = ()
+  }
 
   /** Delete data files referenced by NO surviving manifest (keeping the
     * newest `keepVersions` manifests), plus emptied batch dirs and the

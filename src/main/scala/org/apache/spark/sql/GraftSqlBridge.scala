@@ -2,10 +2,10 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
 
-/** Bridge into `private[sql]` surface needed to expose custom Catalyst
-  * expressions as `Column`s on Spark 4 (where `Column` wraps a ColumnNode,
-  * not an Expression). Standard pattern for Spark extension libraries —
-  * confined to exactly these two conversions.
+/** Bridge into `private[sql]`/`private[spark]` surface: exposing custom
+  * Catalyst expressions as `Column`s on Spark 4 (where `Column` wraps a
+  * ColumnNode, not an Expression), and the nullable data schema a file
+  * relation reads with. Standard pattern for Spark extension libraries.
   */
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -22,4 +22,9 @@ object GraftSqlBridge {
       info: org.apache.spark.sql.catalyst.expressions.ExpressionInfo,
       builder: Seq[Expression] => Expression): Unit =
     spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+
+  /** `schema` with every field, array element and map value nullable —
+    * what `DataSource.resolveRelation` makes of an inferred file schema.
+    */
+  def asNullable(schema: types.StructType): types.StructType = schema.asNullable
 }

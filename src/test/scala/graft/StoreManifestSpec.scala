@@ -1,6 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.hadoop.fs.Path
+import graft.log.EventLog
 import graft.model.Tables
 import graft.ops.{Extensions15, SignatureStore, StoreManifest}
 
@@ -20,6 +24,109 @@ class StoreManifestSpec extends SparkSpec {
     SignatureStore.dedupAgainstStore(spark, root, batch)
       .collect().map(r => (r.getLong(0), r.getBoolean(1),
         if (r.isNullAt(2)) -1L else r.getLong(2))).toSet
+
+  /** `body`'s result and the number of Spark jobs it started on this
+    * thread (counted by job group, after the listener bus drains).
+    */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"store-manifest-spec-${java.util.UUID.randomUUID}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (Option(js.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "build a store read")
+    try {
+      val out = body
+      org.apache.spark.ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private def sortedRows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toString).toSeq.sorted
+
+  /** The pinned read starts no job while it is built, and matches the
+    * plain `spark.read.parquet` of the same files in schema (order and
+    * nullability included) and rows.
+    */
+  private def assertPinnedReadMatchesParquet(root: String, files: Seq[String],
+      read: => DataFrame): Unit = {
+    val (pinned, pinnedJobs) = jobsStartedBy(read)
+    assert(pinnedJobs == 0, s"building the pinned read of $root started $pinnedJobs job(s)")
+    val base = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(new Path(root)).toString
+    val (plain, plainJobs) = jobsStartedBy(spark.read.option("basePath", base)
+      .parquet(files.map(f => s"$base/$f"): _*).drop("batch"))
+    assert(plainJobs > 0, "the job counter must see the jobs a plain parquet read starts")
+    assert(pinned.schema == plain.schema,
+      s"schema differs:\n${pinned.schema.treeString}\nvs\n${plain.schema.treeString}")
+    assert(sortedRows(pinned) == sortedRows(plain))
+  }
+
+  test("building a pinned read starts no Spark job and matches a plain parquet read") {
+    // a 64-bucket snapshot: more pinned files than Spark's parallel
+    // listing threshold (32)
+    val snap = tmpDir("manifest_parity_buckets")
+    EventLog.mergeSnapshotKeyed(
+      spark.range(0, 640).select(col("id"), lit(1L).as("version"),
+        (col("id") * 7 % 13).as("score"), concat(lit("p"), col("id")).as("name")),
+      snap, "id", "version", 64)
+    val snapFiles = StoreManifest.files(spark, snap)
+    assert(snapFiles.size > 32, s"fixture must pin more than 32 files: ${snapFiles.size}")
+    assertPinnedReadMatchesParquet(snap, snapFiles, EventLog.readSnapshot(spark, snap))
+    assertPinnedReadMatchesParquet(snap, snapFiles.take(5),
+      StoreManifest.readFiles(spark, snap, snapFiles.take(5)))
+    // a cell= store
+    val cells = tmpDir("manifest_parity_cells")
+    SignatureStore.write(sigs(col("doc_id") < 200), cells)
+    assertPinnedReadMatchesParquet(cells, StoreManifest.files(spark, cells),
+      StoreManifest.readPinned(spark, cells))
+    // a legacy store, read in place and then adopted
+    val legacy = tmpDir("manifest_parity_legacy")
+    Tables.load(spark, sf0001, "documents").filter(col("doc_id") < 50)
+      .select(col("doc_id"), col("text"), (col("doc_id") % 4).cast("int").as("cell"))
+      .write.partitionBy("cell").mode("overwrite").parquet(legacy)
+    assertPinnedReadMatchesParquet(legacy, StoreManifest.files(spark, legacy),
+      StoreManifest.readPinned(spark, legacy))
+    assert(StoreManifest.adoptLegacy(spark, legacy).contains(1L))
+    val adopted = StoreManifest.files(spark, legacy)
+    assert(adopted.forall(_.startsWith(StoreManifest.LegacyBatchDir)))
+    assertPinnedReadMatchesParquet(legacy, adopted, StoreManifest.readPinned(spark, legacy))
+  }
+
+  test("a missing pinned file fails the read loudly; a built read keeps its version across a publish") {
+    val root = tmpDir("manifest_missing")
+    SignatureStore.write(sigs(col("doc_id") < 200), root)
+    val pin = StoreManifest.files(spark, root)
+    val built = StoreManifest.readFiles(spark, root, pin)
+    val answer = sortedRows(built)
+    // a later publish: the built DataFrame still answers the pinned
+    // version (its index never refreshes), a fresh read sees the new one
+    SignatureStore.append(sigs(col("doc_id") >= 200 && col("doc_id") < 300), root)
+    assert(StoreManifest.readPinned(spark, root).filter(col("doc_id") >= 200).count() > 0)
+    assert(sortedRows(built) == answer, "a built read must keep answering its pinned version")
+    // delete one pinned file: building the read fails, and so does the
+    // query of a read built before the delete — never a partial answer
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(fs.delete(new Path(root, pin.head), false))
+    intercept[java.io.FileNotFoundException] {
+      StoreManifest.readFiles(spark, root, pin)
+    }
+    intercept[java.io.FileNotFoundException] {
+      StoreManifest.readPinned(spark, root)
+    }
+    val failed = intercept[Exception](built.collect())
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.io.FileNotFoundException]),
+      s"the query must fail with a FileNotFoundException, got: $failed")
+  }
 
   test("a pinned snapshot survives a compaction unchanged; a fresh pin sees the post-state") {
     val root = tmpDir("manifest_pin")
