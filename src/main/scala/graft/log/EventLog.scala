@@ -77,6 +77,12 @@ object EventLog {
     * highest-version row per id wins. Same bucketed dynamic-partition
     * overwrite — only touched buckets are rewritten.
     *
+    * Tie rule: on an equal version the COMMITTED snapshot row wins over
+    * an incoming one (the streaming fold's strict `>`), so a same-version
+    * redelivery can never overwrite a committed row and re-merging
+    * already-applied updates is a no-op. Ties inside one batch pick
+    * either row, as the batch fold does.
+    *
     * Robustness contract: a missing snapshot path means "first merge"
     * (checked explicitly via the filesystem); any OTHER read failure
     * propagates — treating a transient/corrupt read as an empty snapshot
@@ -97,7 +103,8 @@ object EventLog {
     mergeBucketed(updates, snapshotPath, idCol, numBuckets) { combined =>
       combined
         .groupBy(col(idCol))
-        .agg(max_by(struct(dataCols.map(col): _*), col(versionCol)).as("s"))
+        .agg(max_by(struct(dataCols.map(col): _*),
+          struct(col(versionCol), col(CommittedCol))).as("s"))
         .select(col(idCol) +: dataCols.map(c => col(s"s.$c").as(c)): _*)
     }
   }
@@ -156,15 +163,16 @@ object EventLog {
     * written, including superseded bucket states. One manifest read
     * pins the snapshot and the pin IS the file index: building the
     * DataFrame costs O(pinned files) driver metadata calls plus one
-    * footer read, and no Spark job runs until the query does. Legacy
-    * (pre-manifest) snapshots are served in place, never adopted by a
-    * read.
+    * footer read, and no Spark job runs until the query does. The pin's
+    * `#bucket_key=` meta makes the key a file index: a query whose
+    * filter is `key = literal` or `key IN (literals)` scans only those
+    * keys' bucket files, the partition-key read of the reference's
+    * Cassandra table; any other predicate scans every pinned file.
+    * Legacy (pre-manifest) snapshots, and snapshots last merged before
+    * the key was recorded, are served unpruned, never adopted by a read.
     */
   def readSnapshot(spark: SparkSession, snapshotPath: String): DataFrame =
     graft.ops.StoreManifest.readPinned(spark, snapshotPath)
-
-  /** The manifest meta key carrying the bucket modulus. */
-  private val BucketsKey = "buckets"
 
   /** [[mergeAggregate]] made EXACTLY-ONCE for streaming redelivery:
     * foreachBatch is at-least-once, and a redelivered micro-batch
@@ -197,10 +205,16 @@ object EventLog {
 
   private val LastBatchKey = "last_batch"
 
+  /** Marks the rows [[mergeBucketed]] hands to `mergeStates`: true for
+    * a committed snapshot row, false for an incoming one.
+    */
+  private val CommittedCol = "_committed"
+
   /** The shared bucketed-snapshot commit: modulus guards, the
     * touched-bucket read, and a [[graft.ops.StoreManifest]] publish.
     * `mergeStates` receives (touched snapshot rows ∪ the new state
-    * rows) and must return one row per id in the same schema.
+    * rows), with [[CommittedCol]] telling them apart, and must return
+    * one row per id in the schema of `updates`.
     *
     * Commit protocol (the same discipline as the serving stores —
     * round-9's one remaining torn-state seam closed): the merged
@@ -212,7 +226,9 @@ object EventLog {
     * rewriting touched bucket dirs in place. The modulus commits
     * INSIDE the manifest (`#buckets=`), so data and guard can never
     * tear; crash windows reduce to "orphan batch dir no manifest
-    * references" (invisible, reclaimed by vacuum).
+    * references" (invisible, reclaimed by vacuum). The key column
+    * commits with it (`#bucket_key=`), which is what lets a pinned read
+    * prune a key predicate to the key's bucket files.
     *
     * Legacy snapshots (bucket dirs at the root, `_graft_buckets`
     * sidecar) are adopted on first merge: dirs move under the legacy
@@ -252,7 +268,7 @@ object EventLog {
           s"(${dirNums.filter(_ < 0).distinct.sorted.mkString(", ")}) — a legacy " +
           "%-based layout this merge cannot update safely; rewrite the " +
           "snapshot (read all buckets, re-merge into a fresh path) first")
-      val persisted = meta.get(BucketsKey).map(_.toInt).orElse {
+      val persisted = meta.get(StoreManifest.BucketsKey).map(_.toInt).orElse {
         // adopted legacy snapshot: the modulus lives in the old sidecar
         if (!fs.exists(sidecar)) None
         else {
@@ -283,7 +299,7 @@ object EventLog {
               "with the original modulus or rewrite the snapshot")
       }
     }
-    Seq("bucket", "batch").foreach { reserved =>
+    Seq("bucket", "batch", CommittedCol).foreach { reserved =>
       require(!updates.columns.contains(reserved),
         s"bucketed snapshot merge reserves the column name '$reserved' for " +
           "the snapshot layout — rename the input column")
@@ -302,17 +318,19 @@ object EventLog {
           s"is pmod-based); batch contains id ${r.getLong(1)}")
     }
     val touched = touchStats.map(_.getInt(0)).toSet
+    val incoming = bucketed.withColumn(CommittedCol, lit(false))
     val combined = pinnedOpt match {
-      case None => bucketed
+      case None => incoming
       case Some((files, _)) =>
         // read ONLY the touched buckets' files — pruned at the file list,
         // before the scan even plans
         val touchedFiles = files.filter(f =>
           StoreManifest.partValueOf(f, "bucket").exists(v => touched.contains(v.toInt)))
-        if (touchedFiles.isEmpty) bucketed
+        if (touchedFiles.isEmpty) incoming
         else StoreManifest.readFiles(spark, snapshotPath, touchedFiles)
           .select(bucketed.columns.map(col): _*)
-          .unionByName(bucketed)
+          .withColumn(CommittedCol, lit(true))
+          .unionByName(incoming)
     }
     val merged = mergeStates(combined)
       .withColumn("bucket", pmod(col(idCol), lit(numBuckets)).cast("int"))
@@ -332,7 +350,8 @@ object EventLog {
     val carried = pinnedOpt.map(_._2).getOrElse(Map.empty)
     StoreManifest.publish(spark, snapshotPath,
       untouched ++ StoreManifest.listBatchFiles(spark, snapshotPath, batch),
-      meta = carried ++ extraMeta + (BucketsKey -> numBuckets.toString))
+      meta = carried ++ extraMeta + (StoreManifest.BucketsKey -> numBuckets.toString) +
+        (StoreManifest.BucketKeyKey -> idCol))
     touched
   }
 

@@ -1,10 +1,13 @@
 package graft.ops
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, EqualTo, Expression, In,
+  InSet, Literal}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation,
-  PartitionSpec, PartitioningAwareFileIndex}
+  PartitionDirectory, PartitionSpec, PartitioningAwareFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
   ParquetFooterReader, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType}
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
@@ -16,8 +19,17 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
   * the minimum these stores need):
   *
   * {{{
-  *   root/_manifest/v-000000000001.list    (relative data-file paths, one per line)
+  *   root/_manifest/v-000000000001.list    (`#k=v` meta lines, then relative
+  *                                          data-file paths, one per line)
   *   root/batch=<v>-<rand>/cell=N/part-....parquet
+  * }}}
+  *
+  * A keyed snapshot ([[graft.log.EventLog.mergeSnapshotKeyed]]) stores
+  * `bucket=N` dirs and commits its layout as meta:
+  * {{{
+  *   #bucket_key=id
+  *   #buckets=64
+  *   batch=000007-1f2e3d4c/bucket=5/part-....parquet
   * }}}
   *
   * Invariants:
@@ -40,6 +52,13 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
   * so the `cell=N` / `bucket=N` path segments below each batch dir still
   * surface as partition columns and a literal `isin` still prunes at
   * file-index level (the store specs assert PartitionFilters unchanged).
+  * Key pruning adds to it: when the current pin's meta names a
+  * `bucket_key` and its `buckets` modulus, [[readPinned]] keeps only the
+  * files of the buckets a key predicate can match — `key = literal`,
+  * `key IN (literals)` (`In` and `InSet`), with an integral key and
+  * literals, bucketed exactly as the merge's `pmod(key, n).cast("int")`.
+  * Every other predicate (a cast of the key, an `OR`, a range), and a
+  * pin without the key meta, reads every pinned file.
   *
   * Scale: the manifest is O(files) NAMES — kilobytes for thousands of
   * files. A 100 TB store with millions of files shards the list (the
@@ -59,6 +78,12 @@ object StoreManifest {
   val ManifestDir = "_manifest"
   private val VersionRe = """v-(\d{12})\.list""".r
   private val MetaPrefix = "#"
+
+  /** Meta keys of a bucketed store: the bucket modulus and the key
+    * column the buckets are computed from.
+    */
+  private[graft] val BucketsKey = "buckets"
+  private[graft] val BucketKeyKey = "bucket_key"
 
   /** The batch directory a pre-manifest store's files migrate into when
     * [[adoptLegacy]] promotes it — DETERMINISTIC (no random suffix) so a
@@ -316,8 +341,9 @@ object StoreManifest {
     // under LegacyBatchDir and any incoming in-place legacy paths (from a
     // pinOrEmpty fallback) are remapped to their adopted location, so the
     // committed list and the moved files agree.
+    val current = currentVersion(spark, root)
     val committed =
-      if (currentVersion(spark, root).isDefined) files
+      if (current.isDefined) files
       else {
         val moved = moveLegacyEntries(fs, rootP)
         if (moved.isEmpty) files
@@ -325,7 +351,7 @@ object StoreManifest {
           if (moved.contains(f.split('/').head)) s"$LegacyBatchDir/$f" else f
         }
       }
-    var v = currentVersion(spark, root).getOrElse(0L) + 1L
+    var v = current.getOrElse(0L) + 1L
     while (fs.exists(new Path(mdir, f"v-$v%012d.list"))) v += 1L
     val tmp = new Path(mdir,
       s".tmp-$v-${java.util.UUID.randomUUID.toString.take(8)}")
@@ -351,13 +377,30 @@ object StoreManifest {
     * per-file status calls are the remaining O(files) cost; recording
     * sizes in the manifest would remove them (the at-scale follow-up).
     */
-  def readFiles(spark: SparkSession, root: String, files: Seq[String]): DataFrame = {
+  def readFiles(spark: SparkSession, root: String, files: Seq[String]): DataFrame =
+    read(spark, root, files, None)
+
+  /** Read the CURRENT snapshot (pin + read in one call) — the same
+    * job-free relation as [[readFiles]], with key pruning when the pin's
+    * meta records the bucket key (see the header).
+    */
+  def readPinned(spark: SparkSession, root: String): DataFrame = {
+    val (files, meta) = pin(spark, root)
+    val bucketKey = for {
+      key <- meta.get(BucketKeyKey)
+      n <- meta.get(BucketsKey).flatMap(_.toIntOption)
+    } yield (key, n)
+    read(spark, root, files, bucketKey)
+  }
+
+  private def read(spark: SparkSession, root: String, files: Seq[String],
+      bucketKey: Option[(String, Int)]): DataFrame = {
     require(files.nonEmpty,
       s"StoreManifest: empty snapshot under $root — nothing to read")
     val (fs, rootP) = fsOf(spark, root)
     val base = fs.makeQualified(rootP)
     val statuses = files.map(f => fs.getFileStatus(new Path(base, f)))
-    val index = new PinnedFileIndex(spark, base, statuses)
+    val index = new PinnedFileIndex(spark, base, statuses, bucketKey)
     // the schema of the first file in path order — the one file Spark's
     // own (mergeSchema=false) inference reads — nullable, as
     // DataSource.resolveRelation makes it
@@ -373,21 +416,18 @@ object StoreManifest {
       .drop("batch")
   }
 
-  /** Read the CURRENT snapshot (pin + read in one call) — the same
-    * job-free relation as [[readFiles]].
-    */
-  def readPinned(spark: SparkSession, root: String): DataFrame =
-    readFiles(spark, root, files(spark, root))
-
   /** A pinned file list as a Spark file index (the shape of Spark's own
     * file-sink reader, `MetadataLogFileIndex`): the leaf files are the
     * pin, `refresh()` is a no-op because a pin never changes, and
     * partitions are inferred from the pinned paths under `root`. The
     * statuses carry no block locations, so scans get no locality hints
     * (a cost only where executors sit on the HDFS datanodes).
+    *
+    * With `bucketKey = (key, n)`, `listFiles` also drops the `bucket=`
+    * files no key predicate among the data filters can match.
     */
   private final class PinnedFileIndex(spark: SparkSession, root: Path,
-      statuses: Seq[FileStatus])
+      statuses: Seq[FileStatus], bucketKey: Option[(String, Int)])
       extends PartitioningAwareFileIndex(spark, Map.empty, None) {
     override val rootPaths: Seq[Path] = Seq(root)
     override protected val leafFiles: scala.collection.mutable.LinkedHashMap[Path, FileStatus] =
@@ -397,6 +437,50 @@ object StoreManifest {
     private lazy val spec = inferPartitioning()
     override def partitionSpec(): PartitionSpec = spec
     override def refresh(): Unit = ()
+
+    override def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val dirs = super.listFiles(partitionFilters, dataFilters)
+      bucketKey.flatMap { case (key, n) => keyBuckets(dataFilters, key, n) } match {
+        case None => dirs
+        case Some(keep) => dirs.flatMap { d =>
+          val kept = d.files.filter(f => partValueOf(f.getPath.getParent.getName, "bucket")
+            .flatMap(_.toIntOption).forall(keep))
+          if (kept.isEmpty) None else Some(d.copy(files = kept))
+        }
+      }
+    }
+
+    /** The buckets the conjunction of `filters` can match, or None when
+      * no filter is a bare key-vs-integral-literal equality or IN list.
+      */
+    private def keyBuckets(filters: Seq[Expression], key: String,
+        n: Int): Option[Set[Int]] = {
+      val resolver = spark.sessionState.conf.resolver
+      def isKey(a: Attribute) = resolver(a.name, key) && integral(a.dataType)
+      def literals(a: Attribute, es: Seq[Expression]): Option[Seq[Any]] = {
+        val values = es.collect { case l: Literal if integral(l.dataType) => l.value }
+        if (isKey(a) && values.size == es.size) Some(values) else None
+      }
+      val matched = filters.flatMap {
+        case EqualTo(a: Attribute, l: Literal) => literals(a, Seq(l))
+        case EqualTo(l: Literal, a: Attribute) => literals(a, Seq(l))
+        case In(a: Attribute, list) => literals(a, list)
+        case InSet(a: Attribute, hset) if isKey(a) => Some(hset.toSeq)
+        case _ => None
+      }
+      // Spark's bucket: pmod(key, n) — floorMod for a positive n; a null
+      // never equals a key, so it selects no bucket
+      if (matched.isEmpty) None
+      else Some(matched.map(_.collect {
+        case v: Number => Math.floorMod(v.longValue, n.toLong).toInt
+      }.toSet).reduce(_ intersect _))
+    }
+
+    private def integral(t: DataType): Boolean = t match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
   }
 
   /** Delete data files referenced by NO surviving manifest (keeping the

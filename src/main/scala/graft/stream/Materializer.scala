@@ -28,6 +28,16 @@ final case class PlayerUpdate(
   * orders by `version` per key instead, so it is free to consume from any
   * number of partitions in any order — the property that lets the read
   * side scale horizontally.
+  *
+  * Two read-model shapes share one per-key rule (latest version wins; on
+  * an equal version the row already held wins; a delete is a tombstone):
+  *  - in memory ([[materialize]], [[materializeTws]], [[startToMemory]]):
+  *    the keyed fold keeps one FoldBuf per key in the checkpoint's state
+  *    store;
+  *  - durable ([[startSnapshot]]): the bucketed parquet snapshot IS the
+  *    fold's state. Each micro-batch is mapped row by row and merged into
+  *    the touched buckets, so the stream is stateless and its checkpoint
+  *    holds offsets only.
   */
 object Materializer {
 
@@ -53,13 +63,20 @@ object Materializer {
       if (e.version > buf.version) buf = FoldBuf(e.version, e.name, e.data)
     }
     state.update(buf)
-    val deleted = buf.name == null || buf.name.endsWith("Deleted")
-    Iterator.single(PlayerUpdate(
+    Iterator.single(update(id, buf.version, buf.name, buf.data))
+  }
+
+  /** One event (or fold winner) as a read-model row: the payload's
+    * names, or a tombstone when the event is a delete (or absent).
+    */
+  private def update(id: Long, version: Long, name: String, data: String): PlayerUpdate = {
+    val deleted = name == null || name.endsWith("Deleted")
+    PlayerUpdate(
       id,
-      buf.version,
-      if (deleted) null else jsonField(buf.data, "firstName"),
-      if (deleted) null else jsonField(buf.data, "lastName"),
-      deleted))
+      version,
+      if (deleted) null else jsonField(data, "firstName"),
+      if (deleted) null else jsonField(data, "lastName"),
+      deleted)
   }
 
   /** Wire the fold over any event stream (works for both streaming and
@@ -192,12 +209,7 @@ object Materializer {
       var b = if (buf.exists()) buf.get() else FoldBuf(Long.MinValue, null, null)
       rows.foreach { e => if (e.version > b.version) b = FoldBuf(e.version, e.name, e.data) }
       buf.update(b)
-      val deleted = b.name == null || b.name.endsWith("Deleted")
-      Iterator.single(PlayerUpdate(
-        key, b.version,
-        if (deleted) null else jsonField(b.data, "firstName"),
-        if (deleted) null else jsonField(b.data, "lastName"),
-        deleted))
+      Iterator.single(update(key, b.version, b.name, b.data))
     }
   }
 
@@ -234,15 +246,34 @@ object Materializer {
   def enrichStream(events: Dataset[Event], dim: DataFrame): DataFrame =
     events.join(broadcast(dim), Seq("id"), "left")
 
-  /** foreachBatch snapshot variant (the simpler ST3 shape): each
-    * micro-batch merges updates into a parquet snapshot keyed by id —
-    * a durable read model a serving layer can scan via [[readSnapshot]].
+  /** The durable read model: each micro-batch maps its events to
+    * [[PlayerUpdate]] rows (the [[applyEvents]] payload and tombstone
+    * rule, per event) and merges them into a parquet snapshot keyed by
+    * id — the store a serving layer scans via [[readSnapshot]].
     *
-    * The merge is [[graft.log.EventLog.mergeSnapshotKeyed]]: the snapshot
-    * is bucketed by `id % numBuckets` and each micro-batch rewrites ONLY
-    * the buckets its keys touch, committed by one StoreManifest rename —
-    * O(batch), not O(table), per trigger, and a serving reader racing a
-    * trigger sees pre- or post-batch state, never a torn bucket mix. Tombstones stay in the snapshot as rows
+    * The snapshot IS the fold's state. The merge is
+    * [[graft.log.EventLog.mergeSnapshotKeyed]]: its latest-wins
+    * `max_by` over (the touched buckets' committed rows ∪ the batch's
+    * rows) is the fold, so the stream itself is stateless and the
+    * checkpoint holds source offsets only — no state store, no second
+    * copy of the read model. Tie rule: on an equal version the
+    * committed row wins (the stateful fold's strict `>`), so a
+    * same-version redelivery never overwrites a committed row, and
+    * replaying the spool from a fresh checkpoint into the existing
+    * snapshot leaves it unchanged (StreamingSpec asserts both).
+    *
+    * Upgrading a snapshot written by the earlier stateful plan
+    * (`flatMapGroupsWithState`): Spark refuses that plan's checkpoint
+    * (STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA), so point
+    * this at a fresh checkpoint dir and keep the snapshot. The first
+    * run replays the whole spool once — idempotent by the tie rule, so
+    * only events past the old checkpoint change rows.
+    *
+    * The snapshot is bucketed by `pmod(id, numBuckets)` and each
+    * micro-batch rewrites ONLY the buckets its keys touch, committed by
+    * one StoreManifest rename — O(batch), not O(table), per trigger, and
+    * a serving reader racing a trigger sees pre- or post-batch state,
+    * never a torn bucket mix. Tombstones stay in the snapshot as rows
     * with `deleted = true` (latest version wins, so a delete durably
     * shadows earlier versions even if the checkpoint is lost and history
     * replays); [[readSnapshot]] filters them out of the served model, the
@@ -253,12 +284,13 @@ object Materializer {
       snapshotDir: String,
       checkpointDir: String,
       numBuckets: Int = 64): StreamingQuery =
-    materialize(events).writeStream
-      .outputMode(OutputMode.Update)
+    events.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: Dataset[PlayerUpdate], _: Long) =>
+      .foreachBatch { (batch: Dataset[Event], _: Long) =>
         graft.log.EventLog.mergeSnapshotKeyed(
-          batch.dropDuplicates("id").toDF(), snapshotDir, "id", "version", numBuckets)
+          batch.map(e => update(e.id, e.version, e.name, e.data))(
+            SqlEncoders.product[PlayerUpdate]).toDF(),
+          snapshotDir, "id", "version", numBuckets)
         ()
       }
       .trigger(Trigger.AvailableNow())

@@ -101,6 +101,59 @@ class StoreManifestSpec extends SparkSpec {
     assertPinnedReadMatchesParquet(legacy, adopted, StoreManifest.readPinned(spark, legacy))
   }
 
+  /** Files the scans of `df` select, from the planned file listing. */
+  private def filesScanned(df: DataFrame): Long =
+    df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.selectedPartitions.totalNumberOfFiles
+    }.sum
+
+  test("a key predicate reads only the key's bucket files; other predicates read them all") {
+    val snap = tmpDir("manifest_key_pruning")
+    val nb = 64
+    EventLog.mergeSnapshotKeyed(
+      spark.range(0, 640).select(col("id"), lit(1L).as("version"),
+        concat(lit("p"), col("id")).as("name")),
+      snap, "id", "version", nb)
+    val pinned = StoreManifest.files(spark, snap)
+    assert(pinned.size == nb)
+    val base = new Path(snap).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(new Path(snap)).toString
+    val plain = spark.read.option("basePath", base)
+      .parquet(pinned.map(f => s"$base/$f"): _*).drop("batch")
+    def check(pred: org.apache.spark.sql.Column, wantFiles: Long): Unit = {
+      val read = EventLog.readSnapshot(spark, snap).filter(pred)
+      assert(filesScanned(read) == wantFiles, s"$pred")
+      assert(sortedRows(read) == sortedRows(plain.filter(pred)), s"$pred")
+    }
+    def buckets(ids: Seq[Long]) = ids.map(Math.floorMod(_, nb.toLong)).distinct.size.toLong
+    val present = Seq(5L, 70L, 133L) ++ (200L until 217L)
+    val absent = Seq(640L, 1000L, 1234567L) ++ (5000L until 5017L)
+    for (ids <- Seq(present, absent, present.take(10) ++ absent.take(10))) {
+      check(col("id") === ids.head, 1)
+      check(col("id").isin(ids.take(3): _*), buckets(ids.take(3)))
+      val inSet = EventLog.readSnapshot(spark, snap).filter(col("id").isin(ids: _*))
+      assert(inSet.queryExecution.optimizedPlan.toString.contains("INSET"),
+        "20 ids must plan as InSet")
+      check(col("id").isin(ids: _*), buckets(ids))
+    }
+    assert(sortedRows(EventLog.readSnapshot(spark, snap).filter(col("id") === 640L)).isEmpty)
+    // predicates the bucket cannot be read from scan every file
+    check(col("id").cast("int") === 5, nb)
+    check(col("id") === 5L || col("id") === 70L, nb)
+    check(col("id") > 600L, nb)
+    // a pin without the key meta (a snapshot merged before it was
+    // recorded) scans every file until its next merge records it
+    val (files, meta) = StoreManifest.pin(spark, snap)
+    StoreManifest.publish(spark, snap, files, meta - StoreManifest.BucketKeyKey)
+    check(col("id") === 5L, nb)
+    check(col("id").isin(present: _*), nb)
+    EventLog.mergeSnapshotKeyed(
+      spark.range(0, 1).select(col("id"), lit(2L).as("version"), lit("q0").as("name")),
+      snap, "id", "version", nb)
+    assert(filesScanned(EventLog.readSnapshot(spark, snap).filter(col("id") === 5L)) == 1)
+  }
+
   test("a missing pinned file fails the read loudly; a built read keeps its version across a publish") {
     val root = tmpDir("manifest_missing")
     SignatureStore.write(sigs(col("doc_id") < 200), root)

@@ -365,6 +365,140 @@ class StreamingSpec extends SparkSpec {
     assert(served2 == Map(1L -> "Again"), s"got $served2")
   }
 
+  /** The served snapshot and the batch fold of the spool, as (id,
+    * firstName, lastName) sets.
+    */
+  private def servedAndFolded(snap: String, spool: String) = {
+    def names(df: org.apache.spark.sql.DataFrame) = df.select("id", "firstName", "lastName")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    (names(Materializer.readSnapshot(spark, snap)),
+      names(Materialize.playerState(graft.log.EventLog.scan(spark, spool).toDF())))
+  }
+
+  /** Every snapshot row, tombstones included. */
+  private def rawSnapshot(snap: String): Seq[String] =
+    graft.log.EventLog.readSnapshot(spark, snap)
+      .select("id", "version", "firstName", "lastName", "deleted")
+      .collect().map(_.toString).toSeq.sorted
+
+  test("the stateless snapshot stream equals the fold over random redelivered histories") {
+    import spark.implicits._
+    for (seed <- Seq(11L, 12L)) {
+      val rng = new scala.util.Random(seed)
+      // per id: versions 0..n-1, each a create, update or delete (a
+      // create after a delete re-creates the id); a lone delete is a
+      // delete of a never-created id
+      val history = (0L until 48L).flatMap { id =>
+        if (rng.nextInt(6) == 0) Seq(Event(id, "PlayerDeleted", 0, ts(0), "{}"))
+        else (0 until 1 + rng.nextInt(5)).map { v =>
+          val name =
+            if (v == 0) "PlayerCreated"
+            else Seq("PlayerUpdated", "PlayerDeleted", "PlayerCreated")(rng.nextInt(3))
+          Event(id, name, v, ts(v),
+            if (name == "PlayerDeleted") "{}" else payload(s"f$id.$v", s"l$id.$v"))
+        }
+      }
+      val byId = history.groupBy(_.id).values.map(_.sortBy(_.version).map(_.name))
+      assert(byId.exists(_.sliding(2).contains(Seq("PlayerDeleted", "PlayerCreated"))),
+        "the history must delete and then re-create some id")
+      assert(byId.exists(_ == Seq("PlayerDeleted")),
+        "the history must delete some never-created id")
+      // three runs over a shuffled history; runs 2 and 3 also redeliver
+      // events of earlier runs, so stale versions arrive after newer ones
+      val runs = rng.shuffle(history).grouped((history.size + 2) / 3).toSeq
+      assert(runs.size == 3)
+      val root = tmpDir(s"snap_stateless_$seed")
+      val spool = s"$root/spool"; val snap = s"$root/snapshot"
+      runs.zipWithIndex.foreach { case (run, i) =>
+        val redelivered = runs.take(i).flatten.filter(_ => rng.nextInt(4) == 0)
+        (run ++ redelivered).toDS.repartition(2).write.mode("append").parquet(spool)
+        Materializer.startSnapshot(Materializer.readEventStream(spark, spool), snap,
+          s"$root/ckpt", 8).awaitTermination()
+        val (served, folded) = servedAndFolded(snap, spool)
+        assert(served == folded, s"seed $seed run ${i + 1}: snapshot differs from the fold")
+      }
+      // replaying the whole spool from a fresh checkpoint is a no-op:
+      // the checkpoint only has to hold offsets
+      val before = rawSnapshot(snap)
+      Materializer.startSnapshot(Materializer.readEventStream(spark, spool), snap,
+        s"$root/ckpt_fresh", 8).awaitTermination()
+      assert(rawSnapshot(snap) == before, s"seed $seed: a fresh replay changed the snapshot")
+    }
+  }
+
+  test("a same-version event after its row is committed loses to the committed row") {
+    import spark.implicits._
+    val root = tmpDir("snap_tie")
+    val spool = s"$root/spool"; val snap = s"$root/snapshot"
+    def run(events: Seq[Event], ckpt: String): Unit = {
+      if (events.nonEmpty) events.toDS.write.mode("append").parquet(spool)
+      Materializer.startSnapshot(Materializer.readEventStream(spark, spool), snap, ckpt, 8)
+        .awaitTermination()
+    }
+    run(Seq(
+      Event(1, "PlayerCreated", 0, ts(0), payload("Robert", "Brem")),
+      Event(1, "PlayerUpdated", 1, ts(1), payload("Kept", "Row"))), s"$root/ckpt")
+    // the same version again, with other data: the stateful fold's strict
+    // `>` ignores it, and so must the merge
+    run(Seq(
+      Event(1, "PlayerUpdated", 1, ts(2), payload("Late", "Intruder")),
+      Event(2, "PlayerCreated", 0, ts(3), payload("Other", "Player"))), s"$root/ckpt")
+    val served = Materializer.readSnapshot(spark, snap).select("id", "version", "firstName")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSet
+    assert(served == Set((1L, 1L, "Kept"), (2L, 0L, "Other")), s"got $served")
+    val before = rawSnapshot(snap)
+    run(Nil, s"$root/ckpt_fresh")
+    assert(rawSnapshot(snap) == before, "a fresh replay changed the snapshot")
+  }
+
+  test("a checkpoint of the stateful plan is refused; a fresh checkpoint upgrades the snapshot in place") {
+    import spark.implicits._
+    import org.apache.spark.sql.Dataset
+    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+    import graft.stream.PlayerUpdate
+    val root = tmpDir("snap_upgrade")
+    val spool = s"$root/spool"; val snap = s"$root/snapshot"; val ckpt = s"$root/ckpt"
+    // the previous startSnapshot: a flatMapGroupsWithState fold, each
+    // micro-batch deduplicated by id and merged into the snapshot
+    def statefulRun(): Unit =
+      Materializer.materialize(Materializer.readEventStream(spark, spool)).writeStream
+        .outputMode(OutputMode.Update)
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (batch: Dataset[PlayerUpdate], _: Long) =>
+          graft.log.EventLog.mergeSnapshotKeyed(
+            batch.dropDuplicates("id").toDF(), snap, "id", "version", 8)
+          ()
+        }
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
+    fixture.take(2).toDS.write.mode("append").parquet(spool)
+    statefulRun()
+    fixture.drop(2).toDS.write.mode("append").parquet(spool)
+    statefulRun()
+    assert(new java.io.File(s"$ckpt/state").exists(), "the stateful plan must leave state")
+    val (served0, folded0) = servedAndFolded(snap, spool)
+    assert(served0 == folded0)
+    Seq(Event(1, "PlayerUpdated", 2, ts(9), payload("After", "Upgrade")),
+        Event(2, "PlayerCreated", 2, ts(10), payload("Back", "Again")),
+        Event(3, "PlayerCreated", 0, ts(11), payload("New", "Player")))
+      .toDS.write.mode("append").parquet(spool)
+    // Spark refuses the old checkpoint: its state metadata names an
+    // operator the stateless plan no longer has
+    val refused = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      Materializer.startSnapshot(Materializer.readEventStream(spark, spool), snap, ckpt, 8)
+        .awaitTermination()
+    }
+    assert(refused.getMessage.contains("STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA"))
+    assert(servedAndFolded(snap, spool)._1 == served0, "a refused run must not touch the snapshot")
+    // the upgrade: the same snapshot on a fresh checkpoint — replaying
+    // the spool into it is idempotent, so only the new events change it
+    Materializer.startSnapshot(Materializer.readEventStream(spark, spool), snap,
+      s"$root/ckpt_fresh", 8).awaitTermination()
+    val (served, folded) = servedAndFolded(snap, spool)
+    assert(served == folded)
+    assert(served == Set((1L, "After", "Upgrade"), (2L, "Back", "Again"), (3L, "New", "Player")))
+  }
+
   test("streaming corpus ingestion: foreachBatch dedups each micro-batch against the growing corpus") {
     import spark.implicits._
     // The steady-state crawl shape: documents arrive as a stream, each
