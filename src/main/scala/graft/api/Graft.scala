@@ -2029,19 +2029,6 @@ object Graft {
   def mergeSnapshot(newEvents: DataFrame, snapshotPath: String, numBuckets: Int = 64): Set[Int] =
     graft.log.EventLog.mergeSnapshot(newEvents, snapshotPath, numBuckets)
 
-  /** Streaming materialization of the same fold (flatMapGroupsWithState;
-    * O(live keys) state).
-    */
-  def materializeStream(events: Dataset[Event]): DataFrame =
-    Materializer.materialize(events).toDF()
-
-  /** The same fold on Spark 4's transformWithState engine (named state
-    * handles, TTL/timers, RocksDB store — for live-key sets too large for
-    * executor memory). Requires the RocksDB state store provider.
-    */
-  def materializeStreamTws(events: Dataset[Event]): DataFrame =
-    Materializer.materializeTws(events).toDF()
-
   /** Bounded-state streaming dedup of redelivered events (watermark-evicted
     * key state).
     */

@@ -78,10 +78,9 @@ object EventLog {
     * overwrite — only touched buckets are rewritten.
     *
     * Tie rule: on an equal version the COMMITTED snapshot row wins over
-    * an incoming one (the streaming fold's strict `>`), so a same-version
-    * redelivery can never overwrite a committed row and re-merging
-    * already-applied updates is a no-op. Ties inside one batch pick
-    * either row, as the batch fold does.
+    * an incoming one, so a same-version redelivery can never overwrite a
+    * committed row and re-merging already-applied updates is a no-op.
+    * Ties inside one batch pick either row, as the batch fold does.
     *
     * Robustness contract: a missing snapshot path means "first merge"
     * (checked explicitly via the filesystem); any OTHER read failure

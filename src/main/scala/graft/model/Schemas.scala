@@ -23,11 +23,6 @@ final case class Event(
     date: java.sql.Timestamp,
     data: String)
 
-/** Read-model record observed at the reference REST boundary
-  * (reference: PlayerResourceIT.java:116-120,136-139,184).
-  */
-final case class Player(id: Long, firstName: String, lastName: String)
-
 object Schemas {
   /** Event envelope schema (initial_db.sql:6-10). */
   val event: StructType = StructType(Seq(
@@ -36,11 +31,6 @@ object Schemas {
     StructField("version", LongType, nullable = false),
     StructField("date", TimestampType, nullable = true),
     StructField("data", StringType, nullable = true)))
-
-  /** JSON payload of Player* events (PlayerResourceIT.java:116-120). */
-  val playerPayload: StructType = StructType(Seq(
-    StructField("firstName", StringType, nullable = true),
-    StructField("lastName", StringType, nullable = true)))
 
   /** Driver test-table `events` (FIXTURES.md B): the scale surrogate of the
     * reference EVENTS table (user_id→ID, event_type→NAME, event_id→VERSION,

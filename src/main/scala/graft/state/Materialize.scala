@@ -1,9 +1,7 @@
 package graft.state
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
-import org.apache.spark.sql.expressions.{Aggregator, Window}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.model.{Event, Player, Schemas}
 import graft.log.EventLog
 
 /** The engine's core operator: per-aggregate event fold → current state.
@@ -13,17 +11,13 @@ import graft.log.EventLog
   * the query container is wired to Kafka only, no durable store; observed
   * latest-wins semantics PlayerResourceIT.java:148-171).
   *
-  * Two interchangeable formulations, both shuffle-once on the aggregate key:
-  *
-  *  - [[latestState]]: `max_by(struct(cols), orderCol)` — a hash aggregate
-  *    with map-side partial aggregation. At scale this is the right default:
-  *    each input partition reduces to ≤ |distinct keys in partition| rows
-  *    before the exchange, so the shuffle carries states, not events.
-  *
-  *  - [[latestStateWindow]]: `row_number() over (partition by key order by
-  *    ver desc) = 1` — shuffles *every* event and sorts each partition.
-  *    Kept because it is the standard SQL phrasing (and the DuckDB oracle
-  *    form), and for tie-diagnosis; do not prefer it at 100 TB.
+  * [[latestState]] is `max_by(struct(cols), orderCol)` — a hash aggregate
+  * with map-side partial aggregation, shuffle-once on the aggregate key:
+  * each input partition reduces to ≤ |distinct keys in partition| rows
+  * before the exchange, so the shuffle carries states, not events. The
+  * streaming read model ([[graft.stream.Materializer.startSnapshot]])
+  * folds with the same `max_by`, in the snapshot merge, and shares
+  * [[playerRow]] with [[playerState]].
   *
   * Order-insensitivity: the fold orders by `version` explicitly, so the
   * engine does not depend on arrival order — unlike the reference, which
@@ -43,13 +37,17 @@ object Materialize {
       .select(events.columns.map(c => col(s"s.$c").as(c)).toIndexedSeq: _*)
   }
 
-  /** Window/row_number formulation — standard SQL phrasing of the same fold. */
-  def latestStateWindow(events: DataFrame, keyCol: String, orderCol: String): DataFrame = {
-    val w = Window.partitionBy(col(keyCol)).orderBy(col(orderCol).desc)
-    events
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .drop("__rn")
+  /** One Player* event (or fold winner) as a read-model row: `id`,
+    * `version`, the payload's `firstName`/`lastName`, and `deleted`, the
+    * tombstone of a delete event (whose names are null). The one payload
+    * parse of the read model: [[playerState]] applies it to the fold's
+    * winners, the snapshot stream to every event before its merge.
+    */
+  private[graft] def playerRow(events: DataFrame): DataFrame = {
+    val deleted = col("name").endsWith("Deleted")
+    def field(f: String) = when(!deleted, get_json_object(col("data"), "$." + f)).as(f)
+    events.select(col("id"), col("version"), field("firstName"), field("lastName"),
+      deleted.as("deleted"))
   }
 
   /** Reference-shaped read model: fold Player* events into live players.
@@ -63,13 +61,9 @@ object Materialize {
     */
   def playerState(events: DataFrame): DataFrame = {
     val deduped = EventLog.pkDedup(events)
-    val last = latestState(deduped, "id", "version")
-    last
-      .filter(not(col("name").endsWith("Deleted")))
-      .select(
-        col("id"),
-        get_json_object(col("data"), "$.firstName").as("firstName"),
-        get_json_object(col("data"), "$.lastName").as("lastName"))
+    playerRow(latestState(deduped, "id", "version"))
+      .filter(!col("deleted"))
+      .select("id", "firstName", "lastName")
   }
 
   /** findById (P1): equality predicate on the materialization key. Filtering
@@ -103,57 +97,4 @@ object Materialize {
       events: DataFrame, keyCol: String, orderCol: String,
       bound: Column): DataFrame =
     latestState(events.filter(col(orderCol) <= bound), keyCol, orderCol)
-
-  // -------------------------------------------------------------------------
-  // Typed fold: the direct analog of the query service's event-apply function
-  // (§2.10). An Aggregator is Spark's public, Encoder-backed UDAF surface —
-  // it gets partial aggregation (reduce/merge) for free, so the shuffle
-  // carries one buffer per key per map partition.
-  // -------------------------------------------------------------------------
-
-  /** Mutable-free fold buffer: the winning (version, name, data) so far. */
-  final case class FoldBuf(version: Long, name: String, data: String)
-
-  /** Latest-wins fold as a typed Aggregator[Event, FoldBuf, Option[Player]].
-    * `reduce`/`merge` keep the max-version event; `finish` parses the payload
-    * and applies tombstone semantics. Commutative + associative ⇒ replay
-    * order never matters (ScalaCheck property in MaterializeSpec).
-    */
-  class PlayerFold extends Aggregator[Event, FoldBuf, Option[Player]] {
-    override def zero: FoldBuf = FoldBuf(Long.MinValue, null, null)
-    override def reduce(b: FoldBuf, e: Event): FoldBuf =
-      if (e.version > b.version) FoldBuf(e.version, e.name, e.data) else b
-    override def merge(a: FoldBuf, b: FoldBuf): FoldBuf =
-      if (a.version >= b.version) a else b
-    override def finish(b: FoldBuf): Option[Player] =
-      if (b.name == null || b.name.endsWith("Deleted")) None
-      else Some(Player(0L, jsonField(b.data, "firstName"), jsonField(b.data, "lastName")))
-    override def bufferEncoder: Encoder[FoldBuf] = Encoders.product[FoldBuf]
-    override def outputEncoder: Encoder[Option[Player]] =
-      org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
-  }
-
-  /** Minimal JSON field extraction for the typed path (payloads are flat
-    * string-valued objects, PlayerResourceIT.java:116-120). The DataFrame
-    * path uses `get_json_object`; this avoids dragging a JSON library into
-    * the typed fold.
-    */
-  private[graft] def jsonField(json: String, field: String): String = {
-    if (json == null) return null
-    val m = ("\"" + field + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-    m.findFirstMatchIn(json).map(_.group(1)).orNull
-  }
-
-  /** Typed-path materialization: groupByKey on the aggregate id + the fold.
-    * Same shuffle shape as [[latestState]] (partial buffers per key).
-    */
-  def playerStateTyped(events: Dataset[Event]): Dataset[Player] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val fold = new PlayerFold().toColumn
-    events
-      .groupByKey(_.id)
-      .agg(fold.name("state"))
-      .flatMap { case (id, st) => st.map(_.copy(id = id)) }
-  }
 }

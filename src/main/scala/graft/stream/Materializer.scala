@@ -2,17 +2,9 @@ package graft.stream
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{Encoders => SqlEncoders}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StatefulProcessor, StreamingQuery, TimeMode, TimerValues, Trigger}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import graft.model.{Event, Schemas}
-import graft.state.Materialize.{jsonField, FoldBuf}
-
-/** A player-state update emitted by the streaming materializer; `deleted`
-  * carries the tombstone so a sink can remove the key (the reference's
-  * read model simply drops deleted aggregates — PlayerResourceIT.java:174-188).
-  */
-final case class PlayerUpdate(
-    id: Long, version: Long, firstName: String, lastName: String, deleted: Boolean)
+import graft.state.Materialize
 
 /** Structured Streaming materializer — the engine's analog of the
   * reference's query-side service, which builds its read model *solely* by
@@ -29,15 +21,12 @@ final case class PlayerUpdate(
   * number of partitions in any order — the property that lets the read
   * side scale horizontally.
   *
-  * Two read-model shapes share one per-key rule (latest version wins; on
-  * an equal version the row already held wins; a delete is a tombstone):
-  *  - in memory ([[materialize]], [[materializeTws]], [[startToMemory]]):
-  *    the keyed fold keeps one FoldBuf per key in the checkpoint's state
-  *    store;
-  *  - durable ([[startSnapshot]]): the bucketed parquet snapshot IS the
-  *    fold's state. Each micro-batch is mapped row by row and merged into
-  *    the touched buckets, so the stream is stateless and its checkpoint
-  *    holds offsets only.
+  * The read model ([[startSnapshot]]) is one per-key rule: the latest
+  * version wins; on an equal version the committed snapshot row wins
+  * over an incoming one; a delete is a tombstone. The bucketed parquet
+  * snapshot IS the fold's state. Each micro-batch is mapped to read-model
+  * rows and merged into the touched buckets, so the stream is stateless
+  * and its checkpoint holds offsets only.
   */
 object Materializer {
 
@@ -47,66 +36,6 @@ object Materializer {
   def readEventStream(spark: SparkSession, spoolDir: String): Dataset[Event] = {
     import spark.implicits._
     spark.readStream.schema(Schemas.event).parquet(spoolDir).as[Event]
-  }
-
-  /** ST3: the keyed stateful fold. State per aggregate is one FoldBuf (the
-    * winning version so far) — O(#live aggregates) state total, independent
-    * of event volume; each micro-batch emits one update per touched key
-    * (OutputMode.Update).
-    */
-  def applyEvents(
-      id: Long,
-      events: Iterator[Event],
-      state: GroupState[FoldBuf]): Iterator[PlayerUpdate] = {
-    var buf = state.getOption.getOrElse(FoldBuf(Long.MinValue, null, null))
-    events.foreach { e =>
-      if (e.version > buf.version) buf = FoldBuf(e.version, e.name, e.data)
-    }
-    state.update(buf)
-    Iterator.single(update(id, buf.version, buf.name, buf.data))
-  }
-
-  /** One event (or fold winner) as a read-model row: the payload's
-    * names, or a tombstone when the event is a delete (or absent).
-    */
-  private def update(id: Long, version: Long, name: String, data: String): PlayerUpdate = {
-    val deleted = name == null || name.endsWith("Deleted")
-    PlayerUpdate(
-      id,
-      version,
-      if (deleted) null else jsonField(data, "firstName"),
-      if (deleted) null else jsonField(data, "lastName"),
-      deleted)
-  }
-
-  /** Wire the fold over any event stream (works for both streaming and
-    * batch Datasets — Catalyst plans FlatMapGroupsWithState either way,
-    * which is what the batch≡stream equivalence test exploits).
-    */
-  def materialize(events: Dataset[Event]): Dataset[PlayerUpdate] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout)(applyEvents)
-  }
-
-  /** Run the materializer into an in-memory table (`queryName`), one row
-    * per (key, micro-batch) update — latest row per key is the read model.
-    * AvailableNow processes the current spool then stops: the reference's
-    * replay-from-zero cold start (ST4) as a trigger choice.
-    */
-  def startToMemory(
-      events: Dataset[Event],
-      queryName: String,
-      checkpointDir: String,
-      availableNow: Boolean = true): StreamingQuery = {
-    val writer = materialize(events).writeStream
-      .outputMode(OutputMode.Update)
-      .format("memory")
-      .queryName(queryName)
-      .option("checkpointLocation", checkpointDir)
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
   /** ST5: watermarked tumbling event-time aggregation over the stream.
@@ -194,38 +123,6 @@ object Materializer {
         col("r_version"), col("r_date"))
   }
 
-  /** The same keyed fold on Spark 4's transformWithState API (the successor
-    * to flatMapGroupsWithState): explicit named state handles, TTL support,
-    * timers — and a RocksDB-backed store, which is what bounds memory when
-    * the live-key set itself is large. State per key is still one FoldBuf.
-    */
-  class PlayerFoldProcessor extends StatefulProcessor[Long, Event, PlayerUpdate] {
-    @transient private var buf: org.apache.spark.sql.streaming.ValueState[FoldBuf] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      buf = getHandle.getValueState[FoldBuf]("buf", SqlEncoders.product[FoldBuf],
-        org.apache.spark.sql.streaming.TTLConfig.NONE)
-    override def handleInputRows(
-        key: Long, rows: Iterator[Event], timerValues: TimerValues): Iterator[PlayerUpdate] = {
-      var b = if (buf.exists()) buf.get() else FoldBuf(Long.MinValue, null, null)
-      rows.foreach { e => if (e.version > b.version) b = FoldBuf(e.version, e.name, e.data) }
-      buf.update(b)
-      Iterator.single(update(key, b.version, b.name, b.data))
-    }
-  }
-
-  /** [[materialize]] on the transformWithState engine. Requires the RocksDB
-    * state store provider (ships with Spark; set
-    * `spark.sql.streaming.stateStore.providerClass` to
-    * `...RocksDBStateStoreProvider` on the session).
-    */
-  def materializeTws(events: Dataset[Event]): Dataset[PlayerUpdate] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.id)
-      .transformWithState(new PlayerFoldProcessor(), TimeMode.None(), OutputMode.Update())
-  }
-
   /** Streaming exact-dedup with BOUNDED state: drop redelivered events by
     * (id, version) inside the watermark horizon. Unlike plain
     * `dropDuplicates` (whose key state grows forever),
@@ -247,9 +144,10 @@ object Materializer {
     events.join(broadcast(dim), Seq("id"), "left")
 
   /** The durable read model: each micro-batch maps its events to
-    * [[PlayerUpdate]] rows (the [[applyEvents]] payload and tombstone
-    * rule, per event) and merges them into a parquet snapshot keyed by
-    * id — the store a serving layer scans via [[readSnapshot]].
+    * read-model rows (`id, version, firstName, lastName, deleted` — the
+    * payload and tombstone rule of [[graft.state.Materialize.playerState]],
+    * per event) and merges them into a parquet snapshot keyed by id —
+    * the store a serving layer scans via [[readSnapshot]].
     *
     * The snapshot IS the fold's state. The merge is
     * [[graft.log.EventLog.mergeSnapshotKeyed]]: its latest-wins
@@ -257,13 +155,14 @@ object Materializer {
     * rows) is the fold, so the stream itself is stateless and the
     * checkpoint holds source offsets only — no state store, no second
     * copy of the read model. Tie rule: on an equal version the
-    * committed row wins (the stateful fold's strict `>`), so a
-    * same-version redelivery never overwrites a committed row, and
-    * replaying the spool from a fresh checkpoint into the existing
-    * snapshot leaves it unchanged (StreamingSpec asserts both).
+    * committed row wins over the incoming one, so a same-version
+    * redelivery never overwrites a committed row, and replaying the
+    * spool from a fresh checkpoint into the existing snapshot leaves it
+    * unchanged (StreamingSpec asserts both).
     *
-    * Upgrading a snapshot written by the earlier stateful plan
-    * (`flatMapGroupsWithState`): Spark refuses that plan's checkpoint
+    * Upgrading a snapshot written by the earlier stateful plan (a keyed
+    * state-store fold before the merge): Spark refuses that plan's
+    * checkpoint
     * (STREAMING_STATEFUL_OPERATOR_NOT_MATCH_IN_STATE_METADATA), so point
     * this at a fresh checkpoint dir and keep the snapshot. The first
     * run replays the whole spool once — idempotent by the tie rule, so
@@ -288,9 +187,7 @@ object Materializer {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: Dataset[Event], _: Long) =>
         graft.log.EventLog.mergeSnapshotKeyed(
-          batch.map(e => update(e.id, e.version, e.name, e.data))(
-            SqlEncoders.product[PlayerUpdate]).toDF(),
-          snapshotDir, "id", "version", numBuckets)
+          Materialize.playerRow(batch.toDF()), snapshotDir, "id", "version", numBuckets)
         ()
       }
       .trigger(Trigger.AvailableNow())

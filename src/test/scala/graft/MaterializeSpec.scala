@@ -71,17 +71,6 @@ class MaterializeSpec extends SparkSpec {
     assert(fresh == Set(1L, 2L))
   }
 
-  test("typed Aggregator fold agrees with the DataFrame fold") {
-    import spark.implicits._
-    val events = crudFixture :+ Event(3, "PlayerCreated", 0, ts(4), payload("A", "B"))
-    val typed = Materialize.playerStateTyped(
-        EventLog.pkDedup(events.toDS.toDF).as[Event])
-      .collect().map(p => (p.id, p.firstName, p.lastName)).toSet
-    val df = Materialize.playerState(events.toDS.toDF)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
-    assert(typed == df)
-  }
-
   test("event log round-trip preserves the fold result") {
     import spark.implicits._
     val dir = tmpDir("eventlog")

@@ -27,22 +27,15 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     implicit val sc = spark.sqlContext
     val stream = MemoryStream[Event]
-    // two micro-batches: create-create, then update-delete — exercises
-    // cross-batch state carry, not just a single-batch fold
-    val q = Materializer.startToMemory(stream.toDS(), "stream_state", tmpDir("ckpt"),
-      availableNow = false)
-    stream.addData(fixture.take(2))
-    q.processAllAvailable()
-    stream.addData(fixture.drop(2))
-    q.processAllAvailable()
-    q.stop()
-
-    // latest update per key (max version), minus tombstones = the read model
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"id").orderBy($"version".desc)
-    val live = spark.table("stream_state")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1 && !$"deleted")
+    val root = tmpDir("snap_memory")
+    // two micro-batches: create-create, then update-delete — the second
+    // folds against the rows the first committed, not just within itself
+    Seq(fixture.take(2), fixture.drop(2)).foreach { events =>
+      stream.addData(events)
+      Materializer.startSnapshot(stream.toDS(), s"$root/snapshot", s"$root/ckpt", 8)
+        .awaitTermination()
+    }
+    val live = Materializer.readSnapshot(spark, s"$root/snapshot")
       .select($"id", $"firstName", $"lastName")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet
 
@@ -54,18 +47,17 @@ class StreamingSpec extends SparkSpec {
 
   test("file-spool source: append then tail (S3/S4 transport stand-in)") {
     import spark.implicits._
-    val spool = tmpDir("spool")
+    val root = tmpDir("spool_tail")
+    val spool = s"$root/spool"; val snap = s"$root/snapshot"
+    def tail(): Set[Long] = {
+      Materializer.startSnapshot(Materializer.readEventStream(spark, spool), snap,
+        s"$root/ckpt", 8).awaitTermination()
+      Materializer.readSnapshot(spark, snap).select($"id").as[Long].collect().toSet
+    }
     fixture.take(2).toDS.write.mode("append").parquet(spool)
-    val q = Materializer.startToMemory(
-      Materializer.readEventStream(spark, spool), "spool_state", tmpDir("ckpt2"),
-      availableNow = false)
-    q.processAllAvailable()
+    assert(tail() == Set(1L, 2L))
     fixture.drop(2).toDS.write.mode("append").parquet(spool)
-    q.processAllAvailable()
-    q.stop()
-    val ids = spark.table("spool_state").filter(!$"deleted")
-      .select($"id").distinct().as[Long].collect().toSet
-    assert(ids.contains(1L))
+    assert(tail() == Set(1L))
   }
 
   test("watermarked tumbling windows drop late data past the watermark (ST5)") {
@@ -184,40 +176,6 @@ class StreamingSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(rows.length == rows.distinct.length, "duplicate PK survived streaming dedup")
     assert(rows.length == fixture.map(e => (e.id, e.name, e.version)).distinct.length)
-  }
-
-  test("transformWithState materializer (RocksDB store) agrees with the flatMapGroupsWithState fold") {
-    import spark.implicits._
-    implicit val sc = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[Event]
-      val q = Materializer.materializeTws(stream.toDS()).writeStream
-        .outputMode("update")
-        .format("memory").queryName("tws_state")
-        .option("checkpointLocation", tmpDir("ckpt_tws"))
-        .start()
-      stream.addData(fixture.take(2))
-      q.processAllAvailable()
-      stream.addData(fixture.drop(2))
-      q.processAllAvailable()
-      q.stop()
-      // latest row per key from the update stream = the read model
-      val rows = spark.table("tws_state").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getBoolean(4)))
-        .groupBy(_._1).map { case (_, v) => v.maxBy(_._2) }.toSet
-      // fold over the same fixture in batch for the expected read model
-      val expected = Materializer.materialize(fixture.toDS()).collect()
-        .map(r => (r.id, r.version, r.firstName, r.deleted)).toSet
-      assert(rows == expected, s"$rows != $expected")
-      // the live, non-deleted state matches the reference CRUD outcome
-      assert(rows.filter(!_._4).map(t => (t._1, t._3)) == Set((1L, "Robertupdated")))
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-      case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
   }
 
   test("streaming session windows merge within the gap and emit once the watermark passes") {
@@ -344,6 +302,12 @@ class StreamingSpec extends SparkSpec {
     val served1 = Materializer.readSnapshot(spark, snap)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("firstName")).toMap
     assert(served1 == Map(1L -> "Robertupdated"), s"got $served1")
+    // the row schema every snapshot of this stream has had, so a snapshot
+    // written by an earlier build keeps merging unchanged
+    import org.apache.spark.sql.types._
+    val schema = graft.log.EventLog.readSnapshot(spark, snap).schema.map(f => f.name -> f.dataType)
+    assert(schema == Seq("id" -> LongType, "version" -> LongType, "firstName" -> StringType,
+      "lastName" -> StringType, "deleted" -> BooleanType, "bucket" -> IntegerType), s"got $schema")
     // tombstone row IS durable in the raw snapshot (latest version wins)
     val raw = spark.read.parquet(snap)
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[Boolean]("deleted")).toMap
@@ -375,6 +339,18 @@ class StreamingSpec extends SparkSpec {
       names(Materialize.playerState(graft.log.EventLog.scan(spark, spool).toDF())))
   }
 
+  /** Player payloads a hand-written field scan misreads, chosen by `kind`:
+    * plain, an escaped quote, a backslash, a `\u00e9` escape, and a
+    * nested object with its own `firstName` ahead of the top-level one.
+    */
+  private def escapedPayload(f: String, l: String, kind: Int): String = kind % 5 match {
+    case 0 => payload(f, l)
+    case 1 => payload("O\\\"Brien " + f, l)
+    case 2 => payload(f + "\\\\back", l)
+    case 3 => payload("Ren\\u00e9 " + f, l)
+    case _ => s"""{"meta":{"firstName":"nested"},"firstName":"$f","lastName":"$l"}"""
+  }
+
   /** Every snapshot row, tombstones included. */
   private def rawSnapshot(snap: String): Seq[String] =
     graft.log.EventLog.readSnapshot(spark, snap)
@@ -395,7 +371,8 @@ class StreamingSpec extends SparkSpec {
             if (v == 0) "PlayerCreated"
             else Seq("PlayerUpdated", "PlayerDeleted", "PlayerCreated")(rng.nextInt(3))
           Event(id, name, v, ts(v),
-            if (name == "PlayerDeleted") "{}" else payload(s"f$id.$v", s"l$id.$v"))
+            if (name == "PlayerDeleted") "{}"
+            else escapedPayload(s"f$id.$v", s"l$id.$v", (id + v).toInt))
         }
       }
       val byId = history.groupBy(_.id).values.map(_.sortBy(_.version).map(_.name))
@@ -417,6 +394,12 @@ class StreamingSpec extends SparkSpec {
         val (served, folded) = servedAndFolded(snap, spool)
         assert(served == folded, s"seed $seed run ${i + 1}: snapshot differs from the fold")
       }
+      // the payloads are decoded, not served as their raw JSON text
+      val firsts = Materializer.readSnapshot(spark, snap).select("firstName").as[String]
+        .collect().toSet
+      assert(Seq("O\"Brien f", "Ren\u00e9 f").forall(p => firsts.exists(_.startsWith(p))) &&
+        firsts.exists(_.endsWith("\\back")) && !firsts.contains("nested"),
+        s"seed $seed: undecoded names in $firsts")
       // replaying the whole spool from a fresh checkpoint is a no-op:
       // the checkpoint only has to hold offsets
       val before = rawSnapshot(snap)
@@ -438,8 +421,7 @@ class StreamingSpec extends SparkSpec {
     run(Seq(
       Event(1, "PlayerCreated", 0, ts(0), payload("Robert", "Brem")),
       Event(1, "PlayerUpdated", 1, ts(1), payload("Kept", "Row"))), s"$root/ckpt")
-    // the same version again, with other data: the stateful fold's strict
-    // `>` ignores it, and so must the merge
+    // the same version again, with other data: the committed row wins
     run(Seq(
       Event(1, "PlayerUpdated", 1, ts(2), payload("Late", "Intruder")),
       Event(2, "PlayerCreated", 0, ts(3), payload("Other", "Player"))), s"$root/ckpt")
@@ -454,19 +436,29 @@ class StreamingSpec extends SparkSpec {
   test("a checkpoint of the stateful plan is refused; a fresh checkpoint upgrades the snapshot in place") {
     import spark.implicits._
     import org.apache.spark.sql.Dataset
-    import org.apache.spark.sql.streaming.{OutputMode, Trigger}
-    import graft.stream.PlayerUpdate
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
     val root = tmpDir("snap_upgrade")
     val spool = s"$root/spool"; val snap = s"$root/snapshot"; val ckpt = s"$root/ckpt"
-    // the previous startSnapshot: a flatMapGroupsWithState fold, each
-    // micro-batch deduplicated by id and merged into the snapshot
+    // the previous startSnapshot: a flatMapGroupsWithState fold keeping
+    // each id's winning event in the state store (on an equal version
+    // the held event wins), each micro-batch deduplicated by id and
+    // merged into the snapshot
     def statefulRun(): Unit =
-      Materializer.materialize(Materializer.readEventStream(spark, spool)).writeStream
+      Materializer.readEventStream(spark, spool)
+        .groupByKey(_.id)
+        .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
+          (_: Long, events: Iterator[Event], state: GroupState[Event]) =>
+            val won = (state.getOption.iterator ++ events)
+              .reduce((held, e) => if (e.version > held.version) e else held)
+            state.update(won)
+            Iterator.single(won)
+        }
+        .writeStream
         .outputMode(OutputMode.Update)
         .option("checkpointLocation", ckpt)
-        .foreachBatch { (batch: Dataset[PlayerUpdate], _: Long) =>
+        .foreachBatch { (batch: Dataset[Event], _: Long) =>
           graft.log.EventLog.mergeSnapshotKeyed(
-            batch.dropDuplicates("id").toDF(), snap, "id", "version", 8)
+            Materialize.playerRow(batch.dropDuplicates("id").toDF()), snap, "id", "version", 8)
           ()
         }
         .trigger(Trigger.AvailableNow())
