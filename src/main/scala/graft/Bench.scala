@@ -207,6 +207,12 @@ object Bench {
     }
   }
 
+  /** Where the per-query artifact goes: the full-suite file, or
+    * bench_filtered.json for a run given query names. */
+  private[graft] def artifactPath(filtered: Boolean): String =
+    if (filtered) "bench_filtered.json"
+    else sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -307,8 +313,9 @@ object Bench {
     // The FULL per-query artifact as a standalone file: the driver's tail
     // capture truncates the line above past ~56 queries, leaving 84% of
     // queries invisible to cross-round regression triage (round-9 item 7).
-    // bench_full.json carries every map whole.
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
+    // bench_full.json carries every map whole; a filtered run writes
+    // bench_filtered.json, so it can never replace the full-suite file.
+    val fullPath = artifactPath(filtered = only.isDefined)
     try {
       val w = new java.io.PrintWriter(new java.io.File(fullPath), "UTF-8")
       try w.println(

@@ -1,14 +1,19 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
-import graft.ops.{EventSourcing, Extensions, Extensions2, Extensions3, Extensions4, Extensions5, Extensions6, Extensions7, Extensions8, Extensions9, Extensions10, Extensions11, Extensions12, Extensions13, Extensions14, Extensions15, Extensions16, Extensions17, Extensions18, Extensions19, Extensions20, Extensions21, Extensions22, Extensions23, Extensions24, Extensions25, Extensions26, Extensions27, Extensions28, Extensions29, Extensions30, Extensions31, Extensions32, Extensions33, Extensions34, Extensions35, Extensions36, Extensions37, Extensions38, Extensions39, Extensions40, Extensions41, Extensions42, Extensions43, Extensions44, Extensions45, Extensions46, Extensions47, Extensions48, Extensions49, Extensions50, Extensions51, Extensions52, Extensions53, Extensions54, Extensions55, Extensions56, Extensions57, Extensions58, Extensions59, Extensions60, Extensions61, Extensions62, Extensions63, Extensions64, Extensions65, Extensions66, Extensions67, Extensions68, Extensions69, Extensions70, Extensions71, Extensions72, Extensions73, Extensions74, Extensions75, Extensions76, Extensions77, Extensions78, Extensions79, Extensions80, Extensions81, Extensions82, Extensions83, Extensions84, Extensions85, Extensions86, Extensions87, Extensions88, Extensions89, Extensions90, Extensions91, Extensions92, Extensions93, Extensions94, Extensions95, Extensions96, Extensions97, Extensions98, Extensions99, Extensions100, Extensions101, Extensions102, Extensions103, Extensions104, Extensions105, Extensions106, Extensions107, Extensions108, Extensions109, Extensions110, Extensions111, Extensions112, Extensions113, Extensions114, Extensions115, Extensions116, Extensions117, Extensions118, Extensions119, Extensions120, Extensions121, Extensions122, Extensions123, Extensions124, Extensions125, Extensions126, Extensions127, Extensions128, Extensions129, Extensions130, Extensions131, Extensions132, Extensions133, Extensions134, Extensions135, Extensions136, Extensions137, Extensions138, Extensions139, Extensions140, Extensions141, Extensions142, Extensions143, Extensions144, Extensions145, Extensions146, Multimodal, Rank, Relational, Relational2, Relational3, Relational4, Scale, TimeWindows}
+import graft.ops._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry points: the flagship query ([[entry]]) and the query registry
+  * ([[queries]] runs a query by name, [[oracleSql]] gives its DuckDB oracle).
   *
   * The engine re-expresses the reference CQRS system
   * (robertBrem/pokertracker-cassandra-st) Spark-first: an append-only event
   * log + latest-state materialization (the query service's read model,
   * reference start_container.sh:95), plus the full relational / streaming /
   * data-pipeline operator inventory of SURVEY §2.
+  *
+  * Each query module declares its queries once, as `entries` (name, runner,
+  * oracle SQL); the registry below lists each module once and refuses a
+  * name declared twice.
   */
 object SparkEntry {
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
@@ -18,330 +23,182 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     EventSourcing.latestState(spark, "/root/testdata/sf0.001")
 
-  // module registry as a FLAT Seq folded at runtime — a literal
+  // module registry as a FLAT Seq flattened at runtime — a literal
   // a ++ b ++ c ... chain over 100+ modules nests the typer past the
   // compiler's default thread stack (StackOverflowError at -Xss1m once
   // the 100th module landed); a Seq literal is one flat application
-  private val queryModules: Seq[Map[String, (SparkSession, String) => DataFrame]] = Seq(
-    Relational.queries,
-    Relational2.queries,
-    Relational3.queries,
-    Relational4.queries,
-    EventSourcing.queries,
-    Extensions.queries,
-    Extensions2.queries,
-    Extensions3.queries,
-    Extensions4.queries,
-    Extensions5.queries,
-    Extensions6.queries,
-    Extensions7.queries,
-    Extensions8.queries,
-    Extensions9.queries,
-    Extensions10.queries,
-    Extensions11.queries,
-    Extensions12.queries,
-    Extensions13.queries,
-    Extensions14.queries,
-    Extensions15.queries,
-    Extensions16.queries,
-    Extensions17.queries,
-    Extensions18.queries,
-    Extensions19.queries,
-    Extensions20.queries,
-    Extensions21.queries,
-    Extensions22.queries,
-    Extensions23.queries,
-    Extensions24.queries,
-    Extensions25.queries,
-    Extensions26.queries,
-    Extensions27.queries,
-    Extensions28.queries,
-    Extensions29.queries,
-    Extensions30.queries,
-    Extensions31.queries,
-    Extensions32.queries,
-    Extensions33.queries,
-    Extensions34.queries,
-    Extensions35.queries,
-    Extensions36.queries,
-    Extensions37.queries,
-    Extensions38.queries,
-    Extensions39.queries,
-    Extensions40.queries,
-    Extensions41.queries,
-    Extensions42.queries,
-    Extensions43.queries,
-    Extensions44.queries,
-    Extensions45.queries,
-    Extensions46.queries,
-    Extensions47.queries,
-    Extensions48.queries,
-    Extensions49.queries,
-    Extensions50.queries,
-    Extensions51.queries,
-    Extensions52.queries,
-    Extensions53.queries,
-    Extensions54.queries,
-    Extensions55.queries,
-    Extensions56.queries,
-    Extensions57.queries,
-    Extensions58.queries,
-    Extensions59.queries,
-    Extensions60.queries,
-    Extensions61.queries,
-    Extensions62.queries,
-    Extensions63.queries,
-    Extensions64.queries,
-    Extensions65.queries,
-    Extensions66.queries,
-    Extensions67.queries,
-    Extensions68.queries,
-    Extensions69.queries,
-    Extensions70.queries,
-    Extensions71.queries,
-    Extensions72.queries,
-    Extensions73.queries,
-    Extensions74.queries,
-    Extensions75.queries,
-    Extensions76.queries,
-    Extensions77.queries,
-    Extensions78.queries,
-    Extensions79.queries,
-    Extensions80.queries,
-    Extensions81.queries,
-    Extensions82.queries,
-    Extensions83.queries,
-    Extensions84.queries,
-    Extensions85.queries,
-    Extensions86.queries,
-    Extensions87.queries,
-    Extensions88.queries,
-    Extensions89.queries,
-    Extensions90.queries,
-    Extensions91.queries,
-    Extensions92.queries,
-    Extensions93.queries,
-    Extensions94.queries,
-    Extensions95.queries,
-    Extensions96.queries,
-    Extensions97.queries,
-    Extensions98.queries,
-    Extensions99.queries,
-    Extensions100.queries,
-    Extensions101.queries,
-    Extensions102.queries,
-    Extensions103.queries,
-    Extensions104.queries,
-    Extensions105.queries,
-    Extensions106.queries,
-    Extensions107.queries,
-    Extensions108.queries,
-    Extensions109.queries,
-    Extensions110.queries,
-    Extensions111.queries,
-    Extensions112.queries,
-    Extensions113.queries,
-    Extensions114.queries,
-    Extensions115.queries,
-    Extensions116.queries,
-    Extensions117.queries,
-    Extensions118.queries,
-    Extensions119.queries,
-    Extensions120.queries,
-    Extensions121.queries,
-    Extensions122.queries,
-    Extensions123.queries,
-    Extensions124.queries,
-    Extensions125.queries,
-    Extensions126.queries,
-    Extensions127.queries,
-    Extensions128.queries,
-    Extensions129.queries,
-    Extensions130.queries,
-    Extensions131.queries,
-    Extensions132.queries,
-    Extensions133.queries,
-    Extensions134.queries,
-    Extensions135.queries,
-    Extensions136.queries,
-    Extensions137.queries,
-    Extensions138.queries,
-    Extensions139.queries,
-    Extensions140.queries,
-    Extensions141.queries,
-    Extensions142.queries,
-    Extensions143.queries,
-    Extensions144.queries,
-    Extensions145.queries,
-    Extensions146.queries,
-    TimeWindows.queries,
-    Multimodal.queries,
-    Scale.queries,
-    Rank.queries)
+  private val modules: Seq[Seq[Entry]] = Seq(
+    Relational.entries,
+    Relational2.entries,
+    Relational3.entries,
+    Relational4.entries,
+    EventSourcing.entries,
+    Extensions.entries,
+    Extensions2.entries,
+    Extensions3.entries,
+    Extensions4.entries,
+    Extensions5.entries,
+    Extensions6.entries,
+    Extensions7.entries,
+    Extensions8.entries,
+    Extensions9.entries,
+    Extensions10.entries,
+    Extensions11.entries,
+    Extensions12.entries,
+    Extensions13.entries,
+    Extensions14.entries,
+    Extensions15.entries,
+    Extensions16.entries,
+    Extensions17.entries,
+    Extensions18.entries,
+    Extensions19.entries,
+    Extensions20.entries,
+    Extensions21.entries,
+    Extensions22.entries,
+    Extensions23.entries,
+    Extensions24.entries,
+    Extensions25.entries,
+    Extensions26.entries,
+    Extensions27.entries,
+    Extensions28.entries,
+    Extensions29.entries,
+    Extensions30.entries,
+    Extensions31.entries,
+    Extensions32.entries,
+    Extensions33.entries,
+    Extensions34.entries,
+    Extensions35.entries,
+    Extensions36.entries,
+    Extensions37.entries,
+    Extensions38.entries,
+    Extensions39.entries,
+    Extensions40.entries,
+    Extensions41.entries,
+    Extensions42.entries,
+    Extensions43.entries,
+    Extensions44.entries,
+    Extensions45.entries,
+    Extensions46.entries,
+    Extensions47.entries,
+    Extensions48.entries,
+    Extensions49.entries,
+    Extensions50.entries,
+    Extensions51.entries,
+    Extensions52.entries,
+    Extensions53.entries,
+    Extensions54.entries,
+    Extensions55.entries,
+    Extensions56.entries,
+    Extensions57.entries,
+    Extensions58.entries,
+    Extensions59.entries,
+    Extensions60.entries,
+    Extensions61.entries,
+    Extensions62.entries,
+    Extensions63.entries,
+    Extensions64.entries,
+    Extensions65.entries,
+    Extensions66.entries,
+    Extensions67.entries,
+    Extensions68.entries,
+    Extensions69.entries,
+    Extensions70.entries,
+    Extensions71.entries,
+    Extensions72.entries,
+    Extensions73.entries,
+    Extensions74.entries,
+    Extensions75.entries,
+    Extensions76.entries,
+    Extensions77.entries,
+    Extensions78.entries,
+    Extensions79.entries,
+    Extensions80.entries,
+    Extensions81.entries,
+    Extensions82.entries,
+    Extensions83.entries,
+    Extensions84.entries,
+    Extensions85.entries,
+    Extensions86.entries,
+    Extensions87.entries,
+    Extensions88.entries,
+    Extensions89.entries,
+    Extensions90.entries,
+    Extensions91.entries,
+    Extensions92.entries,
+    Extensions93.entries,
+    Extensions94.entries,
+    Extensions95.entries,
+    Extensions96.entries,
+    Extensions97.entries,
+    Extensions98.entries,
+    Extensions99.entries,
+    Extensions100.entries,
+    Extensions101.entries,
+    Extensions102.entries,
+    Extensions103.entries,
+    Extensions104.entries,
+    Extensions105.entries,
+    Extensions106.entries,
+    Extensions107.entries,
+    Extensions108.entries,
+    Extensions109.entries,
+    Extensions110.entries,
+    Extensions111.entries,
+    Extensions112.entries,
+    Extensions113.entries,
+    Extensions114.entries,
+    Extensions115.entries,
+    Extensions116.entries,
+    Extensions117.entries,
+    Extensions118.entries,
+    Extensions119.entries,
+    Extensions120.entries,
+    Extensions121.entries,
+    Extensions122.entries,
+    Extensions123.entries,
+    Extensions124.entries,
+    Extensions125.entries,
+    Extensions126.entries,
+    Extensions127.entries,
+    Extensions128.entries,
+    Extensions129.entries,
+    Extensions130.entries,
+    Extensions131.entries,
+    Extensions132.entries,
+    Extensions133.entries,
+    Extensions134.entries,
+    Extensions135.entries,
+    Extensions136.entries,
+    Extensions137.entries,
+    Extensions138.entries,
+    Extensions139.entries,
+    Extensions140.entries,
+    Extensions141.entries,
+    Extensions142.entries,
+    Extensions143.entries,
+    Extensions144.entries,
+    Extensions145.entries,
+    Extensions146.entries,
+    TimeWindows.entries,
+    Multimodal.entries,
+    Scale.entries,
+    Rank.entries)
 
-  private val oracleModules: Seq[Map[String, String]] = Seq(
-    Relational.oracles,
-    Relational2.oracles,
-    Relational3.oracles,
-    Relational4.oracles,
-    EventSourcing.oracles,
-    Extensions.oracles,
-    Extensions2.oracles,
-    Extensions3.oracles,
-    Extensions4.oracles,
-    Extensions5.oracles,
-    Extensions6.oracles,
-    Extensions7.oracles,
-    Extensions8.oracles,
-    Extensions9.oracles,
-    Extensions10.oracles,
-    Extensions11.oracles,
-    Extensions12.oracles,
-    Extensions13.oracles,
-    Extensions14.oracles,
-    Extensions15.oracles,
-    Extensions16.oracles,
-    Extensions17.oracles,
-    Extensions18.oracles,
-    Extensions19.oracles,
-    Extensions20.oracles,
-    Extensions21.oracles,
-    Extensions22.oracles,
-    Extensions23.oracles,
-    Extensions24.oracles,
-    Extensions25.oracles,
-    Extensions26.oracles,
-    Extensions27.oracles,
-    Extensions28.oracles,
-    Extensions29.oracles,
-    Extensions30.oracles,
-    Extensions31.oracles,
-    Extensions32.oracles,
-    Extensions33.oracles,
-    Extensions34.oracles,
-    Extensions35.oracles,
-    Extensions36.oracles,
-    Extensions37.oracles,
-    Extensions38.oracles,
-    Extensions39.oracles,
-    Extensions40.oracles,
-    Extensions41.oracles,
-    Extensions42.oracles,
-    Extensions43.oracles,
-    Extensions44.oracles,
-    Extensions45.oracles,
-    Extensions46.oracles,
-    Extensions47.oracles,
-    Extensions48.oracles,
-    Extensions49.oracles,
-    Extensions50.oracles,
-    Extensions51.oracles,
-    Extensions52.oracles,
-    Extensions53.oracles,
-    Extensions54.oracles,
-    Extensions55.oracles,
-    Extensions56.oracles,
-    Extensions57.oracles,
-    Extensions58.oracles,
-    Extensions59.oracles,
-    Extensions60.oracles,
-    Extensions61.oracles,
-    Extensions62.oracles,
-    Extensions63.oracles,
-    Extensions64.oracles,
-    Extensions65.oracles,
-    Extensions66.oracles,
-    Extensions67.oracles,
-    Extensions68.oracles,
-    Extensions69.oracles,
-    Extensions70.oracles,
-    Extensions71.oracles,
-    Extensions72.oracles,
-    Extensions73.oracles,
-    Extensions74.oracles,
-    Extensions75.oracles,
-    Extensions76.oracles,
-    Extensions77.oracles,
-    Extensions78.oracles,
-    Extensions79.oracles,
-    Extensions80.oracles,
-    Extensions81.oracles,
-    Extensions82.oracles,
-    Extensions83.oracles,
-    Extensions84.oracles,
-    Extensions85.oracles,
-    Extensions86.oracles,
-    Extensions87.oracles,
-    Extensions88.oracles,
-    Extensions89.oracles,
-    Extensions90.oracles,
-    Extensions91.oracles,
-    Extensions92.oracles,
-    Extensions93.oracles,
-    Extensions94.oracles,
-    Extensions95.oracles,
-    Extensions96.oracles,
-    Extensions97.oracles,
-    Extensions98.oracles,
-    Extensions99.oracles,
-    Extensions100.oracles,
-    Extensions101.oracles,
-    Extensions102.oracles,
-    Extensions103.oracles,
-    Extensions104.oracles,
-    Extensions105.oracles,
-    Extensions106.oracles,
-    Extensions107.oracles,
-    Extensions108.oracles,
-    Extensions109.oracles,
-    Extensions110.oracles,
-    Extensions111.oracles,
-    Extensions112.oracles,
-    Extensions113.oracles,
-    Extensions114.oracles,
-    Extensions115.oracles,
-    Extensions116.oracles,
-    Extensions117.oracles,
-    Extensions118.oracles,
-    Extensions119.oracles,
-    Extensions120.oracles,
-    Extensions121.oracles,
-    Extensions122.oracles,
-    Extensions123.oracles,
-    Extensions124.oracles,
-    Extensions125.oracles,
-    Extensions126.oracles,
-    Extensions127.oracles,
-    Extensions128.oracles,
-    Extensions129.oracles,
-    Extensions130.oracles,
-    Extensions131.oracles,
-    Extensions132.oracles,
-    Extensions133.oracles,
-    Extensions134.oracles,
-    Extensions135.oracles,
-    Extensions136.oracles,
-    Extensions137.oracles,
-    Extensions138.oracles,
-    Extensions139.oracles,
-    Extensions140.oracles,
-    Extensions141.oracles,
-    Extensions142.oracles,
-    Extensions143.oracles,
-    Extensions144.oracles,
-    Extensions145.oracles,
-    Extensions146.oracles,
-    TimeWindows.oracles,
-    Multimodal.oracles,
-    Scale.oracles,
-    Rank.oracles)
+  /** Name → entry; a name declared twice fails here, naming it. */
+  private[graft] def index(entries: Seq[Entry]): Map[String, Entry] = {
+    val dup = entries.groupBy(_.name).collect { case (n, es) if es.size > 1 => n }
+    require(dup.isEmpty, s"query registry: duplicate name(s) ${dup.toSeq.sorted.mkString(", ")}")
+    entries.map(e => e.name -> e).toMap
+  }
+
+  private val registry: Map[String, Entry] = index(modules.flatten)
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    queryModules.foldLeft(Map.empty[String, (SparkSession, String) => DataFrame])(_ ++ _)
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (n, e) => n -> e.run }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    oracleModules.foldLeft(Map.empty[String, String])(_ ++ _)
+    * the same parquet tables. */
+  val oracleSql: Map[String, String] =
+    registry.map { case (n, e) => n -> e.oracleSql }
 }

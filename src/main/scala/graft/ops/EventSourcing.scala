@@ -92,30 +92,30 @@ object EventSourcing {
       .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
   }
 
-  val oracles: Map[String, String] = Map(
-    "q50_interval_join" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("q50_interval_join", intervalJoinBatch _, """
       SELECT c.user_id AS user_id, c.event_id AS click_id, p.event_id AS purchase_id
       FROM (SELECT user_id, event_id, ts FROM events WHERE event_type = 'click') c
       JOIN (SELECT user_id, event_id, ts FROM events WHERE event_type = 'purchase') p
         ON c.user_id = p.user_id
        AND epoch_us(p.ts) >= epoch_us(c.ts)
        AND epoch_us(p.ts) - epoch_us(c.ts) <= 600000000
-      ORDER BY 1, 2, 3""",
-    "q32_latest_state" -> """
+      ORDER BY 1, 2, 3"""),
+    Entry("q32_latest_state", latestState _, """
       SELECT event_id, ts, user_id, event_type, value, props
       FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
             FROM events) sub
       WHERE rn = 1
-      ORDER BY user_id""",
-    "q33_user_stats" -> """
+      ORDER BY user_id"""),
+    Entry("q33_user_stats", userStats _, """
       SELECT user_id, count(*) AS n_events,
              count(DISTINCT event_type) AS n_types,
              round(sum(value), 2) AS total_value,
              min(ts) AS first_ts, max(ts) AS last_ts
       FROM events
       GROUP BY user_id
-      ORDER BY user_id""",
-    "q34_sessionize" -> """
+      ORDER BY user_id"""),
+    Entry("q34_sessionize", sessionize _, """
       WITH g AS (
         SELECT user_id, ts, event_id, value,
                epoch_us(ts) - lag(epoch_us(ts), 1)
@@ -133,18 +133,11 @@ object EventSourcing {
              count(*) AS n_events, round(sum(value), 2) AS session_value
       FROM numbered
       GROUP BY user_id, session_idx
-      ORDER BY user_id, session_idx""",
-    "q35_daily_type_counts" -> """
+      ORDER BY user_id, session_idx"""),
+    Entry("q35_daily_type_counts", dailyTypeCounts _, """
       SELECT date_trunc('day', ts) AS day, event_type,
              count(*) AS n, round(sum(value), 2) AS total_value
       FROM events
       GROUP BY 1, 2
-      ORDER BY day, event_type""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q50_interval_join" -> (intervalJoinBatch _),
-    "q32_latest_state" -> (latestState _),
-    "q33_user_stats" -> (userStats _),
-    "q34_sessionize" -> (sessionize _),
-    "q35_daily_type_counts" -> (dailyTypeCounts _))
+      ORDER BY day, event_type"""))
 }

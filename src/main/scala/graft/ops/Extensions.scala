@@ -897,22 +897,22 @@ object Extensions {
       ORDER BY doc_a, doc_b"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x03_minhash_lsh" -> x03OracleSql,
-    "x04_simhash" -> x04OracleSql,
-    "x12_approx_distinct" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x03_minhash_lsh", x03MinhashLsh _, x03OracleSql),
+    Entry("x04_simhash", x04Simhash _, x04OracleSql),
+    Entry("x12_approx_distinct", x12ApproxDistinct _, """
       SELECT event_type, count(DISTINCT user_id) AS exact_users,
              TRUE AS approx_within_5pct
       FROM events
       GROUP BY event_type
-      ORDER BY event_type""",
-    "x01_exact_dedup" -> """
+      ORDER BY event_type"""),
+    Entry("x01_exact_dedup", x01ExactDedup _, """
       SELECT doc_id, lang, source, n_chars
       FROM (SELECT *, row_number() OVER (PARTITION BY md5(text) ORDER BY doc_id) AS rn
             FROM documents) sub
       WHERE rn = 1
-      ORDER BY doc_id""",
-    "x02_jaccard_pairs" -> """
+      ORDER BY doc_id"""),
+    Entry("x02_jaccard_pairs", x02JaccardPairs _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
       sh0 AS (SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS sh
               FROM d, UNNEST(generate_series(1, CASE WHEN len(toks) >= 5 THEN len(toks)-4 ELSE 1 END)) AS g(i)),
@@ -927,8 +927,8 @@ object Extensions {
       JOIN cnt ca ON ca.doc_id = doc_a
       JOIN cnt cb ON cb.doc_id = doc_b
       WHERE round(shared * 1.0 / (ca.n_sh + cb.n_sh - shared), 4) >= 0.5
-      ORDER BY doc_a, doc_b""",
-    "x05_cosine_topk" -> """
+      ORDER BY doc_a, doc_b"""),
+    Entry("x05_cosine_topk", x05CosineTopk _, """
       WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       q AS (SELECT vec_id AS q_id, v AS qv FROM base WHERE vec_id < 10),
       scored AS (
@@ -940,8 +940,8 @@ object Extensions {
         SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rk
         FROM scored)
       SELECT q_id, c_id, sim, rk FROM ranked WHERE rk <= 5
-      ORDER BY q_id, rk""",
-    "x06_ann_sign_bucket" -> """
+      ORDER BY q_id, rk"""),
+    Entry("x06_ann_sign_bucket", x06AnnSignBucket _, """
       WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
                (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
@@ -961,8 +961,8 @@ object Extensions {
         SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rk
         FROM scored)
       SELECT q_id, c_id, sim, rk FROM ranked WHERE rk <= 3
-      ORDER BY q_id, rk""",
-    "x13_ann_multiprobe" -> """
+      ORDER BY q_id, rk"""),
+    Entry("x13_ann_multiprobe", x13AnnMultiprobe _, """
       WITH base AS (
         SELECT vec_id, embedding AS v,
                (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
@@ -985,8 +985,8 @@ object Extensions {
         SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rk
         FROM scored)
       SELECT q_id, c_id, sim, rk FROM ranked WHERE rk <= 3
-      ORDER BY q_id, rk""",
-    "x15_embedding_neardup" -> """
+      ORDER BY q_id, rk"""),
+    Entry("x15_embedding_neardup", x15EmbeddingNearDup _, """
       WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
                (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
@@ -1000,8 +1000,8 @@ object Extensions {
              round(list_cosine_similarity(a.v, b.v), 4) AS sim
       FROM base a JOIN base b ON a.bkt = b.bkt AND a.vec_id < b.vec_id
       WHERE round(list_cosine_similarity(a.v, b.v), 4) >= 0.45
-      ORDER BY 1, 2""",
-    "x14_quality_score" -> """
+      ORDER BY 1, 2"""),
+    Entry("x14_quality_score", x14QualityScore _, """
       WITH f AS (
         SELECT doc_id,
                len(string_split(lower(text), ' ')) AS n_tokens,
@@ -1019,8 +1019,8 @@ object Extensions {
       SELECT doc_id, n_tokens, round(uniq_ratio, 4) AS uniq_ratio, score,
              CASE WHEN score >= 0.5 THEN 1 ELSE 0 END AS keep
       FROM s
-      ORDER BY doc_id""",
-    "x07_text_stats" -> """
+      ORDER BY doc_id"""),
+    Entry("x07_text_stats", x07TextStats _, """
       WITH t AS (SELECT doc_id, n_chars, string_split(lower(text), ' ') AS toks, text
                  FROM documents)
       SELECT doc_id, n_chars,
@@ -1029,8 +1029,8 @@ object Extensions {
              round(len(list_distinct(toks)) * 1.0 / len(toks), 4) AS uniq_ratio,
              round(length(replace(text, ' ', '')) * 1.0 / len(toks), 4) AS avg_tok_len
       FROM t
-      ORDER BY doc_id""",
-    "x08_langid" -> """
+      ORDER BY doc_id"""),
+    Entry("x08_langid", x08LangId _, """
       WITH t AS (SELECT doc_id, lang AS labeled_lang,
                         string_split(lower(text), ' ') AS toks
                  FROM documents),
@@ -1047,15 +1047,15 @@ object Extensions {
                   WHEN s_fr >= s_es THEN 'fr'
                   ELSE 'es' END AS pred_lang
       FROM scored
-      ORDER BY doc_id""",
-    "x09_token_count" -> """
+      ORDER BY doc_id"""),
+    Entry("x09_token_count", x09TokenCount _, """
       SELECT doc_id,
              len(string_split(lower(text), ' ')) AS ws_tokens,
              len(regexp_extract_all(lower(text), '[a-z0-9]+')) AS word_tokens,
              len(regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9 ]')) AS bpeish_tokens
       FROM documents
-      ORDER BY doc_id""",
-    "x10_fingerprint" -> """
+      ORDER BY doc_id"""),
+    Entry("x10_fingerprint", x10Fingerprint _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
       terms AS (
         SELECT doc_id, i * (ascii(toks[i]) * 131 + length(toks[i])) AS term
@@ -1063,21 +1063,5 @@ object Extensions {
       SELECT doc_id, CAST(sum(term) % 1000000007 AS BIGINT) AS fingerprint
       FROM terms
       GROUP BY doc_id
-      ORDER BY doc_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x01_exact_dedup" -> (x01ExactDedup _),
-    "x02_jaccard_pairs" -> (x02JaccardPairs _),
-    "x03_minhash_lsh" -> (x03MinhashLsh _),
-    "x04_simhash" -> (x04Simhash _),
-    "x05_cosine_topk" -> (x05CosineTopk _),
-    "x06_ann_sign_bucket" -> (x06AnnSignBucket _),
-    "x13_ann_multiprobe" -> (x13AnnMultiprobe _),
-    "x14_quality_score" -> (x14QualityScore _),
-    "x15_embedding_neardup" -> (x15EmbeddingNearDup _),
-    "x07_text_stats" -> (x07TextStats _),
-    "x08_langid" -> (x08LangId _),
-    "x09_token_count" -> (x09TokenCount _),
-    "x10_fingerprint" -> (x10Fingerprint _),
-    "x12_approx_distinct" -> (x12ApproxDistinct _))
+      ORDER BY doc_id"""))
 }

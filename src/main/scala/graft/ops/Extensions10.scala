@@ -140,8 +140,8 @@ object Extensions10 {
     embeddingValidation(emb(s, dir), "embedding", "label")
       .orderBy(col("grp"))
 
-  val oracles: Map[String, String] = Map(
-    "x57_source_overlap_sketch" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x57_source_overlap_sketch", x57SourceOverlapSketch _, """
       WITH d AS (SELECT source AS src, string_split(lower(text), ' ') AS toks FROM documents),
       sh0 AS (SELECT src, array_to_string(toks[i:i+4], ' ') AS sh
               FROM d, UNNEST(generate_series(1, CASE WHEN len(toks) >= 5 THEN len(toks)-4 ELSE 1 END)) AS g(i)),
@@ -156,19 +156,19 @@ object Extensions10 {
                 FROM sigs a JOIN sigs b ON a.i = b.i AND a.src < b.src
                 GROUP BY 1, 2)
       SELECT src_a, src_b, n_match, round(n_match / 32.0, 4) AS est_jaccard
-      FROM pairs ORDER BY src_a, src_b""",
+      FROM pairs ORDER BY src_a, src_b"""),
     // property oracle (x12-style): exact columns value-checked, and the
     // engine-side boolean "HLL within 15% (3x the 5% rsd) of exact" must
     // come out TRUE
-    "x58_source_vocab" -> """
+    Entry("x58_source_vocab", x58SourceVocab _, """
       WITH t AS (SELECT source AS src, u.tok
                  FROM (SELECT source, string_split(lower(text), ' ') AS tk FROM documents),
                       UNNEST(tk) AS u(tok))
       SELECT src, count(*) AS n_tokens,
              count(DISTINCT tok) AS exact_vocab,
              TRUE AS vocab_in_bound
-      FROM t GROUP BY 1 ORDER BY src""",
-    "x59_embedding_validation" -> """
+      FROM t GROUP BY 1 ORDER BY src"""),
+    Entry("x59_embedding_validation", x59EmbeddingValidation _, """
       WITH f AS (SELECT label AS grp, len(embedding) AS dim,
                         list_sum(list_transform(embedding::DOUBLE[], x -> x * x)) AS sq
                  FROM embeddings)
@@ -178,10 +178,5 @@ object Extensions10 {
              CAST(0 AS BIGINT) AS n_nonfinite,
              round(min(sqrt(sq)), 4) AS min_norm,
              round(max(sqrt(sq)), 4) AS max_norm
-      FROM f GROUP BY 1 ORDER BY grp""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x57_source_overlap_sketch" -> (x57SourceOverlapSketch _),
-    "x58_source_vocab" -> (x58SourceVocab _),
-    "x59_embedding_validation" -> (x59EmbeddingValidation _))
+      FROM f GROUP BY 1 ORDER BY grp"""))
 }

@@ -189,9 +189,6 @@ object Extensions100 {
       ORDER BY g.threshold"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x228_lsh_geometry" -> x228OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x228_lsh_geometry" -> (x228LshAudit _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x228_lsh_geometry", x228LshAudit _, x228OracleSql))
 }

@@ -192,11 +192,7 @@ object Extensions101 {
       FROM p JOIN t ON t.g = p.g
       ORDER BY group_key"""
 
-  val oracles: Map[String, String] = Map(
-    "x229_savings_frontier" -> x229OracleSql,
-    "x230_grouped_length_fit" -> x230OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x229_savings_frontier" -> (x229SavingsFrontier _),
-    "x230_grouped_length_fit" -> (x230GroupedFit _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x229_savings_frontier", x229SavingsFrontier _, x229OracleSql),
+    Entry("x230_grouped_length_fit", x230GroupedFit _, x230OracleSql))
 }

@@ -568,13 +568,8 @@ object Extensions102 {
       ORDER BY s.posting_cap"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x232_chargram_dedup" -> x232OracleSql,
-    "x286_chargram_cap_card" -> x286OracleSql,
-    "x321_posting_cap_plan" -> x321OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x232_chargram_dedup" -> (x232CharGramDedup _),
-    "x286_chargram_cap_card" -> (x286CharGramCapCard _),
-    "x321_posting_cap_plan" -> (x321PostingCapPlan _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x232_chargram_dedup", x232CharGramDedup _, x232OracleSql),
+    Entry("x286_chargram_cap_card", x286CharGramCapCard _, x286OracleSql),
+    Entry("x321_posting_cap_plan", x321PostingCapPlan _, x321OracleSql))
 }

@@ -94,9 +94,6 @@ object Extensions103 {
       WHERE round(shared * 1.0 / least(ca.n_sh, cb.n_sh), 4) >= 0.8
       ORDER BY doc_a, doc_b"""
 
-  val oracles: Map[String, String] = Map(
-    "x234_containment_pairs" -> x234OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x234_containment_pairs" -> (x234ContainmentPairs _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x234_containment_pairs", x234ContainmentPairs _, x234OracleSql))
 }

@@ -158,11 +158,7 @@ object Extensions104 {
       FROM red JOIN cnt ON cnt.label = red.label
       ORDER BY red.label"""
 
-  val oracles: Map[String, String] = Map(
-    "x235_oov_curve" -> x235OracleSql,
-    "x237_centroid_drift" -> x237OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x235_oov_curve" -> (x235OovCurve _),
-    "x237_centroid_drift" -> (x237CentroidDrift _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x235_oov_curve", x235OovCurve _, x235OracleSql),
+    Entry("x237_centroid_drift", x237CentroidDrift _, x237OracleSql))
 }

@@ -235,13 +235,8 @@ object Extensions105 {
              array_to_string(ck, ' ') AS chunk_text
       FROM idx ORDER BY doc_id, chunk_idx"""
 
-  val oracles: Map[String, String] = Map(
-    "x238_bloom_semi_join" -> x238OracleSql,
-    "x239_zorder_card" -> x239OracleSql,
-    "x240_chunks" -> x240OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x238_bloom_semi_join" -> (x238BloomSemiJoin _),
-    "x239_zorder_card" -> (x239ZOrderCard _),
-    "x240_chunks" -> (x240Chunks _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x238_bloom_semi_join", x238BloomSemiJoin _, x238OracleSql),
+    Entry("x239_zorder_card", x239ZOrderCard _, x239OracleSql),
+    Entry("x240_chunks", x240Chunks _, x240OracleSql))
 }

@@ -301,13 +301,8 @@ object Extensions106 {
     derived
   }
 
-  val oracles: Map[String, String] = Map(
-    "x241_knn_eval" -> x241OracleSql,
-    "x243_split_leakage" -> x243OracleSql,
-    "x283_knn_eval_budgeted" -> x283OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x241_knn_eval" -> (x241KnnEval _),
-    "x243_split_leakage" -> (x243SplitLeakage _),
-    "x283_knn_eval_budgeted" -> (x283KnnEvalBudgeted _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x241_knn_eval", x241KnnEval _, x241OracleSql),
+    Entry("x243_split_leakage", x243SplitLeakage _, x243OracleSql),
+    Entry("x283_knn_eval_budgeted", x283KnnEvalBudgeted _, x283OracleSql))
 }

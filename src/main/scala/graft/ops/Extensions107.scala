@@ -166,13 +166,8 @@ object Extensions107 {
       GROUP BY bound_minutes, tot.n
       ORDER BY bound_minutes"""
 
-  val oracles: Map[String, String] = Map(
-    "x244_asof_state" -> x244OracleSql,
-    "x245_erasure_certificate" -> x245OracleSql,
-    "x246_watermark_plan" -> x246OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x244_asof_state" -> (x244AsOfState _),
-    "x245_erasure_certificate" -> (x245ErasureCertificate _),
-    "x246_watermark_plan" -> (x246WatermarkPlan _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x244_asof_state", x244AsOfState _, x244OracleSql),
+    Entry("x245_erasure_certificate", x245ErasureCertificate _, x245OracleSql),
+    Entry("x246_watermark_plan", x246WatermarkPlan _, x246OracleSql))
 }

@@ -244,11 +244,7 @@ object Extensions108 {
       SELECT doc_a, doc_b, jaccard FROM vf WHERE jaccard >= 0.5
       ORDER BY doc_a, doc_b"""
 
-  val oracles: Map[String, String] = Map(
-    "x247_projection_sweep" -> x247OracleSql,
-    "x248_sorted_neighborhood" -> x248OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x247_projection_sweep" -> (x247ProjectionSweep _),
-    "x248_sorted_neighborhood" -> (x248SortedNeighborhood _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x247_projection_sweep", x247ProjectionSweep _, x247OracleSql),
+    Entry("x248_sorted_neighborhood", x248SortedNeighborhood _, x248OracleSql))
 }

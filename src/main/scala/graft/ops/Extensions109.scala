@@ -168,11 +168,7 @@ object Extensions109 {
              round(sum(value), 2) AS sum_value
       FROM routed GROUP BY reason ORDER BY reason"""
 
-  val oracles: Map[String, String] = Map(
-    "x249_upcast_card" -> x249OracleSql,
-    "x250_dead_letter_card" -> x250OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x249_upcast_card" -> (x249UpcastCard _),
-    "x250_dead_letter_card" -> (x250DeadLetterCard _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x249_upcast_card", x249UpcastCard _, x249OracleSql),
+    Entry("x250_dead_letter_card", x250DeadLetterCard _, x250OracleSql))
 }

@@ -104,8 +104,8 @@ object Extensions11 {
       .orderBy(col("doc_id"))
   }
 
-  val oracles: Map[String, String] = Map(
-    "x60_stratified_split" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x60_stratified_split", x60StratifiedSplit _, """
       WITH s AS (
         SELECT source,
                CASE WHEN ('0x' || substr(md5(doc_id::VARCHAR || ':split'), 1, 15))::BIGINT % 1000 < 100 THEN 'val'
@@ -113,8 +113,8 @@ object Extensions11 {
                     ELSE 'train' END AS split
         FROM documents)
       SELECT source, split, count(*) AS n_docs
-      FROM s GROUP BY 1, 2 ORDER BY source, split""",
-    "x61_budget_select" -> """
+      FROM s GROUP BY 1, 2 ORDER BY source, split"""),
+    Entry("x61_budget_select", x61BudgetSelect _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       t AS (SELECT doc_id, len(tk) AS n_tokens, u.tok FROM d, UNNEST(tk) AS u(tok)),
       sc AS (SELECT doc_id, CAST(max(n_tokens) AS BIGINT) AS n_tokens,
@@ -133,9 +133,5 @@ object Extensions11 {
             FROM sh)
       SELECT doc_id, shard, score, n_tokens, cum_before,
              cum_before < 3000 AS selected
-      FROM c ORDER BY doc_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x60_stratified_split" -> (x60StratifiedSplit _),
-    "x61_budget_select" -> (x61BudgetSelect _))
+      FROM c ORDER BY doc_id"""))
 }

@@ -211,11 +211,7 @@ object Extensions110 {
       FROM best b JOIN d ON d.doc_id = b.c_id
       ORDER BY b.q_id, b.c_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x251_query_expansion" -> x251OracleSql,
-    "x252_snippets" -> x252OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x251_query_expansion" -> (x251QueryExpansion _),
-    "x252_snippets" -> (x252Snippets _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x251_query_expansion", x251QueryExpansion _, x251OracleSql),
+    Entry("x252_snippets", x252Snippets _, x252OracleSql))
 }

@@ -251,11 +251,7 @@ object Extensions111 {
         FROM scored) WHERE rk <= 3
       ORDER BY q_id, rk"""
 
-  val oracles: Map[String, String] = Map(
-    "x253_prefix_filter_pairs" -> x253OracleSql,
-    "x254_dirichlet_ql" -> x254OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x253_prefix_filter_pairs" -> (x253PrefixFilterPairs _),
-    "x254_dirichlet_ql" -> (x254DirichletQl _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x253_prefix_filter_pairs", x253PrefixFilterPairs _, x253OracleSql),
+    Entry("x254_dirichlet_ql", x254DirichletQl _, x254OracleSql))
 }

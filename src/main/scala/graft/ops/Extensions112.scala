@@ -446,13 +446,8 @@ object Extensions112 {
       WHERE jaro_winkler_similarity(a.p_name, b.p_name) >= 0.9
       ORDER BY id_a, id_b"""
 
-  val oracles: Map[String, String] = Map(
-    "x255_linkage_em" -> x255OracleSql,
-    "x256_kneser_ney" -> x256OracleSql,
-    "x257_jaro_winkler" -> x257OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x255_linkage_em" -> (x255LinkageEm _),
-    "x256_kneser_ney" -> (x256KneserNey _),
-    "x257_jaro_winkler" -> (x257JaroWinkler _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x255_linkage_em", x255LinkageEm _, x255OracleSql),
+    Entry("x256_kneser_ney", x256KneserNey _, x256OracleSql),
+    Entry("x257_jaro_winkler", x257JaroWinkler _, x257OracleSql))
 }

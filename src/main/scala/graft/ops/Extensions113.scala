@@ -207,11 +207,7 @@ object Extensions113 {
       FROM pairs
       ORDER BY g_a, g_b"""
 
-  val oracles: Map[String, String] = Map(
-    "x258_seq_patterns" -> x258OracleSql,
-    "x259_wasserstein" -> x259OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x258_seq_patterns" -> (x258SeqPatterns _),
-    "x259_wasserstein" -> (x259WassersteinMatrix _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x258_seq_patterns", x258SeqPatterns _, x258OracleSql),
+    Entry("x259_wasserstein", x259WassersteinMatrix _, x259OracleSql))
 }

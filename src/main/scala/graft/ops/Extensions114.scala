@@ -200,11 +200,7 @@ object Extensions114 {
       WHERE rk <= 3
       ORDER BY g, rk"""
 
-  val oracles: Map[String, String] = Map(
-    "x260_cem_att" -> x260OracleSql,
-    "x261_topk_agg" -> x261OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x260_cem_att" -> (x260CemAtt _),
-    "x261_topk_agg" -> (x261TopKAgg _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x260_cem_att", x260CemAtt _, x260OracleSql),
+    Entry("x261_topk_agg", x261TopKAgg _, x261OracleSql))
 }

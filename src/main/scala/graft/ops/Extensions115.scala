@@ -111,9 +111,6 @@ object Extensions115 {
       ORDER BY gain DESC, t
       LIMIT 1"""
 
-  val oracles: Map[String, String] = Map(
-    "x262_changepoint" -> x262OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x262_changepoint" -> (x262Changepoint _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x262_changepoint", x262Changepoint _, x262OracleSql))
 }

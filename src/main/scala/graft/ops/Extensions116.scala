@@ -319,11 +319,7 @@ object Extensions116 {
       ORDER BY dw.doc_id"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x263_unigram_pieces" -> x263OracleSql,
-    "x264_unigram_fertility" -> x264OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x263_unigram_pieces" -> (x263UnigramPieces _),
-    "x264_unigram_fertility" -> (x264UnigramFertility _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x263_unigram_pieces", x263UnigramPieces _, x263OracleSql),
+    Entry("x264_unigram_fertility", x264UnigramFertility _, x264OracleSql))
 }

@@ -258,9 +258,6 @@ object Extensions117 {
       rows.mkString("\n      ", "\n      UNION ALL\n      ", "\n      ORDER BY grp")
   }
 
-  val oracles: Map[String, String] = Map(
-    "x265_data_valuation" -> x265OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x265_data_valuation" -> (x265DataValuation _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x265_data_valuation", x265DataValuation _, x265OracleSql))
 }

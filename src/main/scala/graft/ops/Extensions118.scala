@@ -185,11 +185,7 @@ object Extensions118 {
                ELSE 0.0 END AS z
       FROM sp, ties"""
 
-  val oracles: Map[String, String] = Map(
-    "x266_theil_sen" -> x266OracleSql,
-    "x267_mann_kendall" -> x267OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x266_theil_sen" -> (x266TheilSen _),
-    "x267_mann_kendall" -> (x267MannKendall _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x266_theil_sen", x266TheilSen _, x266OracleSql),
+    Entry("x267_mann_kendall", x267MannKendall _, x267OracleSql))
 }

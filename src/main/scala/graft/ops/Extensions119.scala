@@ -91,11 +91,7 @@ object Extensions119 {
       GROUP BY dw.doc_id
       ORDER BY dw.doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x268_unigram_pruned" -> x268OracleSql,
-    "x269_fertility_pruned" -> x269OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x268_unigram_pruned" -> (x268UnigramPruned _),
-    "x269_fertility_pruned" -> (x269FertilityPruned _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x268_unigram_pruned", x268UnigramPruned _, x268OracleSql),
+    Entry("x269_fertility_pruned", x269FertilityPruned _, x269OracleSql))
 }

@@ -142,8 +142,8 @@ object Extensions12 {
       .orderBy(col("q_id"))
   }
 
-  val oracles: Map[String, String] = Map(
-    "x62_hybrid_rrf" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x62_hybrid_rrf", x62HybridRrf _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       tf AS (SELECT doc_id AS c_id, len(tk) AS dl, u.term, count(*) AS tf
              FROM d, UNNEST(tk) AS u(term) GROUP BY 1, 2, 3),
@@ -179,8 +179,8 @@ object Extensions12 {
       ranked AS (SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY rrf DESC, c_id) AS rk
                  FROM fused)
       SELECT q_id, c_id, rrf, n_lists, rk FROM ranked WHERE rk <= 5
-      ORDER BY q_id, rk""",
-    "x63_ranking_agreement" -> """
+      ORDER BY q_id, rk"""),
+    Entry("x63_ranking_agreement", x63RankingAgreement _, """
       WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
                (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
@@ -215,9 +215,5 @@ object Extensions12 {
              CAST(coalesce(agreed.n_common, 0) AS BIGINT) AS n_common
       FROM (SELECT DISTINCT q_id FROM ann) qs
       LEFT JOIN agreed ON qs.q_id = agreed.q_id
-      ORDER BY qs.q_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x62_hybrid_rrf" -> (x62HybridRrf _),
-    "x63_ranking_agreement" -> (x63RankingAgreement _))
+      ORDER BY qs.q_id"""))
 }

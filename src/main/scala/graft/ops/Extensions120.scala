@@ -246,9 +246,6 @@ object Extensions120 {
       FROM scored s, pick p
       ORDER BY s.family"""
 
-  val oracles: Map[String, String] = Map(
-    "x270_blocking_plan" -> x270OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x270_blocking_plan" -> (x270BlockingPlan _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x270_blocking_plan", x270BlockingPlan _, x270OracleSql))
 }

@@ -219,11 +219,7 @@ object Extensions121 {
       FROM quota q LEFT JOIN sel s USING (source)
       ORDER BY q.source"""
 
-  val oracles: Map[String, String] = Map(
-    "x271_winnowing" -> x271OracleSql,
-    "x272_temperature_mix" -> x272OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x271_winnowing" -> (x271Winnowing _),
-    "x272_temperature_mix" -> (x272TemperatureMix _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x271_winnowing", x271Winnowing _, x271OracleSql),
+    Entry("x272_temperature_mix", x272TemperatureMix _, x272OracleSql))
 }

@@ -146,9 +146,6 @@ object Extensions122 {
       FROM fullstats f JOIN cis c USING (g)
       ORDER BY grp"""
 
-  val oracles: Map[String, String] = Map(
-    "x273_bootstrap_ci" -> x273OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x273_bootstrap_ci" -> (x273BootstrapCi _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x273_bootstrap_ci", x273BootstrapCi _, x273OracleSql))
 }

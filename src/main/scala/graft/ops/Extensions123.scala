@@ -157,9 +157,6 @@ object Extensions123 {
     FROM ag"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x274_ipw_att" -> x274OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x274_ipw_att" -> (x274IpwAtt _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x274_ipw_att", x274IpwAtt _, x274OracleSql))
 }

@@ -112,9 +112,6 @@ object Extensions124 {
       FROM terms t, iv i
       ORDER BY t.bucket"""
 
-  val oracles: Map[String, String] = Map(
-    "x275_woe_iv" -> x275OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x275_woe_iv" -> (x275WoeIv _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x275_woe_iv", x275WoeIv _, x275OracleSql))
 }

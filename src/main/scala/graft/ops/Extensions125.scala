@@ -147,9 +147,6 @@ object Extensions125 {
     ORDER BY f.fold"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x276_kfold_cv" -> x276OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x276_kfold_cv" -> (x276KFoldCv _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x276_kfold_cv", x276KFoldCv _, x276OracleSql))
 }

@@ -78,9 +78,6 @@ object Extensions126 {
       GROUP BY event_type
       ORDER BY event_type"""
 
-  val oracles: Map[String, String] = Map(
-    "x277_xml_roundtrip" -> x277OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x277_xml_roundtrip" -> (x277XmlRoundTrip _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x277_xml_roundtrip", x277XmlRoundTrip _, x277OracleSql))
 }

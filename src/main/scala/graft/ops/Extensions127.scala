@@ -274,13 +274,8 @@ object Extensions127 {
                   // (filler_tokens * 2) AS BIGINT) AS false_ppm
       FROM agg"""
 
-  val oracles: Map[String, String] = Map(
-    "x278_orc_roundtrip" -> x278OracleSql,
-    "x279_span_exactness" -> x279OracleSql,
-    "x287_span_multi" -> x287OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x278_orc_roundtrip" -> (x278OrcRoundTrip _),
-    "x279_span_exactness" -> (x279SpanExactness _),
-    "x287_span_multi" -> (x287SpanMulti _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x278_orc_roundtrip", x278OrcRoundTrip _, x278OracleSql),
+    Entry("x279_span_exactness", x279SpanExactness _, x279OracleSql),
+    Entry("x287_span_multi", x287SpanMulti _, x287OracleSql))
 }

@@ -301,13 +301,8 @@ object Extensions128 {
              CAST(count(*) * (count(*) - 1) // 2 AS BIGINT) AS n_pairs
       FROM keyed GROUP BY pkey ORDER BY pkey"""
 
-  val oracles: Map[String, String] = Map(
-    "x280_strip_fidelity" -> x280OracleSql,
-    "x281_link_prediction" -> x281OracleSql,
-    "x282_phonetic_blocking" -> x282OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x280_strip_fidelity" -> (x280StripFidelity _),
-    "x281_link_prediction" -> (x281LinkPrediction _),
-    "x282_phonetic_blocking" -> (x282PhoneticBlocking _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x280_strip_fidelity", x280StripFidelity _, x280OracleSql),
+    Entry("x281_link_prediction", x281LinkPrediction _, x281OracleSql),
+    Entry("x282_phonetic_blocking", x282PhoneticBlocking _, x282OracleSql))
 }

@@ -255,11 +255,7 @@ object Extensions129 {
       GROUP BY 1, 2
       ORDER BY node_type, node_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x284_holt_forecast" -> x284OracleSql,
-    "x285_harmonic_centrality" -> x285OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x284_holt_forecast" -> (x284HoltForecast _),
-    "x285_harmonic_centrality" -> (x285HarmonicCentrality _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x284_holt_forecast", x284HoltForecast _, x284OracleSql),
+    Entry("x285_harmonic_centrality", x285HarmonicCentrality _, x285OracleSql))
 }

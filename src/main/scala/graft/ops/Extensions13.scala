@@ -97,8 +97,8 @@ object Extensions13 {
   def x65ZipfFit(s: SparkSession, dir: String): DataFrame =
     zipfFit(docs(s, dir), "text", topK = 30)
 
-  val oracles: Map[String, String] = Map(
-    "x64_corpus_diff" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x64_corpus_diff", x64CorpusDiff _, """
       WITH nextc AS (SELECT doc_id, text FROM documents WHERE doc_id % 11 <> 0),
       prevc AS (SELECT doc_id,
                        CASE WHEN doc_id % 5 = 0 THEN text || ' perturbed' ELSE text END AS text
@@ -108,8 +108,8 @@ object Extensions13 {
                         WHEN md5(a.text) = md5(b.text) THEN 'same'
                         ELSE 'changed' END AS change
             FROM prevc a FULL OUTER JOIN nextc b ON a.doc_id = b.doc_id)
-      SELECT change, count(*) AS n_docs FROM j GROUP BY 1 ORDER BY change""",
-    "x65_zipf_fit" -> """
+      SELECT change, count(*) AS n_docs FROM j GROUP BY 1 ORDER BY change"""),
+    Entry("x65_zipf_fit", x65ZipfFit _, """
       WITH t AS (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents),
       c AS (SELECT tok, count(*) AS freq FROM t GROUP BY 1
             ORDER BY freq DESC, tok LIMIT 30),
@@ -117,9 +117,5 @@ object Extensions13 {
       SELECT count(*) AS n_terms,
              round(regr_slope(ln(freq), ln(rank)), 4) AS zipf_slope,
              round(regr_r2(ln(freq), ln(rank)), 4) AS fit_r2
-      FROM r""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x64_corpus_diff" -> (x64CorpusDiff _),
-    "x65_zipf_fit" -> (x65ZipfFit _))
+      FROM r"""))
 }

@@ -487,17 +487,10 @@ object Extensions130 {
       ORDER BY round(mi0 * 10000.0, 0) / 10000.0 DESC, token
       LIMIT 50"""
 
-  val oracles: Map[String, String] = Map(
-    "x288_dbscan" -> x288OracleSql,
-    "x289_token_mi" -> x289OracleSql,
-    "x290_knn_hubness" -> x290OracleSql,
-    "x291_benford" -> x291OracleSql,
-    "x292_matryoshka" -> x292OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x288_dbscan" -> (x288Dbscan _),
-    "x289_token_mi" -> (x289TokenMi _),
-    "x290_knn_hubness" -> (x290KnnHubness _),
-    "x291_benford" -> (x291Benford _),
-    "x292_matryoshka" -> (x292Matryoshka _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x288_dbscan", x288Dbscan _, x288OracleSql),
+    Entry("x289_token_mi", x289TokenMi _, x289OracleSql),
+    Entry("x290_knn_hubness", x290KnnHubness _, x290OracleSql),
+    Entry("x291_benford", x291Benford _, x291OracleSql),
+    Entry("x292_matryoshka", x292Matryoshka _, x292OracleSql))
 }

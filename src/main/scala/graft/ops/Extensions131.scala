@@ -243,13 +243,8 @@ object Extensions131 {
       FROM agg
       ORDER BY doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x293_dedup_reps" -> x293OracleSql,
-    "x294_quantile_norm" -> x294OracleSql,
-    "x295_char_entropy" -> x295OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x293_dedup_reps" -> (x293DedupReps _),
-    "x294_quantile_norm" -> (x294QuantileNorm _),
-    "x295_char_entropy" -> (x295CharEntropy _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x293_dedup_reps", x293DedupReps _, x293OracleSql),
+    Entry("x294_quantile_norm", x294QuantileNorm _, x294OracleSql),
+    Entry("x295_char_entropy", x295CharEntropy _, x295OracleSql))
 }

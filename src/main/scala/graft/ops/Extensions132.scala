@@ -310,11 +310,7 @@ object Extensions132 {
       WHERE greatest(me_ab_micro, me_ba_micro) >= 850000
       ORDER BY id_a, id_b"""
 
-  val oracles: Map[String, String] = Map(
-    "x296_psm_att" -> x296OracleSql,
-    "x297_monge_elkan" -> x297OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x296_psm_att" -> (x296PsmAtt _),
-    "x297_monge_elkan" -> (x297MongeElkan _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x296_psm_att", x296PsmAtt _, x296OracleSql),
+    Entry("x297_monge_elkan", x297MongeElkan _, x297OracleSql))
 }

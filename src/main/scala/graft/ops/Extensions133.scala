@@ -365,13 +365,8 @@ object Extensions133 {
       FROM p GROUP BY path
       ORDER BY n_users DESC, path LIMIT 20"""
 
-  val oracles: Map[String, String] = Map(
-    "x298_pass_at_k" -> x298OracleSql,
-    "x299_aipw_ate" -> x299OracleSql,
-    "x300_event_paths" -> x300OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x298_pass_at_k" -> (x298PassAtK _),
-    "x299_aipw_ate" -> (x299AipwAte _),
-    "x300_event_paths" -> (x300EventPaths _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x298_pass_at_k", x298PassAtK _, x298OracleSql),
+    Entry("x299_aipw_ate", x299AipwAte _, x299OracleSql),
+    Entry("x300_event_paths", x300EventPaths _, x300OracleSql))
 }

@@ -396,13 +396,8 @@ object Extensions134 {
     FROM rg GROUP BY region ORDER BY region"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x301_maj_at_k" -> x301OracleSql,
-    "x302_best_of_k" -> x302OracleSql,
-    "x303_training_dynamics" -> x303OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x301_maj_at_k" -> (x301MajAtK _),
-    "x302_best_of_k" -> (x302BestOfK _),
-    "x303_training_dynamics" -> (x303TrainingDynamics _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x301_maj_at_k", x301MajAtK _, x301OracleSql),
+    Entry("x302_best_of_k", x302BestOfK _, x302OracleSql),
+    Entry("x303_training_dynamics", x303TrainingDynamics _, x303OracleSql))
 }

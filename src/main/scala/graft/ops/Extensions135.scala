@@ -378,13 +378,8 @@ object Extensions135 {
                AS is_effective_diameter
       FROM sh ORDER BY h"""
 
-  val oracles: Map[String, String] = Map(
-    "x304_katz" -> x304OracleSql,
-    "x305_betweenness" -> x305OracleSql,
-    "x306_neighborhood_fn" -> x306OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x304_katz" -> (x304Katz _),
-    "x305_betweenness" -> (x305Betweenness _),
-    "x306_neighborhood_fn" -> (x306NeighborhoodFn _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x304_katz", x304Katz _, x304OracleSql),
+    Entry("x305_betweenness", x305Betweenness _, x305OracleSql),
+    Entry("x306_neighborhood_fn", x306NeighborhoodFn _, x306OracleSql))
 }

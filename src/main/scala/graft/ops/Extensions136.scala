@@ -394,13 +394,8 @@ object Extensions136 {
     FROM agr, agp"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x307_rrf_fusion" -> x307OracleSql,
-    "x308_cluster_agreement" -> x308OracleSql,
-    "x309_placebo_refutation" -> x309OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x307_rrf_fusion" -> (x307RrfFusion _),
-    "x308_cluster_agreement" -> (x308ClusterAgreement _),
-    "x309_placebo_refutation" -> (x309Placebo _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x307_rrf_fusion", x307RrfFusion _, x307OracleSql),
+    Entry("x308_cluster_agreement", x308ClusterAgreement _, x308OracleSql),
+    Entry("x309_placebo_refutation", x309Placebo _, x309OracleSql))
 }

@@ -431,13 +431,8 @@ object Extensions137 {
       FROM (SELECT * FROM rc UNION ALL SELECT * FROM mc)
       ORDER BY scheme"""
 
-  val oracles: Map[String, String] = Map(
-    "x310_ucb1_replay" -> x310OracleSql,
-    "x311_dawid_skene" -> x311OracleSql,
-    "x312_rebalance_card" -> x312OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x310_ucb1_replay" -> (x310Ucb1 _),
-    "x311_dawid_skene" -> (x311DawidSkene _),
-    "x312_rebalance_card" -> (x312Rebalance _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x310_ucb1_replay", x310Ucb1 _, x310OracleSql),
+    Entry("x311_dawid_skene", x311DawidSkene _, x311OracleSql),
+    Entry("x312_rebalance_card", x312Rebalance _, x312OracleSql))
 }

@@ -263,13 +263,8 @@ object Extensions138 {
              (n_a - n_b) * (n_a - n_b) * 1000 > 3841 * n AS srm_flag
       FROM m"""
 
-  val oracles: Map[String, String] = Map(
-    "x313_learning_curve" -> x313OracleSql,
-    "x314_mde_card" -> x314OracleSql,
-    "x315_srm_check" -> x315OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x313_learning_curve" -> (x313LearningCurve _),
-    "x314_mde_card" -> (x314MdeCard _),
-    "x315_srm_check" -> (x315SrmCheck _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x313_learning_curve", x313LearningCurve _, x313OracleSql),
+    Entry("x314_mde_card", x314MdeCard _, x314OracleSql),
+    Entry("x315_srm_check", x315SrmCheck _, x315OracleSql))
 }

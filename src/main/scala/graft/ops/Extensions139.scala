@@ -175,11 +175,7 @@ object Extensions139 {
                AS unif_micro
       FROM ag"""
 
-  val oracles: Map[String, String] = Map(
-    "x316_min_k_prob" -> x316OracleSql,
-    "x317_align_uniformity" -> x317OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x316_min_k_prob" -> (x316MinKProb _),
-    "x317_align_uniformity" -> (x317AlignUniformity _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x316_min_k_prob", x316MinKProb _, x316OracleSql),
+    Entry("x317_align_uniformity", x317AlignUniformity _, x317OracleSql))
 }

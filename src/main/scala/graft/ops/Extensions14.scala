@@ -97,8 +97,8 @@ object Extensions14 {
     datasheet(docs(s, dir), "text", "source", "lang")
       .orderBy(col("metric"))
 
-  val oracles: Map[String, String] = Map(
-    "x66_datasheet" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x66_datasheet", x66Datasheet _, """
       WITH t AS (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents),
       zc AS (SELECT tok, count(*) AS freq FROM t GROUP BY 1
              ORDER BY freq DESC, tok LIMIT 30),
@@ -115,8 +115,5 @@ object Extensions14 {
         round((SELECT n FROM lt) * 10000.0 / (SELECT count(*) FROM documents), 0) / 10000.0
       UNION ALL SELECT 'zipf_slope',
         (SELECT round(regr_slope(ln(freq), ln(rank)), 4) FROM zr)
-      ORDER BY metric""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x66_datasheet" -> (x66Datasheet _))
+      ORDER BY metric"""))
 }

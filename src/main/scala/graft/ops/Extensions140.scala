@@ -219,11 +219,7 @@ object Extensions140 {
       ORDER BY e.a, e.b"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x318_butterfly_card" -> x318OracleSql,
-    "x319_ktruss" -> x319OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x318_butterfly_card" -> (x318ButterflyCard _),
-    "x319_ktruss" -> (x319KTruss _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x318_butterfly_card", x318ButterflyCard _, x318OracleSql),
+    Entry("x319_ktruss", x319KTruss _, x319OracleSql))
 }

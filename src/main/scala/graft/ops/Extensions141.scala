@@ -97,9 +97,6 @@ object Extensions141 {
                AS snips_micro
       FROM ag"""
 
-  val oracles: Map[String, String] = Map(
-    "x320_ips_policy_value" -> x320OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x320_ips_policy_value" -> (x320IpsPolicyValue _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x320_ips_policy_value", x320IpsPolicyValue _, x320OracleSql))
 }

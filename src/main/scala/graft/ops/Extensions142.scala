@@ -308,13 +308,8 @@ object Extensions142 {
                AS last_micro
       FROM cr GROUP BY ttype ORDER BY ttype"""
 
-  val oracles: Map[String, String] = Map(
-    "x322_packing_card" -> x322OracleSql,
-    "x323_mann_whitney" -> x323OracleSql,
-    "x325_attribution" -> x325OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x322_packing_card" -> (x322PackingCard _),
-    "x323_mann_whitney" -> (x323MannWhitney _),
-    "x325_attribution" -> (x325Attribution _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x322_packing_card", x322PackingCard _, x322OracleSql),
+    Entry("x323_mann_whitney", x323MannWhitney _, x323OracleSql),
+    Entry("x325_attribution", x325Attribution _, x325OracleSql))
 }

@@ -270,13 +270,8 @@ object Extensions143 {
              CAST(max(w) AS BIGINT) AS burst_micro
       FROM ws GROUP BY doc_id ORDER BY doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x324_conformal_card" -> x324OracleSql,
-    "x326_greedy_coverage" -> x326OracleSql,
-    "x327_surprisal_burst" -> x327OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x324_conformal_card" -> (x324ConformalCard _),
-    "x326_greedy_coverage" -> (x326GreedyCoverage _),
-    "x327_surprisal_burst" -> (x327SurprisalBurst _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x324_conformal_card", x324ConformalCard _, x324OracleSql),
+    Entry("x326_greedy_coverage", x326GreedyCoverage _, x326OracleSql),
+    Entry("x327_surprisal_burst", x327SurprisalBurst _, x327OracleSql))
 }

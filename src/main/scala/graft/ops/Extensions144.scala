@@ -178,11 +178,7 @@ object Extensions144 {
                AS winsorized_mean_micro
       FROM wz"""
 
-  val oracles: Map[String, String] = Map(
-    "x328_bh_fdr" -> x328OracleSql,
-    "x329_winsorized_mean" -> x329OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x328_bh_fdr" -> (x328BhFdr _),
-    "x329_winsorized_mean" -> (x329WinsorizedMean _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x328_bh_fdr", x328BhFdr _, x328OracleSql),
+    Entry("x329_winsorized_mean", x329WinsorizedMean _, x329OracleSql))
 }

@@ -234,11 +234,7 @@ object Extensions145 {
             UNION ALL SELECT * FROM mu3 UNION ALL SELECT * FROM mu4)
       ORDER BY left_id, right_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x330_jl_projection" -> x330OracleSql,
-    "x331_one_to_one_match" -> x331OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x330_jl_projection" -> (x330JlProjection _),
-    "x331_one_to_one_match" -> (x331OneToOneMatch _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x330_jl_projection", x330JlProjection _, x330OracleSql),
+    Entry("x331_one_to_one_match", x331OneToOneMatch _, x331OracleSql))
 }

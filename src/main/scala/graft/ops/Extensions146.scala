@@ -223,11 +223,7 @@ object Extensions146 {
       FROM ck WHERE len(ckl) > 0
       ORDER BY doc_id, chunk_idx"""
 
-  val oracles: Map[String, String] = Map(
-    "x332_weighted_jaccard" -> x332OracleSql,
-    "x333_chunk_text" -> x333OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x332_weighted_jaccard" -> (x332WeightedJaccard _),
-    "x333_chunk_text" -> (x333ChunkText _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x332_weighted_jaccard", x332WeightedJaccard _, x332OracleSql),
+    Entry("x333_chunk_text", x333ChunkText _, x333OracleSql))
 }

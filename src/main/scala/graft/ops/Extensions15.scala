@@ -185,11 +185,7 @@ object Extensions15 {
       .orderBy(col("b_id"))
   }
 
-  val oracles: Map[String, String] = Map(
-    "x67_signature_dedup" -> x67OracleSql,
-    "x76_sigstore_dedup" -> x67OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x67_signature_dedup" -> (x67SignatureDedup _),
-    "x76_sigstore_dedup" -> (x76SignatureStoreDedup _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x67_signature_dedup", x67SignatureDedup _, x67OracleSql),
+    Entry("x76_sigstore_dedup", x76SignatureStoreDedup _, x67OracleSql))
 }

@@ -426,13 +426,8 @@ object Extensions16 {
       ORDER BY den.q_id"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x68_strip_dup_spans" -> x68OracleSql,
-    "x69_bpe_merges" -> x69OracleSql,
-    "x70_ivfstore_recall" -> x70OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x68_strip_dup_spans" -> (x68StripDupSpans _),
-    "x69_bpe_merges" -> (x69BpeMerges _),
-    "x70_ivfstore_recall" -> (x70IvfStoreRecall _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x68_strip_dup_spans", x68StripDupSpans _, x68OracleSql),
+    Entry("x69_bpe_merges", x69BpeMerges _, x69OracleSql),
+    Entry("x70_ivfstore_recall", x70IvfStoreRecall _, x70OracleSql))
 }

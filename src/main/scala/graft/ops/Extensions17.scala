@@ -240,13 +240,8 @@ object Extensions17 {
     FROM tok JOIN cost USING (w)
     GROUP BY doc_id ORDER BY doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x71_importance_weights" -> x71OracleSql,
-    "x72_resolve_duplicates" -> x72OracleSql,
-    "x73_bpe_encode" -> x73OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x71_importance_weights" -> (x71ImportanceWeights _),
-    "x72_resolve_duplicates" -> (x72ResolveDuplicates _),
-    "x73_bpe_encode" -> (x73BpeEncode _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x71_importance_weights", x71ImportanceWeights _, x71OracleSql),
+    Entry("x72_resolve_duplicates", x72ResolveDuplicates _, x72OracleSql),
+    Entry("x73_bpe_encode", x73BpeEncode _, x73OracleSql))
 }

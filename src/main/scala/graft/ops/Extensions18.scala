@@ -131,11 +131,7 @@ object Extensions18 {
       FROM e, UNNEST(generate_series(1, n_epochs)) AS t(ep)
       ORDER BY doc_id, epoch"""
 
-  val oracles: Map[String, String] = Map(
-    "x74_perplexity_buckets" -> x74OracleSql,
-    "x75_epoch_upsample" -> x75OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x74_perplexity_buckets" -> (x74PerplexityBuckets _),
-    "x75_epoch_upsample" -> (x75EpochUpsample _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x74_perplexity_buckets", x74PerplexityBuckets _, x74OracleSql),
+    Entry("x75_epoch_upsample", x75EpochUpsample _, x75OracleSql))
 }

@@ -154,11 +154,7 @@ object Extensions19 {
       FROM assigned
       ORDER BY doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x77_decontaminate" -> x77OracleSql,
-    "x78_cluster_safe_split" -> x78OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x77_decontaminate" -> (x77Decontaminate _),
-    "x78_cluster_safe_split" -> (x78ClusterSafeSplit _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x77_decontaminate", x77Decontaminate _, x77OracleSql),
+    Entry("x78_cluster_safe_split", x78ClusterSafeSplit _, x78OracleSql))
 }

@@ -329,10 +329,10 @@ object Extensions2 {
           greatest(col("exact_median") * 0.02, lit(0.5))).as("approx_ok"))
       .orderBy(col("event_type"))
 
-  // ---- oracles -------------------------------------------------------------
+  // ---- registry ------------------------------------------------------------
 
-  val oracles: Map[String, String] = Map(
-    "x20_contamination" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x20_contamination", x20Contamination _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
       sh0 AS (SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS sh
               FROM d, UNNEST(generate_series(1, CASE WHEN len(toks) >= 5 THEN len(toks)-4 ELSE 1 END)) AS g(i)),
@@ -350,22 +350,22 @@ object Extensions2 {
                FROM scored)
       SELECT train_id, eval_id AS matched_eval_id, overlap
       FROM best WHERE rk = 1 AND overlap >= 0.3
-      ORDER BY train_id""",
-    "x21_term_mask" -> """
+      ORDER BY train_id"""),
+    Entry("x21_term_mask", x21TermMask _, """
       SELECT doc_id,
              CAST(len(regexp_extract_all(text, '\b(customer|key)\b')) AS BIGINT) AS n_masked,
              CAST(length(regexp_replace(text, '\b(customer|key)\b', '<MASK>', 'g')) AS BIGINT) AS masked_len,
              substring(regexp_replace(text, '\b(customer|key)\b', '<MASK>', 'g'), 1, 40) AS masked_head
       FROM documents
-      ORDER BY doc_id""",
-    "x19_approx_quantile" -> """
+      ORDER BY doc_id"""),
+    Entry("x19_approx_quantile", x19ApproxQuantile _, """
       SELECT event_type,
              round(quantile_cont(value, 0.5), 2) AS exact_median,
              TRUE AS approx_ok
       FROM events
       GROUP BY event_type
-      ORDER BY event_type""",
-    "x16_ivf_ann" -> s"""
+      ORDER BY event_type"""),
+    Entry("x16_ivf_ann", x16IvfAnn _, s"""
       WITH base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       cents AS (SELECT vec_id AS cell, v AS cvec FROM base WHERE vec_id < $IvfCells),
       assigned AS (
@@ -393,14 +393,14 @@ object Extensions2 {
         FROM scored)
       SELECT q_id, c_id, sim, CAST(rk AS BIGINT) AS rk
       FROM ranked WHERE rk <= $AnnK
-      ORDER BY q_id, rk""",
-    "x17_stratified_sample" -> """
+      ORDER BY q_id, rk"""),
+    Entry("x17_stratified_sample", x17StratifiedSample _, """
       SELECT doc_id, lang, source
       FROM (SELECT *, ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 15))::BIGINT % 1000 AS bucket
             FROM documents)
       WHERE CASE WHEN lang = 'en' THEN bucket < 200 ELSE bucket < 500 END
-      ORDER BY doc_id""",
-    "x18_dup_clusters" -> """
+      ORDER BY doc_id"""),
+    Entry("x18_dup_clusters", x18DupClusters _, """
       WITH RECURSIVE
       d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
       sh0 AS (SELECT doc_id, array_to_string(toks[i:i+4], ' ') AS sh
@@ -424,13 +424,5 @@ object Extensions2 {
       SELECT node AS doc_id, min(comp) AS component
       FROM reach
       GROUP BY node
-      ORDER BY doc_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x16_ivf_ann" -> (x16IvfAnn _),
-    "x19_approx_quantile" -> (x19ApproxQuantile _),
-    "x20_contamination" -> (x20Contamination _),
-    "x21_term_mask" -> (x21TermMask _),
-    "x17_stratified_sample" -> (x17StratifiedSample _),
-    "x18_dup_clusters" -> (x18DupClusters _))
+      ORDER BY doc_id"""))
 }

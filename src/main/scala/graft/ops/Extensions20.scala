@@ -244,13 +244,8 @@ object Extensions20 {
       GROUP BY ctx
       ORDER BY ctx"""
 
-  val oracles: Map[String, String] = Map(
-    "x79_waterfill_budget" -> x79OracleSql,
-    "x80_gopher_rule_card" -> x80OracleSql,
-    "x81_packing_curve" -> x81OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x79_waterfill_budget" -> (x79WaterfillBudget _),
-    "x80_gopher_rule_card" -> (x80GopherRuleCard _),
-    "x81_packing_curve" -> (x81PackingCurve _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x79_waterfill_budget", x79WaterfillBudget _, x79OracleSql),
+    Entry("x80_gopher_rule_card", x80GopherRuleCard _, x80OracleSql),
+    Entry("x81_packing_curve", x81PackingCurve _, x81OracleSql))
 }

@@ -93,9 +93,6 @@ object Extensions21 {
       GROUP BY doc_id
       ORDER BY doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x82_phrase_search" -> x82OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x82_phrase_search" -> (x82PhraseSearch _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x82_phrase_search", x82PhraseSearch _, x82OracleSql))
 }

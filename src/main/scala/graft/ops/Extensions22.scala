@@ -141,11 +141,7 @@ object Extensions22 {
       ORDER BY priority DESC, doc_id
       LIMIT 50"""
 
-  val oracles: Map[String, String] = Map(
-    "x83_countmin_hh" -> x83OracleSql,
-    "x84_weighted_sample" -> x84OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x83_countmin_hh" -> (x83CountMin _),
-    "x84_weighted_sample" -> (x84WeightedSample _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x83_countmin_hh", x83CountMin _, x83OracleSql),
+    Entry("x84_weighted_sample", x84WeightedSample _, x84OracleSql))
 }

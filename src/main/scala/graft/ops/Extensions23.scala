@@ -196,13 +196,8 @@ object Extensions23 {
       FROM c
       ORDER BY from_type, to_type"""
 
-  val oracles: Map[String, String] = Map(
-    "x85_ordered_funnel" -> x85OracleSql,
-    "x86_cohort_retention" -> x86OracleSql,
-    "x87_markov_transitions" -> x87OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x85_ordered_funnel" -> (x85Funnel _),
-    "x86_cohort_retention" -> (x86CohortRetention _),
-    "x87_markov_transitions" -> (x87MarkovTransitions _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x85_ordered_funnel", x85Funnel _, x85OracleSql),
+    Entry("x86_cohort_retention", x86CohortRetention _, x86OracleSql),
+    Entry("x87_markov_transitions", x87MarkovTransitions _, x87OracleSql))
 }

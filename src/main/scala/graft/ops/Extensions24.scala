@@ -256,13 +256,8 @@ object Extensions24 {
       ORDER BY n_sessions DESC, path
       LIMIT 20"""
 
-  val oracles: Map[String, String] = Map(
-    "x88_rfm_segments" -> x88OracleSql,
-    "x89_edit_distance_join" -> x89OracleSql,
-    "x90_session_paths" -> x90OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x88_rfm_segments" -> (x88RfmSegments _),
-    "x89_edit_distance_join" -> (x89EditDistanceJoin _),
-    "x90_session_paths" -> (x90SessionPaths _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x88_rfm_segments", x88RfmSegments _, x88OracleSql),
+    Entry("x89_edit_distance_join", x89EditDistanceJoin _, x89OracleSql),
+    Entry("x90_session_paths", x90SessionPaths _, x90OracleSql))
 }

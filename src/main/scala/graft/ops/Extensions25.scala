@@ -208,13 +208,8 @@ object Extensions25 {
       FROM j
       ORDER BY bucket"""
 
-  val oracles: Map[String, String] = Map(
-    "x91_timeline_surprisal" -> x91OracleSql,
-    "x92_scd2_history" -> x92OracleSql,
-    "x93_psi_drift" -> x93OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x91_timeline_surprisal" -> (x91TimelineSurprisal _),
-    "x92_scd2_history" -> (x92Scd2History _),
-    "x93_psi_drift" -> (x93PsiDrift _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x91_timeline_surprisal", x91TimelineSurprisal _, x91OracleSql),
+    Entry("x92_scd2_history", x92Scd2History _, x92OracleSql),
+    Entry("x93_psi_drift", x93PsiDrift _, x93OracleSql))
 }

@@ -511,9 +511,6 @@ object Extensions26 {
       ORDER BY doc_id"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x94_quality_logreg" -> x94OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x94_quality_logreg" -> (x94QualityLogreg _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x94_quality_logreg", x94QualityLogreg _, x94OracleSql))
 }

@@ -285,9 +285,6 @@ object Extensions27 {
     ORDER BY q_id, rk"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x95_pq_topk" -> x95OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x95_pq_topk" -> (x95PqTopK _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x95_pq_topk", x95PqTopK _, x95OracleSql))
 }

@@ -342,11 +342,7 @@ object Extensions28 {
       FROM st CROSS JOIN th
       ORDER BY arm"""
 
-  val oracles: Map[String, String] = Map(
-    "x96_pagerank" -> x96OracleSql,
-    "x97_cuped" -> x97OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x96_pagerank" -> (x96PageRank _),
-    "x97_cuped" -> (x97CupedReadout _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x96_pagerank", x96PageRank _, x96OracleSql),
+    Entry("x97_cuped", x97CupedReadout _, x97OracleSql))
 }

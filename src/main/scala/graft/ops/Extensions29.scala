@@ -337,11 +337,7 @@ object Extensions29 {
       FROM nodes LEFT JOIN pn USING (node)
       ORDER BY supp_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x98_mmr_diverse" -> x98OracleSql,
-    "x99_triangles" -> x99OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x98_mmr_diverse" -> (x98MmrDiverse _),
-    "x99_triangles" -> (x99Triangles _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x98_mmr_diverse", x98MmrDiverse _, x98OracleSql),
+    Entry("x99_triangles", x99Triangles _, x99OracleSql))
 }

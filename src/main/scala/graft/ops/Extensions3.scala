@@ -363,8 +363,8 @@ object Extensions3 {
     centroids
   }
 
-  val oracles: Map[String, String] = Map(
-    "x28_normalize" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x28_normalize", x28Normalize _, """
       SELECT doc_id,
              CAST(length(text) AS BIGINT) AS len_raw,
              CAST(length(trim(regexp_replace(regexp_replace(lower(text),
@@ -372,16 +372,16 @@ object Extensions3 {
              md5(trim(regexp_replace(regexp_replace(lower(text),
                '[^a-z0-9 ]', ' ', 'g'), ' +', ' ', 'g'))) AS norm_key
       FROM documents
-      ORDER BY doc_id""",
-    "x25_domain_cap" -> """
+      ORDER BY doc_id"""),
+    Entry("x25_domain_cap", x25DomainCap _, """
       SELECT doc_id, source, n_chars, rk FROM (
         SELECT doc_id, source, n_chars,
                row_number() OVER (PARTITION BY source
                                   ORDER BY n_chars DESC, doc_id) AS rk
         FROM documents)
       WHERE rk <= 5
-      ORDER BY doc_id""",
-    "x26_temperature_mix" -> """
+      ORDER BY doc_id"""),
+    Entry("x26_temperature_mix", x26TemperatureMix _, """
       WITH cnt AS (
         SELECT lang, count(*) AS n_g,
                CAST(floor(pow(count(*), 0.5) * 1048576) AS BIGINT) AS w_g
@@ -394,8 +394,8 @@ object Extensions3 {
       SELECT d.doc_id, d.lang, d.source
       FROM documents d JOIN rates r ON d.lang = r.lang
       WHERE ('0x' || substr(md5(CAST(d.doc_id AS VARCHAR)), 1, 15))::BIGINT % 1048576 < r.thr
-      ORDER BY d.doc_id""",
-    "x27_dupgram_coverage" -> """
+      ORDER BY d.doc_id"""),
+    Entry("x27_dupgram_coverage", x27DupGramCoverage _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
       sh0 AS (SELECT doc_id,
                      CASE WHEN len(toks) >= 10 THEN array_to_string(toks[i:i+9], ' ')
@@ -409,8 +409,8 @@ object Extensions3 {
              round(sum(CASE WHEN f.df_docs >= 2 THEN 1 ELSE 0 END) * 1.0 / count(*), 4) AS dup_frac
       FROM sh s JOIN freq f ON s.sh = f.sh
       GROUP BY s.doc_id
-      ORDER BY s.doc_id""",
-    "x22_repetition" -> """
+      ORDER BY s.doc_id"""),
+    Entry("x22_repetition", x22Repetition _, """
       WITH tok AS (
         SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       feat AS (
@@ -439,8 +439,8 @@ object Extensions3 {
                   ELSE 0.0 END AS dup_5gram_frac,
              coalesce(round(t.mx * 1.0 / t.tot, 4), 0.0) AS top_2gram_frac
       FROM feat f LEFT JOIN top2 t ON f.doc_id = t.doc_id
-      ORDER BY f.doc_id""",
-    "x23_sequence_packing" -> """
+      ORDER BY f.doc_id"""),
+    Entry("x23_sequence_packing", x23SequencePacking _, """
       WITH tok AS (
         SELECT doc_id, lang,
                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tok
@@ -456,8 +456,8 @@ object Extensions3 {
              min(doc_id) AS first_doc, max(doc_id) AS last_doc
       FROM packed
       GROUP BY lang, chunk_id
-      ORDER BY lang, chunk_id""",
-    "x24_ann_multitable" -> """
+      ORDER BY lang, chunk_id"""),
+    Entry("x24_ann_multitable", x24AnnMultiTable _, """
       WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v, t,
                (CASE WHEN embedding[t*6+1] > 0 THEN 1 ELSE 0 END)
@@ -482,14 +482,5 @@ object Extensions3 {
         SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY sim DESC, c_id) AS rk
         FROM scored)
       SELECT q_id, c_id, sim, rk FROM ranked WHERE rk <= 3
-      ORDER BY q_id, rk""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x22_repetition" -> (x22Repetition _),
-    "x23_sequence_packing" -> (x23SequencePacking _),
-    "x24_ann_multitable" -> (x24AnnMultiTable _),
-    "x25_domain_cap" -> (x25DomainCap _),
-    "x26_temperature_mix" -> (x26TemperatureMix _),
-    "x27_dupgram_coverage" -> (x27DupGramCoverage _),
-    "x28_normalize" -> (x28Normalize _))
+      ORDER BY q_id, rk"""))
 }

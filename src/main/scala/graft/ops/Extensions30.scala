@@ -228,11 +228,7 @@ object Extensions30 {
       FROM pern p JOIN nos USING (label)
       ORDER BY p.label"""
 
-  val oracles: Map[String, String] = Map(
-    "x100_communities" -> x100OracleSql,
-    "x101_embedding_health" -> x101OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x100_communities" -> (x100Communities _),
-    "x101_embedding_health" -> (x101EmbeddingHealth _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x100_communities", x100Communities _, x100OracleSql),
+    Entry("x101_embedding_health", x101EmbeddingHealth _, x101OracleSql))
 }

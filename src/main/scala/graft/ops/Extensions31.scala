@@ -313,11 +313,7 @@ object Extensions31 {
       FROM pairs p LEFT JOIN common c ON c.ga = p.ga AND c.gb = p.gb
       ORDER BY source_a, source_b"""
 
-  val oracles: Map[String, String] = Map(
-    "x102_ivfpq" -> x102OracleSql,
-    "x103_theta_overlap" -> x103OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x102_ivfpq" -> (x102IvfPq _),
-    "x103_theta_overlap" -> (x103ThetaOverlap _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x102_ivfpq", x102IvfPq _, x102OracleSql),
+    Entry("x103_theta_overlap", x103ThetaOverlap _, x103OracleSql))
 }

@@ -175,11 +175,7 @@ object Extensions32 {
     LIMIT 1"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x104_tokenizer_fit" -> x104OracleSql,
-    "x105_calibrate_gate" -> x105OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x104_tokenizer_fit" -> (x104TokenizerFit _),
-    "x105_calibrate_gate" -> (x105Calibrate _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x104_tokenizer_fit", x104TokenizerFit _, x104OracleSql),
+    Entry("x105_calibrate_gate", x105Calibrate _, x105OracleSql))
 }

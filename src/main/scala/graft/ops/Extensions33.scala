@@ -62,9 +62,6 @@ object Extensions33 {
              CAST(min(n) AS BIGINT) AS k_anonymity
       FROM cl"""
 
-  val oracles: Map[String, String] = Map(
-    "x106_k_anonymity" -> x106OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x106_k_anonymity" -> (x106KAnonymity _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x106_k_anonymity", x106KAnonymity _, x106OracleSql))
 }

@@ -66,9 +66,6 @@ object Extensions34 {
     FROM den LEFT JOIN hit ON den.q_id = hit.q_id
     ORDER BY den.q_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x107_pqstore_recall" -> x107OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x107_pqstore_recall" -> (x107PqStoreRecall _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x107_pqstore_recall", x107PqStoreRecall _, x107OracleSql))
 }

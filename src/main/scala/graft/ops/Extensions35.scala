@@ -128,9 +128,6 @@ object Extensions35 {
     ORDER BY c_custkey"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x108_k_anonymize" -> x108OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x108_k_anonymize" -> (x108KAnonymize _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x108_k_anonymize", x108KAnonymize _, x108OracleSql))
 }

@@ -222,11 +222,7 @@ object Extensions36 {
              round(least(1.0, exp(-log_lambda)), 4) < 0.05 AS significant_05
       FROM calc3"""
 
-  val oracles: Map[String, String] = Map(
-    "x109_pii_scrub" -> x109OracleSql,
-    "x110_msprt" -> x110OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x109_pii_scrub" -> (x109PiiScrub _),
-    "x110_msprt" -> (x110Msprt _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x109_pii_scrub", x109PiiScrub _, x109OracleSql),
+    Entry("x110_msprt", x110Msprt _, x110OracleSql))
 }

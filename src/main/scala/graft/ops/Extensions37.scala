@@ -262,11 +262,7 @@ object Extensions37 {
       FROM terms
       ORDER BY t_days"""
 
-  val oracles: Map[String, String] = Map(
-    "x111_ndcg" -> x111OracleSql,
-    "x112_survival" -> x112OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x111_ndcg" -> (x111Ndcg _),
-    "x112_survival" -> (x112Survival _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x111_ndcg", x111Ndcg _, x111OracleSql),
+    Entry("x112_survival", x112Survival _, x112OracleSql))
 }

@@ -139,9 +139,6 @@ object Extensions38 {
         SELECT 'linear', touch_type, linear, linear_n FROM per)
       ORDER BY model, touch_type"""
 
-  val oracles: Map[String, String] = Map(
-    "x113_attribution" -> x113OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x113_attribution" -> (x113Attribution _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x113_attribution", x113Attribution _, x113OracleSql))
 }

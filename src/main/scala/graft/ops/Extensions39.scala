@@ -144,7 +144,7 @@ object Extensions39 {
     * one-row confusion/kappa arithmetic.
     */
   private def x115OracleSql: String = s"""
-      WITH ra AS (${Extensions5.oracles("x38_quality_classifier")}),
+      WITH ra AS (${Extensions5.x38QualityClassifierSql}),
       d2 AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       f0 AS (SELECT doc_id,
                 CAST(len(tk) AS BIGINT) AS n_words,
@@ -184,11 +184,7 @@ object Extensions39 {
                             / (CAST(n AS DOUBLE) * n)), 4) AS kappa
       FROM m"""
 
-  val oracles: Map[String, String] = Map(
-    "x114_pmi_bigrams" -> x114OracleSql,
-    "x115_rater_kappa" -> x115OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x114_pmi_bigrams" -> (x114PmiBigrams _),
-    "x115_rater_kappa" -> (x115RaterKappa _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x114_pmi_bigrams", x114PmiBigrams _, x114OracleSql),
+    Entry("x115_rater_kappa", x115RaterKappa _, x115OracleSql))
 }

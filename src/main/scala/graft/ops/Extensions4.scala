@@ -421,8 +421,8 @@ object Extensions4 {
       sh AS (SELECT DISTINCT doc_id, sh FROM sh0),
       cnt AS (SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id)"""
 
-  val oracles: Map[String, String] = Map(
-    "x34_semantic_dedup" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x34_semantic_dedup", x34SemanticDedup _, """
       WITH RECURSIVE base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
                (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
@@ -446,8 +446,8 @@ object Extensions4 {
              coalesce(cc.comp, e.vec_id) AS component,
              coalesce(cc.comp, e.vec_id) = e.vec_id AS keep
       FROM embeddings e LEFT JOIN cc ON cc.node = e.vec_id
-      ORDER BY e.vec_id""",
-    "x35_tfidf_terms" -> """
+      ORDER BY e.vec_id"""),
+    Entry("x35_tfidf_terms", x35TfidfTerms _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       tf AS (SELECT doc_id, u.term, count(*) AS tf
              FROM d, UNNEST(tk) AS u(term)
@@ -463,8 +463,8 @@ object Extensions4 {
                     ORDER BY score DESC, term) AS rk
         FROM scored)
       SELECT doc_id, term, tf, df, score, rk FROM ranked WHERE rk <= 3
-      ORDER BY doc_id, rk""",
-    "x36_chunk_docs" -> """
+      ORDER BY doc_id, rk"""),
+    Entry("x36_chunk_docs", x36ChunkDocs _, """
       WITH d AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
       starts AS (SELECT doc_id, tk, g.i AS start
                  FROM d, UNNEST(generate_series(0, len(tk) - 1, 40)) AS g(i))
@@ -472,8 +472,8 @@ object Extensions4 {
              len(tk[start + 1 : start + 50]) AS n_tokens,
              array_to_string(tk[start + 1 : start + 50], ' ') AS chunk_text
       FROM starts
-      ORDER BY doc_id, chunk_id""",
-    "x37_unigram_score" -> """
+      ORDER BY doc_id, chunk_id"""),
+    Entry("x37_unigram_score", x37UnigramScore _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       tf AS (SELECT doc_id, u.term, count(*) AS tf
              FROM d, UNNEST(tk) AS u(term)
@@ -486,8 +486,8 @@ object Extensions4 {
                AS cross_entropy
       FROM tf JOIN model USING (term) CROSS JOIN n
       GROUP BY tf.doc_id, n.n_tok
-      ORDER BY tf.doc_id""",
-    "x33_bm25_topk" -> """
+      ORDER BY tf.doc_id"""),
+    Entry("x33_bm25_topk", x33Bm25TopK _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       tf AS (SELECT doc_id AS c_id, len(tk) AS dl, u.term, count(*) AS tf
              FROM d, UNNEST(tk) AS u(term)
@@ -512,8 +512,8 @@ object Extensions4 {
         SELECT *, row_number() OVER (PARTITION BY q_id ORDER BY score DESC, c_id) AS rk
         FROM scored)
       SELECT q_id, c_id, score, rk FROM ranked WHERE rk <= 3
-      ORDER BY q_id, rk""",
-    "x32_vocab_topk" -> """
+      ORDER BY q_id, rk"""),
+    Entry("x32_vocab_topk", x32VocabTopK _, """
       WITH tok AS (
         SELECT doc_id, u.token
         FROM (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
@@ -527,8 +527,8 @@ object Extensions4 {
       SELECT token, n_total, n_docs
       FROM vocab
       ORDER BY n_total DESC, token
-      LIMIT 20""",
-    "x31_ann_recall" -> """
+      LIMIT 20"""),
+    Entry("x31_ann_recall", x31AnnRecall _, """
       WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
                (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
@@ -585,8 +585,8 @@ object Extensions4 {
              CAST(coalesce(hm.n_hit, 0) AS BIGINT) AS n_hit,
              round(coalesce(hm.n_hit, 0) * 1.0 / n_truth, 4) AS recall
       FROM den LEFT JOIN hm ON hm.q_id = den.q_id
-      ORDER BY method, q_id""",
-    "x29_jaccard_topk" -> (shingleCtes(3) + """,
+      ORDER BY method, q_id"""),
+    Entry("x29_jaccard_topk", x29JaccardTopK _, (shingleCtes(3) + """,
       q AS (SELECT doc_id, sh FROM sh WHERE doc_id < 10),
       hits AS (SELECT q.doc_id AS q_id, c.doc_id AS c_id, count(*) AS shared
                FROM sh c JOIN q ON c.sh = q.sh AND c.doc_id <> q.doc_id
@@ -600,8 +600,8 @@ object Extensions4 {
                            ORDER BY jaccard DESC, c_id) AS rk
                  FROM scored)
       SELECT q_id, c_id, jaccard, rk FROM ranked WHERE rk <= 3
-      ORDER BY q_id, rk"""),
-    "x30_incremental_dedup" -> (shingleCtes(5) + """,
+      ORDER BY q_id, rk""")),
+    Entry("x30_incremental_dedup", x30IncrementalDedup _, (shingleCtes(5) + """,
       hits AS (SELECT b.doc_id AS b_id, c.doc_id AS c_id, count(*) AS shared
                FROM sh c JOIN sh b ON c.sh = b.sh
                WHERE c.doc_id < 450 AND b.doc_id >= 450
@@ -621,16 +621,5 @@ object Extensions4 {
       FROM documents d
       LEFT JOIN best ON best.b_id = d.doc_id AND best.rk = 1
       WHERE d.doc_id >= 450
-      ORDER BY b_id"""))
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x29_jaccard_topk" -> (x29JaccardTopK _),
-    "x30_incremental_dedup" -> (x30IncrementalDedup _),
-    "x31_ann_recall" -> (x31AnnRecall _),
-    "x32_vocab_topk" -> (x32VocabTopK _),
-    "x33_bm25_topk" -> (x33Bm25TopK _),
-    "x34_semantic_dedup" -> (x34SemanticDedup _),
-    "x35_tfidf_terms" -> (x35TfidfTerms _),
-    "x36_chunk_docs" -> (x36ChunkDocs _),
-    "x37_unigram_score" -> (x37UnigramScore _))
+      ORDER BY b_id""")))
 }

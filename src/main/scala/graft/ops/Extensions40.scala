@@ -89,9 +89,6 @@ object Extensions40 {
                                   / n_batches), 4) AS ci_hi
       FROM mo"""
 
-  val oracles: Map[String, String] = Map(
-    "x116_mean_ci" -> x116OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x116_mean_ci" -> (x116MeanCi _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x116_mean_ci", x116MeanCi _, x116OracleSql))
 }

@@ -114,9 +114,6 @@ object Extensions41 {
       GROUP BY doc_id
       ORDER BY doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x117_span_corruption" -> x117OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x117_span_corruption" -> (x117SpanCorruption _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x117_span_corruption", x117SpanCorruption _, x117OracleSql))
 }

@@ -99,9 +99,6 @@ object Extensions42 {
       ORDER BY bands DESC"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x118_lsh_plan" -> x118OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x118_lsh_plan" -> (x118LshPlan _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x118_lsh_plan", x118LshPlan _, x118OracleSql))
 }

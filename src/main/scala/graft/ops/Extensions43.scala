@@ -122,9 +122,6 @@ object Extensions43 {
       WHERE hn_rk <= 5
       ORDER BY q_id, hn_rk"""
 
-  val oracles: Map[String, String] = Map(
-    "x119_hard_negatives" -> x119OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x119_hard_negatives" -> (x119HardNegatives _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x119_hard_negatives", x119HardNegatives _, x119OracleSql))
 }

@@ -254,11 +254,7 @@ object Extensions44 {
     FROM wt w, p6 p
     ORDER BY bt_rank"""
 
-  val oracles: Map[String, String] = Map(
-    "x120_calibration" -> x120OracleSql,
-    "x121_bradley_terry" -> x121OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x120_calibration" -> (x120Calibration _),
-    "x121_bradley_terry" -> (x121BradleyTerry _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x120_calibration", x120Calibration _, x120OracleSql),
+    Entry("x121_bradley_terry", x121BradleyTerry _, x121OracleSql))
 }

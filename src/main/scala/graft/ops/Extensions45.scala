@@ -302,13 +302,8 @@ object Extensions45 {
       FROM c, t2
       ORDER BY digit"""
 
-  val oracles: Map[String, String] = Map(
-    "x122_kcore" -> x122OracleSql,
-    "x123_srm_check" -> x123OracleSql,
-    "x124_benford" -> x124OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x122_kcore" -> (x122KCore _),
-    "x123_srm_check" -> (x123Srm _),
-    "x124_benford" -> (x124Benford _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x122_kcore", x122KCore _, x122OracleSql),
+    Entry("x123_srm_check", x123Srm _, x123OracleSql),
+    Entry("x124_benford", x124Benford _, x124OracleSql))
 }

@@ -238,11 +238,7 @@ object Extensions46 {
       FROM st, eff
       ORDER BY st.arm"""
 
-  val oracles: Map[String, String] = Map(
-    "x125_classifier_report" -> x125OracleSql,
-    "x126_did_readout" -> x126OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x125_classifier_report" -> (x125ClassifierReport _),
-    "x126_did_readout" -> (x126Did _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x125_classifier_report", x125ClassifierReport _, x125OracleSql),
+    Entry("x126_did_readout", x126Did _, x126OracleSql))
 }

@@ -195,9 +195,6 @@ object Extensions47 {
     ORDER BY dim"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x127_pca_power" -> x127OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x127_pca_power" -> (x127PcaPower _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x127_pca_power", x127PcaPower _, x127OracleSql))
 }

@@ -145,9 +145,6 @@ object Extensions48 {
     LEFT JOIN ov ON ov.q_id = b.q_id
     ORDER BY b.q_id, b.rk"""
 
-  val oracles: Map[String, String] = Map(
-    "x128_all_but_top" -> x128OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x128_all_but_top" -> (x128AllButTop _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x128_all_but_top", x128AllButTop _, x128OracleSql))
 }

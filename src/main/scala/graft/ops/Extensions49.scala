@@ -215,11 +215,7 @@ object Extensions49 {
       FROM cum c JOIN sized s USING (cohort)
       ORDER BY cohort, offset_m"""
 
-  val oracles: Map[String, String] = Map(
-    "x129_heaps_fit" -> x129OracleSql,
-    "x130_cohort_ltv" -> x130OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x129_heaps_fit" -> (x129Heaps _),
-    "x130_cohort_ltv" -> (x130CohortLtv _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x129_heaps_fit", x129Heaps _, x129OracleSql),
+    Entry("x130_cohort_ltv", x130CohortLtv _, x130OracleSql))
 }

@@ -331,8 +331,20 @@ object Extensions5 {
     bigramScore(docs(s, dir), "doc_id", "text")
       .orderBy(col("doc_id"))
 
-  val oracles: Map[String, String] = Map(
-    "x44_bigram_score" -> """
+  /** x38's oracle. Extensions39 embeds it as x115's rater A. */
+  val x38QualityClassifierSql: String = """
+      WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
+      t AS (SELECT doc_id, len(tk) AS n_tokens, u.tok FROM d, UNNEST(tk) AS u(tok)),
+      s AS (SELECT doc_id, max(n_tokens) AS n_tokens,
+                   sum(('0x' || substr(md5(tok), 1, 15))::BIGINT % 2001 - 1000) AS si
+            FROM t GROUP BY doc_id)
+      SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+             sign(si) * ((abs(si * 10) * 2 + n_tokens) // (n_tokens * 2)) / 10000.0 AS score,
+             si > 0 AS keep
+      FROM s ORDER BY doc_id"""
+
+  val entries: Seq[Entry] = Seq(
+    Entry("x44_bigram_score", x44BigramScore _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       bg0 AS (SELECT doc_id, tk[g.i] AS w1, tk[g.i + 1] AS w2
               FROM d, UNNEST(generate_series(1, len(tk) - 1)) AS g(i)),
@@ -347,8 +359,8 @@ object Extensions5 {
                + 0.0 AS cross_entropy
       FROM bg JOIN model USING (w1, w2) JOIN cl USING (w1)
               JOIN cr USING (w2) CROSS JOIN b
-      GROUP BY 1 ORDER BY 1""",
-    "x41_mixture_stats" -> """
+      GROUP BY 1 ORDER BY 1"""),
+    Entry("x41_mixture_stats", x41MixtureStats _, """
       WITH a AS (SELECT source, count(*) AS n_docs,
                         sum(len(string_split(lower(text), ' '))) AS n_tokens
                  FROM documents GROUP BY source),
@@ -358,13 +370,13 @@ object Extensions5 {
              round(sum(n_tokens) OVER (ORDER BY n_tokens DESC, source)
                    / (1.0 * t.total), 4) AS cum_share,
              row_number() OVER (ORDER BY n_tokens DESC, source) AS rk
-      FROM a, t ORDER BY rk""",
-    "x42_shard_assign" -> """
+      FROM a, t ORDER BY rk"""),
+    Entry("x42_shard_assign", x42ShardAssign _, """
       SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 8 AS shard,
              count(*) AS n_docs,
              CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT) AS n_tokens
-      FROM documents GROUP BY 1 ORDER BY shard""",
-    "x43_length_outliers" -> """
+      FROM documents GROUP BY 1 ORDER BY shard"""),
+    Entry("x43_length_outliers", x43LengthOutliers _, """
       WITH med AS (SELECT source, quantile_cont(n_chars, 0.5) AS med
                    FROM documents GROUP BY source),
       mad AS (SELECT d.source, max(med.med) AS med,
@@ -374,18 +386,9 @@ object Extensions5 {
              round(mad.med, 4) AS med, round(mad.mad, 4) AS mad,
              abs(d.n_chars - mad.med) > 3.0 * 1.4826 * mad.mad AS is_outlier
       FROM documents d JOIN mad USING (source)
-      ORDER BY d.doc_id""",
-    "x38_quality_classifier" -> """
-      WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
-      t AS (SELECT doc_id, len(tk) AS n_tokens, u.tok FROM d, UNNEST(tk) AS u(tok)),
-      s AS (SELECT doc_id, max(n_tokens) AS n_tokens,
-                   sum(('0x' || substr(md5(tok), 1, 15))::BIGINT % 2001 - 1000) AS si
-            FROM t GROUP BY doc_id)
-      SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-             sign(si) * ((abs(si * 10) * 2 + n_tokens) // (n_tokens * 2)) / 10000.0 AS score,
-             si > 0 AS keep
-      FROM s ORDER BY doc_id""",
-    "x39_jl_project" -> """
+      ORDER BY d.doc_id"""),
+    Entry("x38_quality_classifier", x38QualityClassifier _, x38QualityClassifierSql),
+    Entry("x39_jl_project", x39JlProject _, """
       WITH s AS (SELECT j.j, i.i,
                         CASE WHEN ('0x' || substr(md5(j.j || ':' || i.i), 1, 15))::BIGINT % 2 = 0
                              THEN 1.0 ELSE -1.0 END AS sg
@@ -395,8 +398,8 @@ object Extensions5 {
             FROM e, s GROUP BY 1, 2)
       SELECT vec_id, CAST(dim AS BIGINT) AS dim,
              round(raw / 4.0, 4) + 0.0 AS value
-      FROM p ORDER BY vec_id, dim""",
-    "x40_int8_quantize" -> """
+      FROM p ORDER BY vec_id, dim"""),
+    Entry("x40_int8_quantize", x40Int8Quantize _, """
       WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
       sc AS (SELECT vec_id, v, (SELECT max(abs(x)) FROM UNNEST(v) AS u(x)) AS scale FROM e)
       SELECT vec_id, CAST(g.i - 1 AS BIGINT) AS dim,
@@ -404,14 +407,5 @@ object Extensions5 {
                   ELSE CAST(round(v[g.i] * 127.0 / scale, 0) AS INT) END AS q,
              round(scale, 4) AS scale
       FROM sc, UNNEST(generate_series(1, len(v))) AS g(i)
-      ORDER BY vec_id, dim""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x38_quality_classifier" -> (x38QualityClassifier _),
-    "x39_jl_project" -> (x39JlProject _),
-    "x40_int8_quantize" -> (x40Int8Quantize _),
-    "x41_mixture_stats" -> (x41MixtureStats _),
-    "x42_shard_assign" -> (x42ShardAssign _),
-    "x43_length_outliers" -> (x43LengthOutliers _),
-    "x44_bigram_score" -> (x44BigramScore _))
+      ORDER BY vec_id, dim"""))
 }

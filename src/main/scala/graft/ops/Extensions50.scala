@@ -374,13 +374,8 @@ object Extensions50 {
     FROM per, qt
     ORDER BY community"""
 
-  val oracles: Map[String, String] = Map(
-    "x131_rbo" -> x131OracleSql,
-    "x132_assortativity" -> x132OracleSql,
-    "x133_community_metrics" -> x133OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x131_rbo" -> (x131Rbo _),
-    "x132_assortativity" -> (x132Assortativity _),
-    "x133_community_metrics" -> (x133CommunityMetrics _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x131_rbo", x131Rbo _, x131OracleSql),
+    Entry("x132_assortativity", x132Assortativity _, x132OracleSql),
+    Entry("x133_community_metrics", x133CommunityMetrics _, x133OracleSql))
 }

@@ -227,11 +227,7 @@ object Extensions51 {
       FROM qs
       ORDER BY pct"""
 
-  val oracles: Map[String, String] = Map(
-    "x134_msprt_bh" -> x134OracleSql,
-    "x135_qte" -> x135OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x134_msprt_bh" -> (x134MsprtBh _),
-    "x135_qte" -> (x135Qte _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x134_msprt_bh", x134MsprtBh _, x134OracleSql),
+    Entry("x135_qte", x135Qte _, x135OracleSql))
 }

@@ -173,11 +173,7 @@ object Extensions52 {
       ORDER BY category"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x136_cusum" -> x136OracleSql,
-    "x137_contamination" -> x137OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x136_cusum" -> (x136Cusum _),
-    "x137_contamination" -> (x137Contamination _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x136_cusum", x136Cusum _, x136OracleSql),
+    Entry("x137_contamination", x137Contamination _, x137OracleSql))
 }

@@ -219,11 +219,7 @@ object Extensions53 {
       GROUP BY g, n, med2, mad4
       ORDER BY group_key"""
 
-  val oracles: Map[String, String] = Map(
-    "x138_seasonal" -> x138OracleSql,
-    "x139_robust_outliers" -> x139OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x138_seasonal" -> (x138Seasonal _),
-    "x139_robust_outliers" -> (x139Outliers _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x138_seasonal", x138Seasonal _, x138OracleSql),
+    Entry("x139_robust_outliers", x139Outliers _, x139OracleSql))
 }

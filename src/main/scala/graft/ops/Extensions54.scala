@@ -234,11 +234,7 @@ object Extensions54 {
       ORDER BY chi2 DESC, token
       LIMIT 50"""
 
-  val oracles: Map[String, String] = Map(
-    "x140_isotonic" -> x140OracleSql,
-    "x141_chi2_tokens" -> x141OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x140_isotonic" -> (x140Isotonic _),
-    "x141_chi2_tokens" -> (x141ChiSquare _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x140_isotonic", x140Isotonic _, x140OracleSql),
+    Entry("x141_chi2_tokens", x141ChiSquare _, x141OracleSql))
 }

@@ -247,11 +247,7 @@ object Extensions55 {
       FROM rows_
       ORDER BY check_name"""
 
-  val oracles: Map[String, String] = Map(
-    "x142_textrank" -> x142OracleSql,
-    "x143_expectations" -> x143OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x142_textrank" -> (x142TextRank _),
-    "x143_expectations" -> (x143Expectations _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x142_textrank", x142TextRank _, x142OracleSql),
+    Entry("x143_expectations", x143Expectations _, x143OracleSql))
 }

@@ -256,11 +256,7 @@ object Extensions56 {
     ORDER BY coverage_target"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x144_map_mrr" -> x144OracleSql,
-    "x145_conformal" -> x145OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x144_map_mrr" -> (x144MapMrr _),
-    "x145_conformal" -> (x145Conformal _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x144_map_mrr", x144MapMrr _, x144OracleSql),
+    Entry("x145_conformal", x145Conformal _, x145OracleSql))
 }

@@ -206,11 +206,7 @@ object Extensions57 {
       ORDER BY node_type, node_id"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x146_item_item" -> x146OracleSql,
-    "x147_hits" -> x147OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x146_item_item" -> (x146ItemItem _),
-    "x147_hits" -> (x147Hits _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x146_item_item", x146ItemItem _, x146OracleSql),
+    Entry("x147_hits", x147Hits _, x147OracleSql))
 }

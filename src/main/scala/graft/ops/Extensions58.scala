@@ -197,11 +197,7 @@ object Extensions58 {
       FROM t
       ORDER BY stratum"""
 
-  val oracles: Map[String, String] = Map(
-    "x148_good_turing" -> x148OracleSql,
-    "x149_cmh" -> x149OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x148_good_turing" -> (x148GoodTuring _),
-    "x149_cmh" -> (x149Cmh _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x148_good_turing", x148GoodTuring _, x148OracleSql),
+    Entry("x149_cmh", x149Cmh _, x149OracleSql))
 }

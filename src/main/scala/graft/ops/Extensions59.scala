@@ -279,11 +279,7 @@ object Extensions59 {
       FROM (SELECT * FROM m WHERE arm = 'control') c,
            (SELECT * FROM m WHERE arm = 'treatment') t"""
 
-  val oracles: Map[String, String] = Map(
-    "x150_table_profile" -> x150OracleSql,
-    "x151_winsorized" -> x151OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x150_table_profile" -> (x150Profile _),
-    "x151_winsorized" -> (x151Winsorized _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x150_table_profile", x150Profile _, x150OracleSql),
+    Entry("x151_winsorized", x151Winsorized _, x151OracleSql))
 }

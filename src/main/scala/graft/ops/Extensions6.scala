@@ -176,8 +176,8 @@ object Extensions6 {
       .select(col("doc_id"), col("shard"), col("ord"))
       .orderBy(col("shard"), col("ord"))
 
-  val oracles: Map[String, String] = Map(
-    "x45_source_overlap" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x45_source_overlap", x45SourceOverlap _, """
       WITH d AS (SELECT source, string_split(lower(text), ' ') AS toks FROM documents),
       sh0 AS (SELECT source, array_to_string(toks[i:i+4], ' ') AS sh
               FROM d, UNNEST(generate_series(1, CASE WHEN len(toks) >= 5 THEN len(toks)-4 ELSE 1 END)) AS g(i)),
@@ -191,8 +191,8 @@ object Extensions6 {
       FROM pairs
       JOIN sizes sa ON sa.src = src_a
       JOIN sizes sb ON sb.src = src_b
-      ORDER BY src_a, src_b""",
-    "x46_filter_funnel" -> """
+      ORDER BY src_a, src_b"""),
+    Entry("x46_filter_funnel", x46FilterFunnel _, """
       WITH f AS (
         SELECT CASE WHEN len(string_split(lower(text), ' ')) >= 5 THEN 1 ELSE 0 END AS f0,
                CASE WHEN n_chars <= 5000 THEN 1 ELSE 0 END AS f1,
@@ -216,18 +216,13 @@ object Extensions6 {
                         (3, 'uniq_ratio'), (4, 'avg_tok_len')) AS v(stage_no, stage),
       LATERAL (SELECT CASE stage_no WHEN 1 THEN p0 WHEN 2 THEN p1 WHEN 3 THEN p2 ELSE p3 END AS n_pass,
                       CASE stage_no WHEN 1 THEN s0 WHEN 2 THEN s1 WHEN 3 THEN s2 ELSE s3 END AS n_survive)
-      ORDER BY stage_no""",
-    "x47_training_order" -> """
+      ORDER BY stage_no"""),
+    Entry("x47_training_order", x47TrainingOrder _, """
       SELECT doc_id,
              ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 8 AS shard,
              row_number() OVER (
                PARTITION BY ('0x' || substr(md5(doc_id::VARCHAR), 1, 15))::BIGINT % 8
                ORDER BY ('0x' || substr(md5(doc_id::VARCHAR || ':ord'), 1, 15))::BIGINT, doc_id
              ) AS ord
-      FROM documents ORDER BY shard, ord""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x45_source_overlap" -> (x45SourceOverlap _),
-    "x46_filter_funnel" -> (x46FilterFunnel _),
-    "x47_training_order" -> (x47TrainingOrder _))
+      FROM documents ORDER BY shard, ord"""))
 }

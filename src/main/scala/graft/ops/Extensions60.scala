@@ -271,11 +271,7 @@ object Extensions60 {
       FROM fin
       ORDER BY bucket"""
 
-  val oracles: Map[String, String] = Map(
-    "x152_bot_card" -> x152OracleSql,
-    "x153_woe_iv" -> x153OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x152_bot_card" -> (x152BotCard _),
-    "x153_woe_iv" -> (x153WoeIv _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x152_bot_card", x152BotCard _, x152OracleSql),
+    Entry("x153_woe_iv", x153WoeIv _, x153OracleSql))
 }

@@ -246,11 +246,7 @@ object Extensions61 {
       FROM wide
       ORDER BY step_from"""
 
-  val oracles: Map[String, String] = Map(
-    "x154_lead_lag" -> x154OracleSql,
-    "x155_step_timing" -> x155OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x154_lead_lag" -> (x154LeadLag _),
-    "x155_step_timing" -> (x155StepTiming _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x154_lead_lag", x154LeadLag _, x154OracleSql),
+    Entry("x155_step_timing", x155StepTiming _, x155OracleSql))
 }

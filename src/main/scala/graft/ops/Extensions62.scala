@@ -237,11 +237,7 @@ object Extensions62 {
              END AS z
       FROM uu"""
 
-  val oracles: Map[String, String] = Map(
-    "x156_its" -> x156OracleSql,
-    "x157_mann_whitney" -> x157OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x156_its" -> (x156Its _),
-    "x157_mann_whitney" -> (x157MannWhitney _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x156_its", x156Its _, x156OracleSql),
+    Entry("x157_mann_whitney", x157MannWhitney _, x157OracleSql))
 }

@@ -233,11 +233,7 @@ object Extensions63 {
       FROM t
       ORDER BY source"""
 
-  val oracles: Map[String, String] = Map(
-    "x158_threshold_curve" -> x158OracleSql,
-    "x159_mixture_card" -> x159OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x158_threshold_curve" -> (x158ThresholdCurve _),
-    "x159_mixture_card" -> (x159MixtureCard _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x158_threshold_curve", x158ThresholdCurve _, x158OracleSql),
+    Entry("x159_mixture_card", x159MixtureCard _, x159OracleSql))
 }

@@ -211,11 +211,7 @@ object Extensions64 {
       FROM d
       ORDER BY event_type"""
 
-  val oracles: Map[String, String] = Map(
-    "x160_runs_test" -> x160OracleSql,
-    "x161_mde_planner" -> x161OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x160_runs_test" -> (x160RunsTest _),
-    "x161_mde_planner" -> (x161Mde _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x160_runs_test", x160RunsTest _, x160OracleSql),
+    Entry("x161_mde_planner", x161Mde _, x161OracleSql))
 }

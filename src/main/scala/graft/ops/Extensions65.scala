@@ -165,11 +165,7 @@ object Extensions65 {
       FROM s
       ORDER BY doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x162_assoc_rules" -> x162OracleSql,
-    "x163_flesch" -> x163OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x162_assoc_rules" -> (x162Rules _),
-    "x163_flesch" -> (x163Flesch _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x162_assoc_rules", x162Rules _, x162OracleSql),
+    Entry("x163_flesch", x163Flesch _, x163OracleSql))
 }

@@ -166,11 +166,7 @@ object Extensions66 {
     ORDER BY rank"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x164_khop_reach" -> x164OracleSql,
-    "x165_label_noise" -> x165OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x164_khop_reach" -> (x164Reach _),
-    "x165_label_noise" -> (x165LabelNoise _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x164_khop_reach", x164Reach _, x164OracleSql),
+    Entry("x165_label_noise", x165LabelNoise _, x165OracleSql))
 }

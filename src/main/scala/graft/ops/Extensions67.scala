@@ -230,11 +230,7 @@ object Extensions67 {
       FROM rows_, tot
       ORDER BY stage"""
 
-  val oracles: Map[String, String] = Map(
-    "x166_markov_eval" -> x166OracleSql,
-    "x167_dedup_funnel" -> x167OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x166_markov_eval" -> (x166MarkovEval _),
-    "x167_dedup_funnel" -> (x167DedupFunnel _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x166_markov_eval", x166MarkovEval _, x166OracleSql),
+    Entry("x167_dedup_funnel", x167DedupFunnel _, x167OracleSql))
 }

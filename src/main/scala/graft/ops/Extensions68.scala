@@ -206,11 +206,7 @@ object Extensions68 {
       GROUP BY label
       ORDER BY label"""
 
-  val oracles: Map[String, String] = Map(
-    "x168_langid_eval" -> x168OracleSql,
-    "x169_silhouette" -> x169OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x168_langid_eval" -> (x168LangIdEval _),
-    "x169_silhouette" -> (x169Silhouette _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x168_langid_eval", x168LangIdEval _, x168OracleSql),
+    Entry("x169_silhouette", x169Silhouette _, x169OracleSql))
 }

@@ -173,11 +173,7 @@ object Extensions69 {
       FROM fin
       ORDER BY group_key"""
 
-  val oracles: Map[String, String] = Map(
-    "x170_decayed_engagement" -> x170OracleSql,
-    "x171_gini" -> x171OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x170_decayed_engagement" -> (x170Decayed _),
-    "x171_gini" -> (x171Gini _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x170_decayed_engagement", x170Decayed _, x170OracleSql),
+    Entry("x171_gini", x171Gini _, x171OracleSql))
 }

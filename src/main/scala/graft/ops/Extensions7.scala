@@ -166,8 +166,8 @@ object Extensions7 {
     paddingReport(docs(s, dir), "doc_id", "text")
       .orderBy(col("len_bucket"))
 
-  val oracles: Map[String, String] = Map(
-    "x48_density_prune" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x48_density_prune", x48DensityPrune _, """
       WITH base AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
                (CASE WHEN embedding[1] > 0 THEN 1 ELSE 0 END)
@@ -188,8 +188,8 @@ object Extensions7 {
                  FROM scored)
       SELECT vec_id, CAST(cell AS BIGINT) AS cell, sim, rk,
              rk * 4 > n * 1 AS keep
-      FROM ranked ORDER BY vec_id""",
-    "x49_novelty_score" -> """
+      FROM ranked ORDER BY vec_id"""),
+    Entry("x49_novelty_score", x49NoveltyScore _, """
       WITH tr AS (SELECT string_split(lower(text), ' ') AS toks
                   FROM documents WHERE doc_id % 10 <> 0),
       trsh AS (SELECT DISTINCT array_to_string(toks[i:i+4], ' ') AS sh
@@ -204,8 +204,8 @@ object Extensions7 {
              round((count(*) - coalesce(sum(CASE WHEN trsh.sh IS NOT NULL THEN 1 END), 0)) * 1.0
                    / count(*), 4) AS novelty
       FROM evsh LEFT JOIN trsh ON evsh.sh = trsh.sh
-      GROUP BY 1 ORDER BY 1""",
-    "x50_padding_report" -> """
+      GROUP BY 1 ORDER BY 1"""),
+    Entry("x50_padding_report", x50PaddingReport _, """
       WITH d AS (SELECT CAST(ceil(len(string_split(lower(text), ' ')) / 64.0) * 64 AS BIGINT) AS len_bucket,
                         CAST(len(string_split(lower(text), ' ')) AS BIGINT) AS n_tokens
                  FROM documents),
@@ -221,10 +221,5 @@ object Extensions7 {
       SELECT len_bucket, n_docs, sum_tokens, capacity,
              round(1.0 - sum_tokens * 1.0 / capacity, 4) AS pad_frac
       FROM (SELECT * FROM b UNION ALL SELECT * FROM g)
-      ORDER BY len_bucket""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x48_density_prune" -> (x48DensityPrune _),
-    "x49_novelty_score" -> (x49NoveltyScore _),
-    "x50_padding_report" -> (x50PaddingReport _))
+      ORDER BY len_bucket"""))
 }

@@ -196,11 +196,7 @@ object Extensions70 {
              actual_total
       FROM agg"""
 
-  val oracles: Map[String, String] = Map(
-    "x172_recs_eval" -> x172OracleSql,
-    "x173_capture_recapture" -> x173OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x172_recs_eval" -> (x172RecsEval _),
-    "x173_capture_recapture" -> (x173Capture _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x172_recs_eval", x172RecsEval _, x172OracleSql),
+    Entry("x173_capture_recapture", x173Capture _, x173OracleSql))
 }

@@ -151,11 +151,7 @@ object Extensions71 {
       FROM w
       ORDER BY rank"""
 
-  val oracles: Map[String, String] = Map(
-    "x174_cohort_payback" -> x174OracleSql,
-    "x175_abc" -> x175OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x174_cohort_payback" -> (x174Payback _),
-    "x175_abc" -> (x175Abc _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x174_cohort_payback", x174Payback _, x174OracleSql),
+    Entry("x175_abc", x175Abc _, x175OracleSql))
 }

@@ -142,11 +142,7 @@ object Extensions72 {
       FROM p
       ORDER BY group_key, hour"""
 
-  val oracles: Map[String, String] = Map(
-    "x176_overdispersion" -> x176OracleSql,
-    "x177_hourly_load" -> x177OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x176_overdispersion" -> (x176Overdispersion _),
-    "x177_hourly_load" -> (x177HourlyLoad _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x176_overdispersion", x176Overdispersion _, x176OracleSql),
+    Entry("x177_hourly_load", x177HourlyLoad _, x177OracleSql))
 }

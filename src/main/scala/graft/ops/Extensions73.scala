@@ -212,11 +212,7 @@ object Extensions73 {
              ss < sn AS seasonal_better
       FROM g"""
 
-  val oracles: Map[String, String] = Map(
-    "x178_churn_fit" -> x178OracleSql,
-    "x179_forecast_baselines" -> x179OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x178_churn_fit" -> (x178Churn _),
-    "x179_forecast_baselines" -> (x179Baselines _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x178_churn_fit", x178Churn _, x178OracleSql),
+    Entry("x179_forecast_baselines", x179Baselines _, x179OracleSql))
 }

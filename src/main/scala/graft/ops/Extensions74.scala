@@ -179,11 +179,7 @@ object Extensions74 {
     FROM f2 WHERE m = mbest"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x180_gains_chart" -> x180OracleSql,
-    "x181_utility_gate" -> x181OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x180_gains_chart" -> (x180Gains _),
-    "x181_utility_gate" -> (x181UtilityGate _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x180_gains_chart", x180Gains _, x180OracleSql),
+    Entry("x181_utility_gate", x181UtilityGate _, x181OracleSql))
 }

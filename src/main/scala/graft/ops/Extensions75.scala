@@ -171,11 +171,7 @@ object Extensions75 {
       FROM agg
       ORDER BY group_key"""
 
-  val oracles: Map[String, String] = Map(
-    "x182_ks_test" -> x182OracleSql,
-    "x183_kish_ess" -> x183OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x182_ks_test" -> (x182Ks _),
-    "x183_kish_ess" -> (x183Ess _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x182_ks_test", x182Ks _, x182OracleSql),
+    Entry("x183_kish_ess", x183Ess _, x183OracleSql))
 }

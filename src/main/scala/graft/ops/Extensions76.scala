@@ -179,11 +179,7 @@ object Extensions76 {
                AS dim_unreferenced_rate
       FROM ft, fo, fn, dt, du"""
 
-  val oracles: Map[String, String] = Map(
-    "x184_vocab_shift" -> x184OracleSql,
-    "x185_join_profile" -> x185OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x184_vocab_shift" -> (x184VocabShift _),
-    "x185_join_profile" -> (x185JoinProfile _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x184_vocab_shift", x184VocabShift _, x184OracleSql),
+    Entry("x185_join_profile", x185JoinProfile _, x185OracleSql))
 }

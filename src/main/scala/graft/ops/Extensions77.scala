@@ -156,11 +156,7 @@ object Extensions77 {
       ORDER BY n_events DESC, key
       LIMIT 20"""
 
-  val oracles: Map[String, String] = Map(
-    "x186_version_audit" -> x186OracleSql,
-    "x187_hot_partitions" -> x187OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x186_version_audit" -> (x186VersionAudit _),
-    "x187_hot_partitions" -> (x187HotPartitions _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x186_version_audit", x186VersionAudit _, x186OracleSql),
+    Entry("x187_hot_partitions", x187HotPartitions _, x187OracleSql))
 }

@@ -245,11 +245,7 @@ object Extensions78 {
                * 10000.0, 0) / 10000.0 AS strength
       FROM agg"""
 
-  val oracles: Map[String, String] = Map(
-    "x188_funnel_arms" -> x188OracleSql,
-    "x189_seasonal_strength" -> x189OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x188_funnel_arms" -> (x188FunnelArms _),
-    "x189_seasonal_strength" -> (x189SeasonalStrength _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x188_funnel_arms", x188FunnelArms _, x188OracleSql),
+    Entry("x189_seasonal_strength", x189SeasonalStrength _, x189OracleSql))
 }

@@ -178,11 +178,7 @@ object Extensions79 {
              END AS z
       FROM agg"""
 
-  val oracles: Map[String, String] = Map(
-    "x190_acf" -> x190OracleSql,
-    "x191_turning_points" -> x191OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x190_acf" -> (x190Acf _),
-    "x191_turning_points" -> (x191TurningPoints _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x190_acf", x190Acf _, x190OracleSql),
+    Entry("x191_turning_points", x191TurningPoints _, x191OracleSql))
 }

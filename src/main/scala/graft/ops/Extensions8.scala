@@ -123,32 +123,27 @@ object Extensions8 {
     stitchCandidates(docs(s, dir), "doc_id", "text")
       .orderBy(col("doc_a"), col("doc_b"))
 
-  val oracles: Map[String, String] = Map(
-    "x51_bpe_pairs" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x51_bpe_pairs", x51BpePairStats _, """
       WITH t AS (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents),
       p AS (SELECT substr(tok, g.i, 2) AS pair
             FROM t, UNNEST(generate_series(1, len(tok) - 1)) AS g(i)
             WHERE len(tok) >= 2)
       SELECT pair, count(*) AS n FROM p GROUP BY 1
-      ORDER BY n DESC, pair LIMIT 20""",
-    "x52_curriculum_deciles" -> """
+      ORDER BY n DESC, pair LIMIT 20"""),
+    Entry("x52_curriculum_deciles", x52CurriculumDeciles _, """
       WITH b AS (SELECT list_transform(
                    quantile_cont(n_chars, [0.1,0.2,0.3,0.4,0.5,0.6,0.7,0.8,0.9]),
                    x -> round(x, 4)) AS bs FROM documents)
       SELECT doc_id, n_chars,
              CAST(1 + len(list_filter(bs, x -> n_chars > x)) AS BIGINT) AS decile
-      FROM documents, b ORDER BY doc_id""",
-    "x53_stitch_candidates" -> """
+      FROM documents, b ORDER BY doc_id"""),
+    Entry("x53_stitch_candidates", x53StitchCandidates _, """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
       hk AS (SELECT doc_id, array_to_string(tk[1:3], ' ') AS head,
                     array_to_string(tk[-3:], ' ') AS tail
              FROM d WHERE len(tk) >= 3)
       SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.tail AS boundary
       FROM hk a JOIN hk b ON a.tail = b.head AND a.doc_id <> b.doc_id
-      ORDER BY doc_a, doc_b""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x51_bpe_pairs" -> (x51BpePairStats _),
-    "x52_curriculum_deciles" -> (x52CurriculumDeciles _),
-    "x53_stitch_candidates" -> (x53StitchCandidates _))
+      ORDER BY doc_a, doc_b"""))
 }

@@ -144,11 +144,7 @@ object Extensions80 {
       JOIN sz sb ON sb.g = pr.h
       ORDER BY group_a, group_b"""
 
-  val oracles: Map[String, String] = Map(
-    "x192_wilson" -> x192OracleSql,
-    "x193_audience_overlap" -> x193OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x192_wilson" -> (x192Wilson _),
-    "x193_audience_overlap" -> (x193Overlap _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x192_wilson", x192Wilson _, x192OracleSql),
+    Entry("x193_audience_overlap", x193Overlap _, x193OracleSql))
 }

@@ -153,11 +153,7 @@ object Extensions81 {
       FROM agg
       ORDER BY day"""
 
-  val oracles: Map[String, String] = Map(
-    "x194_session_card" -> x194OracleSql,
-    "x195_dau_decomposition" -> x195OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x194_session_card" -> (x194Sessions _),
-    "x195_dau_decomposition" -> (x195Dau _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x194_session_card", x194Sessions _, x194OracleSql),
+    Entry("x195_dau_decomposition", x195Dau _, x195OracleSql))
 }

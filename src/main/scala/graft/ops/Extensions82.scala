@@ -123,11 +123,7 @@ object Extensions82 {
       FROM w
       ORDER BY days_active"""
 
-  val oracles: Map[String, String] = Map(
-    "x196_stickiness" -> x196OracleSql,
-    "x197_activity_curve" -> x197OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x196_stickiness" -> (x196Stickiness _),
-    "x197_activity_curve" -> (x197Frequency _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x196_stickiness", x196Stickiness _, x196OracleSql),
+    Entry("x197_activity_curve", x197Frequency _, x197OracleSql))
 }

@@ -167,11 +167,7 @@ object Extensions83 {
       FROM agg
       ORDER BY event_type"""
 
-  val oracles: Map[String, String] = Map(
-    "x198_theil_sen" -> x198OracleSql,
-    "x199_burstiness" -> x199OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x198_theil_sen" -> (x198TheilSen _),
-    "x199_burstiness" -> (x199Burstiness _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x198_theil_sen", x198TheilSen _, x198OracleSql),
+    Entry("x199_burstiness", x199Burstiness _, x199OracleSql))
 }

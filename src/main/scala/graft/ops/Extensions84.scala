@@ -117,9 +117,6 @@ object Extensions84 {
              ((n1 * 10000 * 2 + tt) // (2 * tt)) / 10000.0 FROM j
       ORDER BY metric"""
 
-  val oracles: Map[String, String] = Map(
-    "x200_corpus_one_pager" -> x200OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x200_corpus_one_pager" -> (x200OnePager _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x200_corpus_one_pager", x200OnePager _, x200OracleSql))
 }

@@ -169,11 +169,7 @@ object Extensions85 {
       FROM w
       ORDER BY basket_size"""
 
-  val oracles: Map[String, String] = Map(
-    "x201_rolling_z" -> x201OracleSql,
-    "x202_basket_profile" -> x202OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x201_rolling_z" -> (x201RollingZ _),
-    "x202_basket_profile" -> (x202Baskets _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x201_rolling_z", x201RollingZ _, x201OracleSql),
+    Entry("x202_basket_profile", x202Baskets _, x202OracleSql))
 }

@@ -82,9 +82,6 @@ object Extensions86 {
       FROM x
       ORDER BY month"""
 
-  val oracles: Map[String, String] = Map(
-    "x203_repeat_revenue" -> x203OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x203_repeat_revenue" -> (x203RepeatRevenue _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x203_repeat_revenue", x203RepeatRevenue _, x203OracleSql))
 }

@@ -128,11 +128,7 @@ object Extensions87 {
       FROM agg
       ORDER BY priority"""
 
-  val oracles: Map[String, String] = Map(
-    "x204_sourcing_risk" -> x204OracleSql,
-    "x205_lead_time" -> x205OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x204_sourcing_risk" -> (x204Sourcing _),
-    "x205_lead_time" -> (x205LeadTime _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x204_sourcing_risk", x204Sourcing _, x204OracleSql),
+    Entry("x205_lead_time", x205LeadTime _, x205OracleSql))
 }

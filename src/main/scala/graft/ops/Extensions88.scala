@@ -96,9 +96,6 @@ object Extensions88 {
       ORDER BY spread_pct DESC, part
       LIMIT 20"""
 
-  val oracles: Map[String, String] = Map(
-    "x206_price_spread" -> x206OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x206_price_spread" -> (x206PriceSpread _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x206_price_spread", x206PriceSpread _, x206OracleSql))
 }

@@ -129,11 +129,7 @@ object Extensions89 {
       FROM agg
       ORDER BY month"""
 
-  val oracles: Map[String, String] = Map(
-    "x207_trade_flow" -> x207OracleSql,
-    "x208_promo_share" -> x208OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x207_trade_flow" -> (x207TradeFlow _),
-    "x208_promo_share" -> (x208PromoShare _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x207_trade_flow", x207TradeFlow _, x207OracleSql),
+    Entry("x208_promo_share", x208PromoShare _, x208OracleSql))
 }

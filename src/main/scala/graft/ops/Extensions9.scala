@@ -129,8 +129,8 @@ object Extensions9 {
       .orderBy(col("doc_id"))
   }
 
-  val oracles: Map[String, String] = Map(
-    "x54_stopword_ratio" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x54_stopword_ratio", x54StopwordRatio _, """
       WITH occ AS (SELECT doc_id, u.tok
                    FROM (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
                         UNNEST(tk) AS u(tok)),
@@ -141,8 +141,8 @@ object Extensions9 {
              round(coalesce(sum(CASE WHEN stop.tok IS NOT NULL THEN 1 END), 0) * 1.0
                    / count(*), 4) AS stop_ratio
       FROM occ LEFT JOIN stop ON occ.tok = stop.tok
-      GROUP BY 1 ORDER BY 1""",
-    "x55_source_lang_entropy" -> """
+      GROUP BY 1 ORDER BY 1"""),
+    Entry("x55_source_lang_entropy", x55SourceLangEntropy _, """
       WITH c AS (SELECT source, lang, count(*) AS n FROM documents GROUP BY 1, 2),
       r AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY n DESC, lang) AS rk
             FROM c)
@@ -152,8 +152,8 @@ object Extensions9 {
              round(max(CASE WHEN r.rk = 1 THEN r.n END) * 1.0 / sum(c.n), 4) AS top_share,
              round(ln(sum(c.n)) - sum(c.n * ln(c.n)) / sum(c.n), 4) AS lang_entropy
       FROM c JOIN r ON c.source = r.source AND c.lang = r.lang
-      GROUP BY 1 ORDER BY 1""",
-    "x56_quantile_normalize" -> """
+      GROUP BY 1 ORDER BY 1"""),
+    Entry("x56_quantile_normalize", x56QuantileNormalize _, """
       WITH d AS (SELECT doc_id, source, string_split(lower(text), ' ') AS tk FROM documents),
       t AS (SELECT doc_id, len(tk) AS n_tokens, u.tok FROM d, UNNEST(tk) AS u(tok)),
       s AS (SELECT doc_id, max(n_tokens) AS n_tokens,
@@ -165,10 +165,5 @@ object Extensions9 {
       SELECT doc_id, source, score,
              round(percent_rank() OVER (
                PARTITION BY source ORDER BY score, doc_id), 4) AS q_norm
-      FROM sc ORDER BY doc_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x54_stopword_ratio" -> (x54StopwordRatio _),
-    "x55_source_lang_entropy" -> (x55SourceLangEntropy _),
-    "x56_quantile_normalize" -> (x56QuantileNormalize _))
+      FROM sc ORDER BY doc_id"""))
 }

@@ -66,9 +66,6 @@ object Extensions90 {
       FROM g
       ORDER BY year, segment"""
 
-  val oracles: Map[String, String] = Map(
-    "x209_segment_mix" -> x209OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x209_segment_mix" -> (x209SegmentMix _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x209_segment_mix", x209SegmentMix _, x209OracleSql))
 }

@@ -159,9 +159,6 @@ object Extensions91 {
       LEFT JOIN reb ON reb.doc_id = b.doc_id
       ORDER BY b.doc_id"""
 
-  val oracles: Map[String, String] = Map(
-    "x210_paragraph_dedup" -> x210OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x210_paragraph_dedup" -> (x210ParagraphDedup _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x210_paragraph_dedup", x210ParagraphDedup _, x210OracleSql))
 }

@@ -86,9 +86,6 @@ object Extensions92 {
     ORDER BY node_type, node_id"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x211_directed_pagerank" -> x211OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x211_directed_pagerank" -> (x211DirectedPageRank _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x211_directed_pagerank", x211DirectedPageRank _, x211OracleSql))
 }

@@ -254,13 +254,8 @@ object Extensions93 {
       FROM c
       ORDER BY source"""
 
-  val oracles: Map[String, String] = Map(
-    "x212_stratified_sample" -> x212OracleSql,
-    "x213_crosslingual_dups" -> x213OracleSql,
-    "x214_source_mix_kl" -> x214OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x212_stratified_sample" -> (x212StratifiedSample _),
-    "x213_crosslingual_dups" -> (x213CrossLingual _),
-    "x214_source_mix_kl" -> (x214SourceMix _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x212_stratified_sample", x212StratifiedSample _, x212OracleSql),
+    Entry("x213_crosslingual_dups", x213CrossLingual _, x213OracleSql),
+    Entry("x214_source_mix_kl", x214SourceMix _, x214OracleSql))
 }

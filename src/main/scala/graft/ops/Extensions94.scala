@@ -251,13 +251,8 @@ object Extensions94 {
              ((t.n_beyond * 10000 * 2 + p.n) // (2 * p.n)) / 10000.0 AS tail_share
       FROM p, t"""
 
-  val oracles: Map[String, String] = Map(
-    "x215_join_skew_plan" -> x215OracleSql,
-    "x216_dedup_savings" -> x216OracleSql,
-    "x217_length_fit" -> x217OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x215_join_skew_plan" -> (x215JoinSkew _),
-    "x216_dedup_savings" -> (x216DedupSavings _),
-    "x217_length_fit" -> (x217LengthFit _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x215_join_skew_plan", x215JoinSkew _, x215OracleSql),
+    Entry("x216_dedup_savings", x216DedupSavings _, x216OracleSql),
+    Entry("x217_length_fit", x217LengthFit _, x217OracleSql))
 }

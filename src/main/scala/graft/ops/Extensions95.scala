@@ -145,11 +145,7 @@ object Extensions95 {
       FROM g
       ORDER BY ctx_len"""
 
-  val oracles: Map[String, String] = Map(
-    "x218_rebalance_plan" -> x218OracleSql,
-    "x219_truncation_loss" -> x219OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x218_rebalance_plan" -> (x218RebalancePlan _),
-    "x219_truncation_loss" -> (x219TruncationLoss _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x218_rebalance_plan", x218RebalancePlan _, x218OracleSql),
+    Entry("x219_truncation_loss", x219TruncationLoss _, x219OracleSql))
 }

@@ -215,11 +215,7 @@ object Extensions96 {
       FROM agg"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x220_simhash_radius" -> x220OracleSql,
-    "x221_minhash_error" -> x221OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x220_simhash_radius" -> (x220SimhashRadius _),
-    "x221_minhash_error" -> (x221MinhashError _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x220_simhash_radius", x220SimhashRadius _, x220OracleSql),
+    Entry("x221_minhash_error", x221MinhashError _, x221OracleSql))
 }

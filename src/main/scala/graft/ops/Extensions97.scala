@@ -111,11 +111,7 @@ object Extensions97 {
       ORDER BY group_key, decile"""
   }
 
-  val oracles: Map[String, String] = Map(
-    "x222_approx_quantiles" -> x222OracleSql,
-    "x223_group_deciles" -> x223OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x222_approx_quantiles" -> (x222ApproxQuantiles _),
-    "x223_group_deciles" -> (x223GroupDeciles _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x222_approx_quantiles", x222ApproxQuantiles _, x222OracleSql),
+    Entry("x223_group_deciles", x223GroupDeciles _, x223OracleSql))
 }

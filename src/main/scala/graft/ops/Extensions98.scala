@@ -158,11 +158,7 @@ object Extensions98 {
       FROM g
       ORDER BY source_a, source_b"""
 
-  val oracles: Map[String, String] = Map(
-    "x224_cluster_sizes" -> x224OracleSql,
-    "x225_source_leakage" -> x225OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x224_cluster_sizes" -> (x224ClusterSizes _),
-    "x225_source_leakage" -> (x225SourceLeakage _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x224_cluster_sizes", x224ClusterSizes _, x224OracleSql),
+    Entry("x225_source_leakage", x225SourceLeakage _, x225OracleSql))
 }

@@ -166,11 +166,7 @@ object Extensions99 {
              END AS closure_share
       FROM agg"""
 
-  val oracles: Map[String, String] = Map(
-    "x226_cosine_curve" -> x226OracleSql,
-    "x227_dup_transitivity" -> x227OracleSql)
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x226_cosine_curve" -> (x226CosineCurve _),
-    "x227_dup_transitivity" -> (x227Transitivity _))
+  val entries: Seq[Entry] = Seq(
+    Entry("x226_cosine_curve", x226CosineCurve _, x226OracleSql),
+    Entry("x227_dup_transitivity", x227Transitivity _, x227OracleSql))
 }

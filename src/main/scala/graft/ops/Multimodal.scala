@@ -145,16 +145,13 @@ object Multimodal {
         (col("doc_id") % 3).as("kind_code"))
       .orderBy(col("doc_id"))
 
-  val oracles: Map[String, String] = Map(
-    "x11_multimodal_meta" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x11_multimodal_meta", x11MultimodalMeta _, """
       SELECT doc_id,
              octet_length(encode(text)) AS n_bytes,
              md5(text) AS digest,
              ascii(substring(text, 1, 1)) AS first_byte,
              doc_id % 3 AS kind_code
       FROM documents
-      ORDER BY doc_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x11_multimodal_meta" -> (x11MultimodalMeta _))
+      ORDER BY doc_id"""))
 }

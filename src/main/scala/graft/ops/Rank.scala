@@ -209,15 +209,12 @@ object Rank {
       .orderBy(col("o_custkey"))
   }
 
-  val oracles: Map[String, String] = Map(
-    "x231_global_rank" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("x231_global_rank", x231GlobalRank _, """
       SELECT o_custkey, spend,
              ntile(4) OVER (ORDER BY spend DESC, o_custkey) AS quartile,
              CAST(dense_rank() OVER (ORDER BY spend DESC, o_custkey) AS BIGINT) AS drk
       FROM (SELECT o_custkey, round(sum(o_totalprice), 2) AS spend
             FROM orders GROUP BY o_custkey) sub
-      ORDER BY o_custkey""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "x231_global_rank" -> (x231GlobalRank _))
+      ORDER BY o_custkey"""))
 }

@@ -463,9 +463,10 @@ object Relational {
 
   // ---- oracle SQL ----------------------------------------------------------
 
-  /** DuckDB equivalents, column-name-aligned with the Spark results. */
-  val oracles: Map[String, String] = Map(
-    "q01_pricing_summary" -> """
+  /** Name → runner and its DuckDB equivalent, column-name-aligned with the
+    * Spark results. */
+  val entries: Seq[Entry] = Seq(
+    Entry("q01_pricing_summary", q01PricingSummary _, """
       SELECT l_returnflag, l_linestatus,
              round(sum(l_quantity), 2) AS sum_qty,
              round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -478,26 +479,26 @@ object Relational {
       FROM lineitem
       WHERE l_shipdate <= TIMESTAMP '1999-12-01 00:00:00'
       GROUP BY l_returnflag, l_linestatus
-      ORDER BY l_returnflag, l_linestatus""",
-    "q02_filter_project" -> """
+      ORDER BY l_returnflag, l_linestatus"""),
+    Entry("q02_filter_project", q02FilterProject _, """
       SELECT l_orderkey, l_linenumber, l_quantity, l_discount
       FROM lineitem
       WHERE l_quantity > 45 AND l_discount >= 0.05
-      ORDER BY l_orderkey, l_linenumber""",
-    "q03_join_customer_orders" -> """
+      ORDER BY l_orderkey, l_linenumber"""),
+    Entry("q03_join_customer_orders", q03JoinCustomerOrders _, """
       SELECT c_mktsegment, count(*) AS n_orders,
              round(sum(o_totalprice), 2) AS revenue
       FROM orders JOIN customer ON o_custkey = c_custkey
       GROUP BY c_mktsegment
-      ORDER BY c_mktsegment""",
-    "q04_broadcast_join" -> """
+      ORDER BY c_mktsegment"""),
+    Entry("q04_broadcast_join", q04BroadcastJoin _, """
       SELECT p_brand,
              round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
              count(*) AS n_items
       FROM lineitem JOIN part ON l_partkey = p_partkey
       GROUP BY p_brand
-      ORDER BY p_brand""",
-    "q05_revenue_by_nation" -> """
+      ORDER BY p_brand"""),
+    Entry("q05_revenue_by_nation", q05RevenueByNation _, """
       SELECT n_name,
              round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue
       FROM lineitem
@@ -508,42 +509,42 @@ object Relational {
       JOIN region   ON n_regionkey = r_regionkey
       WHERE r_name = 'ASIA'
       GROUP BY n_name
-      ORDER BY n_name""",
-    "q06_left_join" -> """
+      ORDER BY n_name"""),
+    Entry("q06_left_join", q06LeftJoin _, """
       SELECT c_custkey, count(o_orderkey) AS n_orders,
              round(coalesce(sum(o_totalprice), 0), 2) AS total_spent
       FROM customer LEFT JOIN orders ON c_custkey = o_custkey
       GROUP BY c_custkey
-      ORDER BY c_custkey""",
-    "q07_semi_join" -> """
+      ORDER BY c_custkey"""),
+    Entry("q07_semi_join", q07SemiJoin _, """
       SELECT c_custkey, c_name, c_mktsegment
       FROM customer
       WHERE EXISTS (SELECT 1 FROM orders
                     WHERE o_custkey = c_custkey AND o_orderstatus = 'F')
-      ORDER BY c_custkey""",
-    "q08_anti_join" -> """
+      ORDER BY c_custkey"""),
+    Entry("q08_anti_join", q08AntiJoin _, """
       SELECT c_custkey, c_name, round(c_acctbal, 2) AS acctbal
       FROM customer
       WHERE NOT EXISTS (SELECT 1 FROM orders
                         WHERE o_custkey = c_custkey AND o_orderstatus = 'P')
-      ORDER BY c_custkey""",
-    "q09_full_outer_join" -> """
+      ORDER BY c_custkey"""),
+    Entry("q09_full_outer_join", q09FullOuterJoin _, """
       SELECT coalesce(c_custkey, o_custkey) AS custkey,
              coalesce(n_orders, 0) AS n_orders
       FROM customer
       FULL OUTER JOIN (SELECT o_custkey, count(*) AS n_orders
                        FROM orders GROUP BY o_custkey) agg
         ON c_custkey = o_custkey
-      ORDER BY custkey""",
-    "q10_range_join" -> """
+      ORDER BY custkey"""),
+    Entry("q10_range_join", q10RangeJoin _, """
       SELECT band, count(*) AS n_parts, round(avg(p_retailprice), 4) AS avg_price
       FROM part
       JOIN (VALUES ('small', 1, 15), ('medium', 16, 35), ('large', 36, 50))
            AS bands(band, lo, hi)
         ON p_size >= lo AND p_size <= hi
       GROUP BY band
-      ORDER BY band""",
-    "q11_asof_join" -> """
+      ORDER BY band"""),
+    Entry("q11_asof_join", q11AsOfJoin _, """
       SELECT event_id, user_id, prev_click_id
       FROM (SELECT event_id, user_id, event_type,
                    last_value(CASE WHEN event_type = 'click' THEN event_id END IGNORE NULLS)
@@ -551,94 +552,94 @@ object Relational {
                            ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS prev_click_id
             FROM events) sub
       WHERE event_type = 'purchase'
-      ORDER BY event_id""",
-    "q12_distinct_agg" -> """
+      ORDER BY event_id"""),
+    Entry("q12_distinct_agg", q12DistinctAgg _, """
       SELECT l_returnflag,
              count(DISTINCT l_partkey) AS n_parts,
              count(DISTINCT l_suppkey) AS n_supps,
              count(*) AS n_rows
       FROM lineitem
       GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-    "q13_rollup" -> """
+      ORDER BY l_returnflag"""),
+    Entry("q13_rollup", q13Rollup _, """
       SELECT coalesce(l_returnflag, 'ALL') AS returnflag,
              coalesce(l_linestatus, 'ALL') AS linestatus,
              round(sum(l_quantity), 2) AS sum_qty, count(*) AS n
       FROM lineitem
       GROUP BY ROLLUP (l_returnflag, l_linestatus)
-      ORDER BY returnflag, linestatus""",
-    "q14_cube" -> """
+      ORDER BY returnflag, linestatus"""),
+    Entry("q14_cube", q14Cube _, """
       SELECT coalesce(o_orderstatus, 'ALL') AS status,
              coalesce(o_orderpriority, 'ALL') AS priority,
              round(sum(o_totalprice), 2) AS total, count(*) AS n
       FROM orders
       GROUP BY CUBE (o_orderstatus, o_orderpriority)
-      ORDER BY status, priority""",
-    "q15_grouping_sets" -> """
+      ORDER BY status, priority"""),
+    Entry("q15_grouping_sets", q15GroupingSets _, """
       SELECT coalesce(o_orderstatus, 'ALL') AS status,
              coalesce(o_orderpriority, 'ALL') AS priority,
              count(*) AS n, round(sum(o_totalprice), 2) AS total
       FROM orders
       GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-      ORDER BY status, priority""",
-    "q16_window_rank" -> """
+      ORDER BY status, priority"""),
+    Entry("q16_window_rank", q16WindowRank _, """
       SELECT o_custkey, o_orderkey, round(o_totalprice, 2) AS totalprice, rk
       FROM (SELECT o_custkey, o_orderkey, o_totalprice,
                    row_number() OVER (PARTITION BY o_custkey
                                       ORDER BY o_totalprice DESC, o_orderkey) AS rk
             FROM orders) sub
       WHERE rk <= 3
-      ORDER BY o_custkey, rk""",
-    "q17_window_running" -> """
+      ORDER BY o_custkey, rk"""),
+    Entry("q17_window_running", q17WindowRunning _, """
       SELECT o_custkey, o_orderkey,
              round(sum(o_totalprice) OVER (PARTITION BY o_custkey
                                            ORDER BY o_orderdate, o_orderkey
                                            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
                AS running_spend
       FROM orders
-      ORDER BY o_custkey, o_orderkey""",
-    "q18_window_lag" -> """
+      ORDER BY o_custkey, o_orderkey"""),
+    Entry("q18_window_lag", q18WindowLag _, """
       SELECT user_id, event_id,
              epoch_us(ts) - epoch_us(lag(ts, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id))
                AS gap_us
       FROM events
-      ORDER BY user_id, event_id""",
-    "q19_window_moving_avg" -> """
+      ORDER BY user_id, event_id"""),
+    Entry("q19_window_moving_avg", q19WindowMovingAvg _, """
       SELECT user_id, event_id,
              round(avg(value) OVER (PARTITION BY user_id ORDER BY ts, event_id
                                     ROWS BETWEEN 2 PRECEDING AND CURRENT ROW), 4) AS mavg
       FROM events
-      ORDER BY user_id, event_id""",
-    "q20_ntile_dense_rank" -> """
+      ORDER BY user_id, event_id"""),
+    Entry("q20_ntile_dense_rank", q20NtileDenseRank _, """
       SELECT o_custkey, spend,
              ntile(4) OVER (ORDER BY spend DESC, o_custkey) AS quartile,
              dense_rank() OVER (ORDER BY spend DESC, o_custkey) AS drk
       FROM (SELECT o_custkey, round(sum(o_totalprice), 2) AS spend
             FROM orders GROUP BY o_custkey) sub
-      ORDER BY o_custkey""",
-    "q21_topk" -> """
+      ORDER BY o_custkey"""),
+    Entry("q21_topk", q21TopK _, """
       SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice
       FROM orders
       ORDER BY o_totalprice DESC, o_orderkey
-      LIMIT 20""",
-    "q22_union" -> """
+      LIMIT 20"""),
+    Entry("q22_union", q22Union _, """
       SELECT nationkey, side, count(*) AS n
       FROM (SELECT c_nationkey AS nationkey, 'customer' AS side FROM customer
             UNION ALL
             SELECT s_nationkey AS nationkey, 'supplier' AS side FROM supplier) u
       GROUP BY nationkey, side
-      ORDER BY nationkey, side""",
-    "q23_intersect" -> """
+      ORDER BY nationkey, side"""),
+    Entry("q23_intersect", q23Intersect _, """
       SELECT o_custkey FROM orders WHERE o_orderstatus = 'F'
       INTERSECT
       SELECT o_custkey FROM orders WHERE o_orderstatus = 'O'
-      ORDER BY o_custkey""",
-    "q24_except" -> """
+      ORDER BY o_custkey"""),
+    Entry("q24_except", q24Except _, """
       SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'F'
       EXCEPT
       SELECT o_custkey AS custkey FROM orders WHERE o_orderstatus = 'P'
-      ORDER BY custkey""",
-    "q25_string_funcs" -> """
+      ORDER BY custkey"""),
+    Entry("q25_string_funcs", q25StringFuncs _, """
       SELECT p_partkey,
              upper(p_name) AS uname,
              length(p_name) AS name_len,
@@ -648,8 +649,8 @@ object Relational {
              CASE WHEN p_name LIKE '%green%' THEN 1 ELSE 0 END AS has_green,
              len(string_split(p_name, ' ')) AS n_words
       FROM part
-      ORDER BY p_partkey""",
-    "q26_date_funcs" -> """
+      ORDER BY p_partkey"""),
+    Entry("q26_date_funcs", q26DateFuncs _, """
       SELECT o_orderkey,
              year(o_orderdate) AS yr,
              month(o_orderdate) AS mo,
@@ -659,8 +660,8 @@ object Relational {
              date_trunc('month', o_orderdate) AS month_start,
              date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days_since_epoch
       FROM orders
-      ORDER BY o_orderkey""",
-    "q27_math_funcs" -> """
+      ORDER BY o_orderkey"""),
+    Entry("q27_math_funcs", q27MathFuncs _, """
       SELECT l_orderkey, l_linenumber,
              round(abs(l_extendedprice - l_quantity * 100), 2) AS abs_diff,
              CAST(floor(l_extendedprice) AS BIGINT) AS floor_price,
@@ -671,8 +672,8 @@ object Relational {
              l_orderkey % 7 AS mod7
       FROM lineitem
       WHERE l_orderkey <= 1000
-      ORDER BY l_orderkey, l_linenumber""",
-    "q28_json_funcs" -> """
+      ORDER BY l_orderkey, l_linenumber"""),
+    Entry("q28_json_funcs", q28JsonFuncs _, """
       SELECT event_type,
              round(avg(k), 4) AS avg_k,
              max(k) AS max_k,
@@ -681,58 +682,24 @@ object Relational {
                    CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
             FROM events) sub
       GROUP BY event_type
-      ORDER BY event_type""",
-    "q29_case_agg" -> """
+      ORDER BY event_type"""),
+    Entry("q29_case_agg", q29CaseAgg _, """
       SELECT l_linestatus,
              round(sum(CASE WHEN l_returnflag = 'R' THEN l_extendedprice ELSE 0 END), 2) AS returned_value,
              round(sum(CASE WHEN l_returnflag <> 'R' THEN l_extendedprice ELSE 0 END), 2) AS kept_value,
              round(avg(CASE WHEN l_discount > 0.05 THEN l_discount END), 4) AS avg_big_disc
       FROM lineitem
       GROUP BY l_linestatus
-      ORDER BY l_linestatus""",
-    "q30_scalar_subquery" -> """
+      ORDER BY l_linestatus"""),
+    Entry("q30_scalar_subquery", q30ScalarSubquery _, """
       SELECT c_custkey, round(c_acctbal, 2) AS acctbal
       FROM customer
       WHERE c_acctbal > (SELECT avg(c_acctbal) FROM customer)
-      ORDER BY c_custkey""",
-    "q31_correlated_exists" -> """
+      ORDER BY c_custkey"""),
+    Entry("q31_correlated_exists", q31CorrelatedExists _, """
       SELECT o_orderkey, o_custkey, round(o_totalprice, 2) AS totalprice
       FROM orders
       WHERE EXISTS (SELECT 1 FROM lineitem
                     WHERE l_orderkey = o_orderkey AND l_quantity >= 49)
-      ORDER BY o_orderkey""")
-
-  /** Name → query registry (keys match [[oracles]]). */
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary" -> (q01PricingSummary _),
-    "q02_filter_project" -> (q02FilterProject _),
-    "q03_join_customer_orders" -> (q03JoinCustomerOrders _),
-    "q04_broadcast_join" -> (q04BroadcastJoin _),
-    "q05_revenue_by_nation" -> (q05RevenueByNation _),
-    "q06_left_join" -> (q06LeftJoin _),
-    "q07_semi_join" -> (q07SemiJoin _),
-    "q08_anti_join" -> (q08AntiJoin _),
-    "q09_full_outer_join" -> (q09FullOuterJoin _),
-    "q10_range_join" -> (q10RangeJoin _),
-    "q11_asof_join" -> (q11AsOfJoin _),
-    "q12_distinct_agg" -> (q12DistinctAgg _),
-    "q13_rollup" -> (q13Rollup _),
-    "q14_cube" -> (q14Cube _),
-    "q15_grouping_sets" -> (q15GroupingSets _),
-    "q16_window_rank" -> (q16WindowRank _),
-    "q17_window_running" -> (q17WindowRunning _),
-    "q18_window_lag" -> (q18WindowLag _),
-    "q19_window_moving_avg" -> (q19WindowMovingAvg _),
-    "q20_ntile_dense_rank" -> (q20NtileDenseRank _),
-    "q21_topk" -> (q21TopK _),
-    "q22_union" -> (q22Union _),
-    "q23_intersect" -> (q23Intersect _),
-    "q24_except" -> (q24Except _),
-    "q25_string_funcs" -> (q25StringFuncs _),
-    "q26_date_funcs" -> (q26DateFuncs _),
-    "q27_math_funcs" -> (q27MathFuncs _),
-    "q28_json_funcs" -> (q28JsonFuncs _),
-    "q29_case_agg" -> (q29CaseAgg _),
-    "q30_scalar_subquery" -> (q30ScalarSubquery _),
-    "q31_correlated_exists" -> (q31CorrelatedExists _))
+      ORDER BY o_orderkey"""))
 }

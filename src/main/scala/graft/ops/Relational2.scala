@@ -154,40 +154,40 @@ object Relational2 {
         isnull(nullif(col("o_orderstatus"), lit("P"))).as("was_pending"))
       .orderBy(col("o_orderkey"))
 
-  val oracles: Map[String, String] = Map(
-    "q51_sample" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("q51_sample", q51Sample _, """
       SELECT l_orderkey, l_linenumber, l_quantity
       FROM lineitem
       WHERE (l_orderkey * 31 + l_linenumber) % 97 < 5
-      ORDER BY l_orderkey, l_linenumber""",
-    "q52_null_handling" -> """
+      ORDER BY l_orderkey, l_linenumber"""),
+    Entry("q52_null_handling", q52NullHandling _, """
       SELECT o_orderkey,
              nullif(o_orderstatus, 'P') AS status_or_null,
              coalesce(nullif(o_orderstatus, 'P'), 'PENDING') AS status_filled,
              nullif(o_orderstatus, 'P') IS NOT DISTINCT FROM 'F' AS is_f_nullsafe,
              nullif(o_orderstatus, 'P') IS NULL AS was_pending
       FROM orders
-      ORDER BY o_orderkey""",
-    "q49_from_json" -> """
+      ORDER BY o_orderkey"""),
+    Entry("q49_from_json", q49FromJson _, """
       SELECT event_id, CAST(json_extract_string(props, '$.k') AS BIGINT) AS k
       FROM events
       WHERE CAST(json_extract_string(props, '$.k') AS BIGINT) > 50
-      ORDER BY event_id""",
-    "q39_pivot" -> """
+      ORDER BY event_id"""),
+    Entry("q39_pivot", q39Pivot _, """
       SELECT o_orderpriority,
              count(*) FILTER (WHERE o_orderstatus = 'F') AS "F",
              count(*) FILTER (WHERE o_orderstatus = 'O') AS "O",
              count(*) FILTER (WHERE o_orderstatus = 'P') AS "P"
       FROM orders
       GROUP BY o_orderpriority
-      ORDER BY o_orderpriority""",
-    "q40_having" -> """
+      ORDER BY o_orderpriority"""),
+    Entry("q40_having", q40Having _, """
       SELECT o_custkey, count(*) AS n_orders, round(sum(o_totalprice), 2) AS spend
       FROM orders
       GROUP BY o_custkey
       HAVING count(*) >= 14
-      ORDER BY o_custkey""",
-    "q41_stats_agg" -> """
+      ORDER BY o_custkey"""),
+    Entry("q41_stats_agg", q41StatsAgg _, """
       SELECT o_orderstatus,
              round(stddev_samp(o_totalprice), 4) AS sd,
              round(var_samp(o_totalprice), 4) AS variance,
@@ -196,57 +196,43 @@ object Relational2 {
              count(*) AS n
       FROM orders
       GROUP BY o_orderstatus
-      ORDER BY o_orderstatus""",
-    "q42_argminmax" -> """
+      ORDER BY o_orderstatus"""),
+    Entry("q42_argminmax", q42ArgMinMax _, """
       SELECT o_custkey,
              arg_max(o_orderkey, o_totalprice) AS priciest_order,
              arg_min(o_orderkey, o_totalprice) AS cheapest_order,
              round(max(o_totalprice), 2) AS max_price
       FROM orders
       GROUP BY o_custkey
-      ORDER BY o_custkey""",
-    "q43_collect_list" -> """
+      ORDER BY o_custkey"""),
+    Entry("q43_collect_list", q43CollectList _, """
       SELECT o_custkey, array_to_string(list_sort(array_agg(o_orderstatus)), ',') AS statuses,
              count(*) AS n
       FROM orders
       GROUP BY o_custkey
-      ORDER BY o_custkey""",
-    "q44_cross_join" -> """
+      ORDER BY o_custkey"""),
+    Entry("q44_cross_join", q44CrossJoin _, """
       SELECT n_nationkey, n_name, r_regionkey, r_name
       FROM nation CROSS JOIN region
-      ORDER BY n_nationkey, r_regionkey""",
-    "q45_regexp_extract" -> """
+      ORDER BY n_nationkey, r_regionkey"""),
+    Entry("q45_regexp_extract", q45RegexpExtract _, """
       SELECT p_partkey,
              regexp_extract(p_name, '^([a-z]+)', 1) AS first_word,
              regexp_extract(p_name, '([a-z]+)$', 1) AS last_word,
              regexp_extract(p_type, '([A-Z]+)', 1) AS type_head
       FROM part
-      ORDER BY p_partkey""",
-    "q46_json_roundtrip" -> """
+      ORDER BY p_partkey"""),
+    Entry("q46_json_roundtrip", q46JsonRoundtrip _, """
       SELECT event_id,
              to_json(struct_pack(
                k := CAST(json_extract_string(props, '$.k') AS BIGINT),
                t := event_type))::VARCHAR AS payload
       FROM events
-      ORDER BY event_id""",
-    "q47_latest_live_state" -> """
+      ORDER BY event_id"""),
+    Entry("q47_latest_live_state", q47LatestLiveState _, """
       SELECT user_id, event_id, event_type, value
       FROM (SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY event_id DESC) AS rn
             FROM events) sub
       WHERE rn = 1 AND event_type <> 'error'
-      ORDER BY user_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q51_sample" -> (q51Sample _),
-    "q52_null_handling" -> (q52NullHandling _),
-    "q49_from_json" -> (q49FromJson _),
-    "q39_pivot" -> (q39Pivot _),
-    "q40_having" -> (q40Having _),
-    "q41_stats_agg" -> (q41StatsAgg _),
-    "q42_argminmax" -> (q42ArgMinMax _),
-    "q43_collect_list" -> (q43CollectList _),
-    "q44_cross_join" -> (q44CrossJoin _),
-    "q45_regexp_extract" -> (q45RegexpExtract _),
-    "q46_json_roundtrip" -> (q46JsonRoundtrip _),
-    "q47_latest_live_state" -> (q47LatestLiveState _))
+      ORDER BY user_id"""))
 }

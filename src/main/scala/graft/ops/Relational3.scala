@@ -355,13 +355,13 @@ object Relational3 {
       ORDER BY c_custkey""")
   }
 
-  val oracles: Map[String, String] = Map(
-    "q73_null_aware_anti" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("q73_null_aware_anti", q73NullAwareAnti _, """
       SELECT c_custkey, c_name
       FROM customer
       WHERE c_custkey NOT IN (SELECT o_custkey FROM orders WHERE o_orderstatus = 'F')
-      ORDER BY c_custkey""",
-    "q72_filter_agg" -> """
+      ORDER BY c_custkey"""),
+    Entry("q72_filter_agg", q72FilterAgg _, """
       SELECT l_returnflag,
              count(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
              round(sum(l_extendedprice) FILTER (WHERE l_quantity >= 25), 2) AS bulk_value,
@@ -369,16 +369,16 @@ object Relational3 {
              count(*) AS n
       FROM lineitem
       GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-    "q71_recursive_cte" -> """
+      ORDER BY l_returnflag"""),
+    Entry("q71_recursive_cte", q71RecursiveCte _, """
       WITH RECURSIVE walk(k, node, steps) AS (
         SELECT o_orderkey, o_orderkey, 0 FROM orders WHERE o_orderkey <= 200
         UNION ALL
         SELECT k, node // 2, steps + 1 FROM walk WHERE node > 1
       )
       SELECT k AS o_orderkey, CAST(max(steps) AS BIGINT) AS depth
-      FROM walk GROUP BY k ORDER BY o_orderkey""",
-    "q67_interval_arith" -> """
+      FROM walk GROUP BY k ORDER BY o_orderkey"""),
+    Entry("q67_interval_arith", q67IntervalArith _, """
       SELECT o_orderkey,
              CAST(o_orderdate AS DATE) + 30 AS due_30d,
              CAST(o_orderdate + INTERVAL 2 MONTH AS DATE) AS plus_2mo,
@@ -387,16 +387,16 @@ object Relational3 {
                AS days_to_month_end
       FROM orders
       WHERE o_orderkey <= 1000
-      ORDER BY o_orderkey""",
-    "q68_least_greatest" -> """
+      ORDER BY o_orderkey"""),
+    Entry("q68_least_greatest", q68LeastGreatest _, """
       SELECT l_orderkey, l_linenumber,
              round(least(l_extendedprice, l_quantity * 1000), 2) AS lo,
              round(greatest(l_discount, l_tax), 2) AS hi_rate,
              round(least(nullif(l_discount, 0.0), l_tax), 2) AS lo_nonzero_disc
       FROM lineitem
       WHERE l_orderkey <= 500
-      ORDER BY l_orderkey, l_linenumber""",
-    "q69_string_pad" -> """
+      ORDER BY l_orderkey, l_linenumber"""),
+    Entry("q69_string_pad", q69StringPad _, """
       SELECT p_partkey,
              lpad(CAST(p_partkey AS VARCHAR), 10, '0') AS padded_key,
              rpad(p_brand, 12, '.') AS brand_cell,
@@ -404,16 +404,16 @@ object Relational3 {
              translate(p_type, 'AEIOU', 'aeiou') AS lowered_vowels,
              repeat('*', p_size % 5 + 1) AS stars
       FROM part
-      ORDER BY p_partkey""",
-    "q70_lateral_alias" -> """
+      ORDER BY p_partkey"""),
+    Entry("q70_lateral_alias", q70LateralAlias _, """
       SELECT o_orderkey,
              o_orderkey * 3 + o_custkey AS composite,
              composite * 2 AS doubled,
              doubled - o_orderkey AS derived
       FROM orders
       WHERE o_orderkey <= 2000
-      ORDER BY o_orderkey""",
-    "q66_gapfill" -> """
+      ORDER BY o_orderkey"""),
+    Entry("q66_gapfill", q66Gapfill _, """
       WITH cal AS (
         SELECT unnest(generate_series(
                  date_trunc('day', (SELECT min(ts) FROM events)),
@@ -425,8 +425,8 @@ object Relational3 {
       SELECT cal.day, types.event_type, CAST(coalesce(counts.n, 0) AS BIGINT) AS n
       FROM cal CROSS JOIN types
       LEFT JOIN counts ON counts.day = cal.day AND counts.event_type = types.event_type
-      ORDER BY cal.day, types.event_type""",
-    "q64_nth_value" -> """
+      ORDER BY cal.day, types.event_type"""),
+    Entry("q64_nth_value", q64NthValue _, """
       SELECT o_orderkey, o_custkey,
              round(nth_value(o_totalprice, 2) OVER (PARTITION BY o_custkey
                    ORDER BY o_totalprice, o_orderkey
@@ -436,8 +436,8 @@ object Relational3 {
                    ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 2) AS second_priciest
       FROM orders
       WHERE o_custkey <= 300
-      ORDER BY o_orderkey""",
-    "q65_grouping_id" -> """
+      ORDER BY o_orderkey"""),
+    Entry("q65_grouping_id", q65GroupingId _, """
       SELECT coalesce(o_orderstatus, 'ALL') AS status,
              coalesce(o_orderpriority, 'ALL') AS priority,
              CAST(GROUPING_ID(o_orderstatus, o_orderpriority) AS BIGINT) AS gid,
@@ -445,24 +445,24 @@ object Relational3 {
              round(sum(o_totalprice), 2) AS total
       FROM orders
       GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
-      ORDER BY gid, status, priority""",
-    "q63_try_funcs" -> """
+      ORDER BY gid, status, priority"""),
+    Entry("q63_try_funcs", q63TryFuncs _, """
       SELECT l_orderkey, l_linenumber,
              round(l_extendedprice / nullif(l_linenumber - 1, 0), 4) AS per_prior_line,
              TRY_CAST(l_returnflag AS INT) AS flag_as_int,
              TRY_CAST(concat('200', l_linenumber, '-01-01') AS DATE) AS synth_date
       FROM lineitem
       WHERE l_orderkey <= 500
-      ORDER BY l_orderkey, l_linenumber""",
-    "q59_map_funcs" -> """
+      ORDER BY l_orderkey, l_linenumber"""),
+    Entry("q59_map_funcs", q59MapFuncs _, """
       SELECT event_id,
              array_to_string(list_sort(json_keys(props)), ',') AS keys,
              CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val,
              CAST(len(json_keys(props)) AS BIGINT) AS n_keys,
              json_extract_string(props, '$.k') IS NOT NULL AS has_k
       FROM events
-      ORDER BY event_id""",
-    "q60_array_funcs" -> """
+      ORDER BY event_id"""),
+    Entry("q60_array_funcs", q60ArrayFuncs _, """
       SELECT doc_id,
              CAST(len(list_intersect(head5, tail5)) AS BIGINT) AS n_common,
              CAST(len(list_distinct(list_concat(head5, tail5))) AS BIGINT) AS n_union,
@@ -472,8 +472,8 @@ object Relational3 {
                    string_split(lower(text), ' ')[1:5] AS head5,
                    string_split(lower(text), ' ')[-5:] AS tail5
             FROM documents)
-      ORDER BY doc_id""",
-    "q61_bool_agg" -> """
+      ORDER BY doc_id"""),
+    Entry("q61_bool_agg", q61BoolAgg _, """
       SELECT o_orderpriority,
              bool_and(o_totalprice > 1000) AS all_gt_1k,
              bool_or(o_totalprice > 400000) AS any_gt_400k,
@@ -481,22 +481,22 @@ object Relational3 {
              count(*) AS n
       FROM orders
       GROUP BY o_orderpriority
-      ORDER BY o_orderpriority""",
-    "q62_listagg" -> """
+      ORDER BY o_orderpriority"""),
+    Entry("q62_listagg", q62Listagg _, """
       SELECT o_custkey,
              string_agg(o_orderstatus, ',' ORDER BY o_orderstatus, o_orderkey) AS statuses
       FROM orders
       WHERE o_custkey <= 100
       GROUP BY o_custkey
-      ORDER BY o_custkey""",
-    "q53_percent_rank" -> """
+      ORDER BY o_custkey"""),
+    Entry("q53_percent_rank", q53PercentRank _, """
       SELECT o_orderkey, o_orderpriority,
              round(percent_rank() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice), 6) AS pr,
              round(cume_dist() OVER (PARTITION BY o_orderpriority ORDER BY o_totalprice), 6) AS cd
       FROM orders
       WHERE o_orderkey <= 2000
-      ORDER BY o_orderkey""",
-    "q54_bitwise_agg" -> """
+      ORDER BY o_orderkey"""),
+    Entry("q54_bitwise_agg", q54BitwiseAgg _, """
       SELECT l_orderkey,
              CAST(bit_and(l_linenumber) AS BIGINT) AS band,
              CAST(bit_or(l_linenumber) AS BIGINT) AS bor,
@@ -504,8 +504,8 @@ object Relational3 {
              count(*) AS n
       FROM lineitem
       GROUP BY l_orderkey
-      ORDER BY l_orderkey""",
-    "q55_corr_stats" -> """
+      ORDER BY l_orderkey"""),
+    Entry("q55_corr_stats", q55CorrStats _, """
       SELECT l_returnflag,
              round(corr(l_quantity, l_extendedprice), 4) AS r,
              round(covar_pop(l_quantity, l_extendedprice), 2) AS cov_p,
@@ -513,15 +513,15 @@ object Relational3 {
              count(*) AS n
       FROM lineitem
       GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-    "q56_range_frame" -> """
+      ORDER BY l_returnflag"""),
+    Entry("q56_range_frame", q56RangeFrame _, """
       SELECT o_orderkey, o_custkey, days,
              round(sum(o_totalprice) OVER (PARTITION BY o_custkey ORDER BY days
                     RANGE BETWEEN 30 PRECEDING AND CURRENT ROW), 2) AS spend_30d
       FROM (SELECT *, date_diff('day', DATE '1995-01-01', CAST(o_orderdate AS DATE)) AS days
             FROM orders)
-      ORDER BY o_orderkey""",
-    "q57_unpivot" -> """
+      ORDER BY o_orderkey"""),
+    Entry("q57_unpivot", q57Unpivot _, """
       SELECT l_orderkey, l_linenumber, metric, value FROM (
         SELECT l_orderkey, l_linenumber, 'l_quantity' AS metric, l_quantity AS value FROM lineitem
         UNION ALL
@@ -531,8 +531,8 @@ object Relational3 {
         UNION ALL
         SELECT l_orderkey, l_linenumber, 'l_tax', l_tax FROM lineitem)
       WHERE l_orderkey <= 200
-      ORDER BY l_orderkey, l_linenumber, metric""",
-    "q58_first_last_ignore_nulls" -> """
+      ORDER BY l_orderkey, l_linenumber, metric"""),
+    Entry("q58_first_last_ignore_nulls", q58FirstLastIgnoreNulls _, """
       SELECT event_id, user_id,
              round(first_value(v IGNORE NULLS) OVER (PARTITION BY user_id ORDER BY ts, event_id
                     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 2) AS first_v,
@@ -540,28 +540,5 @@ object Relational3 {
                     ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING), 2) AS last_v
       FROM (SELECT *, CASE WHEN event_type = 'click' THEN NULL ELSE value END AS v
             FROM events)
-      ORDER BY event_id""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q63_try_funcs" -> (q63TryFuncs _),
-    "q64_nth_value" -> (q64NthValue _),
-    "q66_gapfill" -> (q66Gapfill _),
-    "q67_interval_arith" -> (q67IntervalArith _),
-    "q71_recursive_cte" -> (q71RecursiveCte _),
-    "q72_filter_agg" -> (q72FilterAgg _),
-    "q73_null_aware_anti" -> (q73NullAwareAnti _),
-    "q68_least_greatest" -> (q68LeastGreatest _),
-    "q69_string_pad" -> (q69StringPad _),
-    "q70_lateral_alias" -> (q70LateralAlias _),
-    "q65_grouping_id" -> (q65GroupingId _),
-    "q59_map_funcs" -> (q59MapFuncs _),
-    "q60_array_funcs" -> (q60ArrayFuncs _),
-    "q61_bool_agg" -> (q61BoolAgg _),
-    "q62_listagg" -> (q62Listagg _),
-    "q53_percent_rank" -> (q53PercentRank _),
-    "q54_bitwise_agg" -> (q54BitwiseAgg _),
-    "q55_corr_stats" -> (q55CorrStats _),
-    "q56_range_frame" -> (q56RangeFrame _),
-    "q57_unpivot" -> (q57Unpivot _),
-    "q58_first_last_ignore_nulls" -> (q58FirstLastIgnoreNulls _))
+      ORDER BY event_id"""))
 }

@@ -185,8 +185,8 @@ object Relational4 {
       .orderBy(col("event_id"))
   }
 
-  val oracles: Map[String, String] = Map(
-    "q81_asof_tolerance" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("q81_asof_tolerance", q81AsofTolerance _, """
       WITH purchases AS (
         SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
       clicks AS (
@@ -196,8 +196,8 @@ object Relational4 {
              CASE WHEN c.ts >= p.ts - INTERVAL 6 HOUR THEN c.click_id END AS click_id
       FROM purchases p ASOF LEFT JOIN clicks c
         ON p.user_id = c.user_id AND c.ts <= p.ts
-      ORDER BY p.event_id""",
-    "q80_asof_native" -> """
+      ORDER BY p.event_id"""),
+    Entry("q80_asof_native", q80AsofNative _, """
       WITH purchases AS (
         SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
       clicks AS (
@@ -206,8 +206,8 @@ object Relational4 {
       SELECT p.event_id, p.user_id, c.click_id
       FROM purchases p ASOF LEFT JOIN clicks c
         ON p.user_id = c.user_id AND c.ts <= p.ts
-      ORDER BY p.event_id""",
-    "q74_percentiles" -> """
+      ORDER BY p.event_id"""),
+    Entry("q74_percentiles", q74Percentiles _, """
       SELECT l_returnflag,
              percentile_cont(0.25) WITHIN GROUP (ORDER BY round(l_extendedprice)) AS p25,
              percentile_cont(0.5)  WITHIN GROUP (ORDER BY round(l_extendedprice)) AS median,
@@ -215,8 +215,8 @@ object Relational4 {
              round(percentile_disc(0.5) WITHIN GROUP (ORDER BY l_extendedprice), 2) AS median_disc
       FROM lineitem
       GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-    "q75_regr_agg" -> """
+      ORDER BY l_returnflag"""),
+    Entry("q75_regr_agg", q75RegrAgg _, """
       SELECT l_returnflag,
              round(regr_slope(l_extendedprice, l_quantity), 2) AS slope,
              round(regr_intercept(l_extendedprice, l_quantity), 2) AS intercept,
@@ -224,15 +224,15 @@ object Relational4 {
              regr_count(l_extendedprice, l_quantity) AS n
       FROM lineitem
       GROUP BY l_returnflag
-      ORDER BY l_returnflag""",
-    "q76_deterministic_mode" -> """
+      ORDER BY l_returnflag"""),
+    Entry("q76_deterministic_mode", q76DeterministicMode _, """
       SELECT user_id, event_type AS modal_type, count(*) AS n
       FROM events
       GROUP BY user_id, event_type
       QUALIFY row_number() OVER (PARTITION BY user_id
                                  ORDER BY count(*) DESC, event_type) = 1
-      ORDER BY user_id""",
-    "q77_islands" -> """
+      ORDER BY user_id"""),
+    Entry("q77_islands", q77Islands _, """
       WITH clicks AS (
         SELECT user_id, event_id,
                event_id - row_number() OVER (PARTITION BY user_id ORDER BY event_id) AS grp
@@ -241,16 +241,16 @@ object Relational4 {
              count(*) AS len
       FROM clicks
       GROUP BY user_id, grp
-      ORDER BY user_id, start_id""",
-    "q79_variant" -> """
+      ORDER BY user_id, start_id"""),
+    Entry("q79_variant", q79Variant _, """
       SELECT event_id,
              CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val,
              json_extract_string(props, '$.k') AS k_str,
              CAST(TRY_CAST(json_extract_string(props, '$.k') AS DATE) AS VARCHAR) AS k_as_date,
              json_extract_string(props, '$.missing') IS NULL AS missing_absent
       FROM events
-      ORDER BY event_id""",
-    "q78_lateral_topn" -> """
+      ORDER BY event_id"""),
+    Entry("q78_lateral_topn", q78LateralTopN _, """
       SELECT c.c_custkey, t.o_orderkey, round(t.o_totalprice, 2) AS price
       FROM customer c,
       LATERAL (
@@ -261,15 +261,5 @@ object Relational4 {
         LIMIT 2
       ) t
       WHERE c.c_acctbal > 9000
-      ORDER BY c.c_custkey, price DESC, t.o_orderkey""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q74_percentiles" -> (q74Percentiles _),
-    "q75_regr_agg" -> (q75RegrAgg _),
-    "q76_deterministic_mode" -> (q76DeterministicMode _),
-    "q77_islands" -> (q77Islands _),
-    "q78_lateral_topn" -> (q78LateralTopN _),
-    "q79_variant" -> (q79Variant _),
-    "q80_asof_native" -> (q80AsofNative _),
-    "q81_asof_tolerance" -> (q81AsofTolerance _))
+      ORDER BY c.c_custkey, price DESC, t.o_orderkey"""))
 }

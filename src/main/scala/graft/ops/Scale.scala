@@ -226,14 +226,11 @@ object Scale {
       .saveAsTable(table)
   }
 
-  val oracles: Map[String, String] = Map(
-    "q48_sort_merge_join" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("q48_sort_merge_join", q48SortMergeJoin _, """
       SELECT o_orderpriority, count(*) AS n_items,
              round(sum(l_extendedprice), 2) AS gross
       FROM lineitem JOIN orders ON l_orderkey = o_orderkey
       GROUP BY o_orderpriority
-      ORDER BY o_orderpriority""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q48_sort_merge_join" -> (q48SortMergeJoin _))
+      ORDER BY o_orderpriority"""))
 }

@@ -49,14 +49,14 @@ object TimeWindows {
         col("w.end").as("session_end"), col("n"), col("total_value"))
       .orderBy(col("user_id"), col("session_start"))
 
-  val oracles: Map[String, String] = Map(
-    "q36_tumbling_window" -> """
+  val entries: Seq[Entry] = Seq(
+    Entry("q36_tumbling_window", q36Tumbling _, """
       SELECT make_timestamp((epoch_us(ts) // 21600000000) * 21600000000) AS window_start,
              event_type, count(*) AS n, round(sum(value), 2) AS total_value
       FROM events
       GROUP BY 1, 2
-      ORDER BY window_start, event_type""",
-    "q37_sliding_window" -> """
+      ORDER BY window_start, event_type"""),
+    Entry("q37_sliding_window", q37Sliding _, """
       WITH exploded AS (
         SELECT make_timestamp(((epoch_us(ts) // 1800000000) - k) * 1800000000) AS window_start,
                value
@@ -64,8 +64,8 @@ object TimeWindows {
       SELECT window_start, count(*) AS n, round(sum(value), 2) AS total_value
       FROM exploded
       GROUP BY 1
-      ORDER BY window_start""",
-    "q38_session_window" -> """
+      ORDER BY window_start"""),
+    Entry("q38_session_window", q38SessionWindow _, """
       WITH g AS (
         SELECT user_id, ts, value,
                epoch_us(ts) - lag(epoch_us(ts), 1)
@@ -83,10 +83,5 @@ object TimeWindows {
              count(*) AS n, round(sum(value), 2) AS total_value
       FROM numbered
       GROUP BY user_id, sid
-      ORDER BY user_id, session_start""")
-
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q36_tumbling_window" -> (q36Tumbling _),
-    "q37_sliding_window" -> (q37Sliding _),
-    "q38_session_window" -> (q38SessionWindow _))
+      ORDER BY user_id, session_start"""))
 }

@@ -39,6 +39,11 @@ class BenchArtifactSpec extends AnyFunSuite {
       "the gate's threshold must be recorded next to its verdict")
   }
 
+  test("a filtered run never writes bench_full.json") {
+    assert(Bench.artifactPath(filtered = true) != "bench_full.json",
+      "a filtered run must never overwrite the full-suite artifact")
+  }
+
   test("iso children report per-query loadavg and the artifact gates on it (r13 verdict item 4)") {
     // the r13 watch item: x99's ISOLATED number moved 10.97 -> 14.39s
     // with zero commits because the iso children also ran under suite

@@ -33,6 +33,15 @@ class OperatorSpec extends SparkSpec {
     assert(dangling.isEmpty, s"oracles without queries: $dangling")
   }
 
+  test("the registry refuses a query name declared twice, and names it") {
+    val e = intercept[IllegalArgumentException] {
+      SparkEntry.index(Seq(
+        graft.ops.Entry("q_twice", (s, _) => s.emptyDataFrame, "SELECT 1"),
+        graft.ops.Entry("q_twice", (s, _) => s.emptyDataFrame, "SELECT 2")))
+    }
+    assert(e.getMessage.contains("q_twice"))
+  }
+
   test("COVERAGE.md names every declared query (the audit map can't drift)") {
     // The coverage map is the judge's audit entry point; round 5 shipped
     // three operators whose rows were forgotten. Parse the short codes
