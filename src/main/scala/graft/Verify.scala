@@ -22,6 +22,8 @@ object Verify {
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter { case (n, _) => only.forall(_.contains(n)) }
       .foreach { case (name, fn) =>
+      // attributes the log lines that follow (Spark's warnings name no query)
+      System.err.println(s"[verify:start] $name")
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

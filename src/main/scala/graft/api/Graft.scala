@@ -2407,8 +2407,9 @@ object Graft {
   def mannKendall(series: DataFrame, tCol: String, yCentsCol: String): DataFrame =
     Extensions118.mannKendall(series, tCol, yCentsCol)
 
-  /** Exactly-once append sink for `foreachBatch`: batch-id-keyed commit
-    * markers make redelivery a no-op and hide torn writes from readers
+  /** Exactly-once append sink for `foreachBatch`: each batch is one
+    * manifest commit carrying the applied-batch watermark, so redelivery
+    * is a no-op and torn writes stay invisible to readers
     * — `writeStream.foreachBatch(IdempotentSink.into(out))`, read back
     * with [[graft.stream.IdempotentSink.readCommitted]].
     */

@@ -82,14 +82,14 @@ object EventLog {
     * committed row and re-merging already-applied updates is a no-op.
     * Ties inside one batch pick either row, as the batch fold does.
     *
-    * Robustness contract: a missing snapshot path means "first merge"
-    * (checked explicitly via the filesystem); any OTHER read failure
-    * propagates — treating a transient/corrupt read as an empty snapshot
-    * would silently overwrite touched buckets with only the new batch.
-    * The bucket modulus is persisted in a `_graft_buckets` sidecar on
-    * first write and enforced on every subsequent merge: merging with a
-    * different modulus would leave stale rows in old-modulus directories,
-    * yielding duplicate ids on read.
+    * Robustness contract: a path with no committed version and no data
+    * means "first merge"; a directory holding data but no manifest is
+    * refused, naming the path, and any other read failure propagates —
+    * treating an unreadable snapshot as empty would silently overwrite
+    * touched buckets with only the new batch. The bucket modulus commits
+    * with every version (`#buckets=` meta) and is enforced on every
+    * merge: merging with a different modulus would leave stale rows in
+    * old-modulus directories, yielding duplicate ids on read.
     */
   def mergeSnapshotKeyed(
       updates: DataFrame,
@@ -167,8 +167,8 @@ object EventLog {
     * filter is `key = literal` or `key IN (literals)` scans only those
     * keys' bucket files, the partition-key read of the reference's
     * Cassandra table; any other predicate scans every pinned file.
-    * Legacy (pre-manifest) snapshots, and snapshots last merged before
-    * the key was recorded, are served unpruned, never adopted by a read.
+    * A snapshot last merged before the key was recorded is served
+    * unpruned until its next merge records it.
     */
   def readSnapshot(spark: SparkSession, snapshotPath: String): DataFrame =
     graft.ops.StoreManifest.readPinned(spark, snapshotPath)
@@ -193,47 +193,34 @@ object EventLog {
       aggs: Seq[(String, String, String)],
       batchId: Long,
       numBuckets: Int = 64): Option[Set[Int]] = {
-    val spark = newRows.sparkSession
-    val applied = graft.ops.StoreManifest.currentVersion(spark, snapshotPath)
-      .map(v => graft.ops.StoreManifest.metaAt(spark, snapshotPath, v))
-      .flatMap(_.get(LastBatchKey)).map(_.toLong)
-    if (applied.exists(_ >= batchId)) None
+    import graft.ops.StoreManifest.{meta, LastBatchKey}
+    if (meta(newRows.sparkSession, snapshotPath).get(LastBatchKey)
+        .exists(_.toLong >= batchId)) None
     else Some(mergeAggregate(newRows, snapshotPath, idCol, aggs, numBuckets,
       extraMeta = Map(LastBatchKey -> batchId.toString)))
   }
-
-  private val LastBatchKey = "last_batch"
 
   /** Marks the rows [[mergeBucketed]] hands to `mergeStates`: true for
     * a committed snapshot row, false for an incoming one.
     */
   private val CommittedCol = "_committed"
 
-  /** The shared bucketed-snapshot commit: modulus guards, the
-    * touched-bucket read, and a [[graft.ops.StoreManifest]] publish.
+  /** The shared bucketed-snapshot commit: the modulus guard, the
+    * touched-bucket read, and one [[graft.ops.StoreManifest.commit]].
     * `mergeStates` receives (touched snapshot rows ∪ the new state
     * rows), with [[CommittedCol]] telling them apart, and must return
     * one row per id in the schema of `updates`.
     *
-    * Commit protocol (the same discipline as the serving stores —
-    * round-9's one remaining torn-state seam closed): the merged
-    * touched buckets land in a FRESH batch directory, then ONE
+    * Commit protocol (the same discipline as the serving stores): the
+    * merged touched buckets land in a FRESH batch directory, then ONE
     * manifest rename publishes (untouched buckets' files) + (the new
     * batch). A reader concurrent with the merge sees the pre- or
-    * post-state, never a mix of pre/post buckets — which is exactly
-    * what the previous dynamic-partition overwrite could expose while
-    * rewriting touched bucket dirs in place. The modulus commits
+    * post-state, never a mix of pre/post buckets. The modulus commits
     * INSIDE the manifest (`#buckets=`), so data and guard can never
     * tear; crash windows reduce to "orphan batch dir no manifest
     * references" (invisible, reclaimed by vacuum). The key column
     * commits with it (`#bucket_key=`), which is what lets a pinned read
     * prune a key predicate to the key's bucket files.
-    *
-    * Legacy snapshots (bucket dirs at the root, `_graft_buckets`
-    * sidecar) are adopted on first merge: dirs move under the legacy
-    * batch dir (metadata renames) and the sidecar — or, absent that,
-    * the dir-name bound — still validates the modulus before the
-    * first manifest commit records it.
     */
   private def mergeBucketed(
       updates: DataFrame,
@@ -245,58 +232,14 @@ object EventLog {
     import org.apache.spark.sql.functions._
     import graft.ops.StoreManifest
     val spark = updates.sparkSession
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(snapshotPath).getFileSystem(hadoopConf)
-    val sidecar = new org.apache.hadoop.fs.Path(snapshotPath, "_graft_buckets")
-    // Pin the committed snapshot (adopting a pre-manifest layout).
-    // None = first merge: an empty dir, a bare sidecar with no data (a
-    // crashed first merge under the old protocol), or orphan batch dirs
-    // no manifest references all read as "no snapshot yet".
-    val pinnedOpt = StoreManifest.currentVersion(spark, snapshotPath)
-      .orElse(StoreManifest.adoptLegacy(spark, snapshotPath))
-      .map(StoreManifest.pinAt(spark, snapshotPath, _))
-    pinnedOpt.foreach { case (files, meta) =>
-      val dirNums = files.flatMap(StoreManifest.partValueOf(_, "bucket"))
-        .map(_.toInt)
-      // a negative bucket value is a legacy layout from a `%` (not pmod)
-      // bucket assignment over negative ids — this merge's touched set is
-      // pmod-based and would neither read nor replace those files,
-      // yielding duplicate/stale ids on read
-      require(dirNums.forall(_ >= 0),
-        s"snapshot at $snapshotPath has negative bucket dirs " +
-          s"(${dirNums.filter(_ < 0).distinct.sorted.mkString(", ")}) — a legacy " +
-          "%-based layout this merge cannot update safely; rewrite the " +
-          "snapshot (read all buckets, re-merge into a fresh path) first")
-      val persisted = meta.get(StoreManifest.BucketsKey).map(_.toInt).orElse {
-        // adopted legacy snapshot: the modulus lives in the old sidecar
-        if (!fs.exists(sidecar)) None
-        else {
-          val in = fs.open(sidecar)
-          val raw = try new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim
-          finally in.close()
-          Some(raw.toIntOption.getOrElse(throw new IllegalArgumentException(
-            s"snapshot at $snapshotPath has an unreadable _graft_buckets " +
-              s"sidecar (content: '${raw.take(32)}') — restore it to a single " +
-              "integer (the bucket modulus the snapshot was written with) or " +
-              "rewrite the snapshot into a fresh path")))
-        }
-      }
-      persisted match {
-        case Some(nb) =>
-          require(nb == numBuckets,
-            s"snapshot at $snapshotPath was written with numBuckets=$nb, " +
-              s"merge called with $numBuckets — refusing (stale-bucket corruption)")
-        case None =>
-          // legacy snapshot with no sidecar: the modulus cannot be proven,
-          // but the bucket values bound it — any value >= numBuckets proves
-          // a larger modulus and guarantees stale-bucket corruption
-          require(dirNums.forall(_ < numBuckets),
-            s"snapshot at $snapshotPath has no _graft_buckets sidecar and " +
-              s"bucket dirs up to ${dirNums.max} — incompatible with " +
-              s"numBuckets=$numBuckets (stale-bucket corruption); re-merge " +
-              "with the original modulus or rewrite the snapshot")
-      }
+    // (no files, no meta) = first merge: an absent or empty dir, or
+    // orphan batch dirs no manifest references
+    val (pinned, meta) = StoreManifest.pinOrEmpty(spark, snapshotPath)
+    if (pinned.nonEmpty || meta.nonEmpty) {
+      val nb = StoreManifest.metaValue(snapshotPath, meta, StoreManifest.BucketsKey).toInt
+      require(nb == numBuckets,
+        s"snapshot at $snapshotPath was written with numBuckets=$nb, " +
+          s"merge called with $numBuckets — refusing (stale-bucket corruption)")
     }
     Seq("bucket", "batch", CommittedCol).foreach { reserved =>
       require(!updates.columns.contains(reserved),
@@ -305,10 +248,7 @@ object EventLog {
     }
     val bucketed = updates.withColumn("bucket", pmod(col(idCol), lit(numBuckets)).cast("int"))
     // one action yields BOTH the touched-bucket set and the per-bucket min
-    // id — the id-sign guard costs no extra pass. Negative ids are refused:
-    // pmod folds them into positive buckets (fine going forward) but any
-    // pre-pmod snapshot reader/writer disagrees on their placement, so the
-    // contract is ids >= 0.
+    // id — the id-sign guard costs no extra pass. The contract is ids >= 0.
     val touchStats = bucketed.groupBy("bucket")
       .agg(min(col(idCol).cast("long")).as("min_id")).collect()
     touchStats.foreach { r =>
@@ -317,40 +257,31 @@ object EventLog {
           s"is pmod-based); batch contains id ${r.getLong(1)}")
     }
     val touched = touchStats.map(_.getInt(0)).toSet
+    def inTouched(f: String) =
+      StoreManifest.partValueOf(f, "bucket").exists(v => touched.contains(v.toInt))
     val incoming = bucketed.withColumn(CommittedCol, lit(false))
-    val combined = pinnedOpt match {
-      case None => incoming
-      case Some((files, _)) =>
-        // read ONLY the touched buckets' files — pruned at the file list,
-        // before the scan even plans
-        val touchedFiles = files.filter(f =>
-          StoreManifest.partValueOf(f, "bucket").exists(v => touched.contains(v.toInt)))
-        if (touchedFiles.isEmpty) incoming
-        else StoreManifest.readFiles(spark, snapshotPath, touchedFiles)
-          .select(bucketed.columns.map(col): _*)
-          .withColumn(CommittedCol, lit(true))
-          .unionByName(incoming)
-    }
+    // read ONLY the touched buckets' files — pruned at the file list,
+    // before the scan even plans
+    val touchedFiles = pinned.filter(inTouched)
+    val combined =
+      if (touchedFiles.isEmpty) incoming
+      else StoreManifest.readFiles(spark, snapshotPath, touchedFiles)
+        .select(bucketed.columns.map(col): _*)
+        .withColumn(CommittedCol, lit(true))
+        .unionByName(incoming)
     val merged = mergeStates(combined)
       .withColumn("bucket", pmod(col(idCol), lit(numBuckets)).cast("int"))
-    // fresh batch dir + write-last manifest rename: the commit point. One
-    // task per touched bucket (repartition) keeps the steady-state file
-    // count at one file per bucket per merge.
-    val batch = StoreManifest.newBatchDirName(spark, snapshotPath)
-    merged.repartition(col("bucket"))
-      .write.partitionBy("bucket").parquet(s"$snapshotPath/$batch")
-    val untouched = pinnedOpt.map(_._1.filterNot(f =>
-      StoreManifest.partValueOf(f, "bucket").exists(v => touched.contains(v.toInt))))
-      .getOrElse(Nil)
     // Carry the PINNED version's meta forward under the new keys: a plain
     // mergeAggregate interleaved between two mergeAggregateOnce calls must
     // not drop the `last_batch` watermark — losing it re-enables exactly
     // the redelivery double-fold mergeAggregateOnce exists to prevent.
-    val carried = pinnedOpt.map(_._2).getOrElse(Map.empty)
-    StoreManifest.publish(spark, snapshotPath,
-      untouched ++ StoreManifest.listBatchFiles(spark, snapshotPath, batch),
-      meta = carried ++ extraMeta + (StoreManifest.BucketsKey -> numBuckets.toString) +
-        (StoreManifest.BucketKeyKey -> idCol))
+    StoreManifest.commit(spark, snapshotPath, pinned.filterNot(inTouched),
+      meta ++ extraMeta + (StoreManifest.BucketsKey -> numBuckets.toString) +
+        (StoreManifest.BucketKeyKey -> idCol)) { dir =>
+      // one task per touched bucket keeps the steady-state file count at
+      // one file per bucket per merge
+      merged.repartition(col("bucket")).write.partitionBy("bucket").parquet(dir)
+    }
     touched
   }
 

@@ -108,34 +108,6 @@ object Extensions100 {
   def x228LshAudit(s: SparkSession, dir: String): DataFrame =
     lshGeometryAudit(Tables.load(s, dir, "documents"), "doc_id", "text")
 
-  /** Stage frames for the r15 ScratchTiming probe (measurement only —
-    * not a query path): the un-materialized pieces of the audit so the
-    * probe can time each leg in isolation.
-    */
-  private[graft] def x228StageFrames(
-      s: SparkSession, dir: String): Map[String, DataFrame] = {
-    val corpus = Tables.load(s, dir, "documents")
-    val idx = Extensions.shingleIndexKeyedOf(corpus, "doc_id", "text")
-    val truthFull = Extensions.exactJaccardFromIndex(idx, 0.3)
-    val truthPrefix = Extensions111.prefixFilterJaccardPairs(
-        corpus, "doc_id", "text", 29995L, 100000L, shingleSize = 5)
-      .select(col("doc_a"), col("doc_b"), col("jacc").as("jaccard"))
-    val sig = Extensions.minhashSignaturesFrom(idx)
-    val bandCols = (0 until Extensions.LshBands).map { bnd =>
-      struct(lit(bnd).as("band"),
-        concat_ws(":", (bnd * 4 until (bnd + 1) * 4).map(i => col(s"h$i")): _*).as("bh"))
-    }
-    val banded = sig.select(col("doc_id"), explode(array(bandCols: _*)).as("b"))
-      .select(col("doc_id"), col("b.band").as("band"), col("b.bh").as("bh"))
-    val cand = banded.as("x").join(banded.as("y"),
-        col("x.band") === col("y.band") && col("x.bh") === col("y.bh") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct()
-    Map("idx" -> idx, "truthFull" -> truthFull, "truthPrefix" -> truthPrefix,
-      "sig" -> sig, "cand" -> cand)
-  }
-
   private val x228OracleSql: String = {
     import Extensions.{MinhashPerms, permA, permB, LshP, ShingleP, LshBands}
     val mins = (0 until MinhashPerms)

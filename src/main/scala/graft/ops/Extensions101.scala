@@ -58,7 +58,7 @@ object Extensions101 {
     dropped.join(bytes, Seq("doc_id"))
       .groupBy(col("threshold"))
       .agg(count(lit(1)).as("n_dropped"), sum(col("bytes")).as("bytes_dropped"))
-      .join(broadcast(spine), Seq("threshold"), "right_outer")
+      .join(spine, Seq("threshold"), "right_outer")
       .na.fill(0L, Seq("n_dropped", "bytes_dropped"))
       .crossJoin(broadcast(tot))
       .select(col("threshold"), col("n_dropped"),

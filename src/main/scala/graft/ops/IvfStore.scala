@@ -9,9 +9,10 @@ import graft.functions.VectorFunctions.cosine_similarity
   * written `partitionBy(cell)` so a query batch reads ONLY its probed
   * cells from storage — at 100 TB the difference between scanning the
   * whole vector store per query batch and scanning `probes/k_cells` of
-  * it. Centroids ride along as a sidecar table under the same root
-  * (train once with [[Extensions3.trainCentroids]], write once, serve
-  * many query batches).
+  * it. Centroids ride along as a versioned table next to the index,
+  * named by the index manifest's meta (train once with
+  * [[Extensions3.trainCentroids]], write once, serve many query
+  * batches).
   *
   * Cell pruning is STATIC: the probed cell set (≤ queries × probes ids,
   * driver-side — the same bounded-collect shape as the event log's
@@ -36,15 +37,14 @@ object IvfStore {
     * `centroids-<rand>` dir and the index manifest commit names it —
     * so a reader pinning any index version reads the EXACT centroids
     * its cells were assigned under, never a mid-rewrite mix (the
-    * reader-vs-writer race a mutable `centroids` sidecar had: publish
+    * reader-vs-writer race a mutable centroid table has: publish
     * first and a concurrent search pins the new index over the old
-    * centroids; publish last and vice versa). Legacy stores (no meta)
-    * fall back to the classic mutable `centroids` path.
+    * centroids; publish last and vice versa). A version without the
+    * pointer is refused.
     */
   private def centroidsFor(
       spark: SparkSession, path: String, meta: Map[String, String]): DataFrame =
-    spark.read.parquet(meta.get(CentroidsKey)
-      .map(d => s"$path/$d").getOrElse(s"$path/centroids"))
+    spark.read.parquet(s"$path/${StoreManifest.metaValue(s"$path/index", meta, CentroidsKey)}")
 
   /** Assign every vector to its best centroid cell and write the index
     * partitioned by cell. The centroid table lands FIRST in a fresh
@@ -54,18 +54,14 @@ object IvfStore {
   def writeIndex(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, path: String): Unit = {
-    val spark = corpus.sparkSession
     val base = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    val root = s"$path/index"
     val centDir = s"centroids-${java.util.UUID.randomUUID.toString.take(8)}"
     centroids.select(col("cell"), col("cvec"))
       .write.parquet(s"$path/$centDir")
-    val batch = StoreManifest.newBatchDirName(spark, root)
-    Extensions2.assignCells(base, broadcast(centroids.select(col("cell"), col("cvec"))))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$root/$batch")
-    StoreManifest.publish(spark, root,
-      StoreManifest.listBatchFiles(spark, root, batch),
-      meta = Map(CentroidsKey -> centDir))
+    StoreManifest.commit(corpus.sparkSession, s"$path/index", Nil,
+        Map(CentroidsKey -> centDir))(
+      Extensions2.assignCells(base, broadcast(centroids.select(col("cell"), col("cvec"))))
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
   }
 
   /** Append new vectors to an existing index: assign against the STORED
@@ -82,11 +78,9 @@ object IvfStore {
     val (pinned, meta) = StoreManifest.pin(spark, root)
     val cents = broadcast(centroidsFor(spark, path, meta))
     val base = newVecs.select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-    val batch = StoreManifest.newBatchDirName(spark, root)
-    Extensions2.assignCells(base, cents)
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$root/$batch")
-    StoreManifest.publish(spark, root,
-      pinned ++ StoreManifest.listBatchFiles(spark, root, batch), meta = meta)
+    StoreManifest.commit(spark, root, pinned, meta)(
+      Extensions2.assignCells(base, cents)
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
   }
 
   /** Compact deleted vectors OUT of the index (the [[SignatureStore.compact]]
@@ -118,13 +112,11 @@ object IvfStore {
     val kept = StoreManifest.readFiles(spark, root, pinned)
       .filter(col("cell").isin(cells: _*))
       .join(removeIds, Seq("vec_id"), "left_anti")
-    val batch = StoreManifest.newBatchDirName(spark, root)
-    kept.repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$root/$batch")
     val untouched = pinned.filterNot(f =>
       StoreManifest.partValueOf(f, "cell").exists(cellSet.contains))
-    StoreManifest.publish(spark, root,
-      untouched ++ StoreManifest.listBatchFiles(spark, root, batch), meta = meta)
+    StoreManifest.commit(spark, root, untouched, meta)(
+      kept.repartition(col("cell"))
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
     cells.toSet
   }
 

@@ -27,9 +27,8 @@ import org.apache.spark.sql.functions._
   * rename, and it is enforced on append: appending under a different
   * modulus would scatter a token's postings across two bucket layouts
   * and silently lose matches (the
-  * [[graft.log.EventLog.mergeSnapshotKeyed]] discipline). Stores
-  * written when the modulus lived in a `path/meta` parquet sidecar
-  * fall back to reading it from there.
+  * [[graft.log.EventLog.mergeSnapshotKeyed]] discipline); a version
+  * committed without it is refused.
   */
 object PostingStore {
 
@@ -50,21 +49,13 @@ object PostingStore {
       buckets: Int = 64): Unit = {
     require(buckets > 0)
     val spark = corpus.sparkSession
-    val root = s"$path/postings"
-    val batch = StoreManifest.newBatchDirName(spark, root)
-    postings(corpus, idCol, textCol, buckets)
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$root/$batch")
-    StoreManifest.publish(spark, root,
-      StoreManifest.listBatchFiles(spark, root, batch),
-      meta = Map(BucketsKey -> buckets.toString))
+    StoreManifest.commit(spark, s"$path/postings", Nil, Map(BucketsKey -> buckets.toString))(
+      postings(corpus, idCol, textCol, buckets)
+        .write.partitionBy("bucket").mode("overwrite").parquet(_))
   }
 
-  private def bucketsFrom(
-      spark: SparkSession, path: String, meta: Map[String, String]): Int =
-    meta.get(BucketsKey).map(_.toInt).getOrElse(
-      // legacy sidecar fallback: stores written before the modulus
-      // moved into the manifest meta
-      spark.read.parquet(s"$path/meta").head().getInt(0))
+  private def bucketsFrom(path: String, meta: Map[String, String]): Int =
+    StoreManifest.metaValue(s"$path/postings", meta, BucketsKey).toInt
 
   /** Append new documents' postings under the STORED modulus — only
     * the touched bucket directories grow. One [[StoreManifest.pin]]
@@ -75,13 +66,9 @@ object PostingStore {
     val spark = newDocs.sparkSession
     val root = s"$path/postings"
     val (pinned, meta) = StoreManifest.pin(spark, root)
-    val buckets = bucketsFrom(spark, path, meta)
-    val batch = StoreManifest.newBatchDirName(spark, root)
-    postings(newDocs, idCol, textCol, buckets)
-      .write.partitionBy("bucket").mode("overwrite").parquet(s"$root/$batch")
-    StoreManifest.publish(spark, root,
-      pinned ++ StoreManifest.listBatchFiles(spark, root, batch),
-      meta = Map(BucketsKey -> buckets.toString))
+    StoreManifest.commit(spark, root, pinned, meta)(
+      postings(newDocs, idCol, textCol, bucketsFrom(path, meta))
+        .write.partitionBy("bucket").mode("overwrite").parquet(_))
   }
 
   /** Exact-phrase search served from the written index, reading only
@@ -96,7 +83,7 @@ object PostingStore {
       "phrase must contain at least one non-empty token")
     // ONE pin supplies modulus and files from the same version
     val (pinned, meta) = StoreManifest.pin(spark, s"$path/postings")
-    val buckets = bucketsFrom(spark, path, meta)
+    val buckets = bucketsFrom(path, meta)
     val q = qToks.zipWithIndex.toDF("tok", "qpos")
       .withColumn("bucket", pmod(xxhash64(col("tok")), lit(buckets.toLong)).cast("int"))
     // bounded driver-side bucket list (≤ m values) -> literal isin ->

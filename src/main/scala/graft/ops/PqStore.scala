@@ -68,14 +68,11 @@ object PqStore {
     ModelStore.writePqCodebook(spark, s"$path/$bookDir", codebook)
     val cl = Extensions31.centsLit(cents)
     val assigned = qv.select(col("vec_id"), Extensions31.cellExpr(cl, nCells).as("cell"))
-    val codesRoot = s"$path/codes"
-    val batch = StoreManifest.newBatchDirName(spark, codesRoot)
-    Extensions27.pqEncode(vectors, idCol, vecCol, codebook)
-      .join(assigned, Seq("vec_id"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$codesRoot/$batch")
-    StoreManifest.publish(spark, codesRoot,
-      StoreManifest.listBatchFiles(spark, codesRoot, batch),
-      meta = Map(CentroidsKey -> centDir, CodebookKey -> bookDir))
+    StoreManifest.commit(spark, s"$path/codes", Nil,
+        Map(CentroidsKey -> centDir, CodebookKey -> bookDir))(
+      Extensions27.pqEncode(vectors, idCol, vecCol, codebook)
+        .join(assigned, Seq("vec_id"))
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
   }
 
   /** Store-level vacuum: superseded codes batches AND the versioned
@@ -94,22 +91,23 @@ object PqStore {
     (files, sidecars)
   }
 
+  /** The quantizer dir `key` names in the pinned version's meta. */
+  private def quantizerDir(path: String, meta: Map[String, String], key: String): String =
+    s"$path/${StoreManifest.metaValue(s"$path/codes", meta, key)}"
+
   /** The pinned version's coarse centroids, cell-ordered (bounded:
-    * nCells rows). Legacy stores (no meta) fall back to the classic
-    * mutable `centroids` sidecar path.
+    * nCells rows).
     */
   private def centsFrom(
       spark: SparkSession, path: String, meta: Map[String, String]): Seq[Seq[Long]] =
-    spark.read.parquet(meta.get(CentroidsKey)
-        .map(d => s"$path/$d").getOrElse(s"$path/centroids"))
+    spark.read.parquet(quantizerDir(path, meta, CentroidsKey))
       .orderBy(col("cell"))
       .collect().map(_.getSeq[Long](1)).toSeq
 
   private def codebookFrom(
       spark: SparkSession, path: String,
       meta: Map[String, String]): Array[Array[Array[Long]]] =
-    ModelStore.loadPqCodebook(spark, meta.get(CodebookKey)
-      .map(d => s"$path/$d").getOrElse(s"$path/codebook"))
+    ModelStore.loadPqCodebook(spark, quantizerDir(path, meta, CodebookKey))
 
   /** Append new vectors: encode against the STORED codebook and assign
     * against the STORED centroids (old and new rows must agree on the
@@ -128,12 +126,10 @@ object PqStore {
     val qv = Extensions27.quantized(newVecs, idCol, vecCol)
     val assigned = qv.select(col("vec_id"),
       Extensions31.cellExpr(cl, cents.length).as("cell"))
-    val batch = StoreManifest.newBatchDirName(spark, codesRoot)
-    Extensions27.pqEncode(newVecs, idCol, vecCol, codebook)
-      .join(assigned, Seq("vec_id"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$codesRoot/$batch")
-    StoreManifest.publish(spark, codesRoot,
-      pinned ++ StoreManifest.listBatchFiles(spark, codesRoot, batch), meta = meta)
+    StoreManifest.commit(spark, codesRoot, pinned, meta)(
+      Extensions27.pqEncode(newVecs, idCol, vecCol, codebook)
+        .join(assigned, Seq("vec_id"))
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
   }
 
   /** Compact removed vectors OUT of the index (the [[IvfStore.compactIndex]]
@@ -164,14 +160,11 @@ object PqStore {
     val kept = StoreManifest.readFiles(spark, codesRoot, pinned)
       .filter(col("cell").isin(cells: _*))
       .join(removeIds, Seq("vec_id"), "left_anti")
-    val batch = StoreManifest.newBatchDirName(spark, codesRoot)
-    kept.repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$codesRoot/$batch")
     val untouched = pinned.filterNot(f =>
       StoreManifest.partValueOf(f, "cell").exists(cellSet.contains))
-    StoreManifest.publish(spark, codesRoot,
-      untouched ++ StoreManifest.listBatchFiles(spark, codesRoot, batch),
-      meta = meta)
+    StoreManifest.commit(spark, codesRoot, untouched, meta)(
+      kept.repartition(col("cell"))
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
     cells.toSet
   }
 

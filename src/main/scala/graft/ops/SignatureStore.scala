@@ -58,30 +58,15 @@ object SignatureStore {
   /** The manifest meta key carrying the band geometry. */
   private val BandsKey = "bands"
 
-  /** The band count a store was built with — committed INSIDE the
-    * manifest version at write time (the PostingStore modulus
+  /** The band count a pinned version was built with — committed INSIDE
+    * the manifest version at write time (the PostingStore modulus
     * discipline: probing or appending under a different geometry would
     * scatter band keys across two layouts and silently lose matches).
     * Geometry and file list commit in ONE rename, so no failure window
-    * can publish one without the other. Legacy fallbacks, in order: a
-    * `_geometry` sidecar (stores written when geometry lived there),
-    * then the classic 8 (pre-geometry stores).
+    * can publish one without the other; a version without it is refused.
     */
-  private[ops] def storedBands(spark: SparkSession, path: String): Int =
-    bandsFrom(spark, path, StoreManifest.meta(spark, path))
-
-  private def bandsFrom(
-      spark: SparkSession, path: String, meta: Map[String, String]): Int =
-    meta.get(BandsKey).map(_.toInt).getOrElse {
-      val p = new org.apache.hadoop.fs.Path(path, "_geometry")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) Extensions.LshBands
-      else {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-        finally in.close()
-      }
-    }
+  private def bandsFrom(path: String, meta: Map[String, String]): Int =
+    StoreManifest.metaValue(path, meta, BandsKey).toInt
 
   /** Write (or overwrite) the store from a signature table. The
     * repartition on cell keeps each cell's rows in one task — without it
@@ -100,13 +85,9 @@ object SignatureStore {
     */
   def write(sigs: DataFrame, path: String,
       bands: Int = Extensions.LshBands): Unit = {
-    val spark = sigs.sparkSession
-    val batch = StoreManifest.newBatchDirName(spark, path)
-    postings(sigs, bands).repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/$batch")
-    StoreManifest.publish(spark, path,
-      StoreManifest.listBatchFiles(spark, path, batch),
-      meta = Map(BandsKey -> bands.toString))
+    StoreManifest.commit(sigs.sparkSession, path, Nil, Map(BandsKey -> bands.toString))(
+      postings(sigs, bands).repartition(col("cell"))
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
   }
 
   /** Append a new batch's signatures (after its dedup verdict kept them)
@@ -119,13 +100,9 @@ object SignatureStore {
   def append(sigs: DataFrame, path: String): Unit = {
     val spark = sigs.sparkSession
     val (pinned, meta) = StoreManifest.pin(spark, path)
-    val bands = bandsFrom(spark, path, meta)
-    val batch = StoreManifest.newBatchDirName(spark, path)
-    postings(sigs, bands).repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/$batch")
-    StoreManifest.publish(spark, path,
-      pinned ++ StoreManifest.listBatchFiles(spark, path, batch),
-      meta = Map(BandsKey -> bands.toString))
+    StoreManifest.commit(spark, path, pinned, meta)(
+      postings(sigs, bandsFrom(path, meta)).repartition(col("cell"))
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
   }
 
   /** Compact deleted documents OUT of the store — the missing half of
@@ -149,7 +126,7 @@ object SignatureStore {
   def compact(spark: SparkSession, path: String, removeSigs: DataFrame): Set[Int] = {
     val (pinned, meta) = StoreManifest.pin(spark, path)
     val posts = Extensions.materialized(
-      postings(removeSigs, bandsFrom(spark, path, meta)))
+      postings(removeSigs, bandsFrom(path, meta)))
     val cells = posts.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     if (cells.isEmpty) return Set.empty
@@ -158,14 +135,11 @@ object SignatureStore {
     val kept = StoreManifest.readFiles(spark, path, pinned)
       .filter(col("cell").isin(cells: _*))
       .join(removeIds, Seq("doc_id"), "left_anti")
-    val batch = StoreManifest.newBatchDirName(spark, path)
-    kept.repartition(col("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(s"$path/$batch")
     val untouched = pinned.filterNot(f =>
       StoreManifest.partValueOf(f, "cell").exists(cellSet.contains))
-    StoreManifest.publish(spark, path,
-      untouched ++ StoreManifest.listBatchFiles(spark, path, batch),
-      meta = Map(BandsKey -> bandsFrom(spark, path, meta).toString))
+    StoreManifest.commit(spark, path, untouched, meta)(
+      kept.repartition(col("cell"))
+        .write.partitionBy("cell").mode("overwrite").parquet(_))
     cells.toSet
   }
 
@@ -185,7 +159,7 @@ object SignatureStore {
     // otherwise hand this query new-geometry band keys over old files
     val (pinned, meta) = StoreManifest.pin(spark, path)
     val batchPosts = Extensions.materialized(
-      postings(batchSigs, bandsFrom(spark, path, meta)))
+      postings(batchSigs, bandsFrom(path, meta)))
     val cells = batchPosts.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val store = StoreManifest.readFiles(spark, path, pinned)

@@ -33,24 +33,21 @@ object SketchStore {
     batch.groupBy(col(groupCol).as("g"))
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))
 
-  /** Append a batch's per-group sketches to the store — committed
-    * through [[StoreManifest]] (fresh batch dir + write-last manifest
+  /** Append a batch's per-group sketches to the store — one
+    * [[StoreManifest.commit]] (fresh batch dir + write-last manifest
     * rename), so a concurrent [[estimate]] unions the sketches of a
     * committed prefix of batches, never a half-written one (a raw
     * parquet append could expose a partially-visible batch whose
-    * missing groups read as silently-lower estimates). Legacy stores
-    * (raw appended files) are adopted on first access.
+    * missing groups read as silently-lower estimates). The first append
+    * creates the store.
     */
   def append(
       store: String, batch: DataFrame, groupCol: String, valueCol: String,
       lgK: Int = 12): Unit = {
     val spark = batch.sparkSession
     val (pinned, _) = StoreManifest.pinOrEmpty(spark, store)
-    val batchDir = StoreManifest.newBatchDirName(spark, store)
-    sketchBatch(batch, groupCol, valueCol, lgK)
-      .write.parquet(s"$store/$batchDir")
-    StoreManifest.publish(spark, store,
-      pinned ++ StoreManifest.listBatchFiles(spark, store, batchDir))
+    StoreManifest.commit(spark, store, pinned)(
+      sketchBatch(batch, groupCol, valueCol, lgK).write.parquet(_))
   }
 
   /** Serve distinct-count estimates from the store: union the stored

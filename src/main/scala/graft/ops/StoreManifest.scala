@@ -13,8 +13,10 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 
-/** Atomic snapshot commits for the persisted stores ([[PqStore]],
-  * [[SignatureStore]], [[PostingStore]]) — the manifest discipline of
+/** Atomic snapshot commits for the persisted stores — the one store
+  * format of [[graft.log.EventLog]]'s snapshot, [[PqStore]], [[IvfStore]],
+  * [[SignatureStore]], [[PostingStore]], [[SketchStore]], [[TrainStore]]
+  * and [[graft.stream.IdempotentSink]], and the manifest discipline of
   * every production table format (Delta/Iceberg's core idea, reduced to
   * the minimum these stores need):
   *
@@ -31,6 +33,12 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
   *   #buckets=64
   *   batch=000007-1f2e3d4c/bucket=5/part-....parquet
   * }}}
+  *
+  * Every store write is one [[commit]]: a fresh batch dir, the write
+  * into it, then one [[publish]] of (the kept files) + (the batch's
+  * files) with the store's meta. A directory holding data but no
+  * `_manifest` is not a store: [[pin]] and [[pinOrEmpty]] refuse it,
+  * naming the root (rewrite such data through its store's `write`).
   *
   * Invariants:
   *  - Data files are IMMUTABLE once written: every write (initial build,
@@ -85,11 +93,10 @@ object StoreManifest {
   private[graft] val BucketsKey = "buckets"
   private[graft] val BucketKeyKey = "bucket_key"
 
-  /** The batch directory a pre-manifest store's files migrate into when
-    * [[adoptLegacy]] promotes it — DETERMINISTIC (no random suffix) so a
-    * crashed adoption retries into the same directory and converges.
+  /** The applied-batch watermark of an exactly-once store: the last
+    * streaming batch id whose data this version holds.
     */
-  val LegacyBatchDir = "batch=000000-legacy"
+  private[graft] val LastBatchKey = "last_batch"
 
   /** Files younger than this are exempt from [[vacuum]] by default —
     * Delta's `deletedFileRetentionDuration` discipline (7 days): a
@@ -169,39 +176,11 @@ object StoreManifest {
     }.toMap)
   }
 
-  /** Non-mutating legacy listing: the data files a pre-manifest store
-    * holds, served IN PLACE. Read paths fall back to this instead of
-    * adopting (renaming) — a pure read must never mutate the store, or
-    * two concurrent readers race each other's renames ('legacy adoption
-    * failed' crashes, widened on object stores where rename is not
-    * atomic). Orphan `batch=` dirs (a crashed writer's uncommitted
-    * output) stay invisible — except [[LegacyBatchDir]], which a crashed
-    * explicit adoption may have half-filled and whose contents are real.
-    */
-  private[graft] def legacyFiles(spark: SparkSession, root: String): Seq[String] = {
-    val (fs, rootP) = fsOf(spark, root)
-    if (!fs.exists(rootP)) return Nil
-    fs.listStatus(rootP).toSeq.filter { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".") &&
-        (!n.startsWith("batch=") || n == LegacyBatchDir)
-    }.flatMap { e =>
-      if (e.isFile) Seq(e.getPath.getName)
-      else listBatchFiles(spark, root, e.getPath.getName)
-    }
-  }
-
-  /** Current version's file list — one metadata read; the atomic pin.
-    * A pre-manifest store (data written before the manifest layer, or
-    * by a plain parquet writer) is served via a NON-MUTATING in-place
-    * listing; the first [[publish]] (a write path, covered by the
-    * single-writer contract) adopts it into [[LegacyBatchDir]].
-    */
+  /** Current version's file list — one metadata read; the atomic pin. */
   def files(spark: SparkSession, root: String): Seq[String] = pin(spark, root)._1
 
-  /** Current version's committed metadata (empty for legacy stores —
-    * their geometry sidecars remain the fallback, read by the store
-    * that owns them).
+  /** Current version's committed metadata (empty when nothing is
+    * committed).
     */
   def meta(spark: SparkSession, root: String): Map[String, String] =
     currentVersion(spark, root)
@@ -214,72 +193,37 @@ object StoreManifest {
   def pin(spark: SparkSession, root: String): (Seq[String], Map[String, String]) =
     currentVersion(spark, root) match {
       case Some(v) => pinAt(spark, root, v)
-      case None =>
-        val legacy = legacyFiles(spark, root)
-        if (legacy.nonEmpty) (legacy, Map.empty)
-        else throw new IllegalStateException(
-          s"StoreManifest: no committed version under $root/$ManifestDir")
+      case None => throw noCommittedVersion(root)
     }
 
   /** [[pin]] for append-creates-the-store call sites: an absent or empty
     * store pins as (no files, no meta) instead of failing — the first
-    * append's publish then commits version 1.
+    * [[commit]] then publishes version 1. Orphan `batch=` dirs (a crashed
+    * first commit) and `_`/`.` entries do not count as data; any other
+    * entry is data no manifest covers, and is refused like [[pin]].
     */
   def pinOrEmpty(spark: SparkSession, root: String): (Seq[String], Map[String, String]) =
     currentVersion(spark, root) match {
       case Some(v) => pinAt(spark, root, v)
-      case None => (legacyFiles(spark, root), Map.empty)
-    }
-
-  /** Promote a pre-manifest store: move every top-level data entry
-    * (anything not starting with `_`/`.`) under [[LegacyBatchDir]] and
-    * publish the result as version 1. Renames are per-entry metadata
-    * ops — O(top-level entries), no data copied — and the target dir is
-    * deterministic, so a crash mid-adoption retries into the same
-    * layout and the final publish is still one atomic rename. Run under
-    * the store's single-writer discipline (a reader racing the
-    * adoption itself is the one window the manifest cannot cover —
-    * after adoption, never again). Returns the published version, or
-    * None when the directory holds no data to adopt.
-    */
-  def adoptLegacy(spark: SparkSession, root: String): Option[Long] = {
-    val (fs, rootP) = fsOf(spark, root)
-    if (!fs.exists(rootP)) return None
-    currentVersion(spark, root) match {
-      case Some(v) => return Some(v) // already manifest-backed
       case None =>
+        val (fs, rootP) = fsOf(spark, root)
+        if (fs.exists(rootP) && fs.listStatus(rootP).exists { s =>
+            val n = s.getPath.getName
+            !n.startsWith("_") && !n.startsWith(".") && !n.startsWith("batch=")
+          }) throw noCommittedVersion(root)
+        (Nil, Map.empty)
     }
-    moveLegacyEntries(fs, rootP)
-    if (!fs.exists(new Path(rootP, LegacyBatchDir))) None
-    else {
-      val adopted = listBatchFiles(spark, root, LegacyBatchDir)
-      if (adopted.isEmpty) None
-      else Some(publish(spark, root, adopted))
-    }
-  }
 
-  /** Rename every top-level legacy entry (anything not `_`/`.`-prefixed
-    * and not a `batch=` dir — orphan uncommitted batches stay where they
-    * are, invisible) under [[LegacyBatchDir]]. Returns the moved entry
-    * names. Per-entry metadata renames, no data copied; the target dir
-    * is deterministic so a crashed adoption retries into the same
-    * layout. WRITE paths only ([[publish]] / [[adoptLegacy]]) — the
-    * single-writer contract serializes it; read paths use the
-    * non-mutating [[legacyFiles]] instead.
+  private def noCommittedVersion(root: String) = new IllegalStateException(
+    s"StoreManifest: no committed version under $root/$ManifestDir")
+
+  /** `key`'s value in a pinned version's `meta`; a store committed
+    * without it is refused, naming `root`.
     */
-  private def moveLegacyEntries(fs: FileSystem, rootP: Path): Set[String] = {
-    val legacy = new Path(rootP, LegacyBatchDir)
-    val entries = fs.listStatus(rootP).filter { s =>
-      val n = s.getPath.getName
-      !n.startsWith("_") && !n.startsWith(".") && !n.startsWith("batch=")
-    }
-    if (entries.isEmpty) return Set.empty
-    fs.mkdirs(legacy)
-    entries.foreach { e =>
-      require(fs.rename(e.getPath, new Path(legacy, e.getPath.getName)),
-        s"StoreManifest: legacy adoption failed moving ${e.getPath} under $legacy")
-    }
-    entries.map(_.getPath.getName).toSet
+  private[graft] def metaValue(root: String, meta: Map[String, String], key: String): String = {
+    require(meta.contains(key),
+      s"StoreManifest: the committed version under $root has no #$key= meta")
+    meta(key)
   }
 
   /** A fresh, unique batch directory name for the NEXT commit. Unique by
@@ -336,33 +280,31 @@ object StoreManifest {
     val (fs, rootP) = fsOf(spark, root)
     val mdir = new Path(rootP, ManifestDir)
     fs.mkdirs(mdir)
-    // First commit over a pre-manifest store: ADOPT here, on the write
-    // path (single-writer contract), never on reads. Legacy entries move
-    // under LegacyBatchDir and any incoming in-place legacy paths (from a
-    // pinOrEmpty fallback) are remapped to their adopted location, so the
-    // committed list and the moved files agree.
-    val current = currentVersion(spark, root)
-    val committed =
-      if (current.isDefined) files
-      else {
-        val moved = moveLegacyEntries(fs, rootP)
-        if (moved.isEmpty) files
-        else files.map { f =>
-          if (moved.contains(f.split('/').head)) s"$LegacyBatchDir/$f" else f
-        }
-      }
-    var v = current.getOrElse(0L) + 1L
+    var v = currentVersion(spark, root).getOrElse(0L) + 1L
     while (fs.exists(new Path(mdir, f"v-$v%012d.list"))) v += 1L
     val tmp = new Path(mdir,
       s".tmp-$v-${java.util.UUID.randomUUID.toString.take(8)}")
     val out = fs.create(tmp, true)
     val metaLines = meta.toSeq.sortBy(_._1).map { case (k, x) => s"$MetaPrefix$k=$x" }
-    try out.write(((metaLines ++ committed).mkString("\n") + "\n").getBytes("UTF-8"))
+    try out.write(((metaLines ++ files).mkString("\n") + "\n").getBytes("UTF-8"))
     finally out.close()
     val dest = new Path(mdir, f"v-$v%012d.list")
     require(commitPut(fs, tmp, dest),
       s"StoreManifest: commit put failed for $dest (concurrent writer?)")
     v
+  }
+
+  /** The one write path of every store: write a fresh batch dir with
+    * `write` (given the dir's full path), then [[publish]] `keep` ++ the
+    * batch's files with `meta` as the next version, which is returned.
+    * A write or publish that fails leaves the batch an orphan dir no
+    * manifest references — invisible, reclaimed by [[vacuum]].
+    */
+  def commit(spark: SparkSession, root: String, keep: Seq[String],
+      meta: Map[String, String] = Map.empty)(write: String => Unit): Long = {
+    val batch = newBatchDirName(spark, root)
+    write(s"$root/$batch")
+    publish(spark, root, keep ++ listBatchFiles(spark, root, batch), meta)
   }
 
   /** Read an explicit pinned file list. The pin IS the file index: the
@@ -554,9 +496,7 @@ object StoreManifest {
     * the newest `keepVersions` manifests' meta values stay referenced,
     * and dirs younger than `retentionMs` are never deleted (a reader
     * pinned to a just-superseded version keeps its quantizers until the
-    * clock passes). The legacy un-versioned dirs (bare `centroids`,
-    * `codebook` — no `-<rand>` suffix) never match a prefix and are
-    * never touched. Returns the deleted directory names.
+    * clock passes). Returns the deleted directory names.
     */
   def vacuumSidecars(spark: SparkSession, storePath: String,
       manifestRoot: String, metaKeys: Seq[String], keepVersions: Int = 1,
@@ -603,7 +543,8 @@ object StoreManifest {
     * the next batch dir — one task per partition via
     * `repartition(partCol)`, so each healed partition lands as a single
     * file — and ONE manifest rename publishes (untouched files) +
-    * (rewritten partitions). Query answers are identical by
+    * (rewritten partitions) with the pinned version's meta (geometry,
+    * moduli, quantizer pointers, watermark). Query answers are identical by
     * construction (same rows, new layout; StoreManifestSpec asserts
     * it); readers pinned mid-heal keep their snapshot.
     *
@@ -618,7 +559,7 @@ object StoreManifest {
       spark: SparkSession, root: String, partCol: String,
       smallBytes: Long = 8L << 20): Set[String] = {
     val (fs, rootP) = fsOf(spark, root)
-    val pinned = files(spark, root)
+    val (pinned, meta) = pin(spark, root)
     val sized = pinned.map { f =>
       (f, partValueOf(f, partCol),
         fs.getFileStatus(new Path(rootP, f)).getLen)
@@ -629,13 +570,12 @@ object StoreManifest {
     }.toSet
     if (flagged.isEmpty) return Set.empty
     val moving = sized.collect { case (f, Some(p), _) if flagged.contains(p) => f }
-    val batch = newBatchDirName(spark, root)
     import org.apache.spark.sql.functions.col
-    readFiles(spark, root, moving)
-      .repartition(col(partCol))
-      .write.partitionBy(partCol).mode("overwrite").parquet(s"$root/$batch")
-    val untouched = pinned.filterNot(moving.toSet)
-    publish(spark, root, untouched ++ listBatchFiles(spark, root, batch))
+    commit(spark, root, pinned.filterNot(moving.toSet), meta) { dir =>
+      readFiles(spark, root, moving)
+        .repartition(col(partCol))
+        .write.partitionBy(partCol).mode("overwrite").parquet(dir)
+    }
     flagged
   }
 

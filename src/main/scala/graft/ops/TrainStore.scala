@@ -36,13 +36,11 @@ object TrainStore {
     // fresh batch dir + manifest rename: a trainer mid-epoch on the old
     // corpus keeps its pinned files; the rewrite REPLACES the manifest
     // list (a full materialization, not an append)
-    val batch = StoreManifest.newBatchDirName(spark, path)
-    ordered
-      .repartition(nShards, col("shard"))
-      .sortWithinPartitions(col("shard"), col("ord"))
-      .write.partitionBy("shard").parquet(s"$path/$batch")
-    StoreManifest.publish(spark, path,
-      StoreManifest.listBatchFiles(spark, path, batch))
+    StoreManifest.commit(spark, path, Nil)(
+      ordered
+        .repartition(nShards, col("shard"))
+        .sortWithinPartitions(col("shard"), col("ord"))
+        .write.partitionBy("shard").parquet(_))
   }
 
   /** Materialize PACKED shard directories from written shards: each
@@ -86,20 +84,18 @@ object TrainStore {
           (least((col("chunk_ord") + 1L) * ctxLen - col("start"), col("len")) -
             greatest(col("chunk_ord") * ctxLen - col("start"), lit(0L))).cast("int"))
           .as("piece"))
-    val batch = StoreManifest.newBatchDirName(spark, outPath)
-    pieces
-      .groupBy(col("shard"), col("chunk_ord"))
-      .agg(
-        array_join(flatten(transform(
-          array_sort(collect_list(struct(col("ord"), col("piece")))),
-          s => s.getField("piece"))), " ").as("chunk_text"),
-        sum(size(col("piece"))).cast("long").as("n_tokens"),
-        count(lit(1)).as("n_docs"))
-      .repartition(col("shard"))
-      .sortWithinPartitions(col("shard"), col("chunk_ord"))
-      .write.partitionBy("shard").parquet(s"$outPath/$batch")
-    StoreManifest.publish(spark, outPath,
-      StoreManifest.listBatchFiles(spark, outPath, batch))
+    StoreManifest.commit(spark, outPath, Nil)(
+      pieces
+        .groupBy(col("shard"), col("chunk_ord"))
+        .agg(
+          array_join(flatten(transform(
+            array_sort(collect_list(struct(col("ord"), col("piece")))),
+            s => s.getField("piece"))), " ").as("chunk_text"),
+          sum(size(col("piece"))).cast("long").as("n_tokens"),
+          count(lit(1)).as("n_docs"))
+        .repartition(col("shard"))
+        .sortWithinPartitions(col("shard"), col("chunk_ord"))
+        .write.partitionBy("shard").parquet(_))
   }
 
   /** Read one packed shard's batches in training order, resuming after

@@ -1,7 +1,7 @@
 package graft.stream
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.ops.StoreManifest
 
 /** Exactly-once APPEND sink for `foreachBatch` — the protection
   * [[Materializer.startSnapshot]]'s keyed merge gives keyed state, for
@@ -10,56 +10,47 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * crash between the write and the checkpoint advance REDELIVERS the
   * same (batchId, data) — an unguarded append duplicates it.
   *
-  * Protocol (the [[graft.ops.StoreManifest]] commit idea, specialized to
-  * monotone batch ids): data lands under `batch=<id>/`, then the commit
-  * marker `_commits/<id>` is created LAST (atomic create-if-absent).
-  * Redelivery finds the marker and skips; readers list the markers and
-  * read ONLY committed batch dirs, so a torn write (dir without marker,
-  * from a crash mid-batch) is invisible until its redelivery overwrites
-  * and commits it. Writer idempotence + reader pinning = exactly-once
-  * end to end, spec-asserted by replaying every batch twice.
+  * Protocol: the sink is a [[graft.ops.StoreManifest]] store, and each
+  * batch is one [[graft.ops.StoreManifest.commit]] whose meta carries
+  * the applied-batch watermark (`last_batch`, the rule of
+  * [[graft.log.EventLog.mergeAggregateOnce]]) — data and watermark
+  * publish in ONE rename. Redelivery of a batch at or below the
+  * watermark is skipped; readers pin the manifest, so a torn write (a
+  * batch dir from a crash mid-batch) is an orphan no version references
+  * and stays invisible, while its redelivery commits a fresh dir.
+  * Requires monotone batch ids (Structured Streaming's contract per
+  * checkpoint). Writer idempotence + reader pinning = exactly-once end
+  * to end, spec-asserted by replaying every batch twice.
   *
-  * Scale: one marker file per micro-batch (metadata-sized); the read
-  * path lists one directory and prunes uncommitted dirs before any
-  * Spark job runs.
+  * Scale: one manifest version per micro-batch (metadata-sized); the
+  * read path is one manifest read and starts no Spark job until the
+  * query does.
   */
 object IdempotentSink {
 
-  private def fs(spark: SparkSession, root: String) = {
-    val p = new Path(root)
-    (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
-  }
-
   /** Write `df` as batch `batchId` exactly once: returns true when this
     * call committed, false when the batch was already committed (the
-    * redelivery no-op). A torn dir from a crashed attempt is simply
-    * overwritten — it was never visible.
+    * redelivery no-op).
     */
   def writeBatch(out: String, batchId: Long, df: DataFrame): Boolean = {
     val spark = df.sparkSession
-    val (f, root) = fs(spark, out)
-    val marker = new Path(root, f"_commits/$batchId%012d")
-    if (f.exists(marker)) return false
-    df.write.mode("overwrite").parquet(new Path(root, s"batch=$batchId").toString)
-    f.mkdirs(marker.getParent)
-    // createNewFile semantics: false if a concurrent attempt won the race
-    try { f.create(marker, false).close(); true }
-    catch { case _: java.io.IOException => false }
+    val (files, meta) = StoreManifest.pinOrEmpty(spark, out)
+    if (meta.get(StoreManifest.LastBatchKey).exists(_.toLong >= batchId)) false
+    else {
+      StoreManifest.commit(spark, out, files,
+        Map(StoreManifest.LastBatchKey -> batchId.toString))(df.write.parquet(_))
+      true
+    }
   }
 
   /** foreachBatch adapter: `.foreachBatch(IdempotentSink.into(out))`. */
   def into(out: String): (DataFrame, Long) => Unit =
     (df, batchId) => { writeBatch(out, batchId, df); () }
 
-  /** Read the committed prefix: only batch dirs with a commit marker. */
+  /** Read the committed batches (empty when nothing is committed). */
   def readCommitted(spark: SparkSession, out: String): DataFrame = {
-    val (f, root) = fs(spark, out)
-    val cdir = new Path(root, "_commits")
-    val ids =
-      if (!f.exists(cdir)) Seq.empty[Long]
-      else f.listStatus(cdir).toSeq.map(_.getPath.getName.toLong).sorted
-    if (ids.isEmpty) spark.emptyDataFrame
-    else spark.read.parquet(
-      ids.map(id => new Path(root, s"batch=$id").toString): _*)
+    val (files, _) = StoreManifest.pinOrEmpty(spark, out)
+    if (files.isEmpty) spark.emptyDataFrame
+    else StoreManifest.readFiles(spark, out, files)
   }
 }

@@ -212,21 +212,7 @@ class MaterializeSpec extends SparkSpec {
 
   test("mergeSnapshot crash/legacy windows: every torn state re-opens loudly or correctly") {
     import spark.implicits._
-    import graft.ops.StoreManifest
     def ev(id: Long, v: Long) = Event(id, "PlayerCreated", v, ts(id), payload(s"F$id", s"L$id"))
-    // a LEGACY snapshot as the pre-manifest writer laid it down:
-    // bucket dirs at the root, modulus (maybe) in the _graft_buckets sidecar
-    def legacySnapshot(dir: String, events: Seq[Event], nb: Int,
-        sidecar: Option[String]): Unit = {
-      events.toDF()
-        .withColumn("bucket",
-          org.apache.spark.sql.functions.pmod($"id",
-            org.apache.spark.sql.functions.lit(nb)).cast("int"))
-        .write.partitionBy("bucket").mode("overwrite").parquet(dir)
-      sidecar.foreach(s =>
-        java.nio.file.Files.writeString(java.nio.file.Paths.get(dir, "_graft_buckets"), s))
-    }
-
     // (a) old-protocol crash artifact: a sidecar with NO data. The retry
     // must see a first merge, not a corrupt snapshot.
     val a = tmpDir("crash_sidecar_only")
@@ -235,34 +221,6 @@ class MaterializeSpec extends SparkSpec {
     EventLog.mergeSnapshot(Seq(ev(1, 0), ev(2, 0)).toDF(), a, numBuckets = 8)
     assert(EventLog.readSnapshot(spark, a).select("id")
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L))
-
-    // (b) legacy snapshot whose sidecar was lost: the bucket dirs bound the
-    // modulus — same modulus adopts and merges; a smaller modulus against a
-    // dir that proves a larger one refuses loudly. Never silent corruption.
-    val b = tmpDir("crash_legacy_nosidecar")
-    legacySnapshot(b, Seq(ev(1, 0), ev(7, 0)), nb = 8, sidecar = None)
-    EventLog.mergeSnapshot(Seq(ev(7, 1)).toDF(), b, numBuckets = 8)
-    val got = EventLog.readSnapshot(spark, b).groupBy("id")
-      .agg(org.apache.spark.sql.functions.max("version").as("v"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == Map(1L -> 0L, 7L -> 1L))
-    // the recovering merge committed the modulus into the manifest meta
-    assert(StoreManifest.meta(spark, b).get("buckets").contains("8"))
-    val b2 = tmpDir("crash_legacy_nosidecar_refuse")
-    legacySnapshot(b2, Seq(ev(7, 0)), nb = 8, sidecar = None)
-    val eb = intercept[IllegalArgumentException] {
-      EventLog.mergeSnapshot(Seq(ev(2, 0)).toDF(), b2, numBuckets = 4)
-    }
-    assert(eb.getMessage.contains("no _graft_buckets sidecar"))
-
-    // (c) legacy snapshot with a torn sidecar (pre-atomic writer): loud,
-    // actionable error — not a bare NumberFormatException
-    val c = tmpDir("crash_torn_sidecar")
-    legacySnapshot(c, Seq(ev(1, 0)), nb = 8, sidecar = Some(""))
-    val ec = intercept[IllegalArgumentException] {
-      EventLog.mergeSnapshot(Seq(ev(2, 0)).toDF(), c, numBuckets = 8)
-    }
-    assert(ec.getMessage.contains("unreadable _graft_buckets"))
 
     // (d) the manifest protocol's ONLY crash window: a batch dir written
     // but never published (crash before the manifest rename). It must be

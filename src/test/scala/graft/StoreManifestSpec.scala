@@ -88,17 +88,6 @@ class StoreManifestSpec extends SparkSpec {
     SignatureStore.write(sigs(col("doc_id") < 200), cells)
     assertPinnedReadMatchesParquet(cells, StoreManifest.files(spark, cells),
       StoreManifest.readPinned(spark, cells))
-    // a legacy store, read in place and then adopted
-    val legacy = tmpDir("manifest_parity_legacy")
-    Tables.load(spark, sf0001, "documents").filter(col("doc_id") < 50)
-      .select(col("doc_id"), col("text"), (col("doc_id") % 4).cast("int").as("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(legacy)
-    assertPinnedReadMatchesParquet(legacy, StoreManifest.files(spark, legacy),
-      StoreManifest.readPinned(spark, legacy))
-    assert(StoreManifest.adoptLegacy(spark, legacy).contains(1L))
-    val adopted = StoreManifest.files(spark, legacy)
-    assert(adopted.forall(_.startsWith(StoreManifest.LegacyBatchDir)))
-    assertPinnedReadMatchesParquet(legacy, adopted, StoreManifest.readPinned(spark, legacy))
   }
 
   /** Files the scans of `df` select, from the planned file listing. */
@@ -269,6 +258,42 @@ class StoreManifestSpec extends SparkSpec {
     assert(StoreManifest.compactSmallPartitions(spark, root, "cell").isEmpty)
   }
 
+  test("compactSmallPartitions commits the pinned meta: geometry survives a compaction") {
+    val root = tmpDir("manifest_heal_meta")
+    SignatureStore.write(sigs(col("doc_id") < 100), root, bands = 16)
+    (0 until 3).foreach { i =>
+      SignatureStore.append(
+        sigs(col("doc_id") >= 100 + i * 100 && col("doc_id") < 200 + i * 100), root)
+    }
+    val batch = sigs(col("doc_id") >= 480)
+    val metaBefore = StoreManifest.meta(spark, root)
+    assert(metaBefore.get("bands").contains("16"))
+    val before = verdictSet(root, batch)
+    assert(StoreManifest.compactSmallPartitions(spark, root, "cell").nonEmpty,
+      "the appends must leave micro-file cells to heal")
+    assert(StoreManifest.meta(spark, root) == metaBefore,
+      "a compaction must commit the meta of the version it rewrites")
+    assert(verdictSet(root, batch) == before,
+      "a probe after the compaction must answer as before it")
+  }
+
+  test("a parquet directory without a manifest is refused by every read and merge, naming its root") {
+    val root = tmpDir("manifest_none")
+    spark.range(0, 8).select(col("id"), lit(1L).as("version"))
+      .write.mode("overwrite").parquet(root)
+    def refused(body: => Any): Unit = {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains(root), s"the error must name $root: ${e.getMessage}")
+    }
+    refused(StoreManifest.pin(spark, root))
+    refused(StoreManifest.readPinned(spark, root))
+    refused(EventLog.mergeSnapshot(
+      spark.range(0, 2).select(col("id"), lit(2L).as("version")), root, 8))
+    assert(!StoreManifest.hasManifest(spark, root), "a refused merge must publish nothing")
+    // an absent store is empty, not refused: its first commit creates it
+    assert(StoreManifest.pinOrEmpty(spark, s"$root-absent") == ((Nil, Map.empty)))
+  }
+
   test("a failed commit put never becomes current (S3-semantics injection)") {
     val root = tmpDir("manifest_failput")
     SignatureStore.write(sigs(col("doc_id") < 300), root)
@@ -319,68 +344,6 @@ class StoreManifestSpec extends SparkSpec {
     // appends key under the pinned version's geometry and carry it forward
     SignatureStore.append(sigs(col("doc_id") >= 200 && col("doc_id") < 250), root)
     assert(StoreManifest.meta(spark, root)("bands") == "16")
-  }
-
-  test("a pre-manifest store reads non-mutating; the first WRITE adopts it") {
-    val root = tmpDir("manifest_legacy")
-    // simulate a legacy store: cell-partitioned parquet directly under
-    // root (no _manifest)
-    Tables.load(spark, sf0001, "documents").filter(col("doc_id") < 50)
-      .select(col("doc_id"), col("text"), (col("doc_id") % 4).cast("int").as("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(root)
-    assert(!StoreManifest.hasManifest(spark, root))
-    // read paths are PURE: the in-place files serve, nothing moves, no
-    // manifest publishes — a reader must never mutate the store it reads
-    // (two concurrent readers would race each other's renames otherwise)
-    val inPlace = StoreManifest.files(spark, root)
-    assert(inPlace.nonEmpty && inPlace.forall(!_.startsWith("batch=")),
-      s"legacy reads must serve files in place: $inPlace")
-    assert(!StoreManifest.hasManifest(spark, root),
-      "a pure read must not adopt (publish a manifest)")
-    val rows = StoreManifest.readPinned(spark, root)
-    assert(rows.count() == 50, "every legacy row is readable in place")
-    assert(rows.columns.contains("cell"),
-      "partition columns survive the in-place legacy read")
-    assert(StoreManifest.pin(spark, root)._2.isEmpty, "legacy pins carry no meta")
-    // the first WRITE (publish — single-writer contract) adopts: legacy
-    // entries move under the legacy batch dir and the incoming in-place
-    // paths are remapped, so the committed list and the files agree
-    val batch2 = "batch=000002-test"
-    Tables.load(spark, sf0001, "documents")
-      .filter(col("doc_id") >= 50 && col("doc_id") < 60)
-      .select(col("doc_id"), col("text"), (col("doc_id") % 4).cast("int").as("cell"))
-      .write.partitionBy("cell").parquet(s"$root/$batch2")
-    StoreManifest.publish(spark, root,
-      inPlace ++ StoreManifest.listBatchFiles(spark, root, batch2))
-    assert(StoreManifest.currentVersion(spark, root).contains(1L))
-    val committed = StoreManifest.files(spark, root)
-    assert(committed.count(_.startsWith(StoreManifest.LegacyBatchDir)) == inPlace.size,
-      s"adoption must remap every in-place path under the legacy batch dir: $committed")
-    assert(StoreManifest.readPinned(spark, root).count() == 60)
-    // explicit adoption on an already-manifest store is a no-op returning
-    // the current version
-    assert(StoreManifest.adoptLegacy(spark, root).contains(1L))
-  }
-
-  test("concurrent readers of a legacy store never mutate it or crash each other") {
-    val root = tmpDir("manifest_legacy_readers")
-    Tables.load(spark, sf0001, "documents").filter(col("doc_id") < 40)
-      .select(col("doc_id"), col("text"), (col("doc_id") % 4).cast("int").as("cell"))
-      .write.partitionBy("cell").mode("overwrite").parquet(root)
-    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
-    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
-    val readers = (1 to 4).map(_ => new Thread(() => {
-      try (1 to 5).foreach { _ =>
-        counts.add(StoreManifest.readPinned(spark, root).count())
-      } catch { case t: Throwable => failures.add(t) }
-    }))
-    readers.foreach(_.start()); readers.foreach(_.join(120000))
-    assert(failures.isEmpty,
-      s"legacy readers must never race an implicit adoption: ${failures.peek()}")
-    import scala.jdk.CollectionConverters._
-    assert(counts.asScala.forall(_ == 40L))
-    assert(!StoreManifest.hasManifest(spark, root),
-      "20 reads must leave the legacy store physically untouched")
   }
 
   test("two racing publishers: exactly one wins, the loser fails loudly, a retry lands, readers never tear") {
