@@ -45,6 +45,10 @@ object ScaleUp {
 
   private val TokenPrefixCols = Set("text", "p_name", "c_name", "s_name")
 
+  /** Deterministic shard-replication scale-up of the test tables
+    * (disjoint keyspaces, per-replica token prefixes) — the synthesis
+    * behind the sf1 scaling audit.
+    */
   def synthesize(spark: SparkSession, baseDir: String, outDir: String,
       factor: Int = 10): Unit = {
     require(factor >= 1 && factor <= 26, "factor must fit one prefix letter")

@@ -421,17 +421,6 @@ object Extensions {
 
   // ---- X4: SimHash near-dup -----------------------------------------------
 
-  /** Full 64-bit SimHash per document, carried as TWO 32-bit halves (hi =
-    * md5 hex chars 1-8, lo = chars 9-16). Keeping the halves in separate
-    * BIGINT columns sidesteps signed-shift hazards in every engine — all
-    * values stay in [0, 2^32). Per-bit majority vote of the token hash;
-    * near-dup pairs via the pigeonhole band join (4 × 16-bit chunks:
-    * hamming <= 3 ⇒ at least one chunk equal), then filtered on true
-    * hamming = popcount(hi⊕hi') + popcount(lo⊕lo'). Pure integer
-    * arithmetic on md5 bits ⇒ fully oracle-replayable.
-    *
-    * Output: (doc_a, doc_b, hamming), doc_a < doc_b, hamming <= maxHamming.
-    */
   /** The 64-bit two-half SimHash signature (doc_id, sh_lo, sh_hi) —
     * shared by [[simhashPairs]] (pigeonhole pair join) and the radius
     * planner ([[Extensions96.simhashRadiusCurve]]), one body so the two
@@ -457,6 +446,17 @@ object Extensions {
         packed(32 until 64).as("sh_hi"))
   }
 
+  /** Full 64-bit SimHash per document, carried as TWO 32-bit halves (hi =
+    * md5 hex chars 1-8, lo = chars 9-16). Keeping the halves in separate
+    * BIGINT columns sidesteps signed-shift hazards in every engine — all
+    * values stay in [0, 2^32). Per-bit majority vote of the token hash;
+    * near-dup pairs via the pigeonhole band join (4 × 16-bit chunks:
+    * hamming <= 3 ⇒ at least one chunk equal), then filtered on true
+    * hamming = popcount(hi⊕hi') + popcount(lo⊕lo'). Pure integer
+    * arithmetic on md5 bits ⇒ fully oracle-replayable.
+    *
+    * Output: (doc_a, doc_b, hamming), doc_a < doc_b, hamming <= maxHamming.
+    */
   def simhashPairs(
       corpus: DataFrame, idCol: String, textCol: String,
       maxHamming: Int = 3): DataFrame = {
@@ -579,12 +579,6 @@ object Extensions {
     math.min(30, math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(cells - 1)))
   }
 
-  /** Sign-bucket ANN over any (id, vector) corpus with a parameterized
-    * quantizer width — the library form behind the fixture-pinned x06.
-    * Each query meets only its own cell's candidates (equi-join on the
-    * bucket, query side broadcast); sims round before ranking. Output
-    * (q_id, c_id, sim, rk), rk <= k.
-    */
   /** The sign quantizer every bucketed ANN path shares (x06/x13/x15 and
     * the parameterized forms): bit d is set iff coordinate d+1 is
     * positive. One definition — the oracles replay this exact arithmetic,
@@ -595,6 +589,14 @@ object Extensions {
     (0 until signBits).map(d => when(element_at(v, d + 1) > 0f, lit(1 << d)).otherwise(lit(0)))
       .reduce(_ + _)
 
+  /** Sign-bucket ANN over any (id, vector) corpus with a parameterized
+    * quantizer width (2^signBits cells) — the library form behind the
+    * fixture-pinned x06. Each query meets only its own cell's candidates
+    * (equi-join on the bucket, query side broadcast); sims round before
+    * ranking. Output (q_id, c_id, sim, rk), rk <= k. Size `signBits` with
+    * [[signBitsFor]] so cells stay executor-sized as the corpus grows — a
+    * fixed width turns every cell into a skew hotspot at scale.
+    */
   def signBucketTopK(
       corpus: DataFrame, queries: DataFrame,
       idCol: String, vecCol: String, k: Int, signBits: Int): DataFrame = {

@@ -86,34 +86,6 @@ object Extensions102 {
       .select(col("doc_id"), col("n_sh"), xxhash64(col("sh")).as("shk"))
   }
 
-  /** Exact codepoint-n-gram Jaccard pairs at `threshold` — the x02
-    * contract for scripts the word chain cannot see. Output:
-    * (doc_a, doc_b, jaccard), doc_a < doc_b. `gramSampleMod` > 1
-    * switches to the winnowed estimate (see [[charGramIndexOf]]) — the
-    * production dial for corpora where ~1 gram/codepoint is real money.
-    *
-    * Re-plan (sf1 scaling audit: exponent 1.82 through the full-index
-    * bucket self-join): codepoint grams are LOW-cardinality — common
-    * substrings recur corpus-wide far more than word shingles do, so
-    * hot gram buckets grow with the corpus and the bucket self-join
-    * goes quadratic exactly where boilerplate lives. Candidates now
-    * come from the x253 lossless prefix filter over the per-doc gram
-    * HASH sets (each doc's prefix keeps only its globally-RAREST
-    * grams, so a hot gram never seeds a candidate) and verify is a
-    * per-candidate array intersection. Threshold equivalence is exact:
-    * round4(j) >= T  <=>  the integer prefix bound at (T·10^5 − 5)/10^5.
-    *
-    * Second re-plan (round-12; the prefix filter alone re-measured
-    * 1.47 — "rarest grams per doc" still have corpus-growing posting
-    * lists when the gram space itself is low-cardinality): the DEFAULT
-    * path now also caps each prefix term's posting list at `postingCap`
-    * docs (sz asc, doc_id asc — deterministic, oracle-replayable), the
-    * AllPairs stop-gram discipline. Candidate volume is bounded by
-    * gram-types·cap² — no hot bucket can go quadratic by construction.
-    * `postingCap = 0` disables the cap: the exact lossless form, kept
-    * as the truth baseline; [[charGramCapCard]] prices the cap's recall
-    * against it on a bounded fixture.
-    */
   /** The materialized (doc_id, tk, sz) gram-hash set table both pair
     * paths verify against — extracted (r15) so [[charGramCapCard]] can
     * build it ONCE and share it across its exact baseline and every
@@ -179,6 +151,34 @@ object Extensions102 {
       .filter(col("jaccard") >= threshold)
       .select(col("doc_a"), col("doc_b"), col("jaccard"))
 
+  /** Exact codepoint-n-gram Jaccard pairs at `threshold` — the x02
+    * contract for scripts the word chain cannot see. Output:
+    * (doc_a, doc_b, jaccard), doc_a < doc_b. `gramSampleMod` > 1
+    * switches to the winnowed estimate (see [[charGramIndexOf]]) — the
+    * production dial for corpora where ~1 gram/codepoint is real money.
+    *
+    * Re-plan (sf1 scaling audit: exponent 1.82 through the full-index
+    * bucket self-join): codepoint grams are LOW-cardinality — common
+    * substrings recur corpus-wide far more than word shingles do, so
+    * hot gram buckets grow with the corpus and the bucket self-join
+    * goes quadratic exactly where boilerplate lives. Candidates now
+    * come from the x253 lossless prefix filter over the per-doc gram
+    * HASH sets (each doc's prefix keeps only its globally-RAREST
+    * grams, so a hot gram never seeds a candidate) and verify is a
+    * per-candidate array intersection. Threshold equivalence is exact:
+    * round4(j) >= T  <=>  the integer prefix bound at (T·10^5 − 5)/10^5.
+    *
+    * Second re-plan (round-12; the prefix filter alone re-measured
+    * 1.47 — "rarest grams per doc" still have corpus-growing posting
+    * lists when the gram space itself is low-cardinality): the DEFAULT
+    * path now also caps each prefix term's posting list at `postingCap`
+    * docs (sz asc, doc_id asc — deterministic, oracle-replayable), the
+    * AllPairs stop-gram discipline. Candidate volume is bounded by
+    * gram-types·cap² — no hot bucket can go quadratic by construction.
+    * `postingCap = 0` disables the cap: the exact lossless form, kept
+    * as the truth baseline; [[charGramCapCard]] prices the cap's recall
+    * against it on a bounded fixture.
+    */
   def charGramJaccardPairs(
       corpus: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.4, n: Int = 10, gramSampleMod: Int = 1,

@@ -32,7 +32,9 @@ import graft.model.Tables
 object Extensions120 {
 
   /** The per-family card: (family, n_candidates, n_truth, n_caught,
-    * recall, chosen), ordered by family name.
+    * recall, chosen), ordered by family name. Refuses inputs above
+    * `maxSample` (the gold pass is n² BY DESIGN — only a sample may pay
+    * it); [[blockingPlanSampled]] handles full corpora.
     */
   def blockingPlan(
       records: DataFrame, strCol: String,

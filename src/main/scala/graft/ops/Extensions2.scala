@@ -50,13 +50,6 @@ object Extensions2 {
     * those cells' members by exact cosine. Similarities are rounded BEFORE
     * ranking so ulp noise cannot reorder the top-k.
     */
-  /** IVF ANN over any corpus of (id, vector). `centroids` is the coarse
-    * quantizer table (cell, cvec) — precomputed (k-means offline, or any
-    * deterministic pick); it is tiny and broadcast everywhere. Each query
-    * probes its `probes` best cells and reranks those cells' members by
-    * exact cosine. Output: (q_id, c_id, sim, rk), rk <= k, sims rounded
-    * BEFORE ranking so ulp noise cannot reorder the top-k.
-    */
   /** Nearest-centroid cell assignment: argmax_cell cos(v, centroid), ties
     * broken by cell id. min_by on the (−csim, cell) struct ≡ the
     * "csim desc, cell asc" row_number rank-1 — but it partial-aggregates
@@ -77,6 +70,13 @@ object Extensions2 {
       .select(col("vec_id"), col("best.embedding").as("embedding"),
         col("best.cell").as("cell"))
 
+  /** IVF ANN over any corpus of (id, vector). `centroids` is the coarse
+    * quantizer table (cell, cvec) — precomputed (k-means offline, or any
+    * deterministic pick); it is tiny and broadcast everywhere. Each query
+    * probes its `probes` best cells and reranks those cells' members by
+    * exact cosine. Output: (q_id, c_id, sim, rk), rk <= k, sims rounded
+    * BEFORE ranking so ulp noise cannot reorder the top-k.
+    */
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame, centroids: DataFrame,
       idCol: String, vecCol: String, k: Int, probes: Int): DataFrame = {
@@ -256,7 +256,8 @@ object Extensions2 {
     * shingle meet — never train × eval), the standard decontamination
     * shape for a 100 TB corpus against a fixed eval suite. Eval set here:
     * doc_id < 50 (the driver fixture has no second corpus; the operator is
-    * corpus-agnostic via [[contaminationPairs]]).
+    * corpus-agnostic via [[contaminationPairs]]). Output
+    * (train_id, matched_eval_id, overlap), rows with overlap >= minOverlap.
     */
   def contaminationPairs(
       train: DataFrame, eval_ : DataFrame, idCol: String, textCol: String,

@@ -27,6 +27,24 @@ object Extensions23 {
 
   // ---- x85: ordered windowed funnel ------------------------------------------
 
+  /** The per-row greedy-anchor fold shared by [[orderedFunnel]] and
+    * x155's step-timing: t_{i+1} = min ts of step i+1 after t_i within
+    * the window, as window columns on every row.
+    */
+  private[ops] def funnelAnchorFold(
+      log: DataFrame, userCol: String, typeCol: String, tsCol: String,
+      steps: Seq[String], stepWindowUs: Long): DataFrame = {
+    require(steps.nonEmpty, "funnel needs at least one step")
+    val w = Window.partitionBy(col(userCol))
+    steps.zipWithIndex.foldLeft(log) { case (df, (step, i)) =>
+      val eligible =
+        if (i == 0) col(typeCol) === step
+        else col(typeCol) === step && col(tsCol) > col(s"t$i") &&
+          unix_micros(col(tsCol)) - unix_micros(col(s"t$i")) <= stepWindowUs
+      df.withColumn(s"t${i + 1}", min(when(eligible, col(tsCol))).over(w))
+    }
+  }
+
   /** Strict-sequence funnel: step k counts only if it happens strictly
     * after step k-1 and within `stepWindowUs` of it, with each step
     * GREEDILY anchored on the user's earliest eligible occurrence
@@ -49,24 +67,6 @@ object Extensions23 {
     * At 100 TB this beats the textbook k-self-join formulation (k
     * shuffles of the full log) by construction.
     */
-  /** The per-row greedy-anchor fold shared by [[orderedFunnel]] and
-    * x155's step-timing: t_{i+1} = min ts of step i+1 after t_i within
-    * the window, as window columns on every row.
-    */
-  private[ops] def funnelAnchorFold(
-      log: DataFrame, userCol: String, typeCol: String, tsCol: String,
-      steps: Seq[String], stepWindowUs: Long): DataFrame = {
-    require(steps.nonEmpty, "funnel needs at least one step")
-    val w = Window.partitionBy(col(userCol))
-    steps.zipWithIndex.foldLeft(log) { case (df, (step, i)) =>
-      val eligible =
-        if (i == 0) col(typeCol) === step
-        else col(typeCol) === step && col(tsCol) > col(s"t$i") &&
-          unix_micros(col(tsCol)) - unix_micros(col(s"t$i")) <= stepWindowUs
-      df.withColumn(s"t${i + 1}", min(when(eligible, col(tsCol))).over(w))
-    }
-  }
-
   def orderedFunnel(
       log: DataFrame, userCol: String, typeCol: String, tsCol: String,
       steps: Seq[String], stepWindowUs: Long): DataFrame = {

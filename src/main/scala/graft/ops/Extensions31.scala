@@ -116,6 +116,10 @@ object Extensions31 {
         col("rk").cast("long").as("rk"))
   }
 
+  /** IVF-PQ composed serving (the FAISS IVFADC layout as a Spark plan):
+    * route each query to its best cells, ADC-rank only those cells'
+    * codes — no raw vectors, no full scan in the serving path.
+    */
   def ivfPqTopK(
       vectors: DataFrame, idCol: String, vecCol: String,
       queries: DataFrame, codebook: Array[Array[Array[Long]]],

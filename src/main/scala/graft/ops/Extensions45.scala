@@ -161,7 +161,7 @@ object Extensions45 {
       s"srmCheck: design permilles must sum to 1000: $design")
     val s = assignments.sparkSession
     import s.implicits._
-    val spine = broadcast(design.toDF("arm", "design_permille"))
+    val spine = design.toDF("arm", "design_permille")
     val obs = assignments.groupBy(col(armCol).as("arm"))
       .agg(count(lit(1)).as("n_obs"))
     val per = Extensions.materialized(
@@ -247,7 +247,7 @@ object Extensions45 {
     val obs = rel.select(cents.as("cents")).filter(col("cents") > 0L)
       .select(substring(col("cents").cast("string"), 1, 1).cast("long").as("digit"))
       .groupBy(col("digit")).agg(count(lit(1)).as("n_obs"))
-    val spine = broadcast(s.range(1, 10).select(col("id").as("digit")))
+    val spine = s.range(1, 10).select(col("id").as("digit"))
     val per = Extensions.materialized(
       spine.join(obs, Seq("digit"), "left_outer")
         .select(col("digit"), coalesce(col("n_obs"), lit(0L)).as("n_obs")))

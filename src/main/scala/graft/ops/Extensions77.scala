@@ -109,7 +109,7 @@ object Extensions77 {
     * operator that DETECTS hot partitions. TakeOrdered cut. The same
     * number predicts shuffle skew for every join keyed on this column —
     * feed the hot keys to [[Scale.saltedJoin]] (or let
-    * [[graft.api.Graft.autoSalted]] do it).
+    * [[Scale.autoSalted]] do it).
     *
     * Overflow headroom: `c * 10000 * 2` needs c ≤ 4.6e14 events on ONE
     * key — a 100 TB log (~1e12 events) cannot reach it even if a single

@@ -159,7 +159,7 @@ object Relational4 {
     val clicks = e.filter(col("event_type") === "click")
       .groupBy(col("user_id"), col("ts"))
       .agg(max(col("event_id")).as("click_id"))
-    graft.api.Graft.asOfJoin(purchases, clicks, Seq("user_id"), "ts", "ts")
+    graft.plans.AsOfJoinOp(purchases, clicks, Seq("user_id"), "ts", "ts")
       .select(col("event_id"), col("user_id"), col("click_id"))
       .orderBy(col("event_id"))
   }
@@ -179,7 +179,7 @@ object Relational4 {
     val clicks = e.filter(col("event_type") === "click")
       .groupBy(col("user_id"), col("ts"))
       .agg(max(col("event_id")).as("click_id"))
-    graft.api.Graft.asOfJoin(purchases, clicks, Seq("user_id"), "ts", "ts",
+    graft.plans.AsOfJoinOp(purchases, clicks, Seq("user_id"), "ts", "ts",
         tolerance = Some(6L * 3600 * 1000000))
       .select(col("event_id"), col("user_id"), col("click_id"))
       .orderBy(col("event_id"))

@@ -33,7 +33,8 @@ object SketchStore {
     batch.groupBy(col(groupCol).as("g"))
       .agg(hll_sketch_agg(col(valueCol), lit(lgK)).as("sketch"))
 
-  /** Append a batch's per-group sketches to the store — one
+  /** Append a batch's per-group sketches (one sketch row per (group,
+    * batch)) to the store — one
     * [[StoreManifest.commit]] (fresh batch dir + write-last manifest
     * rename), so a concurrent [[estimate]] unions the sketches of a
     * committed prefix of batches, never a half-written one (a raw

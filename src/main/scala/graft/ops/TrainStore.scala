@@ -23,7 +23,8 @@ import org.apache.spark.sql.functions._
   */
 object TrainStore {
 
-  /** Assign the training order and write ordered shard directories.
+  /** Assign the training order and write ordered shard directories
+    * (partitionBy(shard), ord-sorted files).
     * `columns` picks the payload to materialize (ids and order columns
     * are always kept).
     */

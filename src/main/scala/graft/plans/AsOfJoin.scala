@@ -169,6 +169,11 @@ case class AsOfJoinExec(
   * inputs may share a lineage — a self-as-of would otherwise collide);
   * right key columns are dropped from the output and remaining right name
   * clashes get `rightSuffix`.
+  *
+  * `tolerance` (optional) bounds the lookback INCLUSIVELY, expressed in
+  * the time column's NATIVE unit: microseconds for timestamps, days for
+  * dates, raw values for integral columns — `Some(5000000L)` is 5 seconds
+  * on a timestamp column, not 5000 seconds.
   */
 object AsOfJoinOp {
   def apply(

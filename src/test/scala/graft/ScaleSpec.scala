@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.model.Tables
-import graft.ops.Scale
+import graft.ops.{Extensions, Extensions3, Extensions4, Scale}
+import graft.plans.AsOfJoinOp
 
 class ScaleSpec extends SparkSpec {
 
@@ -76,7 +77,7 @@ class ScaleSpec extends SparkSpec {
       .toDF("k", "payload")
     val small = (0 to 100).map(i => (i.toLong, s"dim_$i")).toDF("k", "attr")
     val plain = large.join(small, Seq("k"))
-    val auto = graft.api.Graft.autoSalted(large, small, "k",
+    val auto = Scale.autoSalted(large, small, "k",
       saltSource = col("payload"), maxBuckets = 8)
     assert(auto.count() == plain.count())
     assert(auto.exceptAll(plain).isEmpty && plain.exceptAll(auto).isEmpty)
@@ -263,7 +264,7 @@ class ScaleSpec extends SparkSpec {
 
   test("repetitionMetrics is map-only: zero exchanges in the physical plan") {
     val docs = Tables.load(spark, sf0001, "documents")
-    val plan = graft.api.Graft.repetitionMetrics(docs, "doc_id", "text")
+    val plan = Extensions3.repetitionMetrics(docs, "doc_id", "text")
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"),
       s"every metric (incl. top-n-gram) must stay inside the row:\n$plan")
@@ -284,7 +285,7 @@ class ScaleSpec extends SparkSpec {
       .select(col("event_id"), col("user_id"), col("ts"))
     val clicks = e.filter(col("event_type") === "click")
       .select(col("user_id"), col("ts"), col("event_id").as("click_id"))
-    val df = graft.api.Graft.asOfJoin(purchases, clicks, Seq("user_id"), "ts", "ts")
+    val df = AsOfJoinOp(purchases, clicks, Seq("user_id"), "ts", "ts")
     df.collect()
     // look only at the final adaptive plan (the string repeats the initial)
     val plan = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
@@ -334,7 +335,7 @@ class ScaleSpec extends SparkSpec {
 
   test("vocabTopK plans the cut as TakeOrderedAndProject (per-partition heaps, no global sort)") {
     val d = Tables.load(spark, sf0001, "documents")
-    val df = graft.api.Graft.vocabTopK(d, "doc_id", "text", k = 10)
+    val df = Extensions4.vocabTopK(d, "doc_id", "text", k = 10)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"),
       s"top-k must not range-partition a full sort:\n$plan")
@@ -344,12 +345,11 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("signBitsFor scales the quantizer with the corpus; parameterized signBucketTopK agrees with x06 at 6 bits") {
-    import graft.api.Graft
-    assert(Graft.signBitsFor(1000L) == 4)              // clamp floor
-    assert(Graft.signBitsFor(1L << 30, 1L << 20) == 10) // 1024 cells -> 10 bits
-    assert(Graft.signBitsFor(Long.MaxValue / 2) == 30)  // clamp ceiling
+    assert(Extensions.signBitsFor(1000L) == 4)              // clamp floor
+    assert(Extensions.signBitsFor(1L << 30, 1L << 20) == 10) // 1024 cells -> 10 bits
+    assert(Extensions.signBitsFor(Long.MaxValue / 2) == 30)  // clamp ceiling
     val e = Tables.load(spark, sf0001, "embeddings")
-    val got = Graft.signBucketTopK(e, e.filter(col("vec_id") < 10),
+    val got = Extensions.signBucketTopK(e, e.filter(col("vec_id") < 10),
         "vec_id", "embedding", k = 3, signBits = 6)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(3))).toSet
     val x06 = graft.ops.Extensions.x06AnnSignBucket(spark, sf0001)

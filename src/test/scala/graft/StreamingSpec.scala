@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.model.Event
+import graft.ops.{Extensions32, Extensions4}
 import graft.state.Materialize
 import graft.stream.Materializer
 
@@ -512,7 +513,7 @@ class StreamingSpec extends SparkSpec {
         if (!batch.isEmpty) {
           val corpus = spark.read.parquet(corpusDir)
           val kept = batch.join(
-            graft.api.Graft.incrementalDedup(corpus, batch, "doc_id", "text")
+            Extensions4.incrementalDedup(corpus, batch, "doc_id", "text")
               .filter(col("keep")).select(col("b_id").as("doc_id")),
             Seq("doc_id"), "left_semi")
           kept.write.mode("append").parquet(corpusDir)
@@ -709,7 +710,7 @@ class StreamingSpec extends SparkSpec {
     // 990 permille: at 900 the walk deliberately admits up to 10% junk
     // (the max-recall contract), which would let the spiked docs through —
     // a strict crawl gate calibrates tight
-    val threshold = graft.api.Graft.calibrateThreshold(
+    val threshold = Extensions32.calibrateThreshold(
         graft.ops.Extensions26.scoreWithWeights(labeled, "doc_id", "text", "keep", w),
         "margin_micro", "label", targetPermille = 990)
       .head().getAs[Long]("threshold_micro")
