@@ -18,10 +18,12 @@ object Bench {
     // data) — the gap was accumulated checkpoint blocks, broadcast
     // remnants, and GC pressure, not the query. Unpersisting alone was not
     // enough; an explicit GC lets the ContextCleaner actually reap dropped
-    // broadcasts/blocks before the next query starts.
+    // broadcasts/blocks before the next query starts. Clearing the fixture
+    // cache makes every timed run pay for its own fixture build.
     def reset(): Unit = {
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       spark.catalog.clearCache()
+      graft.ops.FixtureCache.clear()
       System.gc()
     }
     // Per query: REPEATS timed runs (reset between each), report the MIN.

@@ -157,11 +157,12 @@ case class LongDotProduct(left: Expression, right: Expression)
   * expression runs the classic two-pointer sorted-merge per pair — one
   * O(|a|+|b|) fused long loop, no row explosion, no re-aggregation.
   *
-  * Contract: both key arrays MUST be sorted ascending (the caller
-  * builds them with sort_array); values align positionally with keys.
-  * Arithmetic is exact long accumulation, identical to
-  * sum(least(tfa, tfb)) over the joined shared-key rows as long as
-  * keys are unique per side (they are: one row per (doc, token)).
+  * Contract: both key arrays strictly ascending (sorted, unique per
+  * side), each values array as long as its keys array. Input outside
+  * the contract raises an `IllegalArgumentException` naming the
+  * function ([[SortedKeys]]), on the `eval` and `doGenCode` paths
+  * alike. Arithmetic is exact long accumulation, identical to
+  * sum(least(tfa, tfb)) over the joined shared-key rows.
   */
 case class SumMinSortedMerge(
     first: Expression, second: Expression,
@@ -183,8 +184,8 @@ case class SumMinSortedMerge(
   override def nullSafeEval(ak: Any, av: Any, bk: Any, bv: Any): Any = {
     val aK = ak.asInstanceOf[ArrayData]; val aV = av.asInstanceOf[ArrayData]
     val bK = bk.asInstanceOf[ArrayData]; val bV = bv.asInstanceOf[ArrayData]
-    val na = math.min(aK.numElements(), aV.numElements())
-    val nb = math.min(bK.numElements(), bV.numElements())
+    SortedKeys.aligned(prettyName, aK, aV); SortedKeys.aligned(prettyName, bK, bV)
+    val na = aK.numElements(); val nb = bK.numElements()
     var i = 0; var j = 0; var s = 0L
     while (i < na && j < nb) {
       val ka = aK.getLong(i); val kb = bK.getLong(j)
@@ -203,8 +204,9 @@ case class SumMinSortedMerge(
       val s = ctx.freshName("s")
       val ka = ctx.freshName("ka"); val kb = ctx.freshName("kb")
       s"""
-        int $na = java.lang.Math.min($ak.numElements(), $av.numElements());
-        int $nb = java.lang.Math.min($bk.numElements(), $bv.numElements());
+        ${SortedKeys.ref}.aligned("$prettyName", $ak, $av);
+        ${SortedKeys.ref}.aligned("$prettyName", $bk, $bv);
+        int $na = $ak.numElements(); int $nb = $bk.numElements();
         int $i = 0; int $j = 0; long $s = 0L;
         while ($i < $na && $j < $nb) {
           long $ka = $ak.getLong($i); long $kb = $bk.getLong($j);
@@ -232,10 +234,12 @@ case class SumMinSortedMerge(
   * (x232/x286/x321) without the per-pair hash-set build: one codegen'd
   * two-pointer loop, O(|a|+|b|) long comparisons.
   *
-  * Contract: both arrays sorted ascending with unique elements (the
-  * callers' arrays are array_distinct'd gram hashes, sorted once per doc
-  * with sort_array — never per pair). Equal to array_intersect's size
-  * under the house 60/64-bit hash-key convention.
+  * Contract: both arrays strictly ascending (the callers' arrays are
+  * array_distinct'd gram hashes, sorted once per doc with sort_array —
+  * never per pair). Input outside the contract raises an
+  * `IllegalArgumentException` naming the function ([[SortedKeys]]), on
+  * the `eval` and `doGenCode` paths alike. Equal to array_intersect's
+  * size under the house 60/64-bit hash-key convention.
   */
 case class IntersectCountSorted(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -256,6 +260,7 @@ case class IntersectCountSorted(left: Expression, right: Expression)
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
+    SortedKeys.ascending(prettyName, x); SortedKeys.ascending(prettyName, y)
     val na = x.numElements(); val nb = y.numElements()
     var i = 0; var j = 0; var c = 0L
     while (i < na && j < nb) {
@@ -274,6 +279,8 @@ case class IntersectCountSorted(left: Expression, right: Expression)
       val c = ctx.freshName("c")
       val ka = ctx.freshName("ka"); val kb = ctx.freshName("kb")
       s"""
+        ${SortedKeys.ref}.ascending("$prettyName", $a);
+        ${SortedKeys.ref}.ascending("$prettyName", $b);
         int $na = $a.numElements(); int $nb = $b.numElements();
         int $i = 0; int $j = 0; long $c = 0L;
         while ($i < $na && $j < $nb) {
@@ -290,6 +297,36 @@ case class IntersectCountSorted(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 
   override def prettyName: String = "intersect_count_sorted"
+}
+
+/** The input contract of the two-pointer kernels ([[SumMinSortedMerge]],
+  * [[IntersectCountSorted]]), checked over whole arrays before the merge
+  * by both their `eval` and their generated code: keys strictly
+  * ascending, values as long as their keys. A violation raises an
+  * `IllegalArgumentException` naming the function; a merge over it
+  * would silently miscount.
+  */
+private[graft] object SortedKeys {
+
+  /** This object as a Java expression, for generated code. */
+  private[functions] val ref: String = getClass.getName + ".MODULE$"
+
+  def ascending(fn: String, keys: ArrayData): Unit = {
+    var i = 1
+    while (i < keys.numElements()) {
+      if (keys.getLong(i) <= keys.getLong(i - 1))
+        throw new IllegalArgumentException(s"$fn: keys must be strictly ascending, " +
+          s"got ${keys.getLong(i)} after ${keys.getLong(i - 1)} at index $i")
+      i += 1
+    }
+  }
+
+  def aligned(fn: String, keys: ArrayData, vals: ArrayData): Unit = {
+    if (keys.numElements() != vals.numElements())
+      throw new IllegalArgumentException(s"$fn: a keys array of " +
+        s"${keys.numElements()} elements has a values array of ${vals.numElements()}")
+    ascending(fn, keys)
+  }
 }
 
 /** Column-level API for the native vector expressions. */

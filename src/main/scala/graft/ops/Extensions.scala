@@ -84,42 +84,6 @@ object Extensions {
     levels.toSeq
   }
 
-  /** Temp directory for a fixture-scoped store (x70/x76 caches), removed
-    * recursively at JVM exit so repeated test/bench JVMs don't accumulate
-    * orphaned index builds in the system temp dir.
-    */
-  private[ops] def tempStoreDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        import scala.jdk.CollectionConverters._
-        java.nio.file.Files.walk(p).sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .iterator().asScala.foreach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: java.io.IOException => () }))
-    p.toString
-  }
-
-  /** Cache key for the JVM-lifetime fixture model caches (BPE merges,
-    * logreg weights, PQ codebooks, fixture stores): the fixture dir PLUS
-    * a cheap content fingerprint (file length + mtime; directories sum
-    * their children). A regenerated fixture in the same dir therefore
-    * misses the cache and retrains (fail-safe) instead of silently
-    * serving a stale model — the documented failure mode of keying on
-    * the dir alone.
-    */
-  private[ops] def fixtureKey(s: SparkSession, dir: String, table: String): String = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val sig =
-      if (!fs.exists(p)) "absent"
-      else {
-        val st = fs.getFileStatus(p)
-        if (st.isFile) s"${st.getLen}:${st.getModificationTime}"
-        else fs.listStatus(p).map(c => c.getLen + c.getModificationTime).sum.toString
-      }
-    s"$dir#$table#$sig"
-  }
-
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "documents")
   private def emb(s: SparkSession, dir: String): DataFrame =
@@ -148,13 +112,6 @@ object Extensions {
     */
   private[ops] def shingles(text: Column, n: Int = 5): Column =
     shinglesFromToks(toks(text), n)
-
-  /** (doc_id, sh) inverted-index rows — the candidate-generation backbone
-    * shared by Jaccard and MinHash dedup.
-    */
-  private def shingleIndex(s: SparkSession, dir: String): DataFrame =
-    docs(s, dir).select(col("doc_id"), toks(col("text")).as("tk0"))
-      .select(col("doc_id"), explode(shinglesFromToks(col("tk0"))).as("sh"))
 
   /** Rebalance before a CPU-heavy narrow stage: if the source scan arrives
     * in far fewer partitions than the cluster has slots (single file / one

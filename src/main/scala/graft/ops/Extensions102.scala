@@ -104,15 +104,15 @@ object Extensions102 {
       else g => xxhash64(g)
     // the same pre-explode materialization as charGramIndexOf (pins the
     // gram expression to one evaluation); terms travel as 8-byte hashes,
-    // SORTED once per doc (r15) so the pair verify runs the codegen'd
-    // two-pointer intersect_count_sorted instead of building a hash set
-    // per candidate pair (array_intersect). Nothing downstream reads tk
+    // made DISTINCT and SORTED once per doc (r15) so the pair verify runs
+    // the codegen'd two-pointer intersect_count_sorted instead of building
+    // a hash set per pair (array_intersect). Nothing downstream reads tk
     // order: postings explode it, the verify intersects it.
     Extensions.materialized(
       Extensions.rebalanced(corpus, idCol)
         .select(col(idCol).as("doc_id"), lower(col(textCol)).as("ct"))
         .filter(length(col("ct")) > 0)
-        .select(col("doc_id"), sort_array(transform(sampled, keyOf)).as("tk"))
+        .select(col("doc_id"), sort_array(array_distinct(transform(sampled, keyOf))).as("tk"))
         .select(col("doc_id"), col("tk"), size(col("tk")).cast("long").as("sz")))
   }
 

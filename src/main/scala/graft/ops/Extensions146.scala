@@ -52,11 +52,12 @@ object Extensions146 {
     require(dfCap >= 2, "weightedJaccardPairs: dfCap must be >= 2")
     require(threshold > 0.0 && threshold <= 1.0,
       "weightedJaccardPairs: threshold must be in (0, 1]")
+    // tf per (doc, token hash): unique keys, as sum_min_sorted requires
     val tf = Extensions.materialized(
       corpus.select(col(idCol).cast("long").as("doc_id"),
           explode(filter(split(lower(col(textCol)), " "),
             t => length(t) > 0)).as("tok"))
-        .groupBy(col("doc_id"), col("tok"))
+        .groupBy(col("doc_id"), xxhash64(col("tok")).as("tk"))
         .agg(count(lit(1)).as("tf")))
     // Seeds are 3-word SHINGLES, not bare tokens: in a natural corpus
     // most single tokens are hot (df >> cap) and token seeding finds
@@ -101,7 +102,6 @@ object Extensions146 {
     val tNum = math.round(threshold * 100000.0) - 5L
     val tDen = 100000L
     val docvec = tf
-      .select(col("doc_id"), xxhash64(col("tok")).as("tk"), col("tf"))
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("tk"), col("tf")))).as("kv"),
         sum(col("tf")).as("n"))

@@ -154,29 +154,18 @@ object Extensions15 {
       ORDER BY b_id"""
   }
 
-  /** One store per (JVM, sf dir): the steady-state shape is MANY batches
-    * against ONE long-lived store, so the fixture builds it once and the
-    * bench's repeats measure the serving path (sign batch → pruned read →
-    * verdict) — the thing the query name claims. The write path has its
-    * own spec coverage (SignatureStoreSpec: write, append≡rewrite,
-    * pruning, streaming loop). Store content is deterministic per dir.
-    */
-  private val storeCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** x76: [[SignatureStore]] serving path — dedup the >= 450 batch
     * against the < 450 corpus store through the PRUNED read. Same
     * semantics (and same oracle) as x67; what this entry adds to the
     * gate is the store path: layout, partition pruning, and the
     * denormalized verdict all sit under a value-level hash compare.
+    * The corpus store is a [[FixtureCache]] entry over `documents`: the
+    * steady-state shape is many batches against one long-lived store.
     */
   def x76SignatureStoreDedup(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    val path = storeCache.computeIfAbsent(dir, { _ =>
-      val p = Extensions.tempStoreDir("graft-sigstore-x76")
-      SignatureStore.write(
-        minhashSignatures(d.filter(col("doc_id") < 450), "doc_id", "text"), p)
-      p
-    })
+    val path = FixtureCache.store(s, dir, "documents", "x76-sigstore")(SignatureStore.write(
+      minhashSignatures(d.filter(col("doc_id") < 450), "doc_id", "text"), _))
     // r15: same barrier-before-sort as x67 (range sampling would re-run
     // the pruned store read + verdict window a second time)
     Extensions.materialized(SignatureStore.dedupAgainstStore(s, path,

@@ -233,7 +233,7 @@ object Extensions2 {
       r
     }
     es.foreach { case (a, b) =>
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
+      parent(a) = parent.getOrElse(a, a); parent(b) = parent.getOrElse(b, b)
       val (ra, rb) = (find(a), find(b))
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb) // min id wins
     }

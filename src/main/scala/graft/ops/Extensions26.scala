@@ -405,20 +405,11 @@ object Extensions26 {
         docs(s, dir), "doc_id", "text", carryCols = Seq("text"))
       .select(col("doc_id"), col("text"), col("keep"))
 
-  /** Fixture-keyed trained-weight cache (the x95 codebook-cache
-    * discipline): training is deterministic, so caching the weight
-    * vector is value-transparent — x94 repeats and x105 (which
-    * calibrates the same model) measure the scoring / calibration path
-    * instead of re-running 8 training rounds each. Keyed on
-    * [[Extensions.fixtureKey]] (dir + file length/mtime), so a fixture
-    * regenerated in-place within one JVM retrains instead of silently
-    * serving stale weights.
+  /** The fixture model's trained weights (8 rounds), a [[FixtureCache]]
+    * entry shared by the nine queries that score with it.
     */
-  private val weightsCache =
-    scala.collection.concurrent.TrieMap[String, Array[Long]]()
-
   private[ops] def fixtureWeights(s: SparkSession, dir: String): Array[Long] =
-    weightsCache.getOrElseUpdate(Extensions.fixtureKey(s, dir, "documents"),
+    FixtureCache(s, dir, "documents", "logreg-weights")(
       trainFromText(gopherLabeled(s, dir), "doc_id", "text", "keep"))
 
   /** Fixture x94/x105 shared scoring pass over the cached model.

@@ -172,21 +172,13 @@ object Extensions27 {
         col("rk").cast("long").as("rk"))
   }
 
-  /** Fixture-keyed codebook cache (the x70/x76 storeCache discipline):
-    * the codebook is the offline artifact of this pipeline — training
-    * it once per fixture lets bench repeats (and x102, which shares
-    * it) measure the SERVING path, not 4 re-trainings of the same
-    * model. Deterministic training makes the cache value-transparent;
-    * keying on [[Extensions.fixtureKey]] (dir + file length/mtime)
-    * makes it fail-safe when a fixture is regenerated in-place within
-    * one JVM.
+  /** The fixture's PQ codebook (4 Lloyd rounds), the offline artifact
+    * of this pipeline: a [[FixtureCache]] entry shared by x95, x102 and
+    * x107's store build.
     */
-  private val codebookCache =
-    scala.collection.concurrent.TrieMap[String, Array[Array[Array[Long]]]]()
-
   private[ops] def fixtureCodebook(
       s: SparkSession, dir: String): Array[Array[Array[Long]]] =
-    codebookCache.getOrElseUpdate(Extensions.fixtureKey(s, dir, "embeddings"),
+    FixtureCache(s, dir, "embeddings", "pq-codebook")(
       pqTrain(emb(s, dir), "vec_id", "embedding"))
 
   /** x95: train (4 Lloyd rounds), encode the fixture embeddings, and

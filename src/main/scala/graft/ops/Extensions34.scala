@@ -11,10 +11,10 @@ import graft.model.Tables
   *    exact integer brute-force truth — the x70 pattern (x70 scores the
   *    persisted raw-vector IVF store; this scores the persisted
   *    COMPRESSED store, which is what a 100 TB corpus actually ships).
-  *    The store builds once per fixture; every invocation after that
-  *    measures the production read: codebook + centroid sidecars
-  *    loaded, probed cell directories pruned statically, ADC over
-  *    codes, recall scored on what was SERVED. The DuckDB oracle
+  *    The store builds once per fixture content ([[FixtureCache]]);
+  *    every invocation then serves the production read: codebook +
+  *    centroid sidecars loaded, probed cell directories pruned statically,
+  *    ADC over codes, recall scored on what was SERVED. The DuckDB oracle
   *    replays training, routing, ADC ([[Extensions31.ivfPqOracleChain]])
   *    plus the brute-force truth and the recall join.
   */
@@ -23,23 +23,15 @@ object Extensions34 {
   private def emb(s: SparkSession, dir: String): DataFrame =
     Tables.load(s, dir, "embeddings")
 
-  // x107's per-fixture PQ store (built once, served many — the x70/x76
-  // storeCache discipline, keyed on Extensions.fixtureKey)
-  private val storeCache = new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** x107: build-or-reuse the fixture PQ store, serve the query batch
+  /** x107: build-or-reuse the fixture PQ store (a [[FixtureCache]]
+    * entry whose build looks up the x95 codebook), serve the query batch
     * (vec_id < 10) through [[PqStore.topKFromIndex]], score recall@5
     * against exact quantized-L2 brute force.
     */
   def x107PqStoreRecall(s: SparkSession, dir: String): DataFrame = {
     val vectors = emb(s, dir)
-    val codebook = Extensions27.fixtureCodebook(s, dir)
-    val path = storeCache.computeIfAbsent(
-      Extensions.fixtureKey(s, dir, "embeddings"), { _ =>
-        val p = Extensions.tempStoreDir("graft-pqstore-x107")
-        PqStore.writeIndex(vectors, "vec_id", "embedding", codebook, p)
-        p
-      })
+    val path = FixtureCache.store(s, dir, "embeddings", "x107-pqstore")(PqStore.writeIndex(
+      vectors, "vec_id", "embedding", Extensions27.fixtureCodebook(s, dir), _))
     val q = vectors.filter(col("vec_id") < 10)
     val ann = PqStore.topKFromIndex(s, path, q, "vec_id", "embedding", k = 5)
     val truth = Extensions27.bruteTopK(vectors, q, "vec_id", "embedding", k = 5)

@@ -115,18 +115,12 @@ object Extensions47 {
     (m, lamMicro, traceMicro, nRows)
   }
 
-  /** Fixture-keyed cache of the trained direction (the x94 weight-cache
-    * discipline: the iteration is deterministic, so caching is value-
-    * transparent; x127 repeats and x128 — which deploys the same
-    * direction — measure serving, not 6 training rounds). Keyed on the
-    * fixture fingerprint so in-place regeneration retrains.
+  /** The fixture's trained direction (6 rounds), a [[FixtureCache]] entry
+    * shared by x127 and x128, which deploys it.
     */
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap[String, (Array[Long], BigInt, BigInt, Long)]()
-
   private[ops] def fixturePca(
       s: SparkSession, dir: String): (Array[Long], BigInt, BigInt, Long) =
-    pcaCache.getOrElseUpdate(Extensions.fixtureKey(s, dir, "embeddings"),
+    FixtureCache(s, dir, "embeddings", "pca-direction")(
       powerIterate(Tables.load(s, dir, "embeddings"), "embedding", Dim, 6))
 
   /** x127: dominant direction of the embeddings fixture (6 rounds).

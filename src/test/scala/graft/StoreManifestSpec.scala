@@ -16,9 +16,13 @@ import graft.ops.{Extensions15, SignatureStore, StoreManifest}
   */
 class StoreManifestSpec extends SparkSpec {
 
-  private def sigs(pred: org.apache.spark.sql.Column) =
-    Extensions15.minhashSignatures(
-      Tables.load(spark, sf0001, "documents").filter(pred), "doc_id", "text")
+  // the sf0.001 corpus's signatures, computed once per suite; a doc's
+  // signature depends on its own text only, so each test filters the rows
+  // it needs
+  private lazy val corpusSigs = Extensions15.minhashSignatures(
+    Tables.load(spark, sf0001, "documents"), "doc_id", "text").localCheckpoint()
+
+  private def sigs(pred: org.apache.spark.sql.Column) = corpusSigs.filter(pred)
 
   private def verdictSet(root: String, batch: org.apache.spark.sql.DataFrame) =
     SignatureStore.dedupAgainstStore(spark, root, batch)
