@@ -25,7 +25,6 @@ object EventSourcing {
     */
   def latestState(s: SparkSession, dir: String): DataFrame =
     Materialize.latestState(events(s, dir), "user_id", "event_id")
-      .orderBy(col("user_id"))
 
   /** Per-aggregate summary: the read-model companion stats. */
   def userStats(s: SparkSession, dir: String): DataFrame =
@@ -37,7 +36,6 @@ object EventSourcing {
         round(sum(col("value")), 2).as("total_value"),
         min(col("ts")).as("first_ts"),
         max(col("ts")).as("last_ts"))
-      .orderBy(col("user_id"))
 
   /** Gap-based sessionization (30-minute inactivity): the classic
     * lag + cumulative-sum formulation. One shuffle on user_id; the window
@@ -61,7 +59,6 @@ object EventSourcing {
         max(col("ts")).as("session_end"),
         count(lit(1)).as("n_events"),
         round(sum(col("value")), 2).as("session_value"))
-      .orderBy(col("user_id"), col("session_idx"))
   }
 
   /** Event-type × day rollforward — the read model for dashboard-style
@@ -71,7 +68,6 @@ object EventSourcing {
     events(s, dir)
       .groupBy(date_trunc("day", col("ts")).as("day"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
-      .orderBy(col("day"), col("event_type"))
 
   /** Batch form of the stream-stream interval join (click → purchase
     * attribution within 10 minutes). The equi component (user_id) drives the
@@ -89,7 +85,6 @@ object EventSourcing {
       .filter(unix_micros(col("purchase_ts")) >= unix_micros(col("click_ts")) &&
         unix_micros(col("purchase_ts")) - unix_micros(col("click_ts")) <= 600L * 1000000)
       .select(col("user_id"), col("click_id"), col("purchase_id"))
-      .orderBy(col("user_id"), col("click_id"), col("purchase_id"))
   }
 
   val entries: Seq[Entry] = Seq(

@@ -216,7 +216,6 @@ object Extensions {
   def x01ExactDedup(s: SparkSession, dir: String): DataFrame =
     exactDedup(docs(s, dir), "doc_id", "text")
       .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
-      .orderBy(col("doc_id"))
 
   // ---- X2: n-gram Jaccard near-dup ----------------------------------------
 
@@ -269,11 +268,8 @@ object Extensions {
   }
 
   def x02JaccardPairs(s: SparkSession, dir: String): DataFrame =
-    // r15: barrier before the global sort (the x89 pattern — range
-    // sampling re-runs the lazy pair tail); x18/x72 reuse this frame, so
-    // they inherit the checkpoint too
+    // x18/x72 reuse this frame, so they inherit the checkpoint too
     materialized(jaccardPairs(docs(s, dir), "doc_id", "text"))
-      .orderBy(col("doc_a"), col("doc_b"))
 
   // ---- X3: MinHash + LSH dedup --------------------------------------------
 
@@ -374,7 +370,6 @@ object Extensions {
 
   def x03MinhashLsh(s: SparkSession, dir: String): DataFrame =
     minhashLshPairs(docs(s, dir), "doc_id", "text")
-      .orderBy(col("doc_a"), col("doc_b"))
 
   // ---- X4: SimHash near-dup -----------------------------------------------
 
@@ -441,9 +436,7 @@ object Extensions {
   }
 
   def x04Simhash(s: SparkSession, dir: String): DataFrame =
-    // r15: barrier before the global sort (the x89 pattern)
-    materialized(simhashPairs(docs(s, dir), "doc_id", "text"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    simhashPairs(docs(s, dir), "doc_id", "text")
 
   // ---- X5/X6: embedding similarity search ---------------------------------
 
@@ -497,7 +490,6 @@ object Extensions {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 5)
       .select(col("q_id"), col("c_id"), col("sim"), col("rk"))
-      .orderBy(col("q_id"), col("rk"))
   }
 
   /** ANN via sign-bucket coarse quantization (IVF-style): bucket = sign bits
@@ -579,7 +571,6 @@ object Extensions {
     val e = emb(s, dir)
     signBucketTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding",
         k = 3, signBits = SignBits)
-      .orderBy(col("q_id"), col("rk"))
   }
 
   /** Multiprobe ANN: each query probes its own sign-bucket cell plus the 8
@@ -611,7 +602,6 @@ object Extensions {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
       .select(col("q_id"), col("c_id"), col("sim"), col("rk"))
-      .orderBy(col("q_id"), col("rk"))
   }
 
   /** Composite quality score — the pipeline keep/drop gate built from the
@@ -633,7 +623,6 @@ object Extensions {
       .withColumn("keep", (col("score") >= 0.5).cast("int"))
       .select(col("doc_id"), col("n_tokens"), round4o(col("uniq_ratio")).as("uniq_ratio"),
         col("score"), col("keep"))
-      .orderBy(col("doc_id"))
   }
 
   /** Embedding-cosine near-duplicate pairs — the dedup-shaped variant of
@@ -665,7 +654,6 @@ object Extensions {
   def x15EmbeddingNearDup(s: SparkSession, dir: String): DataFrame =
     embeddingNearDupPairs(emb(s, dir), "vec_id", "embedding",
         threshold = 0.45, signBits = SignBits)
-      .orderBy(col("vec_a"), col("vec_b"))
 
   // ---- X7-X10: text analysis ----------------------------------------------
 
@@ -684,7 +672,6 @@ object Extensions {
         round4o(size(array_distinct(tk)).cast("double") / size(tk)).as("uniq_ratio"),
         round4o(length(regexp_replace(col("text"), " ", "")).cast("double") / size(tk))
           .as("avg_tok_len"))
-      .orderBy(col("doc_id"))
   }
 
   private[ops] val StopWords: Map[String, Seq[String]] = Map(
@@ -714,7 +701,6 @@ object Extensions {
           .when(col("s_de") >= col("s_fr") && col("s_de") >= col("s_es"), "de")
           .when(col("s_fr") >= col("s_es"), "fr")
           .otherwise("es"))
-      .orderBy(col("doc_id"))
   }
 
   /** Token counting two ways: whitespace and a BPE-ish regex ([a-z0-9]+
@@ -728,7 +714,6 @@ object Extensions {
         size(toks(col("text"))).as("ws_tokens"),
         size(expr("regexp_extract_all(lower(text), '[a-z0-9]+', 0)")).as("word_tokens"),
         size(expr("regexp_extract_all(lower(text), '[a-z0-9]+|[^a-z0-9 ]', 0)")).as("bpeish_tokens"))
-      .orderBy(col("doc_id"))
 
   /** Order-sensitive document fingerprint: Σ position·(ascii(tok)·131 +
     * len(tok)) mod 1e9+7 — pure integer arithmetic ⇒ exact cross-engine, a
@@ -740,7 +725,6 @@ object Extensions {
       .groupBy(col("doc_id"))
       .agg((sum((col("pos") + 1) * (ascii(col("tok")) * 131 + length(col("tok"))))
         % 1000000007L).as("fingerprint"))
-      .orderBy(col("doc_id"))
 
   /** Approximate distinct (HLL++) vs exact. The raw HLL estimate is
     * engine-specific, so the oracle checks a PROPERTY instead of the value:
@@ -769,7 +753,6 @@ object Extensions {
         col("exact_users"),
         (abs(col("approx_users") - col("exact_users")) <=
           col("exact_users") * 0.05).as("approx_within_5pct"))
-      .orderBy(col("event_type"))
 
   // ---- oracles -------------------------------------------------------------
 

@@ -61,7 +61,6 @@ object Extensions10 {
   /** x57: [[sourceOverlapSketch]] over the documents fixture. */
   def x57SourceOverlapSketch(s: SparkSession, dir: String): DataFrame =
     sourceOverlapSketch(docs(s, dir), "source", "text")
-      .orderBy(col("src_a"), col("src_b"))
 
   // ---- per-source approximate vocabulary -------------------------------------
 
@@ -103,7 +102,6 @@ object Extensions10 {
       .select(col("src"), col("n_tokens"), col("exact_vocab"),
         (abs(col("approx_vocab") - col("exact_vocab"))
           <= lit(0.15) * col("exact_vocab")).as("vocab_in_bound"))
-      .orderBy(col("src"))
   }
 
   // ---- embedding-table validation --------------------------------------------
@@ -138,7 +136,6 @@ object Extensions10 {
   /** x59: [[embeddingValidation]] of the fixture embeddings per label. */
   def x59EmbeddingValidation(s: SparkSession, dir: String): DataFrame =
     embeddingValidation(emb(s, dir), "embedding", "label")
-      .orderBy(col("grp"))
 
   val entries: Seq[Entry] = Seq(
     Entry("x57_source_overlap_sketch", x57SourceOverlapSketch _, """

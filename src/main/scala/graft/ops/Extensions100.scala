@@ -26,7 +26,7 @@ object Extensions100 {
   /** Per threshold t: true pairs (exact Jaccard ≥ t), LSH candidates
     * (any shared band, fixed at calibration), candidates that are true
     * pairs, precision = caught/candidates and recall = caught/truth.
-    * Output ordered: (threshold, n_truth, n_candidates, n_caught,
+    * Output: (threshold, n_truth, n_candidates, n_caught,
     * precision, recall).
     *
     * Scale: this is the CALIBRATION tool — the truth chain is the
@@ -101,7 +101,6 @@ object Extensions100 {
         when(col("n_truth") > 0L,
           expr("((n_caught * 10000 * 2 + n_truth) DIV (2 * n_truth)) / 10000.0D"))
           .as("recall"))
-      .orderBy(col("threshold"))
   }
 
   /** x228: what the pinned 8×4 geometry actually buys on the fixture. */

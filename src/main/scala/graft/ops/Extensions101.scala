@@ -30,7 +30,7 @@ object Extensions101 {
   /** Per threshold t (over `thresholds`, descending-strictness view of
     * one pair computation at min t): documents dropped by the pairwise
     * keep-first rule (doc_b of any pair with jaccard ≥ t), bytes
-    * dropped, and both as shares of the corpus. Output ordered:
+    * dropped, and both as shares of the corpus. Output:
     * (threshold, n_dropped, drop_share, bytes_dropped, byte_share).
     *
     * Scale: ONE x02 pair computation at min(thresholds) (bucketed,
@@ -67,7 +67,6 @@ object Extensions101 {
         col("bytes_dropped"),
         expr("((bytes_dropped * 10000 * 2 + bytes_total) DIV (2 * bytes_total)) / 10000.0D")
           .as("byte_share"))
-      .orderBy(col("threshold"))
   }
 
   /** x229: what each threshold step buys (and costs) on the fixture. */
@@ -116,7 +115,7 @@ object Extensions101 {
 
   /** The x217 method-of-moments lognormal fit PER GROUP: (group_key,
     * n, mu, sigma, fitted_median, fitted_p99, n_beyond_p99,
-    * tail_share), ordered. Same exactness rules: ln micro-quantized
+    * tail_share). Same exactness rules: ln micro-quantized
     * before the group moment sums; the tail count is an exact
     * conditional sum against the broadcast per-group fit.
     *
@@ -158,7 +157,6 @@ object Extensions101 {
         col("n_beyond").as("n_beyond_p99"),
         expr("((n_beyond * 10000 * 2 + n) DIV (2 * n)) / 10000.0D")
           .as("tail_share"))
-      .orderBy(col("group_key"))
   }
 
   /** x230: which fixture sources carry the heavy length tail. */

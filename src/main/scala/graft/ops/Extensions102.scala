@@ -251,16 +251,10 @@ object Extensions102 {
     * codepoint path must still recover the planted near-dup structure.
     */
   def x232CharGramDedup(s: SparkSession, dir: String): DataFrame =
-    // r15: barrier the (small) verified pair set before the global sort —
-    // the range exchange samples its child, so an un-barriered orderBy
-    // re-runs the whole candidate+verify tail a second time (the x89
-    // pattern; `sets` is checkpointed inside but the cands/verify tail
-    // after it was not).
-    Extensions.materialized(charGramJaccardPairs(
+    charGramJaccardPairs(
       Tables.load(s, dir, "documents")
         .select(col("doc_id"), translate(col("text"), " ", "").as("text")),
-      "doc_id", "text", gramSampleMod = 4))
-      .orderBy(col("doc_a"), col("doc_b"))
+      "doc_id", "text", gramSampleMod = 4)
 
   /** Shared oracle prologue: despaced lowered docs (optionally bounded
     * by `docBound`), winnowed (mod 4) distinct 10-grams, their 60-bit

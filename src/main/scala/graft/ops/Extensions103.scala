@@ -58,14 +58,9 @@ object Extensions103 {
       .select((col("doc_id") + 100000L).as("doc_id"),
         concat(lit("prefix commentary before the quoted material "),
           col("text"), lit(" and trailing analysis after the quote ends")).as("text"))
-    // r15: barrier the (small) thresholded pair set before the global
-    // sort — the range exchange samples its child, so an un-barriered
-    // orderBy re-runs the shingle self-join + agg a second time (the
-    // x89 pattern).
-    Extensions.materialized(containmentPairs(
+    containmentPairs(
       d.select(col("doc_id"), col("text")).unionByName(host),
-      "doc_id", "text", threshold = 0.8))
-      .orderBy(col("doc_a"), col("doc_b"))
+      "doc_id", "text", threshold = 0.8)
   }
 
   private val x234OracleSql: String = """

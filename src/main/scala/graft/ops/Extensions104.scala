@@ -58,7 +58,6 @@ object Extensions104 {
         col("total").as("total_instances"),
         expr("((oov_instances * 10000 * 2 + total) DIV (2 * total)) / 10000.0D")
           .as("oov_share"))
-      .orderBy(col("vocab_size"))
   }
 
   /** x235: size the tokenizer vocabulary against the fixture corpus. */
@@ -122,7 +121,6 @@ object Extensions104 {
           .as("centroid_cosine"),
         Extensions.round4o((sqrt(col("nn").cast("double")) * col("n_prev")) /
           (sqrt(col("pp").cast("double")) * col("n_next"))).as("norm_ratio"))
-      .orderBy(col("label"))
   }
 
   /** x237: did the space move between the fixture's two half-corpora? */

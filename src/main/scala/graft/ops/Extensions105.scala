@@ -79,7 +79,6 @@ object Extensions105 {
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_items"),
         sum(col("l_quantity").cast("long")).as("sum_qty"))
-      .orderBy(col("l_returnflag"))
   }
 
   private val x238OracleSql: String = """
@@ -150,7 +149,6 @@ object Extensions105 {
       .agg(count(lit(1)).as("n_rows"),
         min(col("l_partkey")).as("x_min"), max(col("l_partkey")).as("x_max"),
         min(col("l_suppkey")).as("y_min"), max(col("l_suppkey")).as("y_max"))
-      .orderBy(col("zbucket"))
 
   private val x239OracleSql: String = """
       WITH bounds AS (
@@ -212,7 +210,6 @@ object Extensions105 {
   def x240Chunks(s: SparkSession, dir: String): DataFrame =
     chunkDocuments(Tables.load(s, dir, "documents"), "doc_id", "text",
       size = 64, overlap = 16)
-      .orderBy(col("doc_id"), col("chunk_idx"))
 
   private val x240OracleSql: String = """
       WITH d AS (

@@ -99,7 +99,6 @@ object Extensions106 {
           .as("n_correct"))
       .select(col("label"), col("n"), col("n_correct"),
         Extensions.round4o(col("n_correct") / col("n")).as("accuracy"))
-      .orderBy(col("label"))
   }
 
   /** x241: does 5-NN majority vote recover the fixture labels?

@@ -47,7 +47,6 @@ object Extensions107 {
       ev.crossJoin(broadcast(bound)), "user_id", "event_id", col("__bound"))
     atBound.select(col("user_id"), col("event_id").as("last_event_id"),
         col("event_type"), round(col("value"), 2).as("value"))
-      .orderBy(col("user_id"))
   }
 
   private val x244OracleSql: String = """
@@ -74,7 +73,6 @@ object Extensions107 {
         sum(when(forgetPred, 1L).otherwise(0L)).as("n_dropped"))
       .select(col("event_type"), col("n_before"), col("n_dropped"),
         (col("n_before") - col("n_dropped")).as("n_after"))
-      .orderBy(col("event_type"))
 
   /** x245: erase every 97th user; certify what leaves the log. */
   def x245ErasureCertificate(s: SparkSession, dir: String): DataFrame =
@@ -123,7 +121,6 @@ object Extensions107 {
       .select(col("bound_minutes"), col("n_dropped"),
         expr(s"((n_dropped * 10000 * 2 + $total) DIV (2 * $total)) / 10000.0D")
           .as("drop_share"))
-      .orderBy(col("bound_minutes"))
   }
 
   /** x246: the fixture log is in-order by construction, so the card

@@ -114,7 +114,6 @@ object Extensions108 {
       .select(col("k"), col("n_pairs"), col("sum_err_1e6"), col("max_err_1e6"),
         expr("((sum_err_1e6 * 2 + n_pairs * 100) DIV (2 * n_pairs * 100)) / 10000.0D")
           .as("mean_abs_err"))
-      .orderBy(col("k"))
   }
 
   private val x247OracleSql: String = """
@@ -208,11 +207,8 @@ object Extensions108 {
     * boilerplate-led near-dups into adjacent ranks.
     */
   def x248SortedNeighborhood(s: SparkSession, dir: String): DataFrame =
-    // r15: barrier before the global sort (the x89 pattern)
-    Extensions.materialized(
-      sortedNeighborhoodPairs(Tables.load(s, dir, "documents"),
-        "doc_id", "text", w = 10, threshold = 0.5))
-      .orderBy(col("doc_a"), col("doc_b"))
+    sortedNeighborhoodPairs(Tables.load(s, dir, "documents"),
+      "doc_id", "text", w = 10, threshold = 0.5)
 
   private val x248OracleSql: String = """
       WITH keyed AS (

@@ -76,7 +76,6 @@ object Extensions109 {
           get_json_object(col("props"), "$.val").isNotNull, 1L).otherwise(0L))
           .as("n_on_latest"),
         sum(get_json_object(col("props"), "$.val").cast("long")).as("sum_val"))
-      .orderBy(col("event_type"))
   }
 
   private val x249OracleSql: String = """
@@ -146,7 +145,6 @@ object Extensions109 {
       .groupBy(coalesce(col("dlq_reason"), lit("ok")).as("reason"))
       .agg(count(lit(1)).as("n_rows"),
         round(sum(col("value")), 2).as("sum_value"))
-      .orderBy(col("reason"))
   }
 
   private val x250OracleSql: String = """

@@ -55,7 +55,6 @@ object Extensions11 {
     stratifiedSplit(docs(s, dir), "doc_id", valPermille = 100, testPermille = 100)
       .groupBy(col("source"), col("split"))
       .agg(count(lit(1)).as("n_docs"))
-      .orderBy(col("source"), col("split"))
 
   // ---- token-budget selection ------------------------------------------------
 
@@ -101,7 +100,6 @@ object Extensions11 {
         budgetTokens = 12000L, nShards = 4)
       .select(col("doc_id"), col("shard"), col("score"),
         col("n_tokens"), col("cum_before"), col("selected"))
-      .orderBy(col("doc_id"))
   }
 
   val entries: Seq[Entry] = Seq(

@@ -70,7 +70,6 @@ object Extensions110 {
   def x251QueryExpansion(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.load(s, dir, "documents")
     queryExpansionTerms(d, d.filter(col("doc_id") < 5), "doc_id", "text")
-      .orderBy(col("q_id"), col("rk"))
   }
 
   private val x251OracleSql: String = """
@@ -160,7 +159,6 @@ object Extensions110 {
     val hits = Extensions4.bm25TopK(d, q, "doc_id", "text", k = 1)
       .select(col("q_id"), col("c_id"))
     snippets(d, hits, q, "doc_id", "text")
-      .orderBy(col("q_id"), col("c_id"))
   }
 
   private val x252OracleSql: String = """

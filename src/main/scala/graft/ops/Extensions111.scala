@@ -142,7 +142,6 @@ object Extensions111 {
   def x253PrefixFilterPairs(s: SparkSession, dir: String): DataFrame =
     prefixFilterJaccardPairs(Tables.load(s, dir, "documents"), "doc_id", "text",
         1L, 2L, shingleSize = 5)
-      .orderBy(col("doc_a"), col("doc_b"))
 
   /** The oracle replays the FULL inverted-index pair join (no prefix
     * pruning) with the same integer threshold — prefix filtering is
@@ -219,7 +218,6 @@ object Extensions111 {
   def x254DirichletQl(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.load(s, dir, "documents")
     dirichletQueryLikelihood(d, d.filter(col("doc_id") < 5), "doc_id", "text", k = 3)
-      .orderBy(col("q_id"), col("rk"))
   }
 
   private val x254OracleSql: String = """

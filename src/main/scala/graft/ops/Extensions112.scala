@@ -215,7 +215,6 @@ object Extensions112 {
   def x255LinkageEm(s: SparkSession, dir: String): DataFrame =
     fellegiSunterLinkage(documentPairs(s, dir),
         Seq("a_mh", "a_f3", "a_len"), iters = 10)
-      .orderBy(col("pattern"))
 
   /** The unrolled-EM oracle chain over the 2^k-row pattern table,
     * HUGEINT throughout (the x94 generated-SQL + x215 overflow
@@ -365,7 +364,6 @@ object Extensions112 {
   /** x256: [[knBigramScore]] over the documents fixture. */
   def x256KneserNey(s: SparkSession, dir: String): DataFrame =
     knBigramScore(Tables.load(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   private val x256OracleSql: String = """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
@@ -431,7 +429,6 @@ object Extensions112 {
     jaroWinklerPairs(Tables.load(s, dir, "part")
         .withColumn("blk", concat_ws("|", col("p_brand"), col("p_type"))),
         "p_partkey", "p_name", "blk", 0.9)
-      .orderBy(col("id_a"), col("id_b"))
 
   /** DuckDB ships the same canonical comparator — the oracle is a
     * direct replay (semantics probe-verified: 0.7 boost gate, window,

@@ -96,7 +96,6 @@ object Extensions113 {
   def x258SeqPatterns(s: SparkSession, dir: String): DataFrame =
     seqPatternSupport(Tables.load(s, dir, "events"),
         "user_id", "event_type", "ts", 3L, 5L)
-      .orderBy(col("len"), col("support").desc, col("pattern"))
 
   private val x258OracleSql: String = """
       WITH occ AS (SELECT user_id AS u, event_type AS t, epoch_us(ts) AS us
@@ -185,7 +184,6 @@ object Extensions113 {
   def x259WassersteinMatrix(s: SparkSession, dir: String): DataFrame =
     wasserstein1Matrix(Tables.load(s, dir, "documents"),
         "source", "n_chars", binWidth = 32L)
-      .orderBy(col("g_a"), col("g_b"))
 
   private val x259OracleSql: String = """
       WITH h AS (SELECT source AS g, n_chars // 32 AS b, count(*) AS c

@@ -107,7 +107,6 @@ object Extensions114 {
         floor(col("n_err") * 4 / col("n_ev")).as("err_bucket"))
     cemAtt(units, "treated", "spend_cents",
         Seq("activity_bucket", "err_bucket"))
-      .orderBy(col("activity_bucket"), col("err_bucket"))
   }
 
   private val x260OracleSql: String = """
@@ -186,7 +185,6 @@ object Extensions114 {
         (col("l_orderkey") * 10 + col("l_linenumber")).as("id"),
         round(col("l_extendedprice") * 100, 0).cast("long").as("score")),
       "g", "id", "score", k = 3)
-      .orderBy(col("g"), col("rk"))
 
   private val x261OracleSql: String = """
       SELECT g, id, score, CAST(rk AS BIGINT) AS rk FROM (

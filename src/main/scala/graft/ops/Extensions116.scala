@@ -223,7 +223,6 @@ object Extensions116 {
   /** x264: the trained-vocab fertility card over the fixture docs. */
   def x264UnigramFertility(s: SparkSession, dir: String): DataFrame =
     unigramFertility(Tables.load(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   private[ops] def pathRound(i: Int, pieceTable: String): String = s"""
     seg$i AS (

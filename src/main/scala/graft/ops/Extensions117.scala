@@ -117,7 +117,6 @@ object Extensions117 {
         carryCols = Seq("text", "lang"))
       .select(col("doc_id"), col("text"), col("lang"), col("keep"))
     dataValuation(labeled, "doc_id", "text", "keep", "lang")
-      .orderBy(col("grp"))
   }
 
   /** One unrolled training chain over the shared feature table, CTE

@@ -62,7 +62,6 @@ object Extensions119 {
   def x269FertilityPruned(s: SparkSession, dir: String): DataFrame =
     Extensions116.unigramFertility(Tables.load(s, dir, "documents"),
       "doc_id", "text", iters = 3, keepPermille = Permille)
-      .orderBy(col("doc_id"))
 
   private val x268OracleSql: String =
     Extensions116.oracleHead + "," +

@@ -74,7 +74,6 @@ object Extensions12 {
     rrfFuse(Seq(
         bm25.select(col("q_id"), col("c_id"), col("rk")),
         cosine.select(col("q_id"), col("c_id"), col("rk"))), k = 5)
-      .orderBy(col("q_id"), col("rk"))
   }
 
   // ---- ranking agreement (average overlap) -----------------------------------
@@ -139,7 +138,6 @@ object Extensions12 {
     rankingAgreement(
         ann.select(col("q_id"), col("c_id"), col("rk")),
         brute.select(col("q_id"), col("c_id"), col("rk")), k = 5)
-      .orderBy(col("q_id"))
   }
 
   val entries: Seq[Entry] = Seq(

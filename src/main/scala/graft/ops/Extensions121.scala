@@ -86,7 +86,6 @@ object Extensions121 {
   /** x271: winnowed overlap pairs on the documents fixture. */
   def x271Winnowing(s: SparkSession, dir: String): DataFrame =
     winnowingPairs(Tables.load(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_a"), col("doc_b"))
 
   private val x271OracleSql: String = """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks
@@ -116,7 +115,7 @@ object Extensions121 {
 
   /** Per-source mixing card for a target corpus of `totalTarget` docs
     * at sqrt temperature: (source, n_docs, weight, quota, n_selected,
-    * sel_docid_sum), ordered by source. `weight = floor(sqrt(n_s))`
+    * sel_docid_sum). `weight = floor(sqrt(n_s))`
     * (integer — both engines evaluate the same IEEE sqrt on the same
     * integer, so the floor agrees bit-for-bit); quotas apportion
     * `totalTarget` by largest remainder (exact integers, ties by
@@ -177,7 +176,6 @@ object Extensions121 {
       .select(col("source"), col("n_docs"), col("weight"), col("quota"),
         coalesce(col("n_selected"), lit(0L)).as("n_selected"),
         coalesce(col("sel_docid_sum"), lit(0L)).as("sel_docid_sum"))
-      .orderBy(col("source"))
   }
 
   /** x272: mix the documents fixture to 300 docs at sqrt temperature. */

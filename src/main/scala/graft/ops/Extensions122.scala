@@ -95,7 +95,6 @@ object Extensions122 {
   def x273BootstrapCi(s: SparkSession, dir: String): DataFrame =
     bootstrapMeanCi(Tables.load(s, dir, "orders"),
       "o_orderpriority", "o_totalprice", "o_orderkey")
-      .orderBy(col("grp"))
 
   private val x273OracleSql: String = s"""
       WITH base AS (

@@ -26,7 +26,7 @@ object Extensions124 {
 
   /** Per-bucket WoE card over a 0/1 label: (bucket, n_pos, n_neg,
     * woe_micro, iv_term_micro) + the total IV repeated per row
-    * (iv_micro), ordered by bucket.
+    * (iv_micro).
     */
   def woeIvCard(
       rel: DataFrame, bucketCol: String, labelCol: String): DataFrame = {
@@ -53,7 +53,6 @@ object Extensions124 {
     withTot.crossJoin(broadcast(iv))
       .select(col("bucket"), col("n_pos"), col("n_neg"),
         col("woe_micro"), col("iv_term_micro"), col("iv_micro"))
-      .orderBy(col("bucket"))
   }
 
   /** x275: does document length predict the Gopher keep label? Length

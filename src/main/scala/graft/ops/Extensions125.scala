@@ -74,7 +74,6 @@ object Extensions125 {
         StructField("brier_micro", LongType, nullable = false),
         StructField("mean_brier_micro", LongType, nullable = false),
         StructField("range_micro", LongType, nullable = false))))
-      .orderBy(col("fold"))
   }
 
   /** x276: 5-fold CV of the x94 quality classifier on the Gopher

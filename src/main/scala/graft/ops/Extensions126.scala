@@ -58,7 +58,6 @@ object Extensions126 {
         sum(round(col("value") * 100).cast("long")).as("sum_cents"),
         sum(col("event_id")).as("sum_ids"),
         max(unix_micros(col("ts"))).as("last_us"))
-      .orderBy(col("event_type"))
   }
 
   /** x277: the fixture events table through XML and back. */

@@ -50,7 +50,6 @@ object Extensions127 {
         sum(round(col("value") * 100).cast("long")).as("sum_cents"),
         sum(col("event_id")).as("sum_ids"),
         max(unix_micros(col("ts"))).as("last_us"))
-      .orderBy(col("event_type"))
   }
 
   /** x278: the fixture events table through ORC and back. */

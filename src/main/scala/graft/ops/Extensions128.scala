@@ -110,7 +110,6 @@ object Extensions128 {
 
   def x280StripFidelity(s: SparkSession, dir: String): DataFrame =
     stripFidelityCard(Tables.load(s, dir, "documents"), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   private val x280OracleSql: String = s"""
       WITH cleaned AS (${Extensions16.x68OracleSql}),
@@ -211,7 +210,6 @@ object Extensions128 {
       .join(Tables.load(s, dir, "lineitem"), col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("cust"), col("l_suppkey").as("supp"))
     linkPredictionScores(cs, "cust", "supp", minCommon = 3L)
-      .orderBy(col("sa"), col("sb"))
   }
 
   private val x281OracleSql: String = """
@@ -280,7 +278,6 @@ object Extensions128 {
 
   def x282PhoneticBlocking(s: SparkSession, dir: String): DataFrame =
     phoneticBlockingCard(Tables.load(s, dir, "part"), "p_name")
-      .orderBy(col("pkey"))
 
   private val x282OracleSql: String = """
       WITH names AS (

@@ -228,7 +228,6 @@ object Extensions129 {
         when(col("node") >= 10000000L, col("node") - 10000000L).otherwise(col("node"))
           .as("node_id"),
         col("n_reached"), col("harmonic_micro"))
-      .orderBy(col("node_type"), col("node_id"))
   }
 
   private val x285OracleSql: String = """

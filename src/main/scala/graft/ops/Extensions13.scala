@@ -63,7 +63,6 @@ object Extensions13 {
           concat(col("text"), lit(" perturbed"))).otherwise(col("text")))
     val next = base.filter(pmod(col("doc_id"), lit(11L)) =!= 0L)
     corpusDiff(prev, next, "doc_id", "text")
-      .orderBy(col("change"))
   }
 
   // ---- Zipf rank-frequency fit -----------------------------------------------

@@ -106,7 +106,6 @@ object Extensions130 {
       .select(col("id").as("vec_id"),
         coalesce(col("role"), lit("noise")).as("role"),
         coalesce(col("cluster"), lit(-1L)).as("cluster"))
-      .orderBy(col("vec_id"))
   }
 
   def x288Dbscan(s: SparkSession, dir: String): DataFrame =
@@ -254,7 +253,6 @@ object Extensions130 {
       .select(col("id").as("vec_id"),
         coalesce(col("in_deg"), lit(0L)).as("in_deg"),
         coalesce(col("n_mutual"), lit(0L)).as("n_mutual"))
-      .orderBy(col("vec_id"))
   }
 
   def x290KnnHubness(s: SparkSession, dir: String): DataFrame =
@@ -314,7 +312,6 @@ object Extensions130 {
         expr("((n * 10000 * 2 + tot) DIV (2 * tot)) / 10000.0D").as("share"),
         round(log(10.0, lit(1.0) + lit(1.0) / col("digit")), 4)
           .as("benford"))
-      .orderBy(col("event_type"), col("digit"))
   }
 
   def x291Benford(s: SparkSession, dir: String): DataFrame =
@@ -385,7 +382,6 @@ object Extensions130 {
       .join(overlap, Seq("id"), "left_outer")
       .select(col("id").as("vec_id"),
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"))
-      .orderBy(col("vec_id"))
   }
 
   def x292Matryoshka(s: SparkSession, dir: String): DataFrame =

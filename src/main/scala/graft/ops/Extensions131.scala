@@ -65,7 +65,6 @@ object Extensions131 {
       .withColumn("keep", row_number().over(w) === 1)
       .select(col("doc_id"), col("component"), col("src_rank"), col("sz"),
         col("keep"))
-      .orderBy(col("doc_id"))
   }
 
   /** x293: representatives of the fixture's 0.5-Jaccard clusters —
@@ -153,7 +152,6 @@ object Extensions131 {
       .join(g.select(col("rn").as("gidx"), col("score").as("norm_score")),
         Seq("gidx"))
       .select(col("id"), col("grp"), col("score"), col("norm_score"))
-      .orderBy(col("id"))
   }
 
   /** x294: document length (n_chars) normalized across the 20 sources —
@@ -217,7 +215,6 @@ object Extensions131 {
       .agg(max(col("l")).as("n_cp"), sum(col("term")).as("ts"))
       .select(col("doc_id"), col("n_cp"),
         expr("(ts * 2 + n_cp) DIV (2 * n_cp)").as("entropy_micro"))
-      .orderBy(col("doc_id"))
   }
 
   def x295CharEntropy(s: SparkSession, dir: String): DataFrame =

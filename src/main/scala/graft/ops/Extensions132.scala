@@ -252,7 +252,6 @@ object Extensions132 {
       .filter(col("me_micro") >= thresholdMicro)
       .select(col("id_a"), col("id_b"), col("me_ab_micro"),
         col("me_ba_micro"), col("me_micro"))
-      .orderBy(col("id_a"), col("id_b"))
   }
 
   /** x297: fuzzy part-name pairs within the x257 (brand, type) block at

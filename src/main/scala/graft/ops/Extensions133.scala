@@ -110,7 +110,6 @@ object Extensions133 {
       .select(col("k"), col("n_tasks"),
         expr("CAST((s * 2 + n_tasks) DIV (2 * n_tasks) AS BIGINT)")
           .as("mean_pass_at_k_micro"))
-      .orderBy(col("k"))
   }
 
   /** x298: pass@k ∈ {1,2,4,8} over a deterministic 8-attempt eval

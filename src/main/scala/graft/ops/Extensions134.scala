@@ -109,7 +109,6 @@ object Extensions134 {
       .select(col("k"), col("n_tasks"),
         expr("CAST((s * 2 + n_tasks) DIV (2 * n_tasks) AS BIGINT)")
           .as("mean_maj_at_k_micro"))
-      .orderBy(col("k"))
   }
 
   /** x301: maj@k ∈ {1,3,5} on the x298 attempt fixture — the pass@k
@@ -218,7 +217,6 @@ object Extensions134 {
       .select(col("k"), col("n_tasks"),
         expr("CAST((s * 2 + n_tasks) DIV (2 * n_tasks) AS BIGINT)")
           .as("mean_best_of_k_micro"))
-      .orderBy(col("k"))
   }
 
   /** x302: best-of-k ∈ {1,2,4,8} over md5 micro-rewards on the x298
@@ -276,8 +274,7 @@ object Extensions134 {
     *   hard_to_learn  conf ≤ 350000 and var ≤ stdThreshMicro²
     *   ambiguous      var > stdThreshMicro²
     *   middling       the rest
-    * Output: (region, n_docs, mean_conf_micro, mean_var_micro2),
-    * ordered by region.
+    * Output: (region, n_docs, mean_conf_micro, mean_var_micro2).
     *
     * Scale: `iters` map+agg training passes (the chain itself), then
     * ONE corpus scan scoring all checkpoints per row (the weight
@@ -319,7 +316,6 @@ object Extensions134 {
           .as("mean_conf_micro"),
         expr("CAST((sv * 2 + n_docs) DIV (2 * n_docs) AS BIGINT)")
           .as("mean_var_micro2"))
-      .orderBy(col("region"))
   }
 
   /** x303: the dataset map of the x94 world — Gopher keep as the label,

@@ -117,7 +117,6 @@ object Extensions135 {
         when(col("node") >= 10000000L, col("node") - 10000000L).otherwise(col("node"))
           .as("node_id"),
         col("katz_micro"))
-      .orderBy(col("node_type"), col("node_id"))
   }
 
   private val x304OracleSql: String = {
@@ -154,7 +153,7 @@ object Extensions135 {
     * shortest-path counts σ (DECIMAL); backward,
     * δ(v) = Σ_{w: v ∈ pred(w)} halfup(σ_v·(10^6+δ_w), σ_w), each term
     * quantized before the sum. Returns (node, bc_micro = Σ_pivots δ)
-    * for nodes with positive dependency, ordered by node.
+    * for nodes with positive dependency.
     */
   def pivotBetweenness(
       edges: DataFrame, srcCol: String, dstCol: String,
@@ -214,7 +213,6 @@ object Extensions135 {
     bc.groupBy(col("node"))
       .agg(sum(col("delta")).as("bc_micro"))
       .filter(col("bc_micro") > 0L)
-      .orderBy(col("node"))
   }
 
   /** x305: sampled betweenness of the purchase graph (4 pivots, 4
@@ -232,7 +230,6 @@ object Extensions135 {
         when(col("node") >= 10000000L, col("node") - 10000000L).otherwise(col("node"))
           .as("node_id"),
         col("bc_micro"))
-      .orderBy(col("node_type"), col("node_id"))
   }
 
   private val x305OracleSql: String = {
@@ -331,7 +328,6 @@ object Extensions135 {
         (col("share_micro") >= 900000L &&
           coalesce(col("prev_share") < 900000L, lit(true)))
           .as("is_effective_diameter"))
-      .orderBy(col("h"))
   }
 
   /** x306: the distance distribution of the purchase graph from the

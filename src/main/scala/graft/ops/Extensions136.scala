@@ -52,7 +52,6 @@ object Extensions136 {
       .filter(col("rk") <= topK)
       .select(col("q_id"), col("c_id"), col("rrf_micro"),
         col("rk").cast("long").as("rk"))
-      .orderBy(col("q_id"), col("rk"))
   }
 
   /** x307: BM25 ⊕ 3-gram-Jaccard retrieval fused at k₀ = 60 — the

@@ -251,7 +251,6 @@ object Extensions137 {
     (raterCols.zip(alphas.zip(betas)).map { case (c, (al, be)) => (c, al, be) }
       :+ (("_prior", prior, 1000000L - prior)))
       .toDF("rater", "alpha_micro", "beta_micro")
-      .orderBy(col("rater"))
   }
 
   /** x311: three deterministic heuristic raters of document quality
@@ -386,7 +385,6 @@ object Extensions137 {
     ringCard.unionAll(modCard)
       .withColumn("moved_share_micro",
         expr("(1000000 * moved * 2 + n_keys) DIV (2 * n_keys)"))
-      .orderBy(col("scheme"))
   }
 
   /** x312: document ids through a 4→5 shard resize, 32 vnodes. */

@@ -74,7 +74,6 @@ object Extensions138 {
       (f.toLong, trained.ns(i), b)
     }
     rows.toDF("frac_permille", "n_train", "brier_micro")
-      .orderBy(col("frac_permille"))
   }
 
   /** x313: the x94/x265 world's sample-efficiency curve — Gopher keep

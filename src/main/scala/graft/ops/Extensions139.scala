@@ -60,7 +60,6 @@ object Extensions139 {
       .select(col("doc_id"), col("n_tok"),
         expr("CAST((aggregate(slice(ss, 1, CAST(k AS INT)), 0L, (a, b) -> a + b)" +
           " * 2 + k) DIV (2 * k) AS BIGINT)").as("mink_micro"))
-      .orderBy(col("doc_id"))
   }
 
   /** x316: the documents table under its own unigram model — the

@@ -95,7 +95,6 @@ object Extensions14 {
     */
   def x66Datasheet(s: SparkSession, dir: String): DataFrame =
     datasheet(docs(s, dir), "text", "source", "lang")
-      .orderBy(col("metric"))
 
   val entries: Seq[Entry] = Seq(
     Entry("x66_datasheet", x66Datasheet _, """

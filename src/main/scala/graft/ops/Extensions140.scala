@@ -126,8 +126,8 @@ object Extensions140 {
 
   /** Edge-support peel: drop edges in fewer than k−2 triangles,
     * `iters` rounds (converged when no edge drops). Returns the
-    * surviving edges with their final support: (a, b, support),
-    * ordered. The x122 k-core loop with EDGE state — per round one
+    * surviving edges with their final support: (a, b, support).
+    * The x122 k-core loop with EDGE state — per round one
     * triangle-support join + one filter, survivors materialized.
     */
   def kTruss(
@@ -155,7 +155,6 @@ object Extensions140 {
     e.join(support(e), Seq("a", "b"), "left_outer")
       .select(col("a"), col("b"),
         coalesce(col("support"), lit(0L)).as("support"))
-      .orderBy(col("a"), col("b"))
   }
 
   /** x319: the 4-truss of the x99/x122 co-purchase backbone — edges in

@@ -276,7 +276,6 @@ object Extensions142 {
       .agg(count(lit(1)).as("n_touches"),
         sum(col("linear").cast("decimal(38,0)")).cast("long").as("linear_micro"),
         sum(col("last").cast("decimal(38,0)")).cast("long").as("last_micro"))
-      .orderBy(col("event_type"))
   }
 
   /** x325: purchases attributed over the other event types, 7-day

@@ -244,7 +244,6 @@ object Extensions143 {
       .withColumn("ws", sum(col("s")).over(wBurst))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tok"), max(col("ws")).as("burst_micro"))
-      .orderBy(col("doc_id"))
   }
 
   /** x327: 20-token bursts over the documents table. */

@@ -57,7 +57,6 @@ object Extensions144 {
           (p.cast("decimal(38,0)") * m * 1000L) <=
             (lit(alphaPermille.toLong).cast("decimal(38,0)") * rk * 1000000L))
       .select(col("metric_id"), col("p_micro"), col("rk"), col("rejected"))
-      .orderBy(col("rk"))
   }
 
   /** x328: 600 synthetic per-document metrics with md5-manufactured

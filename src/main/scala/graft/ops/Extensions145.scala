@@ -186,7 +186,6 @@ object Extensions145 {
     else matched
     out.select(col("l").as("left_id"), col("r").as("right_id"),
         col("s").as("score"), col("matched_round"))
-      .orderBy(col("left_id"), col("right_id"))
   }
 
   /** x331: a blocked synthetic candidate table (left docs 0–99, right

@@ -32,22 +32,6 @@ object Extensions146 {
     */
   def weightedJaccardPairs(
       corpus: DataFrame, idCol: String, textCol: String,
-      threshold: Double = 0.5, dfCap: Int = 20): DataFrame =
-    // r15: checkpoint the (small) thresholded pair set BEFORE the global
-    // orderBy — the range exchange samples its child, so an un-barriered
-    // sort re-runs the seeds/cands/Σmin tail a second time (the tf and
-    // shingle tables are checkpointed inside, but everything after them
-    // was not; x89 measured the same pattern at ~2× the tail).
-    Extensions.materialized(
-      weightedJaccardPairsRaw(corpus, idCol, textCol, threshold, dfCap))
-      .orderBy(col("doc_a"), col("doc_b"))
-
-  /** The pair pipeline itself, pre-barrier and unsorted — exposed so the
-    * plan-shape spec can inspect the seed-join machinery (the entry's
-    * checkpoint truncates the final frame's plan to Scan ExistingRDD).
-    */
-  private[graft] def weightedJaccardPairsRaw(
-      corpus: DataFrame, idCol: String, textCol: String,
       threshold: Double = 0.5, dfCap: Int = 20): DataFrame = {
     require(dfCap >= 2, "weightedJaccardPairs: dfCap must be >= 2")
     require(threshold > 0.0 && threshold <= 1.0,
@@ -198,7 +182,6 @@ object Extensions146 {
       .select(col("doc_id"), col("chunk_idx"),
         col("start0").as("start_tok"),
         col("n_toks").as("n_chunk_tokens"), col("chunk_text"))
-      .orderBy(col("doc_id"), col("chunk_idx"))
   }
 
   /** x333: the documents table chunked at 128 tokens, 32 overlap. */

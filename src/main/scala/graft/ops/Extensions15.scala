@@ -98,15 +98,10 @@ object Extensions15 {
     */
   def x67SignatureDedup(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    // r15: barrier the (one row per batch doc) verdict before the global
-    // sort — the range exchange samples its child, so an un-barriered
-    // orderBy re-runs both minhash pipelines + band join + verdict a
-    // second time (the x89 pattern).
-    Extensions.materialized(incrementalSignatureDedup(
-        minhashSignatures(d.filter(col("doc_id") < 450), "doc_id", "text"),
-        minhashSignatures(d.filter(col("doc_id") >= 450), "doc_id", "text"),
-        threshold = 0.5))
-      .orderBy(col("b_id"))
+    incrementalSignatureDedup(
+      minhashSignatures(d.filter(col("doc_id") < 450), "doc_id", "text"),
+      minhashSignatures(d.filter(col("doc_id") >= 450), "doc_id", "text"),
+      threshold = 0.5)
   }
 
   /** DuckDB replay: identical signature, band, and estimate arithmetic
@@ -166,12 +161,9 @@ object Extensions15 {
     val d = docs(s, dir)
     val path = FixtureCache.store(s, dir, "documents", "x76-sigstore")(SignatureStore.write(
       minhashSignatures(d.filter(col("doc_id") < 450), "doc_id", "text"), _))
-    // r15: same barrier-before-sort as x67 (range sampling would re-run
-    // the pruned store read + verdict window a second time)
-    Extensions.materialized(SignatureStore.dedupAgainstStore(s, path,
-        minhashSignatures(d.filter(col("doc_id") >= 450), "doc_id", "text"),
-        threshold = 0.5))
-      .orderBy(col("b_id"))
+    SignatureStore.dedupAgainstStore(s, path,
+      minhashSignatures(d.filter(col("doc_id") >= 450), "doc_id", "text"),
+      threshold = 0.5)
   }
 
   val entries: Seq[Entry] = Seq(

@@ -145,7 +145,6 @@ object Extensions16 {
     */
   def x68StripDupSpans(s: SparkSession, dir: String): DataFrame =
     stripDuplicateSpans(docs(s, dir), "doc_id", "text", n = 5)
-      .orderBy(col("doc_id"))
 
   private[ops] val x68OracleSql: String = {
     val n = 5
@@ -266,7 +265,6 @@ object Extensions16 {
   def x69BpeMerges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     fixtureMerges(s, dir).toDF("rank", "left", "right", "pair_n")
-      .orderBy(col("rank"))
   }
 
   /** The DuckDB replay of [[trainBpe]]'s merge loop, generated for a
@@ -359,7 +357,7 @@ object Extensions16 {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= AnnK)
       .select(col("q_id"), col("c_id"))
-    Extensions4.recallAtK(ann, truth).orderBy(col("q_id"))
+    Extensions4.recallAtK(ann, truth)
   }
 
   private val x70OracleSql: String = {

@@ -86,7 +86,6 @@ object Extensions17 {
   /** x71: [[importanceWeights]] with lang = 'en' as the target domain. */
   def x71ImportanceWeights(s: SparkSession, dir: String): DataFrame =
     importanceWeights(docs(s, dir), "doc_id", "text", col("lang") === "en")
-      .orderBy(col("doc_id"))
 
   private val x71OracleSql: String = {
     val b = 4096
@@ -149,7 +148,6 @@ object Extensions17 {
     resolveDuplicates(docs(s, dir), "doc_id", "n_chars",
         Extensions.x02JaccardPairs(s, dir).select(col("doc_a"), col("doc_b")),
         "doc_a", "doc_b")
-      .orderBy(col("doc_id"))
 
   /** DuckDB replay: the x18 recursive-CTE components + quality window. */
   private val x72OracleSql: String = """
@@ -231,7 +229,6 @@ object Extensions17 {
     val d = docs(s, dir)
     val merges = Extensions16.fixtureMerges(s, dir).map(m => (m._2, m._3))
     applyBpe(d, "doc_id", "text", merges)
-      .orderBy(col("doc_id"))
   }
 
   private val x73OracleSql: String = Extensions16.bpeOracleChain(12) + """,

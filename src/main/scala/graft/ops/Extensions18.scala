@@ -56,7 +56,6 @@ object Extensions18 {
   /** x74: [[perplexityBuckets]] over the documents fixture. */
   def x74PerplexityBuckets(s: SparkSession, dir: String): DataFrame =
     perplexityBuckets(docs(s, dir), "doc_id", "text", "lang")
-      .orderBy(col("doc_id"))
 
   private val x74OracleSql: String = """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
@@ -118,7 +117,6 @@ object Extensions18 {
     epochUpsample(docs(s, dir), "doc_id", "source",
         Map("src0" -> 3, "src1" -> 2))
       .select(col("doc_id"), col("source"), col("epoch"), col("ord_key"))
-      .orderBy(col("doc_id"), col("epoch"))
 
   private val x75OracleSql: String = """
       WITH e AS (SELECT doc_id, source,

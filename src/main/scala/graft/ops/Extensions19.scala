@@ -52,14 +52,8 @@ object Extensions19 {
     */
   def x77Decontaminate(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    // r15: barrier-before-sort TRIED and REVERTED (3.0 → 4.2 s): the sort
-    // child here sits just above the window's own exchange, so AQE's range
-    // sampling re-reads materialized shuffle output rather than re-running
-    // the pipeline — the checkpoint only added a job (unlike x89, whose
-    // sort child had an expensive map-only lineage).
     decontaminate(d.filter(col("doc_id") >= 50), d.filter(col("doc_id") < 50),
         "doc_id", "text", minOverlap = 0.3)
-      .orderBy(col("doc_id"))
   }
 
   private val x77OracleSql: String = """
@@ -121,7 +115,6 @@ object Extensions19 {
     clusterSafeSplit(docs(s, dir), "doc_id",
         Extensions.x02JaccardPairs(s, dir).select(col("doc_a"), col("doc_b")),
         "doc_a", "doc_b")
-      .orderBy(col("doc_id"))
 
   private val x78OracleSql: String = """
       WITH RECURSIVE

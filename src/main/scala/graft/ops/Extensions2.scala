@@ -111,7 +111,6 @@ object Extensions2 {
       .select(col("vec_id").as("cell"), col("embedding").as("cvec"))
     ivfTopK(base, base.filter(col("vec_id") < 10), cents,
         "vec_id", "embedding", k = AnnK, probes = IvfProbes)
-      .orderBy(col("q_id"), col("rk"))
   }
 
   // ---- X17: deterministic stratified sampling ------------------------------
@@ -140,7 +139,6 @@ object Extensions2 {
     stratifiedSample(docs(s, dir), "lang", "doc_id",
         rates = Map("en" -> 0.2), default = 0.5)
       .select(col("doc_id"), col("lang"), col("source"))
-      .orderBy(col("doc_id"))
 
   // ---- X18: near-dup clusters (connected components) -----------------------
 
@@ -245,7 +243,6 @@ object Extensions2 {
     connectedComponents(
         Extensions.x02JaccardPairs(s, dir).select(col("doc_a"), col("doc_b")),
         "doc_a", "doc_b")
-      .orderBy(col("doc_id"))
 
   // ---- X20: train/eval contamination check ---------------------------------
 
@@ -283,13 +280,9 @@ object Extensions2 {
 
   def x20Contamination(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    // r15: barrier-before-sort TRIED and REVERTED (2.7 → 3.5 s): the sort
-    // child is the window's post-exchange tail, so AQE's range sampling
-    // re-reads shuffle output — the checkpoint was pure overhead here.
     contaminationPairs(
         d.filter(col("doc_id") >= 50), d.filter(col("doc_id") < 50),
         "doc_id", "text", minOverlap = 0.3)
-      .orderBy(col("train_id"))
   }
 
   // ---- X21: vocabulary masking ---------------------------------------------
@@ -306,7 +299,6 @@ object Extensions2 {
         regexp_count(col("text"), lit(pattern)).cast("long").as("n_masked"),
         length(regexp_replace(col("text"), pattern, "<MASK>")).cast("long").as("masked_len"),
         substring(regexp_replace(col("text"), pattern, "<MASK>"), 1, 40).as("masked_head"))
-      .orderBy(col("doc_id"))
   }
 
   // ---- X19: approximate quantiles (KLL-style sketch vs exact) --------------
@@ -328,7 +320,6 @@ object Extensions2 {
         col("exact_median"),
         (abs(col("am") - col("exact_median")) <=
           greatest(col("exact_median") * 0.02, lit(0.5))).as("approx_ok"))
-      .orderBy(col("event_type"))
 
   // ---- registry ------------------------------------------------------------
 

@@ -77,7 +77,6 @@ object Extensions20 {
     */
   def x79WaterfillBudget(s: SparkSession, dir: String): DataFrame =
     waterfillBudget(docs(s, dir), "source", "text", budgetFrac = 0.9)
-      .orderBy(col("source"))
 
   private val x79OracleSql: String = """
       WITH m AS (SELECT source, CAST(sum(len(string_split(lower(text), ' '))) AS BIGINT) AS n_tokens
@@ -156,7 +155,6 @@ object Extensions20 {
   /** x80: [[gopherRuleCard]] over the documents fixture. */
   def x80GopherRuleCard(s: SparkSession, dir: String): DataFrame =
     gopherRuleCard(docs(s, dir), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   private val x80OracleSql: String = """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),
@@ -223,7 +221,6 @@ object Extensions20 {
   def x81PackingCurve(s: SparkSession, dir: String): DataFrame =
     packingCurve(docs(s, dir), "lang", "doc_id", "text",
         budgets = Seq(128, 256, 512, 1024))
-      .orderBy(col("ctx"))
 
   private val x81OracleSql: String = """
       WITH d AS (SELECT doc_id, lang AS shard,

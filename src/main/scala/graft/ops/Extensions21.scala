@@ -78,7 +78,6 @@ object Extensions21 {
     */
   def x82PhraseSearch(s: SparkSession, dir: String): DataFrame =
     phraseSearch(docs(s, dir), "doc_id", "text", "batch batch batch")
-      .orderBy(col("doc_id"))
 
   private val x82OracleSql: String = """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS tk FROM documents),

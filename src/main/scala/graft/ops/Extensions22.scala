@@ -79,7 +79,6 @@ object Extensions22 {
     */
   def x83CountMin(s: SparkSession, dir: String): DataFrame =
     countMinHeavyHitters(docs(s, dir), "text")
-      .orderBy(col("true_count").desc, col("tok"))
 
   private val x83OracleSql: String = """
       WITH t AS (SELECT unnest(string_split(lower(text), ' ')) AS tok FROM documents),
@@ -127,7 +126,6 @@ object Extensions22 {
   /** x84: [[weightedPrioritySample]] of 50 docs by n_chars weight. */
   def x84WeightedSample(s: SparkSession, dir: String): DataFrame =
     weightedPrioritySample(docs(s, dir), "doc_id", "n_chars", k = 50)
-      .orderBy(col("priority").desc, col("doc_id"))
 
   private val x84OracleSql: String = """
       WITH p AS (SELECT doc_id,

@@ -86,7 +86,6 @@ object Extensions23 {
   def x85Funnel(s: SparkSession, dir: String): DataFrame =
     orderedFunnel(events(s, dir), "user_id", "event_type", "ts",
       Seq("view", "click", "purchase"), stepWindowUs = 24L * 3600 * 1000000)
-      .orderBy(col("user_id"))
 
   private val x85OracleSql: String = """
       WITH w1 AS (
@@ -141,7 +140,6 @@ object Extensions23 {
   /** x86: [[cohortRetention]] on purchase events. */
   def x86CohortRetention(s: SparkSession, dir: String): DataFrame =
     cohortRetention(events(s, dir), "user_id", "event_type", "ts", "purchase")
-      .orderBy(col("cohort_day"), col("day_offset"))
 
   private val x86OracleSql: String = """
       WITH conv AS (
@@ -182,7 +180,6 @@ object Extensions23 {
   /** x87: [[markovTransitions]] over the events fixture. */
   def x87MarkovTransitions(s: SparkSession, dir: String): DataFrame =
     markovTransitions(events(s, dir), "user_id", "event_type", "ts", "event_id")
-      .orderBy(col("from_type"), col("to_type"))
 
   private val x87OracleSql: String = """
       WITH p AS (

@@ -73,7 +73,6 @@ object Extensions24 {
   /** x88: [[rfmSegments]] on purchase events. */
   def x88RfmSegments(s: SparkSession, dir: String): DataFrame =
     rfmSegments(events(s, dir), "user_id", "event_type", "ts", "value", "purchase")
-      .orderBy(col("user_id"))
 
   private val x88OracleSql: String = """
       WITH p AS (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase'),
@@ -171,16 +170,7 @@ object Extensions24 {
     * fixture: zero-padded ids make single-digit-substitution pairs).
     */
   def x89EditDistanceJoin(s: SparkSession, dir: String): DataFrame =
-    // r15: checkpoint the (small) verified pair set BEFORE the global
-    // orderBy — the range exchange SAMPLES its child, so an un-barriered
-    // sort re-runs the whole candidates+levenshtein pipeline a second
-    // time (measured: lev+filter 4.6 s, +sort 8.2 s over the same
-    // checkpointed candidates). The r14 note rejected a barrier at the
-    // 956k-row CANDIDATE stage (11.3 s — too big to checkpoint); the
-    // barrier belongs after the verify, where rows are ~10³.
-    Extensions.materialized(
-        editDistance1Pairs(Tables.load(s, dir, "customer"), "c_name"))
-      .orderBy(col("name_a"), col("name_b"))
+    editDistance1Pairs(Tables.load(s, dir, "customer"), "c_name")
 
   // Oracle is the brute-force N² form — the semantic ground truth the
   // blocked join must reproduce exactly.

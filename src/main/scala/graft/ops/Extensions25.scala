@@ -63,7 +63,6 @@ object Extensions25 {
   /** x91: [[timelineSurprisal]] over the events fixture. */
   def x91TimelineSurprisal(s: SparkSession, dir: String): DataFrame =
     timelineSurprisal(events(s, dir), "user_id", "event_type", "ts", "event_id")
-      .orderBy(col("user_id"))
 
   private val x91OracleSql: String = """
       WITH pairs AS (
@@ -110,7 +109,6 @@ object Extensions25 {
   /** x92: [[scd2History]] of event_type per user. */
   def x92Scd2History(s: SparkSession, dir: String): DataFrame =
     scd2History(events(s, dir), "user_id", "event_type", "ts", "event_id")
-      .orderBy(col("user_id"), col("valid_from"))
 
   private val x92OracleSql: String = """
       WITH marked AS (
@@ -178,7 +176,7 @@ object Extensions25 {
       .withColumn("n_chars",
         when(pmod(col("doc_id"), lit(5L)) === 0L, col("n_chars") * 2L)
           .otherwise(col("n_chars")))
-    psiDrift(base, next, "n_chars").orderBy(col("bucket"))
+    psiDrift(base, next, "n_chars")
   }
 
   private val x93OracleSql: String = """

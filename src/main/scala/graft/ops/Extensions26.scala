@@ -435,7 +435,7 @@ object Extensions26 {
     * arithmetic — see [[logregOracleChain]].
     */
   def x94QualityLogreg(s: SparkSession, dir: String): DataFrame =
-    fixtureScored(s, dir).orderBy(col("doc_id"))
+    fixtureScored(s, dir)
 
   /** The DuckDB replay of [[trainLogreg]], generated for a fixed
     * iteration count (the x69 generated-SQL discipline). Weight vectors

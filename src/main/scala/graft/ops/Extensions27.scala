@@ -192,7 +192,6 @@ object Extensions27 {
     val codes = pqEncode(vectors, "vec_id", "embedding", codebook)
     pqAdcTopK(codes, vectors.filter(col("vec_id") < 10), "vec_id", "embedding",
         codebook)
-      .orderBy(col("q_id"), col("rk"))
   }
 
   /** Exact integer brute-force top-k (squared L2 over the quantized

@@ -199,7 +199,6 @@ object Extensions28 {
         when(col("node") >= 10000000L, col("node") - 10000000L).otherwise(col("node"))
           .as("node_id"),
         col("rank_micro"))
-      .orderBy(col("node_type"), col("node_id"))
   }
 
   private val x96OracleSql: String = {
@@ -308,7 +307,6 @@ object Extensions28 {
   def x97CupedReadout(s: SparkSession, dir: String): DataFrame =
     cupedReadout(table(s, dir, "events"), "user_id", "ts", "value",
         "2024-01-16 00:00:00")
-      .orderBy(col("arm"))
 
   private val x97OracleSql: String = """
       WITH pu AS (

@@ -93,7 +93,6 @@ object Extensions29 {
     */
   def x98MmrDiverse(s: SparkSession, dir: String): DataFrame =
     mmrSelect(table(s, dir, "embeddings"), "vec_id", "embedding", queryId = 0L)
-      .orderBy(col("rk"))
 
   private val x98OracleSql: String = {
     val dist = (a: String, b: String) =>
@@ -312,7 +311,6 @@ object Extensions29 {
       .select(col("s1"), col("s2"))
     triangleCounts(backbone, "s1", "s2")
       .select(col("node").as("supp_id"), col("n_triangles"))
-      .orderBy(col("supp_id"))
   }
 
   private val x99OracleSql: String = """

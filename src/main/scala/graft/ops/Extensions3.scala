@@ -103,7 +103,7 @@ object Extensions3 {
 
   /** x22: repetition metrics (native expression) on the documents fixture. */
   def x22Repetition(s: SparkSession, dir: String): DataFrame =
-    repetitionMetricsNative(docs(s, dir), "doc_id", "text").orderBy(col("doc_id"))
+    repetitionMetricsNative(docs(s, dir), "doc_id", "text")
 
   /** Deterministic sequence packing — concatenate documents in id order
     * within each shard and split at a fixed token budget (a chunk is the
@@ -133,7 +133,6 @@ object Extensions3 {
     */
   def x23SequencePacking(s: SparkSession, dir: String): DataFrame =
     packSequences(docs(s, dir), "lang", "doc_id", "text", budget = 512)
-      .orderBy(col("lang"), col("chunk_id"))
 
   /** x24: OR-amplified LSH ANN — three independent sign-hash tables over
     * disjoint coordinate blocks; a candidate matches if it shares a bucket
@@ -185,7 +184,6 @@ object Extensions3 {
   def x24AnnMultiTable(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir)
     multiTableSignTopK(e, e.filter(col("vec_id") < 10), "vec_id", "embedding", k = 3)
-      .orderBy(col("q_id"), col("rk"))
   }
 
   /** Domain capping: keep at most `cap` rows per domain, preferring the
@@ -210,7 +208,6 @@ object Extensions3 {
   def x25DomainCap(s: SparkSession, dir: String): DataFrame =
     domainCap(docs(s, dir), "source", "n_chars", "doc_id", cap = 5)
       .select(col("doc_id"), col("source"), col("n_chars"), col("rk"))
-      .orderBy(col("doc_id"))
 
   /** Temperature-based mixture sampling: per-group sampling rates
     * proportional to n_g^alpha (alpha < 1 upweights small groups — the
@@ -257,7 +254,6 @@ object Extensions3 {
   def x26TemperatureMix(s: SparkSession, dir: String): DataFrame =
     temperatureMix(docs(s, dir), "lang", "doc_id", alpha = 0.5, targetRows = 200L)
       .select(col("doc_id"), col("lang"), col("source"))
-      .orderBy(col("doc_id"))
 
   /** Cross-document duplicated-n-gram coverage: per document, the
     * fraction of its distinct n-grams that also appear in at least one
@@ -292,7 +288,6 @@ object Extensions3 {
     */
   def x27DupGramCoverage(s: SparkSession, dir: String): DataFrame =
     dupGramCoverage(docs(s, dir), "doc_id", "text", n = 10)
-      .orderBy(col("doc_id"))
 
   /** Text canonicalization — the normalize-before-exact-dedup step: lower,
     * strip non-alphanumerics to spaces, squish runs of spaces, trim. Two
@@ -314,7 +309,6 @@ object Extensions3 {
         length(col("text")).cast("long").as("len_raw"),
         length(norm).cast("long").as("len_norm"),
         md5(norm).as("norm_key"))
-      .orderBy(col("doc_id"))
   }
 
   /** Distributed Lloyd's k-means over an embedding column — builds the

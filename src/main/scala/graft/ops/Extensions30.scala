@@ -106,7 +106,6 @@ object Extensions30 {
     val sizes = comm.groupBy(col("community")).agg(count(lit(1)).as("community_size"))
     comm.join(broadcast(sizes), Seq("community"))
       .select(col("node"), col("community"), col("community_size"))
-      .orderBy(col("node"))
   }
 
   /** The x100 replay chain (purchase graph + `iters` vote rounds,
@@ -205,7 +204,6 @@ object Extensions30 {
   /** x101: [[embeddingHealth]] of the fixture embeddings per label. */
   def x101EmbeddingHealth(s: SparkSession, dir: String): DataFrame =
     embeddingHealth(table(s, dir, "embeddings"), "label", "embedding")
-      .orderBy(col("label"))
 
   private val x101OracleSql: String = """
       WITH q AS (

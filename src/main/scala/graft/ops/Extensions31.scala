@@ -145,7 +145,6 @@ object Extensions31 {
     val codebook = Extensions27.fixtureCodebook(s, dir)
     ivfPqTopK(vectors, "vec_id", "embedding",
         vectors.filter(col("vec_id") < 10), codebook)
-      .orderBy(col("q_id"), col("rk"))
   }
 
   /** Exact integer squared L2 over two full 64-dim quantized vectors —
@@ -279,7 +278,6 @@ object Extensions31 {
       .select(col("source"), explode(split(lower(col("text")), " ")).as("tok"))
       .filter(length(col("tok")) > 0)
     thetaOverlap(thetaSketches(toks, "source", "tok"))
-      .orderBy(col("source_a"), col("source_b"))
   }
 
   private val x103OracleSql: String = s"""

@@ -75,7 +75,6 @@ object Extensions32 {
     val d = docs(s, dir)
     val merges = Extensions16.fixtureMerges(s, dir).map(m => (m._2, m._3))
     bpeFitReport(d, "source", "text", merges)
-      .orderBy(col("source"))
   }
 
   private val x104OracleSql: String = Extensions16.bpeOracleChain(12) + """,

@@ -36,7 +36,7 @@ object Extensions34 {
     val ann = PqStore.topKFromIndex(s, path, q, "vec_id", "embedding", k = 5)
     val truth = Extensions27.bruteTopK(vectors, q, "vec_id", "embedding", k = 5)
       .select(col("q_id"), col("c_id"))
-    Extensions4.recallAtK(ann, truth).orderBy(col("q_id"))
+    Extensions4.recallAtK(ann, truth)
   }
 
   private val x107OracleSql: String = Extensions31.ivfPqOracleChain + s""",

@@ -100,7 +100,6 @@ object Extensions35 {
         ("segment", col("c_mktsegment")),
         ("bal_band", lit("*"))))
     kAnonymize(table(s, dir, "customer"), "c_custkey", levels, k = 5)
-      .orderBy(col("c_custkey"))
   }
 
   private val x108OracleSql: String = {

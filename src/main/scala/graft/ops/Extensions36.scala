@@ -76,7 +76,6 @@ object Extensions36 {
     piiScrub(
         table(s, dir, "customer").select(col("c_custkey"), note.as("note")),
         "c_custkey", "note")
-      .orderBy(col("row_id"))
   }
 
   private val x109OracleSql: String = {

@@ -107,7 +107,7 @@ object Extensions37 {
     val ranking = jaccardRanking(d, qMax = 5L, n = 3, k = 10)
       .select(col("q_id"), col("c_id"), col("rk"))
     val uni = jaccardLike(d, qMax = 5L)
-    ndcgAtK(ranking, uni, k = 10).orderBy(col("q_id"))
+    ndcgAtK(ranking, uni, k = 10)
   }
 
   private def docs(s: SparkSession, dir: String): DataFrame =
@@ -230,7 +230,6 @@ object Extensions37 {
     */
   def x112Survival(s: SparkSession, dir: String): DataFrame =
     kaplanMeier(table(s, dir, "events"), "user_id", "ts")
-      .orderBy(col("t_days"))
 
   private val x112OracleSql: String = """
       WITH pu AS (

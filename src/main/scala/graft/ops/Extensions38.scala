@@ -84,7 +84,6 @@ object Extensions38 {
   def x113Attribution(s: SparkSession, dir: String): DataFrame =
     attribution(table(s, dir, "events"), "user_id", "event_type", "ts",
         "event_id", convType = "purchase", touchTypes = Seq("click", "view"))
-      .orderBy(col("model"), col("touch_type"))
 
   private val x113OracleSql: String = """
       WITH base AS (

@@ -70,7 +70,6 @@ object Extensions39 {
   /** x114: top-20 PMI bigrams (support ≥ 5) of the documents fixture. */
   def x114PmiBigrams(s: SparkSession, dir: String): DataFrame =
     pmiBigrams(docs(s, dir), "text")
-      .orderBy(col("pmi").desc, col("l"), col("r"))
 
   private val x114OracleSql: String = """
       WITH toks AS (SELECT list_filter(string_split(lower(text), ' '), t -> t <> '') AS ct

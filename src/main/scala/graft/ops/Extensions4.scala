@@ -66,7 +66,6 @@ object Extensions4 {
     val d = docs(s, dir)
     jaccardTopK(d, d.filter(col("doc_id") < 10), "doc_id", "text",
         k = 3, shingleSize = 3)
-      .orderBy(col("q_id"), col("rk"))
   }
 
   /** Incremental dedup: judge each NEW-batch document against the
@@ -114,12 +113,9 @@ object Extensions4 {
     */
   def x30IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
-    // r15: barrier the (one row per batch doc) verdict before the global
-    // sort (the x89 pattern — range sampling re-runs the un-barriered tail)
-    Extensions.materialized(incrementalDedup(
-        d.filter(col("doc_id") < 450), d.filter(col("doc_id") >= 450),
-        "doc_id", "text", threshold = 0.5))
-      .orderBy(col("b_id"))
+    incrementalDedup(
+      d.filter(col("doc_id") < 450), d.filter(col("doc_id") >= 450),
+      "doc_id", "text", threshold = 0.5)
   }
 
   /** Recall of an ANN result against a ground-truth top-k: per query, the
@@ -170,7 +166,6 @@ object Extensions4 {
     recallAtK(probe1, truth).withColumn("method", lit("probe1"))
       .unionByName(recallAtK(multi, truth).withColumn("method", lit("multiprobe")))
       .select(col("method"), col("q_id"), col("n_truth"), col("n_hit"), col("recall"))
-      .orderBy(col("method"), col("q_id"))
   }
 
   /** BM25 top-k retrieval: score corpus documents against query documents
@@ -230,7 +225,6 @@ object Extensions4 {
   def x33Bm25TopK(s: SparkSession, dir: String): DataFrame =
     bm25TopK(docs(s, dir), docs(s, dir).filter(col("doc_id") < 5),
         "doc_id", "text", k = 3)
-      .orderBy(col("q_id"), col("rk"))
 
   /** Corpus-level vocabulary extraction: the `k` most frequent tokens with
     * corpus counts and document frequencies — the input to tokenizer/vocab
@@ -257,7 +251,6 @@ object Extensions4 {
     */
   def x32VocabTopK(s: SparkSession, dir: String): DataFrame =
     vocabTopK(docs(s, dir), "doc_id", "text", k = 20)
-      .orderBy(col("n_total").desc, col("token"))
 
   // ---- X19-X21 (SURVEY §2.11): semantic dedup, TF-IDF, chunking -----------
 
@@ -295,7 +288,6 @@ object Extensions4 {
   def x34SemanticDedup(s: SparkSession, dir: String): DataFrame =
     semanticDedup(emb(s, dir), "vec_id", "embedding",
         threshold = 0.45, signBits = 6)
-      .orderBy(col("vec_id"))
 
   /** Per-document TF-IDF keyword extraction: each document's `k` highest
     * tf·ln(N/df) terms — the corpus-statistics dual of [[bm25TopK]]
@@ -335,7 +327,6 @@ object Extensions4 {
   /** x35: top-3 TF-IDF terms per document on the documents fixture. */
   def x35TfidfTerms(s: SparkSession, dir: String): DataFrame =
     tfidfTopTerms(docs(s, dir), "doc_id", "text", k = 3)
-      .orderBy(col("doc_id"), col("rk"))
 
   /** Strided token-window chunking — the training-data prep step that
     * turns variable-length documents into (near-)fixed-length training
@@ -367,7 +358,6 @@ object Extensions4 {
     */
   def x36ChunkDocs(s: SparkSession, dir: String): DataFrame =
     chunkDocuments(docs(s, dir), "doc_id", "text", window = 50, stride = 40)
-      .orderBy(col("doc_id"), col("chunk_id"))
 
   /** Unigram language-model scoring (the CCNet-style quality signal):
     * train the corpus unigram distribution, then score every document by
@@ -407,7 +397,6 @@ object Extensions4 {
   /** x37: [[unigramScore]] over the documents fixture. */
   def x37UnigramScore(s: SparkSession, dir: String): DataFrame =
     unigramScore(docs(s, dir), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   /** Shared DuckDB shingle CTE prefix (n-gram, distinct-per-doc, with
     * per-doc counts) — the same arithmetic x20's oracle replays.

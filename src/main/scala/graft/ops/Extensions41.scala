@@ -87,7 +87,6 @@ object Extensions41 {
     */
   def x117SpanCorruption(s: SparkSession, dir: String): DataFrame =
     spanCorruptionPairs(docs(s, dir), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   private val x117OracleSql: String = """
       WITH d AS (SELECT doc_id,

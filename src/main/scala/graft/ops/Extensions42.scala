@@ -65,7 +65,6 @@ object Extensions42 {
     */
   def x118LshPlan(s: SparkSession, dir: String): DataFrame =
     lshRecallPlanner(docs(s, dir), "doc_id", "text")
-      .orderBy(col("bands").desc)
 
   private val x118OracleSql: String = {
     def powN(e: String, n: Int): String =

@@ -70,7 +70,6 @@ object Extensions43 {
   def x119HardNegatives(s: SparkSession, dir: String): DataFrame = {
     val d = docs(s, dir)
     hardNegatives(d, d.filter(col("doc_id") < 5), "doc_id", "text")
-      .orderBy(col("q_id"), col("hn_rk"))
   }
 
   private val x119OracleSql: String = """

@@ -43,7 +43,7 @@ object Extensions44 {
     * sigmoid-ulp residue class). Bins are equal-width on [0,1]:
     * bin = min(conf_permille · bins / 1000, bins−1).
     *
-    * Output, one row per non-empty bin ordered by bin: (bin, n, npos,
+    * Output, one row per non-empty bin: (bin, n, npos,
     * avg_conf, acc, abs_gap, ece) — ece repeated on every row so the
     * table is self-contained. All ratio columns use the 4dp product-form
     * rounding; their numerators (Σconf, npos, |1000·npos − Σconf|) are
@@ -81,7 +81,6 @@ object Extensions44 {
           .as("abs_gap"),
         Extensions.round4o(col("gap_total") / (lit(1000.0) * col("n_total")))
           .as("ece"))
-      .orderBy(col("bin"))
   }
 
   /** x120: reliability table of the x94 fixture classifier (same cached
@@ -188,7 +187,6 @@ object Extensions44 {
       .withColumn("bt_rank",
         row_number().over(Window.orderBy(col("strength_micro").desc,
           col("player"))).cast("long"))
-      .orderBy(col("bt_rank"))
   }
 
   /** x121: a 12-player round robin among docs 0..11 — each unordered

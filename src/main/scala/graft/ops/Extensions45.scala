@@ -76,7 +76,6 @@ object Extensions45 {
     e.select(col("a").as("node")).unionAll(e.select(col("b").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
       .filter(col("core_deg") >= k)
-      .orderBy(col("node"))
   }
 
   /** x122: the 3-core of the x99 co-purchase backbone (suppliers linked
@@ -135,7 +134,7 @@ object Extensions45 {
 
   /** Chi-square SRM gate over unit→arm assignments against the DESIGN
     * split `design` (arm → permille, must sum to 1000). Output one row
-    * per designed arm ordered by arm: (arm, n_obs, design_permille,
+    * per designed arm: (arm, n_obs, design_permille,
     * obs_permille, contrib) plus the corpus-constant chi2 and the
     * srm flag (chi2 exceeds `critMicro`/1e6 — default χ²₁ at 95% for a
     * two-arm design; pass the χ²_{k−1} critical value for k arms).
@@ -182,7 +181,6 @@ object Extensions45 {
         Extensions.round4o(col("contrib_micro") / lit(1e6)).as("contrib"),
         Extensions.round4o(col("chi2_micro") / lit(1e6)).as("chi2"),
         (col("chi2_micro") > critMicro).as("srm"))
-      .orderBy(col("arm"))
   }
 
   /** x123: SRM check of the x97 experiment assignment (md5-permille
@@ -267,7 +265,6 @@ object Extensions45 {
         Extensions.round4o(col("contrib_micro") / lit(1e6)).as("contrib"),
         Extensions.round4o(col("chi2_micro") / lit(1e6)).as("chi2"),
         (col("chi2_micro") > critMicro).as("violates_benford"))
-      .orderBy(col("digit"))
   }
 
   /** x124: Benford audit of order totals. */

@@ -124,7 +124,7 @@ object Extensions46 {
     * exact cents, md5-split arms (the x97 assignment), arm-level
     * sufficient statistics (n, Σd, Σd²), and the readout row:
     * effect = mean_T(d) − mean_C(d), se = √(s²_T/n_T + s²_C/n_C),
-    * t = effect/se. Output one row per arm ordered by arm (n_units,
+    * t = effect/se. Output one row per arm (n_units,
     * mean_pre, mean_post, mean_delta) with the corpus-constant
     * effect_cents / se_cents / t_stat repeated (the x120 self-contained
     * report shape).
@@ -191,7 +191,6 @@ object Extensions46 {
         expr(r4("eff_num", "eff_den")).as("effect_cents"),
         round(col("se") / 100.0d, 4).as("se_cents"),
         round(col("effect") / col("se"), 4).as("t_stat"))
-      .orderBy(col("arm"))
   }
 
   /** x126: DiD over the events fixture, split at the x97 boundary. */

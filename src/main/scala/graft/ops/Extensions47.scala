@@ -137,7 +137,6 @@ object Extensions47 {
         Extensions.round4o(lit(lamMicro.toDouble) / (lit(1e6) * lit(nRows))))
       .withColumn("var_share",
         Extensions.round4o(lit(lamMicro.toDouble) / lit(traceMicro.toDouble)))
-      .orderBy(col("dim"))
   }
 
   /** Generated replay of [[pcaPowerIteration]]: the m-vector is a

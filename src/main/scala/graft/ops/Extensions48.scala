@@ -103,7 +103,6 @@ object Extensions48 {
         coalesce(col("n_shared"), lit(0L)) / lit(5.0))
       .select(col("q_id"), col("rk"), col("base_id"), col("base_sim"),
         col("proj_id"), col("proj_sim"), col("overlap5"))
-      .orderBy(col("q_id"), col("rk"))
   }
 
   private val x128OracleSql: String = Extensions47.pcaOracleChain(6) + """,

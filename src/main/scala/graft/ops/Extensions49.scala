@@ -142,7 +142,7 @@ object Extensions49 {
     * since; ltv_k = Σ cohort revenue in offsets ≤ k / cohort size
     * (exact cents; 4dp via sign-split half-away integer division — the
     * x126 boundary lesson). Output (cohort, offset_m, cohort_users,
-    * revenue, cum_revenue, ltv) ordered.
+    * revenue, cum_revenue, ltv).
     *
     * Scale: ONE user-key hash-agg pins each user's cohort (min ts),
     * one (cohort, offset) hash-agg, and the running sum is a window
@@ -182,7 +182,6 @@ object Extensions49 {
         (col("cum_cents") / lit(100.0)).as("cum_revenue"),
         expr("(CAST(sign(cum_cents) AS BIGINT) * ((abs(cum_cents) * 100 * 2 + cohort_users) DIV (2 * cohort_users))) / 10000.0D")
           .as("ltv"))
-      .orderBy(col("cohort"), col("offset_m"))
   }
 
   /** x130: WEEKLY cohort LTV over the events fixture (the fixture spans

@@ -83,7 +83,6 @@ object Extensions5 {
     */
   def x38QualityClassifier(s: SparkSession, dir: String): DataFrame =
     hashedLinearScore(docs(s, dir), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   // ---- Johnson–Lindenstrauss random projection ------------------------------
 
@@ -135,7 +134,6 @@ object Extensions5 {
   /** x39: [[jlProject]] of the 64-dim fixture embeddings into 16 dims. */
   def x39JlProject(s: SparkSession, dir: String): DataFrame =
     jlProject(emb(s, dir), "vec_id", "embedding", outDims = 16, inDims = 64)
-      .orderBy(col("vec_id"), col("dim"))
 
   // ---- int8 symmetric quantization ------------------------------------------
 
@@ -165,7 +163,6 @@ object Extensions5 {
   /** x40: [[int8Quantize]] of the fixture embeddings. */
   def x40Int8Quantize(s: SparkSession, dir: String): DataFrame =
     int8Quantize(emb(s, dir), "vec_id", "embedding")
-      .orderBy(col("vec_id"), col("dim"))
 
   // ---- mixture concentration stats -------------------------------------------
 
@@ -203,7 +200,6 @@ object Extensions5 {
   /** x41: [[sourceMixtureStats]] over the documents fixture. */
   def x41MixtureStats(s: SparkSession, dir: String): DataFrame =
     sourceMixtureStats(docs(s, dir), "source", "text")
-      .orderBy(col("rk"))
 
   // ---- deterministic shard assignment ----------------------------------------
 
@@ -231,7 +227,6 @@ object Extensions5 {
   /** x42: [[shardAssign]] of the documents fixture into 8 shards. */
   def x42ShardAssign(s: SparkSession, dir: String): DataFrame =
     shardAssign(docs(s, dir), "doc_id", "text", nShards = 8)
-      .orderBy(col("shard"))
 
   // ---- robust length-outlier detection ---------------------------------------
 
@@ -273,7 +268,6 @@ object Extensions5 {
     robustOutliers(docs(s, dir), "source", "n_chars")
       .select(col("doc_id"), col("source"), col("n_chars"),
         col("med"), col("mad"), col("is_outlier"))
-      .orderBy(col("doc_id"))
 
   // ---- interpolated bigram language-model scoring -----------------------------
 
@@ -329,7 +323,6 @@ object Extensions5 {
   /** x44: [[bigramScore]] over the documents fixture at λ = 0.9. */
   def x44BigramScore(s: SparkSession, dir: String): DataFrame =
     bigramScore(docs(s, dir), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   /** x38's oracle. Extensions39 embeds it as x115's rater A. */
   val x38QualityClassifierSql: String = """

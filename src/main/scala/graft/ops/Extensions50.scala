@@ -91,7 +91,6 @@ object Extensions50 {
       .select(col("q_id"),
         Extensions.round4o(col("rbo_micro") / lit(1e6)).as("rbo"),
         Extensions.round4o(col("sm") / (lit(1e6) * col("nq"))).as("mean_rbo"))
-      .orderBy(col("q_id"))
   }
 
   /** x131: RBO between BM25 and 3-gram-Jaccard document retrieval
@@ -323,7 +322,6 @@ object Extensions50 {
           .as("conductance"),
         expr("(CAST(sign(qnum) AS BIGINT) * ((abs(qnum) * 10000 * 2 + qden) DIV (2 * qden))) / 10000.0D")
           .as("modularity"))
-      .orderBy(col("community"))
   }
 
   /** x133: metrics of the x100 label-propagation partition over the

@@ -81,8 +81,7 @@ object Extensions51 {
     * p ≤ rank·α/m, and mark every hypothesis at or below it
     * discovered. The comparison is EXACT: with pm = p·10⁴ (an integer
     * by the 4dp contract), p ≤ rank·α/m ⟺ pm·m ≤ rank·α_permille·10.
-    * Output (key, p_value, bh_rank, bh_critical, discovered) ordered by
-    * rank.
+    * Output (key, p_value, bh_rank, bh_critical, discovered).
     *
     * Thin adapter over [[GridStats.bhStepUp]] (round-14, verdict task
     * 7: the former unpartitioned rank/max windows over the hypothesis
@@ -104,7 +103,6 @@ object Extensions51 {
         Extensions.round4o(col("rk") * lit(alphaPermille)
           / (lit(1000.0) * col("m"))).as("bh_critical"),
         col("rejected").as("discovered"))
-      .orderBy(col("bh_rank"))
   }
 
   /** x134: per-event-type mSPRT p-values, BH-corrected at α = 0.05 —
@@ -196,7 +194,6 @@ object Extensions51 {
         col("z.qcs").as("q_control"), col("z.qts").as("q_treatment"))
       .withColumn("qte",
         round((col("q_treatment") - col("q_control")) / lit(100.0d), 4))
-      .orderBy(col("pct"))
   }
 
   /** x135: QTE of the events fixture post-period (the x110 split). */

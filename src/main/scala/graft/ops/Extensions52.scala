@@ -30,8 +30,8 @@ object Extensions52 {
 
   /** Per-period CUSUM of a value stream: aggregate `valueCol` to exact
     * cents per `date_trunc(granularity, tsCol)` period, then
-    * C_d = Σ_{i≤d}(x_i − x̄). Output one row per period ordered by
-    * period: (period, value, cusum, is_changepoint) with the peak
+    * C_d = Σ_{i≤d}(x_i − x̄). Output one row per period:
+    * (period, value, cusum, is_changepoint) with the peak
     * |CUSUM| period flagged (ties → earliest period).
     *
     * Exactness: C_d·N = N·prefix_d − d·total is an exact long identity
@@ -72,7 +72,6 @@ object Extensions52 {
         expr("(CAST(sign(cn) AS BIGINT) * ((abs(cn) * 100 * 2 + cden) DIV (2 * cden))) / 10000.0D")
           .as("cusum"),
         col("is_changepoint"))
-      .orderBy(col("period"))
   }
 
   /** x136: daily revenue CUSUM over the events fixture. */
@@ -146,7 +145,6 @@ object Extensions52 {
         pick("th").as("total_hits"), col("n"))
       .select(col("category"), col("n_docs_hit"), col("total_hits"),
         Extensions.round4o(col("n_docs_hit") / col("n")).as("doc_rate"))
-      .orderBy(col("category"))
   }
 
   /** x137: contamination scan of the documents fixture (the synthetic

@@ -43,7 +43,7 @@ object Extensions53 {
     *   anomaly    = |residual| > 3 · mean|residual|  (defined days).
     *
     * Output (period, value, trend, seasonal, residual, is_anomaly)
-    * ordered by period; trend/seasonal/residual NULL on edge days.
+    * with trend/seasonal/residual NULL on edge days.
     *
     * Exactness: x is exact cents; trend quantizes to 1e-4 dollar units
     * via halfAway(100·Σ7, 7); seasonal via halfAway(Σ detr4, count) —
@@ -89,7 +89,6 @@ object Extensions53 {
         (col("resid4") / lit(10000.0d)).as("residual"),
         coalesce(abs(col("resid4")) * col("nd") > lit(3L) * col("sab"),
           lit(false)).as("is_anomaly"))
-      .orderBy(col("period"))
   }
 
   /** x138: daily revenue decomposition over the events fixture. */
@@ -145,8 +144,7 @@ object Extensions53 {
     * deviation is an outlier" — the standard fallback, documented
     * rather than NaN.
     *
-    * Output (group, n, median, mad, n_outliers, outlier_frac) ordered
-    * by group.
+    * Output (group, n, median, mad, n_outliers, outlier_frac).
     *
     * Exactness: medians of integer cents are exact order-statistic
     * midpoints — doubling them into half-cent (med2) and quarter-cent
@@ -183,7 +181,6 @@ object Extensions53 {
         (col("mad4") / lit(400.0d)).as("mad"),
         col("n_outliers"),
         Extensions.round4o(col("n_outliers") / col("n")).as("outlier_frac"))
-      .orderBy(col("group_key"))
   }
 
   /** x139: robust outlier report of event values per event type. */

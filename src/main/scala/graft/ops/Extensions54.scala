@@ -42,8 +42,8 @@ object Extensions54 {
     *   iso(k) = max_{i≤k} min_{j≥k} (P_j − P_{i−1}) / (N_j − N_{i−1})
     *
     * (the level-set / minimax characterization of isotonic regression
-    * — Barlow et al. 1972 §1.2). Output one row per grid point ordered
-    * by score: (conf_permille, n, npos, raw_rate, iso_rate); iso_rate
+    * — Barlow et al. 1972 §1.2). Output one row per grid point:
+    * (conf_permille, n, npos, raw_rate, iso_rate); iso_rate
     * is non-decreasing by construction.
     *
     * Exactness: every mean is fl(p/n) of exact longs; IEEE rounding is
@@ -84,7 +84,6 @@ object Extensions54 {
       .select(col("conf").as("conf_permille"), col("n"), col("npos"),
         Extensions.round4o(col("npos") / col("n")).as("raw_rate"),
         Extensions.round4o(col("iso")).as("iso_rate"))
-      .orderBy(col("conf_permille"))
   }
 
   /** x140: isotonic calibration of the x94 fixture classifier (same

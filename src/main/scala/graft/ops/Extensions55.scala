@@ -143,8 +143,8 @@ object Extensions55 {
     val name = s"foreign_key:$column"
   }
 
-  /** Evaluate `checks` against `rel`: one row per check, ordered by
-    * check name — (check_name, n_rows, n_violations, pass,
+  /** Evaluate `checks` against `rel`: one row per check —
+    * (check_name, n_rows, n_violations, pass,
     * violation_frac).
     *
     * Scale: every scalar check is a conditional sum in ONE aggregation
@@ -202,7 +202,6 @@ object Extensions55 {
         (col("n_violations") === 0L).as("pass"),
         Extensions.round4o(col("n_violations") / col("n"))
           .as("violation_frac"))
-      .orderBy(col("check_name"))
   }
 
   /** x143: the standard contract on the orders fixture — key not-null +

@@ -45,7 +45,7 @@ object Extensions56 {
     * with R = |relevant(q)| over the FULL relevance set (hits beyond k
     * count toward the denominator — the standard penalty for a
     * retriever that buries them). Output (q_id, n_rel, n_rel_at_k,
-    * first_rel_rank, rr, ap) ordered by q_id; first_rel_rank 0 = none.
+    * first_rel_rank, rr, ap); first_rel_rank 0 = none.
     *
     * Exactness: every P@i is c_i·(L/i) over the common denominator
     * L = lcm(1..k) (k ≤ 20 ⇒ L ≤ 232792560 — products stay far inside
@@ -84,7 +84,6 @@ object Extensions56 {
         when(col("den") > 0L,
           expr("((apnum * 10000 * 2 + den) DIV (2 * den)) / 10000.0D")
             .cast("double")).otherwise(lit(0.0d)).as("ap"))
-      .orderBy(col("q_id"))
   }
 
   /** x144: MAP@10/MRR of the trigram-Jaccard ranking against binary
@@ -168,7 +167,7 @@ object Extensions56 {
     * finite-sample guarantee promises.
     *
     * Output (coverage_target, n_cal, qhat, n_eval, coverage_emp,
-    * avg_set_size) ordered by target. k > n_cal degrades to q̂ = 1000
+    * avg_set_size). k > n_cal degrades to q̂ = 1000
     * (full sets, coverage 1 — the honest small-sample answer).
     *
     * Scale: one map pass + hash-agg to the ≤1001-row nonconformity
@@ -210,7 +209,6 @@ object Extensions56 {
         col("n_cal"), col("qhat"), col("n_eval"),
         Extensions.round4o(col("ncov") / col("n_eval")).as("coverage_emp"),
         Extensions.round4o(col("szsum") / col("n_eval")).as("avg_set_size"))
-      .orderBy(col("coverage_target"))
   }
 
   /** x145: conformal gate of the x94 fixture classifier (same cached

@@ -35,7 +35,7 @@ object Extensions57 {
     * baskets containing both, cosine = c_ij/sqrt(n_i·n_j), ranked
     * per item by (cosine desc, neighbor asc) — cosine rounds 4dp
     * BEFORE ranking (the x111 discipline) so the cut is deterministic.
-    * Output (item, rec, n_both, cosine, rk) ordered.
+    * Output (item, rec, n_both, cosine, rk).
     *
     * Scale: pairs enumerate through ONE self-equi-join on the basket
     * key — cost Σ basket² — then hash-agg to the co-occurrence table;
@@ -44,21 +44,6 @@ object Extensions57 {
     * inherent output size of its pair set.
     */
   def itemItemRecs(
-      baskets: DataFrame, basketCol: String, itemCol: String,
-      topK: Int = 3): DataFrame =
-    // r15: barrier-before-sort TRIED and REVERTED (measured flat, 3.18 →
-    // 3.22 s): the sort child is the ranking window's post-exchange tail,
-    // so AQE's range sampling re-reads shuffle output, not the pair join.
-    // x172 consumes the unordered frame directly for its own reasons.
-    itemItemRecsUnordered(baskets, basketCol, itemCol, topK)
-      .orderBy(col("item"), col("rk"))
-
-  /** [[itemItemRecs]] without the presentation sort — for consumers
-    * that aggregate or re-join the recs (x172's eval) the trailing
-    * global orderBy only costs a range exchange + a sampled re-run of
-    * the window tail (r15, the x89 lesson).
-    */
-  private[ops] def itemItemRecsUnordered(
       baskets: DataFrame, basketCol: String, itemCol: String,
       topK: Int = 3): DataFrame = {
     val bi = Extensions.materialized(
@@ -112,7 +97,7 @@ object Extensions57 {
     * `iters` rounds in micro-units: per round, authority(dst) =
     * Σ_{src→dst} hub(src) then L∞-normalize (halfAway(1e6·a, max a));
     * hub(src) = Σ_{src→dst} authority(dst), normalize likewise. Output
-    * (node_type 'hub'|'authority', node_id, score_micro) ordered —
+    * (node_type 'hub'|'authority', node_id, score_micro) —
     * deterministic long arithmetic, replayable round by round in SQL.
     *
     * Scale: edges materialize ONCE; each round is two equi-joins +
@@ -165,7 +150,6 @@ object Extensions57 {
         col("score").as("score_micro"))
       .unionAll(auths.select(lit("authority").as("node_type"),
         col("dst").as("node_id"), col("score").as("score_micro")))
-      .orderBy(col("node_type"), col("node_id"))
   }
 
   /** x147: hubs (customers) and authorities (parts) of the purchase

@@ -68,7 +68,6 @@ object Extensions58 {
           .as("r_star"),
         Extensions.round4o(coalesce(col("n1"), lit(0L)) / col("total"))
           .as("p_unseen"))
-      .orderBy(col("r"))
   }
 
   /** x148: Good–Turing count-of-counts of the documents fixture. */
@@ -138,7 +137,6 @@ object Extensions58 {
           .as("or_stratum"),
         Extensions.round4o(try_divide(col("snum").cast("double"), col("sden")))
           .as("or_mh"))
-      .orderBy(col("stratum"))
   }
 
   /** x149: does the md5-split "exposure" move the odds of

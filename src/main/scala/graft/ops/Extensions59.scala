@@ -31,7 +31,7 @@ object Extensions59 {
   // ---- x150: table profile (dataset card) --------------------------------------
 
   /** One row per column: (column, dtype, n_rows, n_nulls, n_distinct,
-    * min_num, max_num, min_str, max_str, mean) ordered by column name.
+    * min_num, max_num, min_str, max_str, mean).
     * Numeric columns fill min_num/max_num/mean (mean = 4dp-quantized:
     * per-row round(1e4·x) summed as longs, one half-away division);
     * strings and timestamps fill min_str/max_str (timestamps as
@@ -131,7 +131,6 @@ object Extensions59 {
             expr(s"(CAST(sign(sq$i) AS BIGINT) * ((abs(sq$i) * 2 + nv$i) DIV (2 * nv$i))) / 10000.0D"))
         }.reduceRightOption((a, b) => a.otherwise(b))
           .getOrElse(lit(null).cast("double")).as("mean"))
-      .orderBy(col("column"))
   }
 
   /** x150: dataset card of the orders fixture — the EXACT variant, for

@@ -82,7 +82,6 @@ object Extensions6 {
   /** x45: [[sourceOverlap]] over the documents fixture. */
   def x45SourceOverlap(s: SparkSession, dir: String): DataFrame =
     sourceOverlap(docs(s, dir), "source", "text")
-      .orderBy(col("src_a"), col("src_b"))
 
   // ---- filter-funnel attrition report ----------------------------------------
 
@@ -135,7 +134,6 @@ object Extensions6 {
         val nonSpace = length(regexp_replace(col("text"), " ", ""))
         nonSpace >= size(tk) * 2L && nonSpace <= size(tk) * 12L
       }))
-      .orderBy(col("stage_no"))
   }
 
   // ---- deterministic training order ------------------------------------------
@@ -174,7 +172,6 @@ object Extensions6 {
   def x47TrainingOrder(s: SparkSession, dir: String): DataFrame =
     trainingOrder(docs(s, dir), "doc_id", nShards = 8)
       .select(col("doc_id"), col("shard"), col("ord"))
-      .orderBy(col("shard"), col("ord"))
 
   val entries: Seq[Entry] = Seq(
     Entry("x45_source_overlap", x45SourceOverlap _, """

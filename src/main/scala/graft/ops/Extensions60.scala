@@ -30,8 +30,8 @@ object Extensions60 {
   // ---- x152: behavioral bot score card -----------------------------------------
 
   /** Per-user behavior card: (user_id, n_events, span_days, rate_per_day,
-    * median_gap_s, gap_mad_s, type_entropy, is_suspect) ordered by
-    * user. Entropy is in nats over event-type frequencies; `is_suspect`
+    * median_gap_s, gap_mad_s, type_entropy, is_suspect). Entropy is in
+    * nats over event-type frequencies; `is_suspect`
     * = rate above `minRate4` (4dp units/day) AND entropy below
     * `maxEntropy4` — the "fast and monotonous" signature. Users with
     * one event carry NULL gap stats; span at second resolution (rate
@@ -89,7 +89,6 @@ object Extensions60 {
         (col("entropy4") / lit(10000.0d)).as("type_entropy"),
         coalesce(col("rate4") > minRate4 && col("entropy4") < maxEntropy4,
           lit(false)).as("is_suspect"))
-      .orderBy(col("user_id"))
   }
 
   /** x152: behavior card of the events fixture (organic traffic — the
@@ -147,7 +146,7 @@ object Extensions60 {
     *   p_pos = (g + 0.5)/(G + nB/2),  p_neg = (b + 0.5)/(B + nB/2)
     *   WoE = ln(p_pos/p_neg),  IV = Σ_buckets (p_pos − p_neg)·WoE
     *
-    * Output per bucket ordered: (bucket, n, n_pos, woe, iv_contrib,
+    * Output per bucket: (bucket, n, n_pos, woe, iv_contrib,
     * iv_total) — iv_total repeated (the x120 self-contained-table
     * convention).
     *
@@ -202,7 +201,6 @@ object Extensions60 {
           .as("iv_contrib"),
         expr("(CAST(sign(iv_sum) AS BIGINT) * ((abs(iv_sum) * 2 + 100) DIV 200)) / 10000.0D")
           .as("iv_total"))
-      .orderBy(col("bucket"))
   }
 
   /** x153: IV of document length (n_chars) against the x80 Gopher keep

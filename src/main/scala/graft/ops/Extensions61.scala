@@ -32,7 +32,7 @@ object Extensions61 {
     * daily event count. For each lag L ∈ [−maxLag, +maxLag]:
     * corr(A_t, B_{t+L}) over the overlapping days. A POSITIVE peak lag
     * means A leads B by L days. Output (lag, n_days, corr, is_peak)
-    * ordered by lag — peak = max |corr| over lags with n_days ≥ 3,
+    * — peak = max |corr| over lags with n_days ≥ 3,
     * ties to the smallest lag; corr NULL when either variance is 0.
     *
     * Exactness: per-lag moments (n, Σa, Σb, Σab, Σa², Σb²) are exact
@@ -91,7 +91,6 @@ object Extensions61 {
           .over(wAll))
       .select(col("lag"), col("n").as("n_days"), col("corr"),
         coalesce(col("lag") === col("first_peak"), lit(false)).as("is_peak"))
-      .orderBy(col("lag"))
   }
 
   /** x154: does daily activity volume lead daily revenue (±3 days)? */
@@ -138,7 +137,7 @@ object Extensions61 {
 
   /** Median / p90 seconds between consecutive funnel anchors under the
     * x85 greedy-anchor semantics (same fold, literally shared code):
-    * one row per step transition ordered — (step_from, step_to,
+    * one row per step transition — (step_from, step_to,
     * n_converted, median_s, p90_s).
     *
     * Exactness: delays are epoch-µs longs; the percentiles double into
@@ -191,7 +190,6 @@ object Extensions61 {
         when(col("p92").isNotNull,
           expr("((p92 * 10000 * 2 + 2000000) DIV (2 * 2000000)) / 10000.0D"))
           .as("p90_s"))
-      .orderBy(col("step_from"))
   }
 
   /** x155: view → click → purchase step timing, 24 h per step (the x85

@@ -34,7 +34,7 @@ object Extensions62 {
   /** Pre-period OLS trend extrapolated across the intervention: daily
     * sums of `valueCol` (exact cents), day index t from the first
     * period; the fit uses days strictly BEFORE `interventionDay`.
-    * Output per day ordered: (period, actual, predicted, effect,
+    * Output per day: (period, actual, predicted, effect,
     * cum_effect, is_post) — predicted/effect 4dp; cum_effect runs over
     * post days only (NULL pre); requires ≥ 2 distinct pre days.
     *
@@ -91,7 +91,6 @@ object Extensions62 {
         (col("eff4") / lit(10000.0d)).as("effect"),
         (col("cum4") / lit(10000.0d)).as("cum_effect"),
         col("post").as("is_post"))
-      .orderBy(col("period"))
   }
 
   /** x156: what did the (synthetic) mid-month intervention do to daily

@@ -30,7 +30,7 @@ object Extensions63 {
   /** Sweep near-dup thresholds over the shingle-Jaccard pair table:
     * for each θ in `thresholds`, predicted = pairs with jaccard ≥ θ,
     * scored against `truth` (doc_a < doc_b ground-truth dup pairs).
-    * Output per θ ordered: (threshold, n_pred, tp, fp, fn, precision,
+    * Output per θ: (threshold, n_pred, tp, fp, fn, precision,
     * recall, f1) — precision NULL at zero predictions (the honest
     * empty-cell answer), recall/f1 against the full truth set.
     *
@@ -81,7 +81,6 @@ object Extensions63 {
           .as("recall"),
         Extensions.round4o(try_divide(lit(2.0d) * col("tp"),
           lit(2L) * col("tp") + col("fp") + col("fn"))).as("f1"))
-      .orderBy(col("threshold"))
   }
 
   /** x158: calibration against planted near-copies — every doc with
@@ -147,7 +146,7 @@ object Extensions63 {
 
   /** Per-source corpus composition: doc count + share, token count +
     * share, Gopher keep rate, exact-duplicate rate (1 − distinct
-    * texts / docs within the source). Output ordered by source:
+    * texts / docs within the source). Output:
     * (source, n_docs, doc_share, n_tokens, token_share, keep_rate,
     * dup_rate) — every number an exact count with one 4dp division.
     *
@@ -182,7 +181,6 @@ object Extensions63 {
         Extensions.round4o(col("n_keep") / col("n_docs")).as("keep_rate"),
         Extensions.round4o((col("n_docs") - col("n_uniq")) / col("n_docs"))
           .as("dup_rate"))
-      .orderBy(col("source"))
   }
 
   /** x159: the mixture card of the documents fixture by source. */

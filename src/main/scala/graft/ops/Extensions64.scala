@@ -34,7 +34,7 @@ object Extensions64 {
     * the shard's exact median key (values equal to the median drop —
     * the standard treatment), runs of consecutive same-side values are
     * counted, and z = (R − μ)/σ with μ = 2n1n2/N + 1,
-    * σ² = 2n1n2(2n1n2 − N)/(N²(N−1)). Output per shard ordered:
+    * σ² = 2n1n2(2n1n2 − N)/(N²(N−1)). Output per shard:
     * (shard, n, n_above, n_below, runs, z) — z NULL when either side
     * is empty (a constant or one-sided shard has no randomness to
     * test).
@@ -80,7 +80,6 @@ object Extensions64 {
       }))
       .select(col("shard"), col("n"), col("n_above"), col("n_below"),
         col("runs"), col("z"))
-      .orderBy(col("shard"))
   }
 
   /** x160: audit a simulated 4-shard training order of the documents
@@ -136,8 +135,8 @@ object Extensions64 {
     * `valueCol` for the type (users without the type count as 0 — the
     * intent-to-treat convention), σ² from exact integer sufficient
     * statistics, MDE = (z_{α/2} + z_β)·σ·sqrt(2/n) with
-    * z = 1.959964 + 0.841621 (shared literals). Output per type
-    * ordered: (event_type, n_per_arm, mean, sigma, mde_abs, mde_rel)
+    * z = 1.959964 + 0.841621 (shared literals). Output per type:
+    * (event_type, n_per_arm, mean, sigma, mde_abs, mde_rel)
     * — mde_rel NULL on a zero mean.
     *
     * Family sibling: x314 [[Extensions138.mdeCard]] — the one-row
@@ -178,7 +177,6 @@ object Extensions64 {
         Extensions.round4o(col("mde_c") / lit(100.0d)).as("mde_abs"),
         Extensions.round4o(try_divide(col("mde_c"), col("mean_c")))
           .as("mde_rel"))
-      .orderBy(col("event_type"))
   }
 
   /** x161: how big an experiment does each metric need on the events

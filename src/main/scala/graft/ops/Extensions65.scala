@@ -106,7 +106,7 @@ object Extensions65 {
     *
     * with words = whitespace tokens, sentences = '[.!?]+' runs (min 1),
     * syllables = '[aeiouy]+' vowel-group runs (the standard
-    * dictionary-free approximation). Output per doc ordered:
+    * dictionary-free approximation). Output per doc:
     * (doc_id, n_words, n_sentences, n_syllables, flesch, band) —
     * band ∈ easy (≥70) / standard (≥50) / difficult (≥30) / very_hard.
     *
@@ -137,7 +137,6 @@ object Extensions65 {
           .when(col("flesch") >= 50.0d, lit("standard"))
           .when(col("flesch") >= 30.0d, lit("difficult"))
           .otherwise(lit("very_hard")))
-      .orderBy(col("doc_id"))
   }
 
   /** x163: readability card of the documents fixture. */

@@ -29,7 +29,7 @@ object Extensions66 {
 
   /** BFS reach per hop from `seeds` over a directed edge relation:
     * hop h's frontier = nodes first reached at h. Output one row per
-    * hop 0..`hops` ordered: (hop, frontier_size, total_reached).
+    * hop 0..`hops`: (hop, frontier_size, total_reached).
     *
     * Scale: the canonical iterative frontier join — edges materialized
     * ONCE; each hop is one frontier⋈edges equi-join + distinct + one
@@ -63,7 +63,6 @@ object Extensions66 {
     val s = edges.sparkSession
     import s.implicits._
     counts.toSeq.toDF("hop", "frontier_size", "total_reached")
-      .orderBy(col("hop"))
   }
 
   /** x164: reach of the 3 smallest customer keys over the bidirectional

@@ -32,7 +32,7 @@ object Extensions67 {
   /** Temporal-holdout eval of the first-order transition model: a
     * transition (cur@t1 → next@t2) trains when t2 < `splitTs`, tests
     * when t2 ≥ splitTs. The model predicts argmax next type per cur
-    * (count desc, type asc). Output per cur type ordered:
+    * (count desc, type asc). Output per cur type:
     * (cur_type, predicted, n_train, n_test, n_correct, accuracy) —
     * cur types never seen in training predict NULL and score 0.
     *
@@ -71,7 +71,6 @@ object Extensions67 {
         col("n_test_all").as("n_test"), col("n_correct"),
         Extensions.round4o(col("n_correct") / col("n_test_all"))
           .as("accuracy"))
-      .orderBy(col("cur_type"))
   }
 
   /** x166: predict the next event type after the mid-month split. */
@@ -112,8 +111,8 @@ object Extensions67 {
     * raw: raw → exact (keep the min id per text digest) → near (drop
     * every doc_b of an x02 Jaccard pair ≥ `nearThreshold` among exact
     * survivors — the deterministic keep-smallest-id rule; a chain
-    * A<B<C drops both B and C, the conservative answer). Output 3 rows
-    * ordered by stage: (stage, stage_name, n_docs, n_tokens, doc_frac,
+    * A<B<C drops both B and C, the conservative answer). Output 3 rows:
+    * (stage, stage_name, n_docs, n_tokens, doc_frac,
     * token_frac).
     *
     * Scale: exact stage is one digest hash-agg; the near stage runs
@@ -169,7 +168,6 @@ object Extensions67 {
       .select(col("stage"), col("stage_name"), col("n_docs"), col("n_tokens"),
         Extensions.round4o(col("n_docs") / col("td")).as("doc_frac"),
         Extensions.round4o(col("n_tokens") / col("tt")).as("token_frac"))
-      .orderBy(col("stage"))
   }
 
   /** x167: the funnel over base docs + planted exact copies (id%7==0 →

@@ -30,7 +30,7 @@ object Extensions68 {
 
   /** Confusion matrix of the x08 stop-word language detector against
     * the labeled `langCol`: one row per observed (labeled, predicted)
-    * cell ordered — (labeled_lang, pred_lang, n, row_frac, accuracy)
+    * cell — (labeled_lang, pred_lang, n, row_frac, accuracy)
     * with row_frac = n / labeled-row total and the overall accuracy
     * repeated (the x120 self-contained-table convention).
     *
@@ -68,7 +68,6 @@ object Extensions68 {
       .select(col("labeled_lang"), col("pred_lang"), col("n"),
         Extensions.round4o(col("n") / col("row_n")).as("row_frac"),
         Extensions.round4o(col("hit") / col("tot")).as("accuracy"))
-      .orderBy(col("labeled_lang"), col("pred_lang"))
   }
 
   /** x168: the x08 detector's report card on the documents fixture. */
@@ -112,7 +111,7 @@ object Extensions68 {
   /** Centroid-form silhouette of a labeled embedding space: per point,
     * a = ||v − c_own||, b = min over other labels of ||v − c_l||,
     * s = (b − a)/max(a, b); per label the mean silhouette. Output per
-    * label ordered: (label, n, mean_silhouette) — well-separated
+    * label: (label, n, mean_silhouette) — well-separated
     * clusters read near 1, overlapping ones near 0, misassigned
     * points negative.
     *
@@ -162,7 +161,6 @@ object Extensions68 {
       .select(col("label"), col("n"),
         expr("(CAST(sign(ssum) AS BIGINT) * ((abs(ssum) * 2 + (100 * n)) DIV (2 * (100 * n)))) / 10000.0D")
           .as("mean_silhouette"))
-      .orderBy(col("label"))
   }
 
   /** x169: cluster quality of the labeled fixture embeddings. */

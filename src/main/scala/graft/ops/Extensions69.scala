@@ -98,8 +98,8 @@ object Extensions69 {
     * users sorted by value ascending, G = (2·Σ i·x_i)/(n·S) − (n+1)/n
     * = (T2 − (n+1)·S)/(n·S), where a tied value class (v, c) at
     * cumulative-count-before cb contributes v·(2·c·cb + c² + c) to T2
-    * — exact off the value grid, no row-level ranks. Output per group
-    * ordered: (group_key, n_users, total, gini) — gini NULL when
+    * — exact off the value grid, no row-level ranks. Output per group:
+    * (group_key, n_users, total, gini) — gini NULL when
     * S ≤ 0 (the coefficient is undefined without positive mass).
     *
     * Exactness: T2/S/n are exact longs (headroom: v·n² per class —
@@ -144,7 +144,6 @@ object Extensions69 {
         when(col("gden") > 0L, expr(
           "(CAST(sign(gnum) AS BIGINT) * ((abs(gnum) * 10000 * 2 + gden) DIV (2 * gden))) / 10000.0D"))
           .as("gini"))
-      .orderBy(col("group_key"))
   }
 
   /** x171: revenue concentration across users, per event type. */

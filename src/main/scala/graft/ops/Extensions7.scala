@@ -74,7 +74,6 @@ object Extensions7 {
     */
   def x48DensityPrune(s: SparkSession, dir: String): DataFrame =
     densityPrune(emb(s, dir), "vec_id", "embedding", signBits = 4)
-      .orderBy(col("vec_id"))
 
   // ---- per-document novelty vs a training corpus -----------------------------
 
@@ -121,7 +120,6 @@ object Extensions7 {
       d.filter(pmod(col("doc_id"), lit(10L)) =!= 0L),
       d.filter(pmod(col("doc_id"), lit(10L)) === 0L),
       "doc_id", "text")
-      .orderBy(col("doc_id"))
   }
 
   // ---- padding-efficiency report ---------------------------------------------
@@ -164,7 +162,6 @@ object Extensions7 {
     */
   def x50PaddingReport(s: SparkSession, dir: String): DataFrame =
     paddingReport(docs(s, dir), "doc_id", "text")
-      .orderBy(col("len_bucket"))
 
   val entries: Seq[Entry] = Seq(
     Entry("x48_density_prune", x48DensityPrune _, """

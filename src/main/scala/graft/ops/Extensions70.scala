@@ -53,7 +53,7 @@ object Extensions70 {
     val train = base.filter(col("is_train")).select(col("b"), col("i"))
     val test = base.filter(!col("is_train")).select(col("b"), col("i"))
     val recs = Extensions.materialized(
-      Extensions57.itemItemRecsUnordered(train, "b", "i", topK)
+      Extensions57.itemItemRecs(train, "b", "i", topK)
         .select(col("item"), col("rec")))
     val trainItems = recs.select(col("item")).distinct()
     val tb = Extensions.materialized(test.distinct())

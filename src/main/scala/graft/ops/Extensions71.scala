@@ -45,7 +45,6 @@ object Extensions71 {
       min(when(col("ltv") >= cacDollars, col("offset_m"))).as("payback_offset"),
       max(col("ltv")).as("final_ltv"))
       .withColumn("paid_back", col("payback_offset").isNotNull)
-      .orderBy(col("cohort"))
   }
 
   /** x174: weekly cohorts against a $100 acquisition cost. */
@@ -84,7 +83,7 @@ object Extensions71 {
 
   /** Band keys A/B/C by cumulative revenue share: keys sorted by
     * (revenue desc, key), class A while cum share ≤ `aCut` (permille),
-    * B while ≤ `bCut`, C after. Output per key ordered by rank:
+    * B while ≤ `bCut`, C after. Output per key:
     * (rank, key, revenue, cum_share, abc_class).
     *
     * Exactness: the banding compares cum·1000 ≤ cut·total as exact
@@ -120,7 +119,6 @@ object Extensions71 {
         when(col("cum") * 1000L <= lit(aCut) * col("tot"), "A")
           .when(col("cum") * 1000L <= lit(bCut) * col("tot"), "B")
           .otherwise("C").as("abc_class"))
-      .orderBy(col("rank"))
   }
 
   /** x175: parts banded by lineitem revenue (price net of discount). */

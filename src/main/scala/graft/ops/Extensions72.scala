@@ -30,8 +30,8 @@ object Extensions72 {
     * for a group count as 0 (the day spine comes from the GLOBAL
     * period range, so a type absent on a quiet day is a real zero).
     * index = s²/x̄ = (n·Σc² − (Σc)²)/((n−1)·Σc); `overdispersed` flags
-    * index > 1.2 by exact integer comparison. Output per group
-    * ordered: (group_key, n_days, mean_per_day, dispersion_index,
+    * index > 1.2 by exact integer comparison. Output per group:
+    * (group_key, n_days, mean_per_day, dispersion_index,
     * overdispersed).
     *
     * Scale: one (group, day) hash-agg; the zero-day adjustment is by
@@ -66,7 +66,6 @@ object Extensions72 {
           .as("dispersion_index"),
         coalesce(col("inum") * 10L > col("iden") * 12L, lit(false))
           .as("overdispersed"))
-      .orderBy(col("group_key"))
   }
 
   /** x176: are the fixture's event arrivals Poisson-like per type? */
@@ -99,7 +98,7 @@ object Extensions72 {
 
   /** Events per hour-of-day per group: count, share of the group's
     * events, and the group's peak hour flagged (ties → earliest hour).
-    * Output ordered (group_key, hour): (group_key, hour, n, share,
+    * Output: (group_key, hour, n, share,
     * is_peak).
     *
     * Scale: one hash-agg to ≤ groups·24 rows; shares and the peak come
@@ -118,7 +117,6 @@ object Extensions72 {
       .select(col("g").as("group_key"), col("h").as("hour"), col("n"),
         expr("((n * 10000 * 2 + tot) DIV (2 * tot)) / 10000.0D").as("share"),
         (col("h") === col("peak_h")).as("is_peak"))
-      .orderBy(col("group_key"), col("hour"))
   }
 
   /** x177: the hourly heat row per event type. */

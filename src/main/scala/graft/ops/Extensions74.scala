@@ -31,7 +31,7 @@ object Extensions74 {
   /** Decile gains table over a scored corpus: rows ranked by margin
     * desc; a whole tie-class lands in the decile of its cumulative
     * start (floor(10·cum_before/n) — deterministic under ties).
-    * Output per non-empty decile ordered: (decile, n, n_pos,
+    * Output per non-empty decile: (decile, n, n_pos,
     * cum_capture, lift) — cum_capture = cumulative positives through
     * this decile / all positives; lift = decile positive rate / base
     * rate.
@@ -68,7 +68,6 @@ object Extensions74 {
         when(col("ptot") > 0L && col("n_d") > 0L, Extensions.round4o(
           (col("p_d").cast("double") / col("n_d")) /
             (col("ptot").cast("double") / col("n")))).as("lift"))
-      .orderBy(col("decile"))
   }
 
   /** x180: the x94 classifier's gains table (same cached weights). */

@@ -117,7 +117,7 @@ object Extensions75 {
 
   /** Kish ESS per group over a weighted relation: ESS = (Σw)²/Σw² —
     * equal weights read ESS = n; one dominant weight collapses toward
-    * 1. Output per group ordered: (group_key, n, ess, efficiency) —
+    * 1. Output per group: (group_key, n, ess, efficiency) —
     * efficiency = ESS/n, 4dp.
     *
     * Exactness: weights micro-quantize per row (round(1e6·w) longs),
@@ -143,7 +143,6 @@ object Extensions75 {
         Extensions.round4o(
           (col("s1").cast("double") * col("s1")) / col("s2") / col("n"))
           .as("efficiency"))
-      .orderBy(col("group_key"))
   }
 
   /** x183: how many effective docs does a length-proportional weighting

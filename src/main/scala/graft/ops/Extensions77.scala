@@ -55,7 +55,6 @@ object Extensions77 {
       .select(col("k").as("key"), col("n_events"), col("n_versions"),
         col("min_v"), col("max_v"), col("n_missing"), col("n_dup_versions"),
         col("clean"))
-      .orderBy(col("key"))
   }
 
   /** x186: audit a deterministically-damaged version stream — per-user

@@ -30,8 +30,8 @@ object Extensions78 {
 
   /** Per funnel transition, conversion by arm and the two-proportion
     * pooled z: users at step i who reach step i+1, control vs
-    * treatment (md5 split of the user key). Output per transition
-    * ordered: (step_from, step_to, n_control, conv_control,
+    * treatment (md5 split of the user key). Output per transition:
+    * (step_from, step_to, n_control, conv_control,
     * n_treatment, conv_treatment, rate_control, rate_treatment, z) —
     * z NULL when a pooled variance vanishes (nobody or everybody
     * converts).
@@ -91,7 +91,6 @@ object Extensions78 {
           (col("conv_treatment").cast("double") / col("n_treatment") -
             col("conv_control").cast("double") / col("n_control")) / se)
       }))
-      .orderBy(col("step_from"))
   }
 
   /** x188: the view→click→purchase funnel, compared across the md5 A/A

@@ -30,7 +30,7 @@ object Extensions79 {
   /** ACF of the daily sum of `valueCol` at lags 1..`maxLag`: with
     * deviations d_t = x_t − x̄ (quantized to exact cents via the
     * sign-split division), r_k = Σ d_t·d_{t+k} / Σ d_t². Output per
-    * lag ordered: (lag, n_pairs, r, significant, lb_q) — significant
+    * lag: (lag, n_pairs, r, significant, lb_q) — significant
     * = |r| > 2/√N as the integer comparison r_micro²·N > 4e12; lb_q =
     * the Ljung–Box Q over lags 1..K repeated on every row (the x120
     * self-contained-table convention).
@@ -78,7 +78,6 @@ object Extensions79 {
         Extensions.round4o(
           col("n").cast("double") * (col("n") + 2L) * col("tsum") / lit(1e12))
           .as("lb_q"))
-      .orderBy(col("lag"))
   }
 
   /** x190: the daily revenue correlogram, lags 1..6. */

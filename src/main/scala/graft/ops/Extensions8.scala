@@ -87,7 +87,6 @@ object Extensions8 {
     */
   def x52CurriculumDeciles(s: SparkSession, dir: String): DataFrame =
     curriculumDeciles(docs(s, dir), "doc_id", "n_chars")
-      .orderBy(col("doc_id"))
 
   // ---- split-document stitching ----------------------------------------------
 
@@ -121,7 +120,6 @@ object Extensions8 {
   /** x53: [[stitchCandidates]] over the documents fixture at k = 3. */
   def x53StitchCandidates(s: SparkSession, dir: String): DataFrame =
     stitchCandidates(docs(s, dir), "doc_id", "text")
-      .orderBy(col("doc_a"), col("doc_b"))
 
   val entries: Seq[Entry] = Seq(
     Entry("x51_bpe_pairs", x51BpePairStats _, """

@@ -30,7 +30,7 @@ object Extensions80 {
   /** Per group: the share of subjects showing the behavior with the
     * Wilson 95% interval: center (p̂ + z²/2n)/(1 + z²/n), half-width
     * z·sqrt(p̂(1−p̂)/n + z²/4n²)/(1 + z²/n), z = 1.959964. Output per
-    * group ordered: (group_key, n_subjects, n_with, rate, lo, hi).
+    * group: (group_key, n_subjects, n_with, rate, lo, hi).
     *
     * Scale: one (subject) hash-agg with per-group flags as conditional
     * maxes (subjects counted once per group regardless of event
@@ -60,7 +60,6 @@ object Extensions80 {
           .as("lo"),
         Extensions.round4o(least(lit(1.0d), col("center") + col("half")))
           .as("hi"))
-      .orderBy(col("group_key"))
   }
 
   /** x192: per event type, how many users ever did it — with honest
@@ -92,7 +91,7 @@ object Extensions80 {
 
   /** Pairwise Jaccard of the subject sets behind each group: per
     * ordered pair (a < b): |A∩B|, |A∪B|, jaccard, plus each side's
-    * containment (|A∩B|/|A|). Output ordered (group_a, group_b):
+    * containment (|A∩B|/|A|). Output:
     * (group_a, group_b, n_a, n_b, n_both, jaccard, containment_a,
     * containment_b).
     *
@@ -120,7 +119,6 @@ object Extensions80 {
           .as("containment_a"),
         expr("((nb * 10000 * 2 + nbb) DIV (2 * nbb)) / 10000.0D")
           .as("containment_b"))
-      .orderBy(col("group_a"), col("group_b"))
   }
 
   /** x193: which event types share an audience, exactly. */

@@ -108,7 +108,7 @@ object Extensions81 {
   // ---- x195: DAU decomposition -------------------------------------------------
 
   /** Per day: active users split new vs returning (new = the user's
-    * first day ever). Output ordered by day: (day, dau, new_users,
+    * first day ever). Output: (day, dau, new_users,
     * returning_users, new_share).
     *
     * Scale: one (user, day) distinct, one user hash-agg for first
@@ -131,7 +131,6 @@ object Extensions81 {
         col("dau"), col("new_users"), col("returning_users"),
         expr("((new_users * 10000 * 2 + dau) DIV (2 * dau)) / 10000.0D")
           .as("new_share"))
-      .orderBy(col("day"))
   }
 
   /** x195: the fixture's growth-accounting daily rows. */

@@ -27,7 +27,7 @@ object Extensions82 {
 
   /** Per week: Σ daily actives over the week's observed days, the
     * week's distinct actives, and stickiness = Σdau/(n_days·wau).
-    * Output ordered: (week, n_days, dau_sum, wau, stickiness).
+    * Output: (week, n_days, dau_sum, wau, stickiness).
     *
     * Scale: one (user, day) distinct; week rollups are hash-aggs of
     * that table (dau via (day) counts summed per week, wau via
@@ -50,7 +50,6 @@ object Extensions82 {
         col("n_days"), col("dau_sum"), col("wau"),
         expr("((dau_sum * 10000 * 2 + (n_days * wau)) DIV (2 * (n_days * wau))) / 10000.0D")
           .as("stickiness"))
-      .orderBy(col("week"))
   }
 
   /** x196: the fixture's weekly engagement ratio. */
@@ -101,7 +100,6 @@ object Extensions82 {
           .as("share"),
         expr("((ge * 10000 * 2 + tot) DIV (2 * tot)) / 10000.0D")
           .as("at_least_share"))
-      .orderBy(col("days_active"))
   }
 
   /** x197: the habit curve of the fixture month. */

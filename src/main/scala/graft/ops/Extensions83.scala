@@ -93,7 +93,7 @@ object Extensions83 {
 
   /** Per event-type segment, the median of per-user burstiness B =
     * (σ−μ)/(σ+μ) over inter-event gaps (users with ≥ 3 events of the
-    * type). Output per type ordered: (event_type, n_users, median_b)
+    * type). Output per type: (event_type, n_users, median_b)
     * — −1 metronome, 0 Poisson-like, → 1 bursty.
     *
     * Exactness: gaps quantize to whole seconds (µs² of a day-long gap
@@ -135,7 +135,6 @@ object Extensions83 {
       .select(col("ty").as("event_type"), col("n_users"),
         expr("(CAST(sign(mb2) AS BIGINT) * ((abs(mb2) * 10000 * 2 + 2000000) DIV (2 * 2000000))) / 10000.0D")
           .as("median_b"))
-      .orderBy(col("event_type"))
   }
 
   /** x199: how bursty is each behavior? (≥3 events of the type per

@@ -18,7 +18,7 @@ import graft.model.Tables
   */
 object Extensions84 {
 
-  /** One (metric, value) row per corpus KPI, ordered by metric:
+  /** One (metric, value) row per corpus KPI,:
     * n_docs, n_tokens, mean_doc_tokens, gopher_keep_rate,
     * exact_dup_rate, unseen_mass, type_token_ratio (counts rendered
     * as exact doubles; rates 4dp).
@@ -61,7 +61,6 @@ object Extensions84 {
         expr("((vv * 10000 * 2 + tt) DIV (2 * tt)) / 10000.0D")))
       .unionAll(row("unseen_mass",
         expr("((n1 * 10000 * 2 + tt) DIV (2 * tt)) / 10000.0D")))
-      .orderBy(col("metric"))
   }
 
   /** x200: the documents fixture, on one page. */

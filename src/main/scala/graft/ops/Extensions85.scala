@@ -35,7 +35,7 @@ object Extensions85 {
     * calendar days; a zero-activity day that never emits a row cannot
     * drag the baseline. Densify the day spine upstream if
     * calendar-window semantics are wanted), requiring the full window;
-    * the z-score; and the exact |z| > 3 flag. Output ordered:
+    * the z-score; and the exact |z| > 3 flag. Output:
     * (period, value, trail_mean, z, is_alert).
     *
     * Exactness: trailing S/S2/n are exact longs (window sums); the
@@ -83,7 +83,6 @@ object Extensions85 {
           col("dev") * col("dev") * (col("n") - 1L) >
             lit(9L) * col("n") * col("varn"))
           .otherwise(col("dev") =!= 0L).as("is_alert"))
-      .orderBy(col("period"))
   }
 
   /** x201: the daily revenue monitor (7-day trailing window). */
@@ -119,7 +118,7 @@ object Extensions85 {
   // ---- x202: basket size profile -----------------------------------------------
 
   /** Orders by item count: per size k — n_orders, share, and the
-    * average order value at that size. Output ordered by size:
+    * average order value at that size. Output:
     * (basket_size, n_orders, share, avg_order_value).
     *
     * Scale: one (order) hash-agg (items + cents), one size-grid
@@ -144,7 +143,6 @@ object Extensions85 {
           .as("share"),
         expr("(CAST(sign(vsum) AS BIGINT) * ((abs(vsum) * 100 * 2 + n_orders) DIV (2 * n_orders))) / 10000.0D")
           .as("avg_order_value"))
-      .orderBy(col("basket_size"))
   }
 
   /** x202: the order-size economics of the lineitem fixture. */

@@ -19,7 +19,7 @@ object Extensions86 {
 
   /** Per month: total revenue, revenue from customers in their FIRST
     * month, revenue from returning customers, and the repeat share.
-    * Output ordered: (month, revenue, revenue_new, revenue_repeat,
+    * Output: (month, revenue, revenue_new, revenue_repeat,
     * repeat_share).
     *
     * Scale: one customer hash-agg pins first months (broadcast-free —
@@ -50,7 +50,6 @@ object Extensions86 {
         when(col("rev") =!= 0L, expr(
           "(CAST(sign(rev_rep) AS BIGINT) * (((abs(rev_rep) DIV sc) * 10000 * 2 + (abs(rev) DIV sc)) DIV (2 * (abs(rev) DIV sc)))) / 10000.0D"))
           .as("repeat_share"))
-      .orderBy(col("month"))
   }
 
   /** x203: monthly order revenue, split new vs repeat customers. */

@@ -24,8 +24,8 @@ object Extensions87 {
   // ---- x204: sourcing risk profile ---------------------------------------------
 
   /** Parts bucketed by distinct supplier count: per bucket
-    * (single/dual/multi) — parts, revenue, revenue share. Output
-    * ordered by bucket: (sourcing, n_parts, revenue, revenue_share).
+    * (single/dual/multi) — parts, revenue, revenue share. Output:
+    * (sourcing, n_parts, revenue, revenue_share).
     *
     * Scale: one (part) hash-agg carrying distinct suppliers + cents,
     * one 3-row bucket agg; shares off the bucket table.
@@ -51,7 +51,6 @@ object Extensions87 {
         (col("vv") / lit(100.0d)).as("revenue"),
         expr("((vv * 10000 * 2 + tot) DIV (2 * tot)) / 10000.0D")
           .as("revenue_share"))
-      .orderBy(col("sourcing"))
   }
 
   /** x204: how much revenue rides on single-sourced parts? */
@@ -80,7 +79,7 @@ object Extensions87 {
   // ---- x205: lead-time card ----------------------------------------------------
 
   /** Order-to-ship lead time per order priority: median/p90 days and
-    * the fraction beyond `slaDays`. Output ordered by priority:
+    * the fraction beyond `slaDays`. Output:
     * (priority, n_lineitems, median_days, p90_days, late_frac).
     *
     * Scale: the orders⋈lineitem equi-join, map-side datediff, one
@@ -105,7 +104,6 @@ object Extensions87 {
         (col("p2") / lit(2.0d)).as("p90_days"),
         expr("((late * 10000 * 2 + n_lineitems) DIV (2 * n_lineitems)) / 10000.0D")
           .as("late_frac"))
-      .orderBy(col("priority"))
   }
 
   /** x205: does priority actually buy shipping speed? (SLA 90 days.) */

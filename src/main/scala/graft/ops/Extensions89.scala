@@ -23,8 +23,8 @@ object Extensions89 {
   // ---- x207: trade flow matrix -------------------------------------------------
 
   /** Revenue per (customer nation, supplier nation) with the share of
-    * the customer nation's spend. Output ordered (cust_nation,
-    * supp_nation): (cust_nation, supp_nation, revenue, row_share).
+    * the customer nation's spend. Output: (cust_nation, supp_nation,
+    * revenue, row_share).
     *
     * Scale: the fact join chain (orders⋈lineitem) shuffles on the
     * order key once; customer/supplier/nation are broadcast
@@ -56,7 +56,6 @@ object Extensions89 {
       .select(col("cust_nation"), col("supp_nation"),
         (col("v") / lit(100.0d)).as("revenue"),
         expr("((v * 10000 * 2 + rt) DIV (2 * rt)) / 10000.0D").as("row_share"))
-      .orderBy(col("cust_nation"), col("supp_nation"))
   }
 
   /** x207: the full nation-to-nation revenue matrix. */
@@ -86,7 +85,7 @@ object Extensions89 {
   // ---- x208: promo share (Q14 shape) -------------------------------------------
 
   /** Monthly revenue share of parts whose type starts with `promoPrefix`.
-    * Output ordered: (month, revenue, promo_revenue, promo_share).
+    * Output: (month, revenue, promo_revenue, promo_share).
     *
     * Scale: one broadcast part flag into the fact join, one month
     * hash-agg.
@@ -109,7 +108,6 @@ object Extensions89 {
         (col("promo") / lit(100.0d)).as("promo_revenue"),
         expr("((promo * 10000 * 2 + rev) DIV (2 * rev)) / 10000.0D")
           .as("promo_share"))
-      .orderBy(col("month"))
   }
 
   /** x208: the monthly promotion-effect trend. */

@@ -61,7 +61,6 @@ object Extensions9 {
   /** x54: [[stopwordRatio]] over the documents fixture, top-20 list. */
   def x54StopwordRatio(s: SparkSession, dir: String): DataFrame =
     stopwordRatio(docs(s, dir), "doc_id", "text")
-      .orderBy(col("doc_id"))
 
   // ---- per-source language entropy -------------------------------------------
 
@@ -97,7 +96,6 @@ object Extensions9 {
   /** x55: [[sourceLangEntropy]] over the documents fixture. */
   def x55SourceLangEntropy(s: SparkSession, dir: String): DataFrame =
     sourceLangEntropy(docs(s, dir), "source", "lang")
-      .orderBy(col("source"))
 
   // ---- within-source quantile normalization ----------------------------------
 
@@ -126,7 +124,6 @@ object Extensions9 {
       .join(docs(s, dir).select(col("doc_id"), col("source")), Seq("doc_id"))
     quantileNormalize(scored, "source", "doc_id", "score")
       .select(col("doc_id"), col("source"), col("score"), col("q_norm"))
-      .orderBy(col("doc_id"))
   }
 
   val entries: Seq[Entry] = Seq(

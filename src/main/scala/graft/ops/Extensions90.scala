@@ -16,7 +16,7 @@ import graft.model.Tables
 object Extensions90 {
 
   /** Per (year, market segment): revenue and the within-year share.
-    * Output ordered: (year, segment, revenue, year_share).
+    * Output: (year, segment, revenue, year_share).
     *
     * Scale: one broadcast customer-segment flag into the orders scan,
     * one (year, segment) hash-agg; shares off a year-partition window
@@ -44,7 +44,6 @@ object Extensions90 {
         (col("v") / lit(100.0d)).as("revenue"),
         expr("(((v DIV sc) * 10000 * 2 + (yt DIV sc)) DIV (2 * (yt DIV sc))) / 10000.0D")
           .as("year_share"))
-      .orderBy(col("year"), col("segment"))
   }
 
   /** x209: which market segment carries each year. */

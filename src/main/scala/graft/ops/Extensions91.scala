@@ -108,14 +108,12 @@ object Extensions91 {
     * paragraphs to the near-dup rule.
     */
   def x210ParagraphDedup(s: SparkSession, dir: String): DataFrame =
-    // r15: barrier before the global sort (the x89 pattern)
-    Extensions.materialized(dedupParagraphs(
+    dedupParagraphs(
       Tables.load(s, dir, "documents").select(col("doc_id"),
         when(pmod(col("doc_id"), lit(3L)) === 0L,
           concat(col("text"), lit("\n\n" + Boiler)))
           .otherwise(col("text")).as("text")),
-      "doc_id", "text"))
-      .orderBy(col("doc_id"))
+      "doc_id", "text")
 
   private val x210OracleSql: String = s"""
       WITH base AS (SELECT doc_id,

@@ -47,7 +47,6 @@ object Extensions92 {
         when(col("node") >= 10000000L, col("node") - 10000000L).otherwise(col("node"))
           .as("node_id"),
         col("rank_micro"))
-      .orderBy(col("node_type"), col("node_id"))
   }
 
   private val x211OracleSql: String = {

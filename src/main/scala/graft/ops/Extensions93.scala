@@ -41,7 +41,7 @@ object Extensions93 {
     * single-row strata weight 0 and contribute nothing). Selection
     * within a stratum is the quota smallest by (md5(id), id) — a
     * deterministic shuffle, so the draw is a pure function of the
-    * corpus. Output: (id, stratum, rk, quota) ordered.
+    * corpus. Output: (id, stratum, rk, quota).
     *
     * Quotas round half-away independently, so Σ quota_h may differ
     * from `budget` by O(strata) — the standard allocation remainder.
@@ -86,7 +86,6 @@ object Extensions93 {
       .withColumn("rk", row_number().over(wRank).cast("long"))
       .filter(col("rk") <= col("quota"))
       .select(col("id"), col("h").as("stratum"), col("rk"), col("quota"))
-      .orderBy(col("stratum"), col("rk"))
   }
 
   /** x212: 100 docs across languages, allocated by n_chars variance. */
@@ -146,12 +145,8 @@ object Extensions93 {
 
   /** x213: cross-language near-dup leakage in the fixture corpus. */
   def x213CrossLingual(s: SparkSession, dir: String): DataFrame =
-    // r15: barrier before the global sort (the x89 pattern); the sort
-    // moved out of crossLingualDupPairs so the barrier sits between
-    Extensions.materialized(
-      crossLingualDupPairs(Tables.load(s, dir, "documents"),
-        "doc_id", "text", "lang"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    crossLingualDupPairs(Tables.load(s, dir, "documents"),
+      "doc_id", "text", "lang")
 
   private val x213OracleSql: String = """
       WITH d AS (SELECT doc_id, string_split(lower(text), ' ') AS toks FROM documents),
@@ -181,7 +176,7 @@ object Extensions93 {
     * smoothed shares p_h (prev), q_h (next) with add-half over the
     * union of sources; per-source KL contribution q_h·ln(q_h/p_h)
     * micro-quantized to 1e-6 units BEFORE the total (order-free long
-    * sum). Output per source ordered: (source, n_prev, n_next,
+    * sum). Output per source: (source, n_prev, n_next,
     * share_prev, share_next, kl_contrib_micro, kl_total_micro) — the
     * total repeats on each of the ≤sources rows (window over the
     * bounded source table).
@@ -215,7 +210,6 @@ object Extensions93 {
         Extensions.round4o(q).as("share_next"),
         col("contrib").as("kl_contrib_micro"),
         sum(col("contrib")).over(wAll).as("kl_total_micro"))
-      .orderBy(col("source"))
   }
 
   /** x214: mixture drift between the fixture corpus and a release that

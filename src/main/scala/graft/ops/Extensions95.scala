@@ -32,7 +32,7 @@ object Extensions95 {
     * and whether the `maxEpochs` cap bit it. Sources absent from
     * `targets` get target 0 (factor 0 — drop entirely); target
     * permilles need not sum to 1000 (the plan normalizes nothing —
-    * it renders exactly what was asked). Output ordered by source.
+    * it renders exactly what was asked).
     *
     * Scale: one source hash-agg, the ≤sources target spine broadcast,
     * float-free arithmetic on the dimension-sized table.
@@ -59,7 +59,6 @@ object Extensions95 {
         (least(col("f4"), lit(maxEpochs * 10000L)) / lit(10000.0d))
           .as("epochs_factor"),
         (col("f4") > lit(maxEpochs * 10000L)).as("capped"))
-      .orderBy(col("source"))
   }
 
   /** x218: rebalance the four first fixture sources toward a planted
@@ -96,7 +95,7 @@ object Extensions95 {
 
   /** For each candidate context length: documents longer than it, the
     * exact tokens lost to truncation, and the lost share of all corpus
-    * tokens. Output ordered: (ctx_len, n_docs, n_truncated,
+    * tokens. Output: (ctx_len, n_docs, n_truncated,
     * tokens_total, tokens_lost, lost_share).
     *
     * Scale: ONE token-count pass (map-only n_tok per doc), a broadcast
@@ -121,7 +120,6 @@ object Extensions95 {
         col("tokens_total"), col("tokens_lost"),
         expr("((tokens_lost * 10000 * 2 + tokens_total) DIV (2 * tokens_total)) / 10000.0D")
           .as("lost_share"))
-      .orderBy(col("ctx_len"))
   }
 
   /** x219: truncation cost of the fixture corpus at 16/32/64/128. */

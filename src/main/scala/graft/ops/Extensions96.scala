@@ -29,7 +29,7 @@ object Extensions96 {
 
   /** Per radius r = 0..`maxRadius`: ground-truth near-dup pairs
     * (Jaccard ≥ `threshold`), pairs whose 64-bit SimHash hamming
-    * distance is ≤ r, and the recall share. Output ordered:
+    * distance is ≤ r, and the recall share. Output:
     * (radius, n_true_pairs, n_within, recall).
     *
     * Scale: the truth set is the bucketed x02 chain (never all-pairs);
@@ -61,7 +61,6 @@ object Extensions96 {
       .select(col("radius"), col("n_true_pairs"), col("n_within"),
         expr("((n_within * 10000 * 2 + n_true_pairs) DIV (2 * n_true_pairs)) / 10000.0D")
           .as("recall"))
-      .orderBy(col("radius"))
   }
 
   /** x220: what hamming radius captures the fixture's 0.5-Jaccard

@@ -33,7 +33,7 @@ object Extensions97 {
     * the Greenwald–Khanna sketch (`percentile_approx`, accuracy
     * 10000) lands within `tolPct` percent of the exact rank-window —
     * checked against the exact values, so a sketch regression fails
-    * the hash. Output ordered: (group_key, n, p50, p90, p99,
+    * the hash. Output: (group_key, n, p50, p90, p99,
     * approx_within_tol).
     *
     * Scale: the sketch is the point — its per-group state is O(accuracy)
@@ -57,7 +57,6 @@ object Extensions97 {
       Extensions.round4o(col("ex").getItem(1)).as("p90"),
       Extensions.round4o(col("ex").getItem(2)).as("p99"),
       (ok(0) && ok(1) && ok(2)).as("approx_within_tol"))
-      .orderBy(col("group_key"))
   }
 
   /** x222: per-event-type value quantiles, sketch audited vs exact. */
@@ -93,7 +92,6 @@ object Extensions97 {
         posexplode(col("d")).as(Seq("i", "value")))
       .select(col("group_key"), (col("i") + 1).cast("long").as("decile"),
         Extensions.round4o(col("value")).as("value"))
-      .orderBy(col("group_key"), col("decile"))
   }
 
   /** x223: the per-event-type value distribution, decile by decile. */

@@ -30,7 +30,7 @@ object Extensions98 {
     * `threshold`: per cluster size s ≥ 2 — n_clusters, n_docs, the
     * share of ALL corpus docs sitting in clusters of that size, and
     * the min component id at that size (a concrete exhibit to read).
-    * Output ordered by size. Singletons (undup'd docs) are excluded
+    * Singletons (undup'd docs) are excluded
     * from rows but included in the share denominator.
     *
     * Scale: components from the size-gated CC over the pair graph
@@ -54,7 +54,6 @@ object Extensions98 {
         expr("((n_docs * 10000 * 2 + n_total) DIV (2 * n_total)) / 10000.0D")
           .as("doc_share"),
         col("example_component"))
-      .orderBy(col("cluster_size"))
   }
 
   /** x224: the fixture's duplication shape at Jaccard 0.5. */
@@ -98,8 +97,8 @@ object Extensions98 {
 
   /** Near-dup pairs aggregated to undirected source cells: per
     * (source_a ≤ source_b) — n_pairs, the mean Jaccard (4dp off
-    * micro-quantized per-pair values), and a cross flag. Output
-    * ordered: (source_a, source_b, n_pairs, mean_jaccard, is_cross).
+    * micro-quantized per-pair values), and a cross flag. Output:
+    * (source_a, source_b, n_pairs, mean_jaccard, is_cross).
     *
     * Scale: the x02 pair chain + two id-keyed source lookups + one
     * ≤sources² hash-agg — nothing corpus-width past the pair join.
@@ -120,7 +119,6 @@ object Extensions98 {
         expr("((sj * 2 + n_pairs) DIV (2 * n_pairs)) / 10000.0D")
           .as("mean_jaccard"),
         (col("source_a") =!= col("source_b")).as("is_cross"))
-      .orderBy(col("source_a"), col("source_b"))
   }
 
   /** x225: which fixture sources syndicate each other's text. */

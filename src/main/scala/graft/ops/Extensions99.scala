@@ -29,7 +29,7 @@ object Extensions99 {
 
   /** Per cosine threshold t over `thresholds`: candidate pairs (same
     * sign bucket, a < b) with cos ≥ t, and their share of all
-    * candidates. Output ordered: (threshold, n_candidates, n_pairs,
+    * candidates. Output: (threshold, n_candidates, n_pairs,
     * pair_share).
     *
     * Scale: candidates come from the sign-bucket equi-join (never
@@ -59,7 +59,6 @@ object Extensions99 {
       .select(col("threshold"), col("n_candidates"), col("n_pairs"),
         expr("((n_pairs * 10000 * 2 + n_candidates) DIV (2 * n_candidates)) / 10000.0D")
           .as("pair_share"))
-      .orderBy(col("threshold"))
   }
 
   /** x226: where does the fixture's embedding-dedup threshold belong? */

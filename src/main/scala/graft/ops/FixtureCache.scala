@@ -67,11 +67,7 @@ private[graft] object FixtureCache {
     val p = new Path(s"$dir/$table.parquet")
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     val md = MessageDigest.getInstance("SHA-256")
-    // listStatus, not listFiles: a located status forks `ls` per file on a
-    // local file system without the native Hadoop library
-    def files(d: Path): Seq[Path] =
-      fs.listStatus(d).toSeq.flatMap(st => if (st.isDirectory) files(st.getPath) else Seq(st.getPath))
-    files(p).sortBy(_.toString).foreach { f =>
+    StoreManifest.filesUnder(fs, p).map(_.getPath).sortBy(_.toString).foreach { f =>
       val in = new DigestInputStream(fs.open(f), md)
       try in.transferTo(java.io.OutputStream.nullOutputStream()) finally in.close()
     }

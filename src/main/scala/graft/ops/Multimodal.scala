@@ -143,7 +143,6 @@ object Multimodal {
         md5(col("text").cast("binary")).as("digest"),
         ascii(substring(col("text"), 1, 1)).as("first_byte"),
         (col("doc_id") % 3).as("kind_code"))
-      .orderBy(col("doc_id"))
 
   val entries: Seq[Entry] = Seq(
     Entry("x11_multimodal_meta", x11MultimodalMeta _, """

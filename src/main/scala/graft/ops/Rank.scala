@@ -206,7 +206,6 @@ object Rank {
       parts = 8, tiles = 4)
       .select(col("o_custkey"), col("spend"),
         col("tile").as("quartile"), col("drk"))
-      .orderBy(col("o_custkey"))
   }
 
   val entries: Seq[Entry] = Seq(

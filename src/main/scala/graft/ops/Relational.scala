@@ -19,9 +19,8 @@ import graft.model.Tables
   *    joined against fact tables — no shuffle of the big side;
   *  - aggregations are plain `groupBy().agg()` — Catalyst plans
   *    partial+final hash aggregation (map-side combine) automatically;
-  *  - every query ends in a stable total `orderBy` (unique key) so results
-  *    are deterministic for the hash-compare oracle — Catalyst strips the
-  *    sort under `count()` in the bench path, so it costs nothing there;
+  *  - no query promises a row order (README "Design rules"): the
+  *    hash-compare oracle sorts rows itself, so only a top-k sorts;
   *  - floating-point aggregates are `round`-ed in both engines so summation
   *    order (which legitimately differs across partitionings) cannot leak
   *    into the comparison.
@@ -51,7 +50,6 @@ object Relational {
         round(avg(col("l_extendedprice")), 4).as("avg_price"),
         round(avg(col("l_discount")), 4).as("avg_disc"),
         count(lit(1)).as("count_order"))
-      .orderBy(col("l_returnflag"), col("l_linestatus"))
 
   /** Selective filter + narrow projection: both the predicate and the
     * 3-column ReadSchema must reach the Parquet scan.
@@ -60,7 +58,6 @@ object Relational {
     t(s, dir, "lineitem")
       .filter(col("l_quantity") > 45 && col("l_discount") >= 0.05)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"), col("l_discount"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
 
   // ---- joins ---------------------------------------------------------------
 
@@ -75,7 +72,6 @@ object Relational {
       .agg(
         count(lit(1)).as("n_orders"),
         round(sum(col("o_totalprice")), 2).as("revenue"))
-      .orderBy(col("c_mktsegment"))
   }
 
   /** Broadcast-hash join of the lineitem fact against the part dim;
@@ -90,7 +86,6 @@ object Relational {
       .agg(
         round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"),
         count(lit(1)).as("n_items"))
-      .orderBy(col("p_brand"))
   }
 
   /** Multi-way join in the shape of TPC-H Q5 (customer⋈orders⋈lineitem⋈
@@ -113,7 +108,6 @@ object Relational {
       .filter(r("r_name") === "ASIA")
       .groupBy(col("n_name"))
       .agg(round(sum(col("l_extendedprice") * (lit(1) - col("l_discount"))), 2).as("revenue"))
-      .orderBy(col("n_name"))
   }
 
   /** Left outer join keeping customers with zero orders (count(o_orderkey)
@@ -127,7 +121,6 @@ object Relational {
       .agg(
         count(col("o_orderkey")).as("n_orders"),
         round(coalesce(sum(col("o_totalprice")), lit(0.0)), 2).as("total_spent"))
-      .orderBy(col("c_custkey"))
   }
 
   /** Left-semi join = EXISTS: customers holding at least one finished order.
@@ -139,7 +132,6 @@ object Relational {
     val o = t(s, dir, "orders").filter(col("o_orderstatus") === "F")
     c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
-      .orderBy(col("c_custkey"))
   }
 
   /** Left-anti join = NOT EXISTS: customers with no in-progress orders. */
@@ -148,7 +140,6 @@ object Relational {
     val o = t(s, dir, "orders").filter(col("o_orderstatus") === "P")
     c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
       .select(col("c_custkey"), col("c_name"), round(col("c_acctbal"), 2).as("acctbal"))
-      .orderBy(col("c_custkey"))
   }
 
   /** Full outer join between the customer dim and per-customer order
@@ -163,7 +154,6 @@ object Relational {
       .select(
         coalesce(c("c_custkey"), agg("o_custkey")).as("custkey"),
         coalesce(col("n_orders"), lit(0L)).as("n_orders"))
-      .orderBy(col("custkey"))
   }
 
   /** Non-equi (range) join: parts bucketed into size bands. The bands table
@@ -182,7 +172,6 @@ object Relational {
       .agg(
         count(lit(1)).as("n_parts"),
         round(avg(col("p_retailprice")), 4).as("avg_price"))
-      .orderBy(col("band"))
   }
 
   /** As-of join expressed with the union+window idiom (SURVEY §2.3): for
@@ -199,7 +188,6 @@ object Relational {
         last(when(col("event_type") === "click", col("event_id")), ignoreNulls = true).over(w))
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("prev_click_id"))
-      .orderBy(col("event_id"))
   }
 
   // ---- aggregation variants ------------------------------------------------
@@ -215,7 +203,6 @@ object Relational {
         countDistinct(col("l_partkey")).as("n_parts"),
         countDistinct(col("l_suppkey")).as("n_supps"),
         count(lit(1)).as("n_rows"))
-      .orderBy(col("l_returnflag"))
 
   /** ROLLUP hierarchy totals. Subtotal rows are surfaced via COALESCE to a
     * sentinel (both engines agree; grouping-set nulls vs data nulls are
@@ -229,7 +216,6 @@ object Relational {
         coalesce(col("l_returnflag"), lit("ALL")).as("returnflag"),
         coalesce(col("l_linestatus"), lit("ALL")).as("linestatus"),
         col("sum_qty"), col("n"))
-      .orderBy(col("returnflag"), col("linestatus"))
 
   /** CUBE over two order dims. */
   def q14Cube(s: SparkSession, dir: String): DataFrame =
@@ -240,7 +226,6 @@ object Relational {
         coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
         coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
         col("total"), col("n"))
-      .orderBy(col("status"), col("priority"))
 
   /** GROUPING SETS (two independent groupings in one pass over the fact). */
   def q15GroupingSets(s: SparkSession, dir: String): DataFrame = {
@@ -251,8 +236,7 @@ object Relational {
              count(*)                          AS n,
              round(sum(o_totalprice), 2)       AS total
       FROM graft_orders
-      GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
-      ORDER BY status, priority""")
+      GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))""")
   }
 
   // ---- window functions ----------------------------------------------------
@@ -267,7 +251,6 @@ object Relational {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= 3)
       .select(col("o_custkey"), col("o_orderkey"), round(col("o_totalprice"), 2).as("totalprice"), col("rk"))
-      .orderBy(col("o_custkey"), col("rk"))
   }
 
   /** Running-total frame (rows unbounded preceding → current). Accumulation
@@ -280,7 +263,6 @@ object Relational {
     t(s, dir, "orders")
       .withColumn("running_spend", round(sum(col("o_totalprice")).over(w), 2))
       .select(col("o_custkey"), col("o_orderkey"), col("running_spend"))
-      .orderBy(col("o_custkey"), col("o_orderkey"))
   }
 
   /** lag/lead analytics: inter-event gap per user in exact microseconds. */
@@ -290,7 +272,6 @@ object Relational {
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
       .withColumn("gap_us", unix_micros(col("ts")) - unix_micros(col("prev_ts")))
       .select(col("user_id"), col("event_id"), col("gap_us"))
-      .orderBy(col("user_id"), col("event_id"))
   }
 
   /** Moving average over a bounded row frame (3-row trailing window). */
@@ -301,7 +282,6 @@ object Relational {
     t(s, dir, "events")
       .withColumn("mavg", round(avg(col("value")).over(w), 4))
       .select(col("user_id"), col("event_id"), col("mavg"))
-      .orderBy(col("user_id"), col("event_id"))
   }
 
   /** ntile + dense_rank over a global ordering (single-partition window —
@@ -316,7 +296,6 @@ object Relational {
     perCust
       .withColumn("quartile", ntile(4).over(w))
       .withColumn("drk", dense_rank().over(w))
-      .orderBy(col("o_custkey"))
   }
 
   // ---- sort / limit / top-k / set ops -------------------------------------
@@ -339,7 +318,6 @@ object Relational {
     c.unionByName(su)
       .groupBy(col("nationkey"), col("side"))
       .agg(count(lit(1)).as("n"))
-      .orderBy(col("nationkey"), col("side"))
   }
 
   /** INTERSECT (distinct set semantics): customers active in both finished
@@ -349,7 +327,7 @@ object Relational {
     val o = t(s, dir, "orders")
     val f = o.filter(col("o_orderstatus") === "F").select(col("o_custkey"))
     val open = o.filter(col("o_orderstatus") === "O").select(col("o_custkey"))
-    f.intersect(open).orderBy(col("o_custkey"))
+    f.intersect(open)
   }
 
   /** EXCEPT (distinct): customers with finished orders but no in-progress
@@ -359,7 +337,7 @@ object Relational {
     val o = t(s, dir, "orders")
     val f = o.filter(col("o_orderstatus") === "F").select(col("o_custkey").as("custkey"))
     val p = o.filter(col("o_orderstatus") === "P").select(col("o_custkey").as("custkey"))
-    f.except(p).orderBy(col("custkey"))
+    f.except(p)
   }
 
   // ---- scalar function suites ---------------------------------------------
@@ -376,7 +354,6 @@ object Relational {
         concat_ws("/", col("p_brand"), col("p_type")).as("brand_type"),
         when(col("p_name").contains("green"), lit(1)).otherwise(lit(0)).as("has_green"),
         size(split(col("p_name"), " ")).as("n_words"))
-      .orderBy(col("p_partkey"))
 
   /** Date/time function suite over orders (UTC everywhere; Spark dayofweek
     * is 1=Sunday..7 while DuckDB's is 0-based — the oracle compensates).
@@ -392,7 +369,6 @@ object Relational {
         quarter(col("o_orderdate")).as("qtr"),
         date_trunc("month", col("o_orderdate")).as("month_start"),
         datediff(col("o_orderdate"), lit("1995-01-01").cast("date")).as("days_since_epoch"))
-      .orderBy(col("o_orderkey"))
 
   /** Math function suite (results rounded: libm implementations may differ
     * in the last ulp between engines).
@@ -410,7 +386,6 @@ object Relational {
         round(log(col("l_extendedprice") + 1), 6).as("ln_price"),
         round(pow(col("l_quantity"), 2), 2).as("qty_sq"),
         (col("l_orderkey") % 7).as("mod7"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
 
   /** JSON extraction from the semi-structured `props` payload — the engine
     * analog of the reference's `DATA text` JSON column
@@ -426,7 +401,6 @@ object Relational {
         round(avg(col("k")), 4).as("avg_k"),
         max(col("k")).as("max_k"),
         count(lit(1)).as("n"))
-      .orderBy(col("event_type"))
 
   /** Conditional aggregation (CASE inside agg — one pass, no self-joins). */
   def q29CaseAgg(s: SparkSession, dir: String): DataFrame =
@@ -436,7 +410,6 @@ object Relational {
         round(sum(when(col("l_returnflag") === "R", col("l_extendedprice")).otherwise(lit(0.0))), 2).as("returned_value"),
         round(sum(when(col("l_returnflag") =!= "R", col("l_extendedprice")).otherwise(lit(0.0))), 2).as("kept_value"),
         round(avg(when(col("l_discount") > 0.05, col("l_discount"))), 4).as("avg_big_disc"))
-      .orderBy(col("l_linestatus"))
 
   /** Scalar subquery: customers above the global average balance. The
     * average is a 1-row aggregate broadcast against the scan.
@@ -447,7 +420,6 @@ object Relational {
     c.join(broadcast(avgBal))
       .filter(col("c_acctbal") > col("ab"))
       .select(col("c_custkey"), round(col("c_acctbal"), 2).as("acctbal"))
-      .orderBy(col("c_custkey"))
   }
 
   /** Correlated EXISTS with a predicate on the inner side: orders containing
@@ -458,7 +430,6 @@ object Relational {
     val big = t(s, dir, "lineitem").filter(col("l_quantity") >= 49)
     o.join(big, o("o_orderkey") === big("l_orderkey"), "left_semi")
       .select(col("o_orderkey"), col("o_custkey"), round(col("o_totalprice"), 2).as("totalprice"))
-      .orderBy(col("o_orderkey"))
   }
 
   // ---- oracle SQL ----------------------------------------------------------

@@ -22,7 +22,6 @@ object Relational2 {
       .groupBy(col("o_orderpriority"))
       .pivot("o_orderstatus", Seq("F", "O", "P"))
       .agg(count(lit(1)))
-      .orderBy(col("o_orderpriority"))
 
   /** HAVING: post-aggregation predicate (Catalyst plans it as Filter over
     * Aggregate — no second pass).
@@ -32,7 +31,6 @@ object Relational2 {
       .groupBy(col("o_custkey"))
       .agg(count(lit(1)).as("n_orders"), round(sum(col("o_totalprice")), 2).as("spend"))
       .filter(col("n_orders") >= 14)
-      .orderBy(col("o_custkey"))
 
   /** Statistical aggregates: stddev/variance (sample), exact interpolated
     * median (percentile ≡ DuckDB quantile_cont), all rounded against
@@ -47,7 +45,6 @@ object Relational2 {
         round(expr("percentile(o_totalprice, 0.5)"), 4).as("median"),
         round(avg(col("o_totalprice")), 4).as("mean"),
         count(lit(1)).as("n"))
-      .orderBy(col("o_orderstatus"))
 
   /** min_by/max_by: the one-pass argmin/argmax aggregate (same machinery as
     * the flagship latest-state fold).
@@ -59,7 +56,6 @@ object Relational2 {
         max_by(col("o_orderkey"), col("o_totalprice")).as("priciest_order"),
         min_by(col("o_orderkey"), col("o_totalprice")).as("cheapest_order"),
         round(max(col("o_totalprice")), 2).as("max_price"))
-      .orderBy(col("o_custkey"))
 
   /** Ordered list aggregation. The sorted list is emitted as a CSV string:
     * deterministic on both engines, and scalar-typed so any row-sorting
@@ -71,7 +67,6 @@ object Relational2 {
       .groupBy(col("o_custkey"))
       .agg(concat_ws(",", sort_array(collect_list(col("o_orderstatus")))).as("statuses"),
         count(lit(1)).as("n"))
-      .orderBy(col("o_custkey"))
 
   /** Cartesian product of the two smallest dims — the explicit cross-join
     * operator (BroadcastNestedLoopJoin; only ever sane when one side is
@@ -80,7 +75,6 @@ object Relational2 {
   def q44CrossJoin(s: SparkSession, dir: String): DataFrame =
     t(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
       .crossJoin(t(s, dir, "region").select(col("r_regionkey"), col("r_name")))
-      .orderBy(col("n_nationkey"), col("r_regionkey"))
 
   /** Regex group extraction (dialect-shared syntax only). */
   def q45RegexpExtract(s: SparkSession, dir: String): DataFrame =
@@ -90,7 +84,6 @@ object Relational2 {
         regexp_extract(col("p_name"), "^([a-z]+)", 1).as("first_word"),
         regexp_extract(col("p_name"), "([a-z]+)$", 1).as("last_word"),
         regexp_extract(col("p_type"), "([A-Z]+)", 1).as("type_head"))
-      .orderBy(col("p_partkey"))
 
   /** S6 JSON egress: parse the semi-structured payload, then re-serialize a
     * typed struct — the reference's read-model JSON boundary
@@ -103,7 +96,6 @@ object Relational2 {
         to_json(struct(
           get_json_object(col("props"), "$.k").cast("long").as("k"),
           col("event_type").as("t"))).as("payload"))
-      .orderBy(col("event_id"))
 
   /** The CQRS tombstone fold, oracle-checkable: current state per aggregate,
     * dropping aggregates whose *latest* event is the tombstone type
@@ -115,7 +107,6 @@ object Relational2 {
       t(s, dir, "events"), "user_id", "event_id")
     latest.filter(col("event_type") =!= "error")
       .select(col("user_id"), col("event_id"), col("event_type"), col("value"))
-      .orderBy(col("user_id"))
   }
 
   /** S5 JSON ingest with an explicit schema (`from_json` — the typed parse
@@ -128,7 +119,6 @@ object Relational2 {
       .select(col("event_id"),
         from_json(col("props"), lit("k LONG")).getField("k").as("k"))
       .filter(col("k") > 50)
-      .orderBy(col("event_id"))
 
   /** Deterministic systematic sampling (key-modulus) — the reproducible
     * alternative to TABLESAMPLE for pipeline debugging/estimation: the same
@@ -138,7 +128,6 @@ object Relational2 {
     t(s, dir, "lineitem")
       .filter((col("l_orderkey") * 31 + col("l_linenumber")) % 97 < 5)
       .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
 
   /** NULL-handling suite: nullif/coalesce/null-safe equality/null ordering.
     * The source tables carry no nulls, so nulls are introduced with nullif —
@@ -152,7 +141,6 @@ object Relational2 {
         coalesce(nullif(col("o_orderstatus"), lit("P")), lit("PENDING")).as("status_filled"),
         nullif(col("o_orderstatus"), lit("P")).eqNullSafe(lit("F")).as("is_f_nullsafe"),
         isnull(nullif(col("o_orderstatus"), lit("P"))).as("was_pending"))
-      .orderBy(col("o_orderkey"))
 
   val entries: Seq[Entry] = Seq(
     Entry("q51_sample", q51Sample _, """

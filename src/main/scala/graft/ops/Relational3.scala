@@ -35,7 +35,6 @@ object Relational3 {
         col("o_orderpriority"),
         round(percent_rank().over(w), 6).as("pr"),
         round(cume_dist().over(w), 6).as("cd"))
-      .orderBy(col("o_orderkey"))
   }
 
   /** Bitwise aggregation (bit_and / bit_or / bit_xor) — pure integer
@@ -49,7 +48,6 @@ object Relational3 {
         expr("bit_or(l_linenumber)").cast("long").as("bor"),
         expr("bit_xor(l_linenumber)").cast("long").as("bxor"),
         count(lit(1)).as("n"))
-      .orderBy(col("l_orderkey"))
 
   /** Bivariate statistics per return-flag cohort: Pearson correlation and
     * covariance. Rounded before compare — the one-pass co-moment update is
@@ -63,7 +61,6 @@ object Relational3 {
         round(covar_pop(col("l_quantity"), col("l_extendedprice")), 2).as("cov_p"),
         round(covar_samp(col("l_quantity"), col("l_extendedprice")), 2).as("cov_s"),
         count(lit(1)).as("n"))
-      .orderBy(col("l_returnflag"))
 
   /** Value-range window frame: per-customer 30-day rolling spend, framed by
     * ORDER BY day-number RANGE 30 PRECEDING — frame membership depends only
@@ -79,7 +76,6 @@ object Relational3 {
         col("o_custkey"),
         col("days"),
         round(sum(col("o_totalprice")).over(w), 2).as("spend_30d"))
-      .orderBy(col("o_orderkey"))
   }
 
   /** Unpivot/melt: wide measure columns → (metric, value) rows — the
@@ -93,7 +89,6 @@ object Relational3 {
         Array(col("l_orderkey"), col("l_linenumber")),
         Array(col("l_quantity"), col("l_extendedprice"), col("l_discount"), col("l_tax")),
         "metric", "value")
-      .orderBy(col("l_orderkey"), col("l_linenumber"), col("metric"))
 
   /** IGNORE NULLS window navigation: first/last non-null observation per
     * user over the full partition (nulls injected deterministically — click
@@ -109,7 +104,6 @@ object Relational3 {
         col("user_id"),
         round(first(col("v"), ignoreNulls = true).over(w), 2).as("first_v"),
         round(last(col("v"), ignoreNulls = true).over(w), 2).as("last_v"))
-      .orderBy(col("event_id"))
   }
 
   /** Map-typed payload access: parse the JSON props envelope into a real
@@ -128,7 +122,6 @@ object Relational3 {
         // non-null membership, not key presence: a JSON null value for "k"
         // must read false here to match json_extract_string IS NOT NULL
         element_at(m, "k").isNotNull.as("has_k"))
-      .orderBy(col("event_id"))
   }
 
   /** Array set-algebra over token arrays (intersect/union/contains/sort) —
@@ -148,7 +141,6 @@ object Relational3 {
         size(array_union(head5, tail5)).cast("long").as("n_union"),
         array_contains(tk, "the").as("has_the"),
         array_join(array_sort(array_distinct(head5)), " ").as("head_sorted"))
-      .orderBy(col("doc_id"))
   }
 
   /** Boolean aggregates: bool_and / bool_or / count_if per cohort. */
@@ -160,7 +152,6 @@ object Relational3 {
         expr("bool_or(o_totalprice > 400000)").as("any_gt_400k"),
         expr("count_if(o_totalprice > 100000)").cast("long").as("n_gt_100k"),
         count(lit(1)).as("n"))
-      .orderBy(col("o_orderpriority"))
 
   /** Ordered string aggregation (listagg/string_agg): the SQL:2016 form of
     * q43's collect+join — deterministic via the WITHIN GROUP ordering.
@@ -171,7 +162,6 @@ object Relational3 {
       .groupBy(col("o_custkey"))
       .agg(expr("listagg(o_orderstatus, ',') WITHIN GROUP (ORDER BY o_orderstatus, o_orderkey)")
         .as("statuses"))
-      .orderBy(col("o_custkey"))
 
   /** ANSI-safe error handling: try_divide / try_cast return NULL instead of
     * raising — the semantics a 100 TB batch job needs (one malformed row
@@ -187,7 +177,6 @@ object Relational3 {
         round(expr("try_divide(l_extendedprice, l_linenumber - 1)"), 4).as("per_prior_line"),
         expr("try_cast(l_returnflag AS INT)").as("flag_as_int"),
         expr("try_cast(concat('200', l_linenumber, '-01-01') AS DATE)").as("synth_date"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
 
   /** nth_value window navigation: 2nd-cheapest and 2nd-priciest order per
     * customer over the full partition.
@@ -207,7 +196,6 @@ object Relational3 {
             .orderBy(col("o_totalprice").desc, col("o_orderkey"))
             .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)), 2)
           .as("second_priciest"))
-      .orderBy(col("o_orderkey"))
   }
 
   /** grouping_id over a rollup — the bitmask that distinguishes subtotal
@@ -224,7 +212,6 @@ object Relational3 {
         coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
         coalesce(col("o_orderpriority"), lit("ALL")).as("priority"),
         col("gid"), col("n"), col("total"))
-      .orderBy(col("gid"), col("status"), col("priority"))
 
   /** Calendar gap-fill: a dense (day × event_type) grid over the observed
     * range, zero-filling days with no events — the missing-row completion
@@ -248,7 +235,6 @@ object Relational3 {
     cal.crossJoin(types)
       .join(counts, Seq("day", "event_type"), "left")
       .select(col("day"), col("event_type"), coalesce(col("n"), lit(0L)).as("n"))
-      .orderBy(col("day"), col("event_type"))
   }
 
   /** Date/interval arithmetic family: day offsets, month arithmetic,
@@ -264,7 +250,6 @@ object Relational3 {
         last_day(col("o_orderdate")).as("month_end"),
         datediff(last_day(col("o_orderdate")), to_date(col("o_orderdate"))).cast("long")
           .as("days_to_month_end"))
-      .orderBy(col("o_orderkey"))
 
   /** least/greatest n-ary comparisons with NULL-propagation via nullif. */
   def q68LeastGreatest(s: SparkSession, dir: String): DataFrame =
@@ -276,7 +261,6 @@ object Relational3 {
         round(least(col("l_extendedprice"), col("l_quantity") * 1000), 2).as("lo"),
         round(greatest(col("l_discount"), col("l_tax")), 2).as("hi_rate"),
         round(least(nullif(col("l_discount"), lit(0.0)), col("l_tax")), 2).as("lo_nonzero_disc"))
-      .orderBy(col("l_orderkey"), col("l_linenumber"))
 
   /** String shaping: pad/repeat/reverse/translate — the formatting slice of
     * the string family q25/q45 don't cover.
@@ -290,7 +274,6 @@ object Relational3 {
         reverse(col("p_name")).as("rev_name"),
         translate(col("p_type"), "AEIOU", "aeiou").as("lowered_vowels"),
         repeat(lit("*"), (col("p_size") % 5) + 1).as("stars"))
-      .orderBy(col("p_partkey"))
 
   /** Lateral column aliases: an alias defined in a SELECT is referenced by
     * later expressions in the SAME select list (no subquery nesting).
@@ -303,7 +286,6 @@ object Relational3 {
         "o_orderkey * 3 + o_custkey AS composite",
         "composite * 2 AS doubled",
         "doubled - o_orderkey AS derived")
-      .orderBy(col("o_orderkey"))
 
   /** Recursive CTE (Spark 4.1 WITH RECURSIVE): walk each order key up its
     * binary-ancestry chain (k -> k div 2 -> ... -> 1) and report the walk
@@ -321,7 +303,7 @@ object Relational3 {
         SELECT k, node DIV 2, steps + 1 FROM walk WHERE node > 1
       )
       SELECT k AS o_orderkey, CAST(max(steps) AS BIGINT) AS depth
-      FROM walk GROUP BY k ORDER BY o_orderkey""")
+      FROM walk GROUP BY k""")
   }
 
   /** FILTER-clause aggregates (SQL:2003): per-group conditional aggregation
@@ -336,8 +318,7 @@ object Relational3 {
              round(avg(l_tax) FILTER (WHERE l_linestatus = 'F'), 4) AS avg_tax_f,
              count(*) AS n
       FROM lineitem_fa_v
-      GROUP BY l_returnflag
-      ORDER BY l_returnflag""")
+      GROUP BY l_returnflag""")
   }
 
   /** NOT IN subquery — ANSI three-valued logic forces Spark's null-aware
@@ -351,8 +332,7 @@ object Relational3 {
     s.sql("""
       SELECT c_custkey, c_name
       FROM customer_na_v
-      WHERE c_custkey NOT IN (SELECT o_custkey FROM orders_na_v WHERE o_orderstatus = 'F')
-      ORDER BY c_custkey""")
+      WHERE c_custkey NOT IN (SELECT o_custkey FROM orders_na_v WHERE o_orderstatus = 'F')""")
   }
 
   val entries: Seq[Entry] = Seq(

@@ -50,8 +50,7 @@ object Relational4 {
                percentile(round(l_extendedprice), array(0.25D, 0.5D, 0.75D)) AS pcts,
                percentile_disc(0.5) WITHIN GROUP (ORDER BY l_extendedprice) AS pd
         FROM lineitem_pct_v
-        GROUP BY l_returnflag)
-      ORDER BY l_returnflag""")
+        GROUP BY l_returnflag)""")
   }
 
   /** Bivariate linear-regression aggregates: OLS slope/intercept/R² of
@@ -67,7 +66,6 @@ object Relational4 {
         round(regr_intercept(col("l_extendedprice"), col("l_quantity")), 2).as("intercept"),
         round(regr_r2(col("l_extendedprice"), col("l_quantity")), 4).as("r2"),
         regr_count(col("l_extendedprice"), col("l_quantity")).as("n"))
-      .orderBy(col("l_returnflag"))
   }
 
   /** Deterministic mode: each user's most frequent event type, ties broken
@@ -85,7 +83,6 @@ object Relational4 {
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .select(col("user_id"), col("event_type").as("modal_type"), col("n"))
-      .orderBy(col("user_id"))
   }
 
   /** Gaps-and-islands: maximal runs of consecutive event_ids per user
@@ -103,7 +100,6 @@ object Relational4 {
         max(col("event_id")).as("end_id"),
         count(lit(1)).as("len"))
       .select(col("user_id"), col("start_id"), col("end_id"), col("len"))
-      .orderBy(col("user_id"), col("start_id"))
   }
 
   /** Correlated LATERAL join: each high-balance customer's two most
@@ -124,8 +120,7 @@ object Relational4 {
         ORDER BY o_totalprice DESC, o_orderkey
         LIMIT 2
       ) t
-      WHERE c.c_acctbal > 9000
-      ORDER BY c.c_custkey, price DESC, t.o_orderkey""")
+      WHERE c.c_acctbal > 9000""")
   }
 
   /** Spark 4 VariantType payload access: parse the JSON props envelope
@@ -142,8 +137,7 @@ object Relational4 {
              variant_get(parse_json(props), '$.k', 'string') AS k_str,
              CAST(try_variant_get(parse_json(props), '$.k', 'date') AS STRING) AS k_as_date,
              try_variant_get(parse_json(props), '$.missing', 'bigint') IS NULL AS missing_absent
-      FROM events_var_v
-      ORDER BY event_id""")
+      FROM events_var_v""")
   }
 
   /** The NATIVE as-of join (custom Catalyst operator, `plans/AsOfJoin`):
@@ -161,7 +155,6 @@ object Relational4 {
       .agg(max(col("event_id")).as("click_id"))
     graft.plans.AsOfJoinOp(purchases, clicks, Seq("user_id"), "ts", "ts")
       .select(col("event_id"), col("user_id"), col("click_id"))
-      .orderBy(col("event_id"))
   }
 
   /** The native as-of join's TOLERANCE path: q80's attribution bounded to
@@ -182,7 +175,6 @@ object Relational4 {
     graft.plans.AsOfJoinOp(purchases, clicks, Seq("user_id"), "ts", "ts",
         tolerance = Some(6L * 3600 * 1000000))
       .select(col("event_id"), col("user_id"), col("click_id"))
-      .orderBy(col("event_id"))
   }
 
   val entries: Seq[Entry] = Seq(

@@ -24,7 +24,6 @@ object Scale {
       .agg(
         count(lit(1)).as("n_items"),
         round(sum(col("l_extendedprice")), 2).as("gross"))
-      .orderBy(col("o_orderpriority"))
   }
 
   /** Salted equi-join for skewed keys: the large (skewed) side gets a random-

@@ -245,22 +245,22 @@ object StoreManifest {
     f"batch=$v%06d-${java.util.UUID.randomUUID.toString.take(8)}"
   }
 
+  /** Every file under `p` (or `p` itself, if a file), depth-first in
+    * listing order. `listStatus`, not `listFiles`: a located status
+    * copies each entry's permissions, which on a local file system
+    * without the native Hadoop library forks one `ls` per entry.
+    */
+  private[graft] def filesUnder(fs: FileSystem, p: Path): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.flatMap(st =>
+      if (st.isDirectory) filesUnder(fs, st.getPath) else Seq(st))
+
   /** Data files under a just-written batch dir, relative to root. */
   def listBatchFiles(spark: SparkSession, root: String, batchRel: String): Seq[String] = {
     val (fs, rootP) = fsOf(spark, root)
-    val base = new Path(rootP, batchRel)
-    val it = fs.listFiles(base, true)
-    val out = scala.collection.mutable.ArrayBuffer[String]()
     val rootUri = fs.makeQualified(rootP).toUri.getPath
-    while (it.hasNext) {
-      val f = it.next()
-      val name = f.getPath.getName
-      if (f.isFile && !name.startsWith("_") && !name.startsWith(".")) {
-        val full = f.getPath.toUri.getPath
-        out += full.stripPrefix(rootUri).stripPrefix("/")
-      }
-    }
-    out.toSeq
+    filesUnder(fs, new Path(rootP, batchRel)).map(_.getPath).filter { f =>
+      !f.getName.startsWith("_") && !f.getName.startsWith(".")
+    }.map(_.toUri.getPath.stripPrefix(rootUri).stripPrefix("/"))
   }
 
   /** Commit `files` (+ optional `#k=v` metadata — geometry, moduli,
@@ -459,24 +459,17 @@ object StoreManifest {
     val rootUri = fs.makeQualified(rootP).toUri.getPath
     fs.listStatus(rootP).filter(s => s.isDirectory &&
         s.getPath.getName.startsWith("batch=")).foreach { b =>
-      val it = fs.listFiles(b.getPath, true)
       val toDelete = scala.collection.mutable.ArrayBuffer[Path]()
-      while (it.hasNext) {
-        val f = it.next()
-        if (f.isFile) {
-          val rel = f.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
-          if (!referenced.contains(rel)) {
-            if (f.getModificationTime > cutoff) youngSkipped = true
-            else { toDelete += f.getPath; deleted += rel }
-          }
+      filesUnder(fs, b.getPath).foreach { f =>
+        val rel = f.getPath.toUri.getPath.stripPrefix(rootUri).stripPrefix("/")
+        if (!referenced.contains(rel)) {
+          if (f.getModificationTime > cutoff) youngSkipped = true
+          else { toDelete += f.getPath; deleted += rel }
         }
       }
       toDelete.foreach(fs.delete(_, false))
       // drop the batch dir when nothing referenced survives under it
-      val remaining = fs.listFiles(b.getPath, true)
-      var any = false
-      while (remaining.hasNext) { remaining.next(); any = true }
-      if (!any) fs.delete(b.getPath, true)
+      if (filesUnder(fs, b.getPath).isEmpty) fs.delete(b.getPath, true)
     }
     // a dropped manifest is only removed once its files are actually
     // reclaimable — inside retention the version stays listable so a

@@ -25,7 +25,6 @@ object TimeWindows {
       .groupBy(window(col("ts"), "6 hours").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("total_value"))
-      .orderBy(col("window_start"), col("event_type"))
 
   /** Sliding windows: 1 hour long, every 30 minutes — each event lands in
     * exactly 2 windows; starts are multiples of the slide.
@@ -35,7 +34,6 @@ object TimeWindows {
       .groupBy(window(col("ts"), "1 hour", "30 minutes").as("w"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .select(col("w.start").as("window_start"), col("n"), col("total_value"))
-      .orderBy(col("window_start"))
 
   /** Session windows (30-minute inactivity gap) per user — the built-in
     * operator counterpart of EventSourcing.sessionize's manual lag+cumsum
@@ -47,7 +45,6 @@ object TimeWindows {
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("total_value"))
       .select(col("user_id"), col("w.start").as("session_start"),
         col("w.end").as("session_end"), col("n"), col("total_value"))
-      .orderBy(col("user_id"), col("session_start"))
 
   val entries: Seq[Entry] = Seq(
     Entry("q36_tumbling_window", q36Tumbling _, """

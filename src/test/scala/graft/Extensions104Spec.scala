@@ -15,7 +15,7 @@ class Extensions104Spec extends SparkSpec {
     val df = Seq((1L, "a a a a a a a a b b c d")).toDF("doc_id", "text")
     val got = Extensions104.oovCurve(df, "text", Seq(1L, 2L, 4L, 8L))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getDouble(4)))
+        r.getLong(3), r.getDouble(4))).sortBy(_._1)
     assert(got.map(_._1).toSeq == Seq(1L, 2L, 4L, 8L))
     assert(got.head._2 == 4L && got.head._4 == 12L)
     // rank 1 = 'a' (8 of 12 instances) -> oov = 4/12 = .3333
@@ -36,7 +36,7 @@ class Extensions104Spec extends SparkSpec {
     val df = rows.toDF("vec_id", "embedding", "label")
     val got = Extensions104.centroidDrift(df, "vec_id", "embedding", "label")
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4))).toSeq
+        r.getDouble(3), r.getDouble(4))).toSeq.sortBy(_._1)
     assert(got.map(_._1) == Seq(0, 1))
     assert(got(0)._4 == 1.0 && got(0)._5 == 1.0, s"identical -> (1, 1): ${got(0)}")
     assert(got(1)._4 == -1.0, s"mirrored -> cosine -1: ${got(1)}")
@@ -45,6 +45,7 @@ class Extensions104Spec extends SparkSpec {
 
   test("x235/x237 fixtures: sane shapes") {
     val oov = SparkEntry.queries("x235_oov_curve")(spark, sf0001).collect()
+      .sortBy(_.getLong(0))
     assert(oov.length == 6 && oov.map(_.getDouble(4)).sliding(2).forall(p => p(0) >= p(1)))
     val dr = SparkEntry.queries("x237_centroid_drift")(spark, sf0001).collect()
     assert(dr.length == 10, "one row per label")

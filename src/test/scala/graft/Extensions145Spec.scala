@@ -42,6 +42,7 @@ class Extensions145Spec extends SparkSpec {
       (3L, 3L, 700L)).toDF("l", "r", "s")
     val got = Extensions145.oneToOneMatch(pool, "l", "r", "s")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .sortBy(g => (g._1, g._2))
     assert(got.toSeq == Seq((1L, 1L, 900L, 1L), (2L, 2L, 500L, 2L),
       (3L, 3L, 700L, 1L)), s"${got.toSeq}")
     val lefts = got.map(_._1); val rights = got.map(_._2)

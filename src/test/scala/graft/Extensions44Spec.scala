@@ -18,7 +18,7 @@ class Extensions44Spec extends SparkSpec {
       (3L, false, -8000000L), (4L, false, -8000000L))
       .toDF("doc_id", "label", "margin_micro")
     val out = Extensions44.calibrationReport(scored, "margin_micro", "label")
-      .collect()
+      .collect().sortBy(_.getLong(0))
     assert(out.map(_.getLong(0)).toSeq == Seq(0L, 9L))
     out.foreach { r =>
       assert(r.getDouble(5) == 0.0, s"abs_gap must be 0: $r")

@@ -15,7 +15,7 @@ class Extensions45Spec extends SparkSpec {
     // node 3 drops to deg 1 and peels — a one-shot degree filter keeps it
     val edges = Seq((0L, 1L), (1L, 2L), (0L, 2L), (2L, 3L), (3L, 4L))
       .toDF("a", "b")
-    val out = Extensions45.kCore(edges, "a", "b", k = 2).collect()
+    val out = Extensions45.kCore(edges, "a", "b", k = 2).collect().sortBy(_.getLong(0))
     assert(out.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L), s"2-core: ${out.toSeq}")
     assert(out.forall(_.getLong(1) == 2L))
   }
@@ -24,7 +24,7 @@ class Extensions45Spec extends SparkSpec {
     import spark.implicits._
     val k4 = Seq((0L, 1L), (0L, 2L), (0L, 3L), (1L, 2L), (1L, 3L), (2L, 3L))
     val edges = (k4 :+ ((0L, 9L))).toDF("a", "b")
-    val out = Extensions45.kCore(edges, "a", "b", k = 3).collect()
+    val out = Extensions45.kCore(edges, "a", "b", k = 3).collect().sortBy(_.getLong(0))
     assert(out.map(_.getLong(0)).toSeq == Seq(0L, 1L, 2L, 3L))
     assert(out.forall(_.getLong(1) == 3L))
   }

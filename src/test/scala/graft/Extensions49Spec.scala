@@ -48,7 +48,7 @@ class Extensions49Spec extends SparkSpec {
       .select(col("user_id"), to_timestamp(col("ts0")).as("ts"), col("value"))
     val out = Extensions49.cohortLtv(rows, "user_id", "ts", "value", "week")
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getDouble(4), r.getDouble(5)))
+        r.getDouble(3), r.getDouble(4), r.getDouble(5))).sortBy(o => (o._1, o._2))
     assert(out.toSeq == Seq(
       ("2024-01-01", 0L, 2L, 40.0, 40.0, 20.0),
       ("2024-01-01", 1L, 2L, 20.0, 60.0, 30.0),

@@ -26,7 +26,7 @@ class Extensions54Spec extends SparkSpec {
       (0L, Seq(1, 1, 0, 0)),             // rate 0.5
       (2000000L, Seq(1, 1, 1, 1, 0))))   // rate 0.8
     val out = Extensions54.isotonicCalibrate(df, "margin_micro", "label")
-      .collect()
+      .collect().sortBy(_.getLong(0))
     assert(out.length == 3)
     out.foreach(r => assert(r.getDouble(3) == r.getDouble(4),
       s"fixed point: $r"))
@@ -38,7 +38,7 @@ class Extensions54Spec extends SparkSpec {
     // pooled block mean = 1/4 on both grid points
     val df = scoredOf(Seq((-2000000L, Seq(1)), (2000000L, Seq(0, 0, 0))))
     val out = Extensions54.isotonicCalibrate(df, "margin_micro", "label")
-      .collect()
+      .collect().sortBy(_.getLong(0))
     assert(out.length == 2)
     assert(out.forall(_.getDouble(4) == 0.25), s"weighted pool: ${out.toSeq}")
   }
@@ -49,13 +49,14 @@ class Extensions54Spec extends SparkSpec {
       (0L, Seq(1, 1, 1, 0)),             // 0.75 \ pooled to
       (3000000L, Seq(1, 0, 0, 0))))      // 0.25 / (3+1)/8 = 0.5
     val out = Extensions54.isotonicCalibrate(df, "margin_micro", "label")
-      .collect()
+      .collect().sortBy(_.getLong(0))
     assert(out.map(_.getDouble(4)).toSeq == Seq(0.0, 0.5, 0.5),
       s"block pooling: ${out.toSeq}")
   }
 
   test("x140 fixture: the calibration map is monotone non-decreasing and bounded") {
     val out = SparkEntry.queries("x140_isotonic")(spark, sf0001).collect()
+      .sortBy(_.getLong(0))
     assert(out.length >= 2)
     val iso = out.map(_.getDouble(4)).toSeq
     assert(iso.zip(iso.tail).forall { case (a, b) => a <= b },

@@ -54,6 +54,7 @@ class Extensions56Spec extends SparkSpec {
     // a fixture where BOTH splits are populated and check internals via
     // the level-900 contract: k = ceil(100*0.9) = 90
     val out = SparkEntry.queries("x145_conformal")(spark, sf0001).collect()
+      .sortBy(_.getDouble(0))
     assert(out.length == 3)
     val t90 = out(0)
     assert(t90.getDouble(0) == 0.9 && out(1).getDouble(0) == 0.95 &&

@@ -34,7 +34,7 @@ class Extensions63Spec extends SparkSpec {
 
   test("x158 fixture: monotone predictions, planted copies dominate recall at 0.5") {
     val out = SparkEntry.queries("x158_threshold_curve")(spark, sf0001)
-      .collect()
+      .collect().sortBy(_.getDouble(0))
     assert(out.length == 7)
     val preds = out.map(_.getLong(1)).toSeq
     assert(preds.zip(preds.tail).forall { case (a, b) => a >= b },

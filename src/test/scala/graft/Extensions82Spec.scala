@@ -50,7 +50,7 @@ class Extensions82Spec extends SparkSpec {
     assert(st.nonEmpty)
     st.foreach(r => assert(r.getDouble(4) > 0.0 && r.getDouble(4) <= 1.0))
     val cv = SparkEntry.queries("x197_activity_curve")(spark, sf0001)
-      .collect()
+      .collect().sortBy(_.getLong(0))
     assert(cv.map(_.getLong(1)).sum == 15L)
     val tails = cv.map(_.getDouble(3)).toSeq
     assert(tails.zip(tails.tail).forall { case (a, b) => b <= a },

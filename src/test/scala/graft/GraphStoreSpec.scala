@@ -75,9 +75,9 @@ class GraphStoreSpec extends SparkSpec {
       .toDF("a", "b")
     GraphStore.writeSymmetrizedEdges(g, "a", "b", "gs_kcore_edges", buckets = 4)
     val a = graft.ops.Extensions45.kCore(g, "a", "b", k = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val b = GraphStore.kCoreFromTable(spark, "gs_kcore_edges", k = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     assert(a == b, s"store peel must match in-memory: $a vs $b")
   }
 

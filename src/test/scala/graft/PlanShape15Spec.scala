@@ -118,11 +118,7 @@ class PlanShape15Spec extends SparkSpec {
   }
 
   test("x332 weighted Jaccard: df cap reaches the seed join, never corpus x corpus") {
-    // inspect the pre-barrier pipeline: the r15 pre-sort barrier in
-    // weightedJaccardPairs truncates the entry frame's plan to
-    // Scan ExistingRDD, hiding the seed-join machinery this contract
-    // is about
-    val inner = graft.ops.Extensions146.weightedJaccardPairsRaw(
+    val inner = graft.ops.Extensions146.weightedJaccardPairs(
       graft.model.Tables.load(spark, sf0001, "documents"), "doc_id", "text")
     val plan = planOf(inner)
     assert(!plan.contains("CartesianProduct"), s"no cartesian:\n$plan")
@@ -135,6 +131,8 @@ class PlanShape15Spec extends SparkSpec {
       s"df-cap filter must gate the seeds:\n$plan")
   }
 
+  // the "output-order exchange" the name allows is gone with the
+  // presentation sort (README "Design rules"), so the plan has none
   test("x333 chunker: map-only — no joins, no aggregates, only the output-order exchange") {
     val df = SparkEntry.queries("x333_chunk_text")(spark, sf0001)
     val plan = planOf(df)
@@ -143,9 +141,6 @@ class PlanShape15Spec extends SparkSpec {
     assert(!plan.contains("Window "), s"no windows:\n$plan")
     val exchanges = plan.linesIterator
       .filter(l => l.contains("Exchange") && !l.contains("Reused")).toSeq
-    exchanges.foreach { e =>
-      assert(e.contains("rangepartitioning"),
-        s"the only exchange is the presentation sort: $e")
-    }
+    assert(exchanges.isEmpty, s"map-only, no exchange:\n$plan")
   }
 }

@@ -48,10 +48,10 @@ class RankSpec extends SparkSpec {
   test("x231 fixture ≡ q20 on sf0.001 (same card, re-planned)") {
     val q20 = SparkEntry.queries("q20_ntile_dense_rank")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2),
-        r.getInt(3).toLong)).toSeq
+        r.getInt(3).toLong)).toSeq.sortBy(_._1)
     val x231 = SparkEntry.queries("x231_global_rank")(spark, sf0001)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getInt(2),
-        r.getLong(3))).toSeq
+        r.getLong(3))).toSeq.sortBy(_._1)
     assert(x231 == q20, "the distributed rank must reproduce q20 exactly")
   }
 
